@@ -161,6 +161,29 @@ object Bench {
     }
   }
 
+  /** The run's one `"metric":"total"` stdout record, within `budget` chars:
+    * the committed bench artifact has kept as little as the last 2000 chars
+    * of stdout, and a record cut at its head is unparseable (r13's
+    * `parsed: null`). `essential`
+    * fields are always kept. The first of `cpuForms` that fits is used, and
+    * `optional` fields (least critical first) are dropped from the front
+    * until the line fits; failing that, the next cpu form is tried, and
+    * last the record goes without any cpu field. Optional fields come first
+    * in the line, so if the window ever shrinks, truncation eats them before
+    * anything contractual.
+    */
+  def contractRecord(
+      essential: Seq[String],
+      cpuForms: Seq[String],
+      optional: Seq[String],
+      budget: Int = 1900): String = {
+    val candidates = for {
+      cpu <- cpuForms.map(Seq(_)) :+ Seq.empty[String]
+      dropped <- 0 to optional.size
+    } yield (optional.drop(dropped) ++ cpu ++ essential).mkString("{", ",", "}")
+    candidates.find(_.length <= budget).getOrElse(candidates.last)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -310,18 +333,22 @@ object Bench {
           sfDir)}}"""
     // The committed artifact keeps only the LAST ~2 KB of stdout (r11's
     // grown drift/raw maps truncated the headline B1-B8 metrics clean out
-    // of BENCH_r11.json). So: the full record (per-run raw arrays,
-    // per-query medians, per-window drift) goes to a file and an earlier
-    // stdout line; the FINAL stdout line is a compact essential record —
-    // headline baseline, calibration, drift summary, retries — sized to
-    // survive the tail window whole.
+    // of BENCH_r11.json). So the full record (per-run raw arrays, per-query
+    // medians, per-window drift, error messages) goes to a file, and stdout
+    // carries exactly ONE `"metric":"total"` record, last and sized to
+    // survive the tail window whole ([[contractRecord]]). A second total
+    // line would make a parser that keys on the first one read the wrong
+    // record, and one that sums them double-count.
     try {
       val dir = java.nio.file.Paths.get("target")
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.write(dir.resolve("bench_full.json"),
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case scala.util.control.NonFatal(_) => () }
-    println(fullLine)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"bench: could not write target/bench_full.json ($e); full record:")
+        System.err.println(fullLine)
+    }
     val driftVals = sentinel.drifts.values
     // a dirty run can push dozens of windows over tolerance — cap the named
     // map at the 6 worst (full map in bench_full.json) so the drift summary
@@ -335,81 +362,42 @@ object Bench {
       f"""{"windows":${sentinel.drifts.size},"max":${driftVals.foldLeft(0.0)(math.max)}%.3f,"tolerance":${sentinel.driftTolerance}%.2f,"over_count":${overTol.size},"over_tolerance":$overJson}"""
     val errSummary =
       if (errors.isEmpty) "0"
-      else s"${errors.size}" // full messages in the line above + bench_full.json
-    // Headline CPU medians as an ARRAY in `headline` order (~120 B vs ~440
-    // for a named map — the tail window is a hard 2000 chars and r12's line
-    // already used 1798): the steal-invariant cross-round signal. The NAMED
-    // cpu map with raw per-run arrays is in bench_full.json. Field order
-    // puts the least-critical fields FIRST: tail truncation eats the line's
-    // head, so if the window ever shrinks, retries/calibration go before
-    // the baseline envelope and the headline total.
-    val cpuCompact = headline.map { k =>
-      cpuTimes.get(k).filter(_.nonEmpty)
-        .map(cs => f"${cs.sorted.apply(cs.size / 2)}%.2f").getOrElse("-1")
-    }.mkString("[", ",", "]")
-    // The final line must survive the 2000-char tail window WHOLE — r13's
-    // line overflowed the moment one retry entry appeared, truncating the
-    // head and making the artifact unparseable (`parsed: null`). Fix is
-    // structural, not a one-off trim: assemble optional fields least-
-    // critical-first and DROP from the front until the line fits a 1900-char
-    // budget. The always-present tail (baseline, sf, metric, value) is a few
-    // hundred chars, so the essential record can never be evicted; anything
-    // dropped is still in bench_full.json and the fullLine println above.
+      else s"${errors.size}" // full messages in bench_full.json
     val retriesCompact =
       if (sentinel.retries.isEmpty) "{}"
       else sentinel.retries.take(8).map { case (k, v) => jq(k) + ":" + v }
         .mkString("{", ",",
           if (sentinel.retries.size > 8) s""","_more":${sentinel.retries.size - 8}}"""
           else "}")
-    val tailFields = Seq(
-      s""""baseline":$bs""",
-      s""""sf":${jq(sfDir)}""",
-      """"full":"target/bench_full.json"""",
-      """"metric":"total"""",
-      """"unit":"sec"""",
-      s""""value":${f"$total%.3f"}""")
-    val optionalFields = Seq( // least critical first — evicted first; the
-      // CPU medians are the steal-invariant cross-round signal, keep longest
-      s""""retries":$retriesCompact""",
-      s""""calibration":$calib""",
-      s""""errors_count":$errSummary""",
-      s""""drift":$driftSummary""",
-      s""""cpu_headline_order":$cpuCompact""")
-    def lineOf(opt: Seq[String]): String =
-      (opt ++ tailFields).mkString("{", ",", "}")
-    var opt = optionalFields
-    while (lineOf(opt).length > 1900 && opt.nonEmpty) opt = opt.tail
-    println(lineOf(opt))
-    // CONTRACT LINE, last and self-sufficient (added r19): the driver's
-    // tail capture has been as short as 2000 chars, and its parser needs
-    // the `queries` map in ONE complete line — r17's artifact lost its
-    // per-query comparison because the only `queries`-bearing line (the
-    // 7 KB fullLine above) overflowed the capture. This line carries the
-    // contract fields plus the per-query task-CPU MEDIANS: at sf0.1 the
-    // per-query walls sit on a fixed stage-scheduling floor and look
-    // identical at 8 vs 32 cores, while task CPU does scale with
-    // `$SPARK_GRAFT_CPUS` — surfacing `cpu` here lets the driver's scaling
-    // check run on a signal that actually moves. Sized to a 1900-char
-    // budget; if the headline ever grows past it, the named cpu map
-    // degrades to the compact headline-order array before anything
-    // contractual is touched.
+    // per-query task-CPU MEDIANS: at sf0.1 the per-query walls sit on a
+    // fixed stage-scheduling floor and look identical at 8 vs 32 cores,
+    // while task CPU does scale with `$SPARK_GRAFT_CPUS` — the signal a
+    // scaling check can actually use. Named map first; the headline-order
+    // ARRAY (~120 B vs ~440) is its fallback when the named map cannot fit.
     val cpuNamed = headline.flatMap { k =>
       cpuTimes.get(k).filter(_.nonEmpty)
         .map(cs => jq(k) + ":" + f"${cs.sorted.apply(cs.size / 2)}%.2f")
     }.mkString("{", ",", "}")
-    def contractLine(cpuField: String): String = Seq(
-      s""""metric":"total"""",
-      s""""value":${f"$total%.3f"}""",
-      s""""unit":"sec"""",
-      s""""queries":$qs""",
-      cpuField,
-      s""""sf":${jq(sfDir)}""",
-      """"full":"target/bench_full.json"""").mkString("{", ",", "}")
-    val contract =
-      if (contractLine(s""""cpu":$cpuNamed""").length <= 1900)
-        contractLine(s""""cpu":$cpuNamed""")
-      else contractLine(s""""cpu_headline_order":$cpuCompact""")
-    println(contract)
+    val cpuCompact = headline.map { k =>
+      cpuTimes.get(k).filter(_.nonEmpty)
+        .map(cs => f"${cs.sorted.apply(cs.size / 2)}%.2f").getOrElse("-1")
+    }.mkString("[", ",", "]")
+    println(contractRecord(
+      essential = Seq(
+        """"metric":"total"""",
+        s""""value":${f"$total%.3f"}""",
+        """"unit":"sec"""",
+        s""""queries":$qs""",
+        s""""sf":${jq(sfDir)}""",
+        """"full":"target/bench_full.json""""),
+      cpuForms = Seq(s""""cpu":$cpuNamed""", s""""cpu_headline_order":$cpuCompact"""),
+      // least critical first — evicted first
+      optional = Seq(
+        s""""retries":$retriesCompact""",
+        s""""calibration":$calib""",
+        s""""errors_count":$errSummary""",
+        s""""drift":$driftSummary""",
+        s""""baseline":$bs""")))
     spark.stop()
     // same discipline as graft.Verify: the driver must never hang on a stray
     // non-daemon thread after the JSON line is out

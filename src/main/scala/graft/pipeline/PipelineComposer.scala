@@ -313,6 +313,18 @@ final class PipelineComposer(
     }
   }
 
+  /** Whether [[processBatch]] scans its envelope input for `tableId` more
+    * than once: each routed sink table, each of several transform rules and
+    * the event-recording tee reads it separately (one sink's upserts and
+    * deletes share one cached aggregate, so a single route reads it once).
+    * A caller holding the batch pins it exactly when this is true.
+    */
+  def rereadsEnvelope(tableId: TableId): Boolean =
+    rulesFor(tableId).size > 1 || router.route(tableId).size > 1 || (sink match {
+      case md: graft.sinks.MemoryDatabase => md.recordEvents
+      case _ => false
+    })
+
   /** Project a schema-change event through the table's TRANSFORM before it
     * reaches the sink (the reference PreTransformOperator's schema path):
     * with an explicit projection the sink schema is the projected shape, so
@@ -477,12 +489,20 @@ final class PipelineComposer(
 }
 
 object PipelineComposer {
-  /** Split a mixed-table envelope batch by tableId (driver-side distinct is a
-    * tiny metadata query; the per-table frames stay lazy).
+  /** Split a mixed-table envelope batch by tableId; the per-table frames
+    * stay lazy. When the caller names exactly one source table in `known`
+    * (a stream over one ChangeSource — each serves exactly one table), the
+    * batch IS that table's envelope and comes back unfiltered with no Spark
+    * job, even when it holds no rows: the sink's own write pass finds out
+    * that nothing changed. Otherwise the table ids are discovered with one
+    * `distinct()` job, and a batch without rows yields no tables.
     */
-  def splitByTable(env: DataFrame): Map[TableId, DataFrame] = {
-    val ids = env.select(Envelope.TableIdCol).distinct()
-      .collect().map(_.getString(0))
-    ids.map(id => TableId.parse(id) -> env.filter(col(Envelope.TableIdCol) === id)).toMap
-  }
+  def splitByTable(env: DataFrame, known: Seq[TableId] = Seq.empty): Map[TableId, DataFrame] =
+    known match {
+      case Seq(only) => Map(only -> env)
+      case _ =>
+        val ids = env.select(Envelope.TableIdCol).distinct()
+          .collect().map(_.getString(0))
+        ids.map(id => TableId.parse(id) -> env.filter(col(Envelope.TableIdCol) === id)).toMap
+    }
 }

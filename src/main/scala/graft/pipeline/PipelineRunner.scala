@@ -255,7 +255,7 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
         pdef.source.config.get(k).foreach(v => reader = reader.option(k, v))
       }
       val env = reader.load()
-      PipelineComposer.splitByTable(env).toSeq
+      PipelineComposer.splitByTable(env, tablesOf(Seq(id))).toSeq
         .sortBy(_._1.identifier)
         .foreach { case (tableId, e) => composer.processBatch(tableId, e) }
     }
@@ -269,8 +269,13 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
         "which drains every partition; run() returns a single stream")
     composer.createTables(sourceSchemas)
     CdcStream.start(readerFor(sourceId).load(), composer, queryName = pdef.name,
-      checkpointDir = pdef.config.get("checkpoint.dir"))
+      checkpointDir = pdef.config.get("checkpoint.dir"), tables = tablesOf(Seq(sourceId)))
   }
+
+  /** The tables registered sources serve (one each) — what lets
+    * [[CdcStream]] skip its per-batch table-id discovery job. */
+  private def tablesOf(ids: Seq[String]): Seq[TableId] =
+    ids.map(ChangeSourceRegistry.get(_).tableId)
 
   private def readerFor(id: String) = {
     val reader = spark.readStream.format(classOf[GraftCdcProvider].getName)
@@ -299,7 +304,7 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     var continue = true
     while (continue && restarts <= maxRestarts) {
       val q = CdcStream.start(readerFor(sourceId).load(), composer, queryName = pdef.name,
-        checkpointDir = pdef.config.get("checkpoint.dir"))
+        checkpointDir = pdef.config.get("checkpoint.dir"), tables = tablesOf(Seq(sourceId)))
       q.processAllAvailable()
       q.stop()
       ChangeSourceRegistry.pendingDdl(sourceId) match {
@@ -327,7 +332,8 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
         readerFor(id).load(), composer,
         queryName = s"${pdef.name}-${checkpointSafe(id)}",
         checkpointDir = pdef.config.get("checkpoint.dir")
-          .map(d => s"$d/${checkpointSafe(id)}"))
+          .map(d => s"$d/${checkpointSafe(id)}"),
+        tables = tablesOf(Seq(id)))
       q.processAllAvailable()
       q.stop()
     }
@@ -400,7 +406,8 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
           queryName = s"${pdef.name}-${checkpointSafe(id)}",
           checkpointDir = pdef.config.get("checkpoint.dir")
             .map(d => s"$d/${checkpointSafe(id)}"),
-          singleBatch = interleaved)
+          singleBatch = interleaved,
+          tables = Seq(tableId))
         if (interleaved) {
           // the Trigger.Once query terminates itself after one micro-batch;
           // a non-empty batch counts as progress so the round-robin keeps
@@ -519,7 +526,8 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
       val df = allIds.map(readerFor(_).load()).reduce(_ unionByName _)
       val q = CdcStream.start(df, composer,
         queryName = s"${pdef.name}-multiplex",
-        checkpointDir = pdef.config.get("checkpoint.dir").map(d => s"$d/multiplex"))
+        checkpointDir = pdef.config.get("checkpoint.dir").map(d => s"$d/multiplex"),
+        tables = tablesOf(allIds))
       q.processAllAvailable()
       q.stop()
       allIds.iterator
@@ -548,7 +556,8 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
       readerFor(newSourceId).load(),
       composer,
       queryName = s"${pdef.name}-${src.tableId.tableName}",
-      checkpointDir = pdef.config.get("checkpoint.dir").map(d => s"$d/$newSourceId"))
+      checkpointDir = pdef.config.get("checkpoint.dir").map(d => s"$d/$newSourceId"),
+      tables = Seq(src.tableId))
   }
 }
 

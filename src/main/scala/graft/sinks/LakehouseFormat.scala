@@ -3,7 +3,7 @@ package graft.sinks
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core._
 import graft.pipeline.SchemaDerivator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -548,12 +548,25 @@ final class LakehouseTable(
         done = true // replayed batch: already committed atomically with its data
       } else {
         val coerced = SchemaDerivator.coerce(upserts, schema.struct)
-        val changedKeys = coerced.select(pks.map(col): _*)
-          .unionByName(deletedKeys.select(pks.map(col): _*)).distinct()
-        // buckets touched by this batch: bounded by the bucket count, a
-        // metadata-sized collect (ints), never row-sized
-        val touched = changedKeys.select(bucketOf(pks, snap.buckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        // ONE Spark action per merge collects every changed key with its
+        // bucket. That result answers both questions the rewrite asks:
+        // which buckets to rewrite, and which old rows to drop from them
+        // (the left-anti join below builds on it as a local relation, so
+        // the keys are neither aggregated nor shuffled a second time).
+        // Driver memory: the collect is batch-sized — one row per changed
+        // key, exactly what the broadcast build side of that anti-join
+        // always materialized on the driver.
+        val keys = coerced.select(pks.map(col): _*)
+          .unionByName(deletedKeys.select(pks.map(col): _*))
+        val changed = keys.withColumn(bucketColName, bucketOf(pks, snap.buckets)).collect()
+        // nothing upserted or deleted: no files to write, so no version.
+        // The batch's txn is not recorded either — replaying an empty batch
+        // changes nothing.
+        if (changed.isEmpty) return
+        val touched = changed.map(_.getInt(pks.size)).toSet
+        val changedKeys = spark.createDataFrame(
+          changed.map(r => Row.fromSeq(r.toSeq.take(pks.size))).distinct.toSeq.asJava,
+          keys.schema)
         val oldFiles = snap.files.filter(f => touched.contains(f.bucket))
         // readData applies outstanding MOR deletes: a key deleted by an
         // equality-delete file must not resurrect into the rewritten bucket
@@ -1116,7 +1129,9 @@ final class LakehouseTable(
     val aggs = cols.flatMap(f => Seq(
       min(col(f.name)).cast("string").as(s"min_${f.name}"),
       max(col(f.name)).cast("string").as(s"max_${f.name}")))
-    val byFile = spark.read.parquet(paths: _*)
+    // every writer coerces to the declared schema before it writes, so the
+    // new files are read under it: no footer schema-inference job
+    val byFile = spark.read.schema(StructType(cols)).parquet(paths: _*)
       .groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -1156,7 +1171,8 @@ final class LakehouseTable(
     import spark.implicits._
     val paths = adds.map(a => Paths.get(dir, a.path).toString)
     val hashArr = array(bloomCols.map(c => xxhash64(col(c))): _*)
-    val built = spark.read.parquet(paths: _*)
+    // read under the declared schema, as in attachStats
+    val built = spark.read.schema(meta.get.schema.struct).parquet(paths: _*)
       .select(input_file_name().as("f"), posexplode(hashArr))
       .as[(String, Int, Long)]
       .groupByKey(t => (t._1, t._2))
@@ -1548,7 +1564,10 @@ final class LakehouseTable(
         s"change feed from version $fromVersion of $dir is expired " +
           s"(oldest retained commit: ${oldest.get}); rows in expired commits " +
           "are undeliverable — expire snapshots only past consumed cursors")
-    val schema = snapshot().schema
+    // the ONE log replay of this call: it gives the output schema, and it
+    // pins the read schema below
+    val snap = snapshot()
+    val schema = snap.schema
     val perVersion = ((fromVersion + 1) to toVersion).map { v =>
       Files.readAllLines(logFile(v)).asScala
         .filter(_.nonEmpty).map(LakehouseFormat.decode).toSeq
@@ -1574,12 +1593,17 @@ final class LakehouseTable(
       // files written under the pinned schema read exactly; a file with a
       // missing column (never written by this table) nulls it in both
       // paths; the coerce to the LATEST schema is unchanged.
+      // The schema in force at `toVersion` is the latest one whenever the
+      // last Meta landed at or before `toVersion` (`metaVer`), which holds
+      // for every read up to the latest version; only a range that ends
+      // before a later schema change (a metaVer past `toVersion`, or an
+      // unknown one) falls back to mergeSchema instead of replaying the log
+      // a second time.
+      val pinned = !perVersion.exists(_.exists(_.isInstanceOf[Meta])) &&
+        snap.metaVer >= 0 && snap.metaVer <= toVersion
       val raw =
-        if (perVersion.exists(_.exists(_.isInstanceOf[Meta])))
-          spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        else
-          spark.read.schema(snapshot(Some(toVersion)).schema.struct)
-            .parquet(paths: _*)
+        if (pinned) spark.read.schema(schema.struct).parquet(paths: _*)
+        else spark.read.option("mergeSchema", "true").parquet(paths: _*)
       SchemaDerivator.coerce(raw, schema.struct)
     }
   }

@@ -13,6 +13,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * in-flight rows of the old shape — the `SchemaOperator`/`SchemaCoordinator`
   * protocol (`schema/regular/SchemaOperator.java:145-243`) collapses to plain
   * driver code.
+  *
+  * Per-batch fixed cost: every Spark job a micro-batch runs is paid by every
+  * commit, so the runner spends none on facts the driver already has. A
+  * stream whose caller names exactly ONE source table (`tables`) hands each
+  * batch straight to [[PipelineComposer.processBatch]] — no table-id
+  * `distinct()` job — and pins it only when the composer reads that table's
+  * envelope more than once ([[PipelineComposer.rereadsEnvelope]]). Streams
+  * over several tables, or over tables the caller cannot name (test streams),
+  * pin the batch and fan out through [[PipelineComposer.splitByTable]].
   */
 object CdcStream {
 
@@ -24,7 +33,11 @@ object CdcStream {
       // ONE micro-batch then terminate (Trigger.Once) — the unit of turn in
       // the interleaved distributed drain, where partitions alternate
       // batches instead of each draining to completion
-      singleBatch: Boolean = false): StreamingQuery = {
+      singleBatch: Boolean = false,
+      // the source tables the stream reads, when the caller knows them
+      // (each ChangeSource serves exactly one table); empty = unknown
+      tables: Seq[TableId] = Seq.empty): StreamingQuery = {
+    val known = tables.distinct
     var b = envelopeStream.writeStream
       .queryName(queryName)
       .trigger(if (singleBatch) Trigger.Once() else Trigger.AvailableNow())
@@ -37,19 +50,22 @@ object CdcStream {
         val runId = Option(batch.sparkSession.sparkContext
             .getLocalProperty("sql.streaming.queryId"))
           .getOrElse(checkpointDir.getOrElse(""))
-        // pin the micro-batch before fanning out: splitByTable issues one
-        // distinct() pass plus one filter per table, and over a multiplexed
-        // source (a union of N per-table readers) each of those would
-        // re-evaluate the N-way union — O(N²) source reads per batch
-        // without the cache
-        batch.persist()
+        // pin the micro-batch whenever it has more than one reader: the
+        // multi-table fan-out issues one distinct() pass plus one filter
+        // per table, and over a multiplexed source (a union of N per-table
+        // readers) each of those would re-evaluate the N-way union — O(N²)
+        // source reads per batch without the cache. A single-table batch
+        // with a single reader is read exactly once, so caching it would
+        // only add a job's worth of block-manager writes.
+        val pin = known.size != 1 || composer.rereadsEnvelope(known.head)
+        if (pin) batch.persist()
         try
-          PipelineComposer.splitByTable(batch).toSeq
+          PipelineComposer.splitByTable(batch, known).toSeq
             .sortBy(_._1.identifier)
             .foreach { case (tableId: TableId, env: DataFrame) =>
               composer.processBatch(tableId, env, batchId, runId)
             }
-        finally batch.unpersist()
+        finally if (pin) batch.unpersist()
       }
     checkpointDir.foreach(d => b = b.option("checkpointLocation", d))
     b.start()

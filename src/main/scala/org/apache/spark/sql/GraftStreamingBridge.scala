@@ -12,9 +12,14 @@ package org.apache.spark.sql
   * the identical reads as batch queries). The fix is what Spark's own
   * `FileStreamSource` does: keep the analyzed batch plan and flag its
   * relation LEAVES as streaming (`LogicalRelation(isStreaming = true)`), so
-  * the optimizer still sees the file scan per batch. Plans with no
-  * relation leaf (e.g. the empty batch's `LocalRelation`) fall back to the
-  * RDD wrap, which is correct and trivially cheap there.
+  * the optimizer still sees the file scan per batch.
+  *
+  * The flag is applied only to a plan whose ONE leaf is a file relation —
+  * the single-scan commit-range read. Flagging both sides of, say, a join
+  * of two relations would make the streaming planner treat it as a
+  * stream-stream join. Every other plan (no relation leaf, as in the empty
+  * batch's `LocalRelation`, or several leaves) falls back to the RDD wrap:
+  * correct for any plan, only slower where it hides a file scan.
   */
 object GraftStreamingBridge {
 
@@ -24,14 +29,15 @@ object GraftStreamingBridge {
   def asStreaming(df: DataFrame): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    var flagged = false
-    val plan = df.queryExecution.analyzed.transform {
-      case lr: LogicalRelation if !lr.isStreaming =>
-        flagged = true
-        lr.copy(isStreaming = true)
+    val analyzed = df.queryExecution.analyzed
+    analyzed.collectLeaves() match {
+      case Seq(leaf: LogicalRelation) if !leaf.isStreaming =>
+        classic.Dataset.ofRows(spark, analyzed.transform {
+          case lr: LogicalRelation => lr.copy(isStreaming = true)
+        })
+      case _ =>
+        spark.internalCreateDataFrame(
+          df.queryExecution.toRdd, df.schema, isStreaming = true)
     }
-    if (flagged) classic.Dataset.ofRows(spark, plan)
-    else spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 }

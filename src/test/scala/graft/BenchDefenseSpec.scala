@@ -72,4 +72,33 @@ class BenchDefenseSpec extends AnyFunSuite {
       assert(bodyRuns == 3, "the body re-ran once per retry")
     } finally spinners.foreach(_.interrupt())
   }
+
+  test("contract record: one total line within the budget, cpu degrades, essentials stay") {
+    val essential = Seq(""""metric":"total"""", """"value":1.000""", """"queries":{}""")
+    val named = """"cpu":{"q1_agg":0.10,"q3_join":0.20,"q5_local_supplier":0.30}"""
+    val compact = """"cpu_headline_order":[0.10,0.20,0.30]"""
+    val optional = Seq(""""retries":{}""", """"baseline":{"b1":1.0}""")
+    def fields(line: String) = line.stripPrefix("{").stripSuffix("}")
+
+    // everything fits: all fields, optional ones first
+    val full = Bench.contractRecord(essential, Seq(named, compact), optional)
+    assert(fields(full) == (optional ++ Seq(named) ++ essential).mkString(","))
+
+    // optional fields go least critical first before the named cpu map does
+    val budget1 = full.length - 1
+    val noRetries = Bench.contractRecord(essential, Seq(named, compact), optional, budget1)
+    assert(noRetries.length <= budget1)
+    assert(fields(noRetries) == (optional.tail ++ Seq(named) ++ essential).mkString(","))
+
+    // the compact fallback is itself held to the budget, and last the cpu
+    // field goes entirely; the essential fields are never dropped
+    val bare = ("{" + essential.mkString(",") + "}").length
+    val withCompact = Bench.contractRecord(essential, Seq(named, compact), optional,
+      bare + compact.length + 1)
+    assert(fields(withCompact) == (Seq(compact) ++ essential).mkString(","))
+    val noCpu = Bench.contractRecord(essential, Seq(named, compact), optional, bare)
+    assert(noCpu == "{" + essential.mkString(",") + "}")
+    Seq(full, noRetries, withCompact, noCpu).foreach(l =>
+      assert(l.split("\"metric\":\"total\"", -1).length == 2, l))
+  }
 }

@@ -287,6 +287,28 @@ class LakehouseSpec extends AnyFunSuite {
     assert(all == t.read().select($"k").as[Long].collect().toSet)
   }
 
+  test("readChangesBetween: a range that ends before a schema change reads under the latest") {
+    val dir = Files.createTempDirectory("graft_lake").toString
+    val t = new LakehouseTable(spark, dir)
+    val appendSchema = TableSchema(schema.struct, primaryKeys = Seq.empty)
+    t.create(appendSchema, buckets = 2)
+    val v0 = t.latestVersion()
+    t.append((0L until 4L).map(i => (i, s"v$i")).toDF("k", "v"))
+    val v1 = t.latestVersion()
+    // a later ADD COLUMN: the range (v0, v1] ends before it, so its files
+    // are read without the pinned latest schema and coerced to it
+    t.updateMeta(TableSchema(schema.struct.add("w", IntegerType), primaryKeys = Seq.empty))
+    t.append(Seq((9L, "v9", 7)).toDF("k", "v", "w"))
+    val early = t.readChangesBetween(v0, v1)
+    assert(early.columns.toSeq == Seq("k", "v", "w"))
+    assert(early.orderBy("k").collect().map(r => (r.getLong(0), r.getString(1), r.isNullAt(2)))
+      .toSeq == (0L until 4L).map(i => (i, s"v$i", true)))
+    // a range up to the latest version reads under the pinned schema
+    val late = t.readChangesBetween(v1, t.latestVersion())
+    assert(late.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq ==
+      Seq((9L, "v9", 7)))
+  }
+
   test("changelog: merge commits write row-level change data; replay equals the table") {
     val dir = Files.createTempDirectory("graft_lake_cdc").toString
     val t = new LakehouseTable(spark, dir)

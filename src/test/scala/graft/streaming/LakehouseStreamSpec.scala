@@ -28,6 +28,36 @@ class LakehouseStreamSpec extends AnyFunSuite {
   private def mem(name: String) =
     spark.table(name).select($"k").as[Long].collect().toSeq
 
+  test("asStreaming flags a single file relation; any other plan takes the RDD wrap") {
+    import org.apache.spark.sql.GraftStreamingBridge.asStreaming
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val dir = Files.createTempDirectory("graft_bridge").toString
+    (0L until 4L).map(i => (i, s"v$i")).toDF("k", "v").write.parquet(s"$dir/a")
+    (0L until 4L).map(i => (i, i * 10)).toDF("k", "n").write.parquet(s"$dir/b")
+    val a = spark.read.parquet(s"$dir/a")
+    val b = spark.read.parquet(s"$dir/b")
+
+    // one relation leaf: the file scan stays in the plan, flagged streaming
+    val single = asStreaming(a.filter($"k" > 1))
+    assert(single.isStreaming)
+    single.queryExecution.analyzed.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => assert(lr.isStreaming)
+      case other => fail(s"expected one streaming file relation, got $other")
+    }
+
+    // two relation leaves: flagging both would turn the join into a
+    // stream-stream join, so the plan is wrapped as one streaming RDD
+    val joined = a.join(b, "k")
+    val wrapped = asStreaming(joined)
+    assert(wrapped.isStreaming)
+    assert(wrapped.schema == joined.schema)
+    wrapped.queryExecution.analyzed.collectLeaves() match {
+      case Seq(rdd: LogicalRDD) => assert(rdd.isStreaming)
+      case other => fail(s"expected the RDD wrap, got $other")
+    }
+  }
+
   test("appends + compaction stream through; compaction delivers zero rows") {
     val t = newTable()
     val name = "lhs_" + java.util.UUID.randomUUID().toString.replace("-", "")
