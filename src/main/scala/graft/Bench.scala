@@ -949,7 +949,7 @@ object Bench {
           sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       timed("b12_replay_zero") {
-        require(DeltaInterchange.readLog(s"$root/churn").numRecords == 10L)
+        require(DeltaInterchange.readLog(spark, s"$root/churn").numRecords == 10L)
       }.foreach(sec => out += "b12_delta_replay_zero_sec" -> sec)
       DeltaInterchange.checkpoint(spark, s"$root/churn")
       require(DeltaInterchange.cleanupLog(s"$root/churn") == nChurn,

@@ -240,7 +240,7 @@ object QueriesCdc {
       val dest = java.nio.file.Files.createTempDirectory("graft_delta_dst").toString
       DeltaInterchange.export(s, t, dest)
       val back = DeltaInterchange.importDelta(s, dest)
-      require(DeltaInterchange.readLog(dest).txns == Map("delta-gate" -> 1L),
+      require(DeltaInterchange.readLog(s, dest).txns == Map("delta-gate" -> 1L),
         "txn bookkeeping must survive the interchange")
       require(back.schema == t.read().schema, "schemaString must round trip")
       back.orderBy("k")
@@ -275,7 +275,7 @@ object QueriesCdc {
         s.range(140, 150).select(col("id").as("k")))
       require(DeltaInterchange.mirror(s, t, dest) == 1)
       require(DeltaInterchange.mirror(s, t, dest) == 0, "a no-op call writes nothing")
-      require(DeltaInterchange.readLog(dest)
+      require(DeltaInterchange.readLog(s, dest)
         .txns(DeltaInterchange.MirrorAppId) == t.latestVersion(),
         "mirror progress must track the lakehouse head")
       DeltaInterchange.importDelta(s, dest).orderBy("k")

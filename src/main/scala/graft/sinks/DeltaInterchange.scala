@@ -1,18 +1,19 @@
 package graft.sinks
 
 import graft.core.TableSchema
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** Delta Lake `_delta_log` interchange — one of the two ecosystem wire
-  * formats next to [[IcebergInterchange]] (the reference ships
-  * Paimon/Iceberg pipeline connectors). The public Delta transaction-log
-  * format is newline-delimited JSON actions over plain parquet, per the
+/** Delta Lake `_delta_log` interchange — one of the three ecosystem wire
+  * formats next to [[IcebergInterchange]] and [[PaimonInterchange]] (the
+  * reference ships Paimon/Iceberg pipeline connectors). The public Delta
+  * transaction-log format is newline-delimited JSON actions over plain
+  * parquet, per the
   * delta-io PROTOCOL.md specification:
   *
   *  - [[readChangeFeed]] + changelog-table mirroring: a changelog-enabled
@@ -44,13 +45,16 @@ import scala.jdk.CollectionConverters._
   *    physical-name keying of `partitionValues`), checkpoints over
   *    reader-feature tables, and timestamp/binary partition-value
   *    serialization are explicit errors.
-  *  - [[checkpoint]] / [[cleanupLog]] / `readLog(spark, dir)`: classic
+  *  - [[checkpoint]] / [[cleanupLog]] / [[readLog]]: classic
   *    single-file parquet checkpoints per the protocol spec — the
   *    consolidated state at a version plus `_last_checkpoint`, after
   *    which commits at or below it may be deleted and readers seed from
   *    the checkpoint instead of replaying from zero (the metadata-scaling
   *    requirement of a mirror writing one commit per lakehouse commit).
-  *    The pure-JVM `readLog(dir)` still refuses checkpointed logs.
+  *    Every reader, the checkpoint writer and the mirror's resume share
+  *    ONE log replay: it seeds from the checkpoint when there is one,
+  *    then applies the full action handler (protocol gate, deletion
+  *    vectors, column mapping, configuration) to every later commit.
   *
   * Determinism: timestamps are fixed at 0 and the table id derives from
   * the schema — a re-export is byte-identical, which is what lets the
@@ -81,12 +85,7 @@ object DeltaInterchange {
     actions += protocolJson(meta.changelog)
     actions += metaActionJson(meta.schema, meta.changelog)
 
-    snap.txns.toSeq.sortBy(_._1).foreach { case (appId, version) =>
-      val n = mapper.createObjectNode()
-      val t = n.putObject("txn")
-      t.put("appId", appId); t.put("version", version)
-      actions += mapper.writeValueAsString(n)
-    }
+    snap.txns.toSeq.sortBy(_._1).foreach { case (appId, v) => actions += txnJson(appId, v) }
 
     val partitionKeys = meta.schema.partitionKeys
     if (partitionKeys.nonEmpty) {
@@ -94,7 +93,7 @@ object DeltaInterchange {
       // per partition tuple under data/, partition columns OUT of the
       // files — add.partitionValues is the source of truth the importer
       // projects back (the Delta analog of Iceberg Column Projection)
-      validatePartitionCols(meta.schema.struct, partitionKeys)
+      InterchangeMirror.requirePartitionTypes(meta.schema.struct, partitionKeys)
       val live =
         if (snap.files.isEmpty)
           spark.createDataFrame(
@@ -105,63 +104,19 @@ object DeltaInterchange {
       val moved = IcebergInterchange.writeSplitDataFiles(live, destDir,
         partitionKeys, meta.schema.struct, None,
         (n, _, _) => f"part-$n%05d.parquet")
-      val rows = IcebergInterchange.countRows(spark, moved.map(_._1.toString))
+      val rows = InterchangeMirror.countRows(spark, moved.map(_._1.toString))
       moved.foreach { case (out, part, _) =>
         actions += splitAddActionJson(s"data/${out.getFileName}",
           Files.size(out), rows(out.toAbsolutePath.toString), part, partitionKeys)
       }
     } else {
-    // merge-written files carry rows = -1 (unknown) in the native log;
-    // Delta stats need the real count — one footer-only pass resolves them
-    // (a parquet count() never touches row data)
-    val unknownRows = snap.files.filter(_.rows < 0)
-    val counted: Map[String, Long] =
-      if (unknownRows.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.input_file_name
-        spark.read
-          .parquet(unknownRows.map(f => Paths.get(table.dir, f.path).toString): _*)
-          .groupBy(input_file_name().as("f")).count()
-          .collect()
-          .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1)))
-          .toMap
-      }
-    snap.files.sortBy(_.path).foreach { f =>
-      val srcPath = Paths.get(table.dir, f.path)
-      val rows =
-        if (f.rows >= 0) f.rows
-        else counted.getOrElse(srcPath.toAbsolutePath.toString,
-          throw new IllegalStateException(s"no footer count for ${f.path}"))
-      val flat = f.path.replace('/', '-')
-      Files.copy(srcPath, dest.resolve(flat), StandardCopyOption.REPLACE_EXISTING)
-      val n = mapper.createObjectNode()
-      val a = n.putObject("add")
-      a.put("path", flat)
-      a.putObject("partitionValues")
-      a.put("size", Files.size(srcPath))
-      a.put("modificationTime", 0L)
-      a.put("dataChange", true)
-      a.put("stats", statsJson(meta.schema, f.copy(rows = rows)))
-      actions += mapper.writeValueAsString(n)
+      // merge-written files carry rows = -1 (unknown) in the native log;
+      // Delta stats need the real count
+      val rows = InterchangeMirror.resolveRowCounts(spark, table.dir, snap.files)
+      snap.files.sortBy(_.path).foreach(f => actions += copyAdd(table, dest, meta.schema, f, rows))
     }
-    }
-    Files.write(logDir.resolve(f"${0L}%020d.json"),
-      actions.mkString("", "\n", "\n").getBytes(UTF_8))
+    writeCommit(logDir, 0L, actions.toSeq)
   }
-
-  /** Partition-column types whose partition-value STRINGS round trip
-    * unambiguously through `add.partitionValues` (what [[importDelta]]
-    * casts back); everything else refuses loudly. */
-  private def validatePartitionCols(struct: StructType,
-      partitionKeys: Seq[String]): Unit =
-    partitionKeys.foreach { c =>
-      require(struct.fieldNames.contains(c),
-        s"partition column '$c' is not in the schema")
-      require(Seq(IntegerType, LongType, StringType, BooleanType)
-        .contains(struct(c).dataType),
-        s"partition column '$c': type ${struct(c).dataType} has no " +
-          "partition-value serialization here — refusing")
-    }
 
   /** `add` action for a SPLIT partitioned data file: partitionValues carry
     * the tuple (all strings, the spec's serialization; null stays null),
@@ -172,19 +127,42 @@ object DeltaInterchange {
     val n = mapper.createObjectNode()
     val a = n.putObject("add")
     a.put("path", path)
-    val pv = a.putObject("partitionValues")
-    partitionKeys.foreach { c =>
-      part.get(c).flatMap(Option(_)) match {
-        case Some(v) => pv.put(c, v.toString)
-        case None => pv.putNull(c)
-      }
-    }
+    putPartitionValues(a, part, partitionKeys)
     a.put("size", size)
     a.put("modificationTime", 0L)
     a.put("dataChange", true)
     val st = mapper.createObjectNode()
     st.put("numRecords", rows)
     a.put("stats", mapper.writeValueAsString(st))
+    mapper.writeValueAsString(n)
+  }
+
+  private def putPartitionValues(action: ObjectNode, part: Map[String, Any],
+      partitionKeys: Seq[String]): Unit = {
+    val pv = action.putObject("partitionValues")
+    partitionKeys.foreach { c =>
+      part.get(c).flatMap(Option(_)) match {
+        case Some(v) => pv.put(c, v.toString)
+        case None => pv.putNull(c)
+      }
+    }
+  }
+
+  /** Copy one lakehouse data file to the table root under its flattened
+    * name; returns its `add` action with `stats` from the zone maps. */
+  private def copyAdd(table: LakehouseTable, dest: Path, schema: TableSchema,
+      f: LakehouseFormat.AddFile, rows: Map[String, Long]): String = {
+    val srcPath = Paths.get(table.dir, f.path)
+    val flat = f.path.replace('/', '-')
+    Files.copy(srcPath, dest.resolve(flat), StandardCopyOption.REPLACE_EXISTING)
+    val n = mapper.createObjectNode()
+    val a = n.putObject("add")
+    a.put("path", flat)
+    a.putObject("partitionValues")
+    a.put("size", Files.size(srcPath))
+    a.put("modificationTime", 0L)
+    a.put("dataChange", true)
+    a.put("stats", statsJson(schema, f.copy(rows = rows(f.path))))
     mapper.writeValueAsString(n)
   }
 
@@ -215,244 +193,6 @@ object DeltaInterchange {
       case _ => node.put(name, v)
     }
 
-  /** The txn appId under which [[mirror]] records the last lakehouse
-    * version it has mirrored — in the DELTA log itself, so mirror progress
-    * survives restarts with no side-channel state file. */
-  val MirrorAppId = "graft-delta-mirror"
-
-  /** Incrementally mirror NEW lakehouse commits into the Delta log — the
-    * continuous "Delta sink" shape: one Delta commit per lakehouse commit
-    * (adds + removes of exactly that commit's file diff), so a downstream
-    * Delta reader sees the same commit granularity (and can time travel
-    * it), instead of a full re-export per refresh. Cost per call is
-    * O(new commits + changed files), never O(table).
-    *
-    * Progress rides as a `txn` action (`MirrorAppId` → lakehouse version)
-    * in each Delta commit; a re-run after crash or no-op call resumes from
-    * the recorded version — idempotent by the same replay-skip rule the
-    * lakehouse txns use. Returns the number of Delta commits written.
-    */
-  def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int = {
-    val head = table.latestVersion()
-    require(head >= 0, "cannot mirror a table with no commits")
-    val dest = Paths.get(destDir)
-    val logDir = dest.resolve("_delta_log")
-    Files.createDirectories(logDir)
-    val jsonVers = listJsonVersions(logDir)
-    val ckptVer = lastCheckpointVersion(logDir)
-    // partitioned mirrors: the live SPLIT file names (relative action
-    // paths) — removals map through the source bucket each name encodes
-    val liveNames = scala.collection.mutable.Set.empty[String]
-    val (lastMirrored, nextDeltaVersion) =
-      if (jsonVers.isEmpty && ckptVer.isEmpty) (-1L, 0L)
-      else {
-        // checkpoint-aware: after checkpoint + cleanupLog the JSONs at or
-        // below the checkpoint are gone, so the resume point is whichever
-        // of (last JSON, checkpoint) is newest
-        val s = readLog(spark, destDir)
-        s.files.foreach(p => liveNames += dest.toAbsolutePath
-          .relativize(Paths.get(p).toAbsolutePath).toString)
-        (s.txns.getOrElse(MirrorAppId,
-          throw new IllegalStateException(
-            s"$destDir has a _delta_log but no $MirrorAppId txn — it is not a mirror")),
-          math.max(jsonVers.lastOption.getOrElse(-1L), ckptVer.getOrElse(-1L)) + 1)
-      }
-    if (lastMirrored >= head) return 0
-
-    var written = 0
-    var deltaV = nextDeltaVersion
-    var prev = if (lastMirrored < 0) None else Some(table.snapshot(Some(lastMirrored)))
-    var prevSchema = prev.flatMap(_.meta).map(_.schema.struct)
-    var mirrorPartitionKeys: Option[Seq[String]] = None
-    ((lastMirrored + 1) to head).foreach { v =>
-      val cur = table.snapshot(Some(v))
-      val curMeta = cur.meta.getOrElse(
-        throw new IllegalStateException("table has no meta action (not created)"))
-      require(cur.deleteFiles.isEmpty,
-        s"lakehouse version $v carries MERGE-ON-READ delete files: Delta has no " +
-          "equality deletes — compact() before mirroring past this version")
-      val partitionKeys = curMeta.schema.partitionKeys
-      mirrorPartitionKeys match {
-        case None => mirrorPartitionKeys = Some(partitionKeys)
-        case Some(pk) => require(pk == partitionKeys,
-          s"partition keys cannot evolve mid-mirror ($pk -> $partitionKeys) " +
-            "— the Hive layout is fixed at table creation; refusing")
-      }
-      val partitioned = partitionKeys.nonEmpty
-      if (partitioned) {
-        validatePartitionCols(curMeta.schema.struct, partitionKeys)
-        // pk-less tables (append-only fact streams — the classic time-
-        // partitioned shape) mirror too: appends never remove, so the
-        // pk-bucket removal mapping is not needed; single-partition
-        // commits take the metadata-only copy path. A commit that DOES
-        // remove on a pk-less partitioned mirror refuses below.
-      }
-      val prevFiles = prev.map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
-      val curFiles = cur.files.map(f => f.path -> f).toMap
-      val adds = cur.files.filterNot(f => prevFiles.contains(f.path)).sortBy(_.path)
-      val removes = prev.map(_.files.filterNot(f => curFiles.contains(f.path)))
-        .getOrElse(Seq.empty).sortBy(_.path)
-      val schemaChanged = !prevSchema.contains(curMeta.schema.struct)
-      // the table's OWN txn actions forward too (export already does):
-      // exactly-once bookkeeping must survive continuous interchange, so a
-      // sink resuming from the Delta mirror skips replayed batches
-      val prevTxns = prev.map(_.txns).getOrElse(Map.empty)
-      val newTxns = cur.txns.toSeq
-        .filter { case (a, ver) => !prevTxns.get(a).contains(ver) }.sortBy(_._1)
-      // changelog tables forward their row-level change files as Delta CDF
-      // `cdc` actions in the SAME commit — the change-data files already
-      // carry Delta's `_change_type` vocabulary (insert / update_preimage /
-      // update_postimage / delete), so downstream CDF readers consume the
-      // pipeline's changes directly
-      val changeFiles = if (curMeta.changelog) table.changeFilesOf(v) else Seq.empty
-      if (adds.nonEmpty || removes.nonEmpty || schemaChanged || newTxns.nonEmpty ||
-          changeFiles.nonEmpty) {
-        val actions = scala.collection.mutable.Buffer.empty[String]
-        if (deltaV == 0L)
-          actions += protocolJson(curMeta.changelog)
-        if (schemaChanged) actions += metaActionJson(curMeta.schema, curMeta.changelog)
-        newTxns.foreach { case (appId, ver) =>
-          val n = mapper.createObjectNode()
-          val x = n.putObject("txn")
-          x.put("appId", appId); x.put("version", ver)
-          actions += mapper.writeValueAsString(n)
-        }
-        val t = mapper.createObjectNode()
-        val tx = t.putObject("txn")
-        tx.put("appId", MirrorAppId); tx.put("version", v)
-        actions += mapper.writeValueAsString(t)
-        if (!partitioned) {
-          val rowCounts = resolveRowCounts(spark, table, adds)
-          adds.foreach { f =>
-            val srcPath = Paths.get(table.dir, f.path)
-            val flat = f.path.replace('/', '-')
-            Files.copy(srcPath, dest.resolve(flat), StandardCopyOption.REPLACE_EXISTING)
-            actions += addActionJson(curMeta.schema, f, rowCounts(f.path), flat,
-              Files.size(srcPath))
-          }
-          removes.foreach { f =>
-            val n = mapper.createObjectNode()
-            val r = n.putObject("remove")
-            r.put("path", f.path.replace('/', '-'))
-            r.put("deletionTimestamp", 0L)
-            r.put("dataChange", true)
-            actions += mapper.writeValueAsString(n)
-          }
-        } else {
-          // removals FIRST state-wise: whole-bucket COW rewrites kill every
-          // live split file whose name encodes a removed source bucket
-          if (removes.nonEmpty) {
-            require(curMeta.schema.primaryKeys.nonEmpty,
-              s"version $v removes files from a PK-LESS partitioned Delta " +
-                "mirror: removals map through the pk-hash bucket in split-" +
-                "file names, which pk-less tables do not have — only " +
-                "append-only commits mirror for them (compaction/overwrite/" +
-                "delete are unsupported); refusing")
-            val rb = PartitionedMirror.wholeBucketRemovalSet(v, removes, prev)
-            val dead = liveNames.filter(n => PartitionedMirror.srcBucketOf(
-              Paths.get(n).getFileName.toString).exists(rb.contains)).toSeq.sorted
-            dead.foreach { n =>
-              val node = mapper.createObjectNode()
-              val r = node.putObject("remove")
-              r.put("path", n)
-              r.put("deletionTimestamp", 0L)
-              r.put("dataChange", true)
-              actions += mapper.writeValueAsString(node)
-              liveNames -= n
-            }
-          }
-          if (adds.nonEmpty) {
-            // metadata-only when the footers prove every add single-
-            // partition (hard-copy, no Spark job); else ONE partitionBy
-            // job splits the commit's adds by (partition tuple, source
-            // lakehouse bucket); partition columns come back on import
-            // from add.partitionValues either way
-            val (moved, rows) = PartitionedMirror.splitOrCopyAdds(
-              spark, table.dir, adds, curMeta.schema.struct,
-              curMeta.schema.primaryKeys, curMeta.buckets, destDir, partitionKeys,
-              (n, _, srcb) => f"part-v$v-b${srcb.get}-$n%05d.parquet")
-            moved.foreach { case (out, part, _) =>
-              val rel = s"data/${out.getFileName}"
-              actions += splitAddActionJson(rel, Files.size(out),
-                rows(out.toAbsolutePath.toString), part, partitionKeys)
-              liveNames += rel
-            }
-          }
-        }
-        if (!partitioned) {
-          changeFiles.sorted.foreach { p =>
-            val srcPath = Paths.get(table.dir, p)
-            val flat = "_change_data/" + p.replace('/', '-')
-            Files.createDirectories(dest.resolve("_change_data"))
-            Files.copy(srcPath, dest.resolve(flat), StandardCopyOption.REPLACE_EXISTING)
-            val n = mapper.createObjectNode()
-            val c = n.putObject("cdc")
-            c.put("path", flat)
-            c.putObject("partitionValues")
-            c.put("size", Files.size(srcPath))
-            c.put("dataChange", false)
-            actions += mapper.writeValueAsString(n)
-          }
-        } else if (changeFiles.nonEmpty) {
-          // PARTITIONED changelog: one partitionBy job splits the commit's
-          // change rows per partition tuple — cdc files never store the
-          // partition columns; the cdc action's partitionValues restore
-          // them in readChangeFeed (the same projection rule as adds).
-          // `_change_type` stays a DATA column of the cdc files.
-          val ctSchema = StructType(curMeta.schema.struct.fields :+
-            StructField("_change_type", StringType, nullable = false))
-          val cdcDf = spark.read.schema(ctSchema)
-            .parquet(changeFiles.sorted.map(p =>
-              Paths.get(table.dir, p).toString): _*)
-          val moved = IcebergInterchange.writeSplitDataFiles(cdcDf, destDir,
-            partitionKeys, ctSchema, None,
-            (n, _, _) => f"cdc-v$v-$n%05d.parquet", subDir = "_change_data")
-          moved.foreach { case (out, part, _) =>
-            val n = mapper.createObjectNode()
-            val c = n.putObject("cdc")
-            c.put("path", s"_change_data/${out.getFileName}")
-            val pv = c.putObject("partitionValues")
-            partitionKeys.foreach { col =>
-              part.get(col).flatMap(Option(_)) match {
-                case Some(value) => pv.put(col, value.toString)
-                case None => pv.putNull(col)
-              }
-            }
-            c.put("size", Files.size(out))
-            c.put("dataChange", false)
-            actions += mapper.writeValueAsString(n)
-          }
-        }
-        Files.write(logDir.resolve(f"$deltaV%020d.json"),
-          actions.mkString("", "\n", "\n").getBytes(UTF_8))
-        deltaV += 1
-        written += 1
-      }
-      prev = Some(cur)
-      prevSchema = Some(curMeta.schema.struct)
-    }
-    // nothing changed across all new versions (e.g. txn-only commits):
-    // still record progress so the next call skips them — but only if a
-    // log exists to append to (a first-ever no-op mirror writes version 0
-    // with protocol + metaData + progress, making the dest a valid table)
-    if (written == 0) {
-      val actions = scala.collection.mutable.Buffer.empty[String]
-      if (deltaV == 0L) {
-        val changelog = table.snapshot().meta.exists(_.changelog)
-        actions += protocolJson(changelog)
-        actions += metaActionJson(table.snapshot().schema, changelog)
-      }
-      val t = mapper.createObjectNode()
-      val tx = t.putObject("txn")
-      tx.put("appId", MirrorAppId); tx.put("version", head)
-      actions += mapper.writeValueAsString(t)
-      Files.write(logDir.resolve(f"$deltaV%020d.json"),
-        actions.mkString("", "\n", "\n").getBytes(UTF_8))
-      written += 1
-    }
-    written
-  }
-
   private def protocolJson(cdf: Boolean): String =
     if (cdf)
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}"""
@@ -474,40 +214,214 @@ object DeltaInterchange {
     mapper.writeValueAsString(metaNode)
   }
 
-  private def addActionJson(schema: TableSchema, f: LakehouseFormat.AddFile,
-      rows: Long, flatPath: String, size: Long): String = {
+  private def txnJson(appId: String, version: Long): String = {
     val n = mapper.createObjectNode()
-    val a = n.putObject("add")
-    a.put("path", flatPath)
-    a.putObject("partitionValues")
-    a.put("size", size)
-    a.put("modificationTime", 0L)
-    a.put("dataChange", true)
-    a.put("stats", statsJson(schema, f.copy(rows = rows)))
+    val t = n.putObject("txn")
+    t.put("appId", appId); t.put("version", version)
     mapper.writeValueAsString(n)
   }
 
-  /** rows for each add, resolving the merge path's `-1` sentinels with one
-    * footer-only parquet count pass. */
-  private def resolveRowCounts(spark: SparkSession, table: LakehouseTable,
-      files: Seq[LakehouseFormat.AddFile]): Map[String, Long] = {
-    val unknown = files.filter(_.rows < 0)
-    val counted: Map[String, Long] =
-      if (unknown.isEmpty) Map.empty
+  private def removeJson(path: String): String = {
+    val n = mapper.createObjectNode()
+    val r = n.putObject("remove")
+    r.put("path", path)
+    r.put("deletionTimestamp", 0L)
+    r.put("dataChange", true)
+    mapper.writeValueAsString(n)
+  }
+
+  private def writeCommit(logDir: Path, version: Long, actions: Seq[String]): Unit =
+    Files.write(logDir.resolve(f"$version%020d.json"),
+      actions.mkString("", "\n", "\n").getBytes(UTF_8))
+
+  /** The txn appId under which [[mirror]] records the last lakehouse
+    * version it has mirrored — in the DELTA log itself, so mirror progress
+    * survives restarts with no side-channel state file. */
+  val MirrorAppId = "graft-delta-mirror"
+
+  /** Incrementally mirror NEW lakehouse commits into the Delta log — the
+    * continuous "Delta sink" shape: one Delta commit per lakehouse commit
+    * (adds + removes of exactly that commit's file diff), so a downstream
+    * Delta reader sees the same commit granularity (and can time travel
+    * it), instead of a full re-export per refresh. Cost per call is
+    * O(new commits + changed files), never O(table).
+    *
+    * Progress rides as a `txn` action (`MirrorAppId` → lakehouse version)
+    * in each Delta commit; a re-run after crash or no-op call resumes from
+    * the recorded version — idempotent by the same replay-skip rule the
+    * lakehouse txns use. Returns the number of Delta commits written.
+    */
+  def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int =
+    MirrorFormat.mirror(spark, table, destDir)
+
+  /** The Delta side of [[InterchangeMirror]]: commits are `_delta_log`
+    * JSONs, maintenance is `checkpoint.every` (a classic checkpoint +
+    * [[cleanupLog]] whenever that many commit JSONs accumulate). */
+  private[sinks] object MirrorFormat extends InterchangeMirror.Format {
+    val maintenance: Set[String] = Set(InterchangeMirror.CheckpointEvery)
+
+    def open(spark: SparkSession, table: LakehouseTable,
+        destDir: String): InterchangeMirror.Writer = new MirrorWriter(spark, table, destDir)
+
+    def maintain(spark: SparkSession, destDir: String, written: Int,
+        m: InterchangeMirror.Maintenance): Unit =
+      if (m(InterchangeMirror.CheckpointEvery) > 0)
+        maintainCheckpoint(spark, destDir, m(InterchangeMirror.CheckpointEvery))
+  }
+
+  private final class MirrorWriter(spark: SparkSession, table: LakehouseTable,
+      destDir: String) extends InterchangeMirror.Writer {
+    private val dest = Paths.get(destDir)
+    private val logDir = dest.resolve("_delta_log")
+    Files.createDirectories(logDir)
+    // partitioned mirrors: the live SPLIT file names (relative action
+    // paths) — removals map through the source bucket each name encodes
+    private val liveNames = scala.collection.mutable.Set.empty[String]
+    private var deltaV = 0L
+    private var written = 0
+
+    val lastMirrored: Long = {
+      val jsonVers = listJsonVersions(logDir)
+      val ckptVer = lastCheckpointVersion(logDir)
+      if (jsonVers.isEmpty && ckptVer.isEmpty) -1L
       else {
-        import org.apache.spark.sql.functions.input_file_name
-        spark.read
-          .parquet(unknown.map(f => Paths.get(table.dir, f.path).toString): _*)
-          .groupBy(input_file_name().as("f")).count()
-          .collect()
-          .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1)))
-          .toMap
+        // checkpoint-aware: after checkpoint + cleanupLog the JSONs at or
+        // below the checkpoint are gone, so the resume point is whichever
+        // of (last JSON, checkpoint) is newest
+        val s = readLog(spark, destDir)
+        s.files.foreach(p => liveNames += dest.toAbsolutePath
+          .relativize(Paths.get(p).toAbsolutePath).toString)
+        deltaV = math.max(jsonVers.lastOption.getOrElse(-1L), ckptVer.getOrElse(-1L)) + 1
+        s.txns.getOrElse(MirrorAppId, throw new IllegalStateException(
+          s"$destDir has a _delta_log but no $MirrorAppId txn — it is not a mirror"))
       }
-    files.map { f =>
-      f.path -> (if (f.rows >= 0) f.rows
-                 else counted.getOrElse(Paths.get(table.dir, f.path).toAbsolutePath.toString,
-                   throw new IllegalStateException(s"no footer count for ${f.path}")))
-    }.toMap
+    }
+
+    def write(d: InterchangeMirror.VersionDiff): Unit = {
+      require(d.cur.deleteFiles.isEmpty,
+        s"lakehouse version ${d.version} carries MERGE-ON-READ delete files: Delta " +
+          "has no equality deletes — compact() before mirroring past this version")
+      if (d.adds.nonEmpty || d.removes.nonEmpty || d.schemaChanged ||
+          d.newTxns.nonEmpty || d.changeFiles.nonEmpty) {
+        val actions = scala.collection.mutable.Buffer.empty[String]
+        if (deltaV == 0L) actions += protocolJson(d.meta.changelog)
+        if (d.schemaChanged) actions += metaActionJson(d.schema, d.meta.changelog)
+        // the table's OWN txn actions forward too (export already does):
+        // exactly-once bookkeeping must survive continuous interchange, so
+        // a sink resuming from the Delta mirror skips replayed batches
+        d.newTxns.foreach { case (appId, ver) => actions += txnJson(appId, ver) }
+        actions += txnJson(MirrorAppId, d.version)
+        if (d.partitioned) actions ++= partitionedActions(d)
+        else {
+          val rows = InterchangeMirror.resolveRowCounts(spark, table.dir, d.adds)
+          d.adds.foreach(f => actions += copyAdd(table, dest, d.schema, f, rows))
+          d.removes.foreach(f => actions += removeJson(f.path.replace('/', '-')))
+          // changelog tables forward their row-level change files as Delta
+          // CDF `cdc` actions in the SAME commit — the change-data files
+          // already carry Delta's `_change_type` vocabulary (insert /
+          // update_preimage / update_postimage / delete), so downstream CDF
+          // readers consume the pipeline's changes directly
+          d.changeFiles.sorted.foreach { p =>
+            val srcPath = Paths.get(table.dir, p)
+            val flat = "_change_data/" + p.replace('/', '-')
+            Files.createDirectories(dest.resolve("_change_data"))
+            Files.copy(srcPath, dest.resolve(flat), StandardCopyOption.REPLACE_EXISTING)
+            val n = mapper.createObjectNode()
+            val c = n.putObject("cdc")
+            c.put("path", flat)
+            c.putObject("partitionValues")
+            c.put("size", Files.size(srcPath))
+            c.put("dataChange", false)
+            actions += mapper.writeValueAsString(n)
+          }
+        }
+        writeCommit(logDir, deltaV, actions.toSeq)
+        deltaV += 1
+        written += 1
+      }
+    }
+
+    /** Removes, adds and cdc actions of a Hive-layout partitioned commit.
+      * pk-less tables (append-only fact streams — the classic time-
+      * partitioned shape) mirror too: appends never remove, so the
+      * pk-bucket removal mapping is not needed; a commit that DOES remove
+      * on a pk-less partitioned mirror refuses. */
+    private def partitionedActions(d: InterchangeMirror.VersionDiff): Seq[String] = {
+      val v = d.version
+      val partitionKeys = d.partitionKeys
+      val actions = scala.collection.mutable.Buffer.empty[String]
+      // removals FIRST state-wise: whole-bucket COW rewrites kill every
+      // live split file whose name encodes a removed source bucket
+      if (d.removes.nonEmpty) {
+        val rb = PartitionedMirror.wholeBucketRemovalSet(d, "Delta")
+        val dead = liveNames.filter(n => PartitionedMirror.srcBucketOf(
+          Paths.get(n).getFileName.toString).exists(rb.contains)).toSeq.sorted
+        dead.foreach { n =>
+          actions += removeJson(n)
+          liveNames -= n
+        }
+      }
+      if (d.adds.nonEmpty) {
+        // metadata-only when the footers prove every add single-partition
+        // (hard-copy, no Spark job); else ONE partitionBy job splits the
+        // commit's adds by (partition tuple, source lakehouse bucket);
+        // partition columns come back on import from add.partitionValues
+        // either way
+        val (moved, rows) = PartitionedMirror.splitOrCopyAdds(
+          spark, table.dir, d.adds, d.struct, d.schema.primaryKeys,
+          d.meta.buckets, destDir, partitionKeys,
+          (n, _, srcb) => f"part-v$v-b${srcb.get}-$n%05d.parquet")
+        moved.foreach { case (out, part, _) =>
+          val rel = s"data/${out.getFileName}"
+          actions += splitAddActionJson(rel, Files.size(out),
+            rows(out.toAbsolutePath.toString), part, partitionKeys)
+          liveNames += rel
+        }
+      }
+      if (d.changeFiles.nonEmpty) {
+        // PARTITIONED changelog: one partitionBy job splits the commit's
+        // change rows per partition tuple — cdc files never store the
+        // partition columns; the cdc action's partitionValues restore
+        // them in readChangeFeed (the same projection rule as adds).
+        // `_change_type` stays a DATA column of the cdc files.
+        val ctSchema = StructType(d.struct.fields :+
+          StructField("_change_type", StringType, nullable = false))
+        val cdcDf = spark.read.schema(ctSchema)
+          .parquet(d.changeFiles.sorted.map(p => Paths.get(table.dir, p).toString): _*)
+        val moved = IcebergInterchange.writeSplitDataFiles(cdcDf, destDir,
+          partitionKeys, ctSchema, None,
+          (n, _, _) => f"cdc-v$v-$n%05d.parquet", subDir = "_change_data")
+        moved.foreach { case (out, part, _) =>
+          val n = mapper.createObjectNode()
+          val c = n.putObject("cdc")
+          c.put("path", s"_change_data/${out.getFileName}")
+          putPartitionValues(c, part, partitionKeys)
+          c.put("size", Files.size(out))
+          c.put("dataChange", false)
+          actions += mapper.writeValueAsString(n)
+        }
+      }
+      actions.toSeq
+    }
+
+    def finish(head: Long): Int = {
+      // no new version changed anything (e.g. a re-recorded txn): still
+      // record progress so the next call skips them (a first-ever no-op
+      // mirror writes version 0 with protocol + metaData + progress,
+      // making the dest a valid table)
+      if (written == 0) {
+        val actions = scala.collection.mutable.Buffer.empty[String]
+        if (deltaV == 0L) {
+          val changelog = table.snapshot().meta.exists(_.changelog)
+          actions += protocolJson(changelog)
+          actions += metaActionJson(table.snapshot().schema, changelog)
+        }
+        actions += txnJson(MirrorAppId, head)
+        writeCommit(logDir, deltaV, actions.toSeq)
+        written += 1
+      }
+      written
+    }
   }
 
   final case class DeltaSnapshot(
@@ -564,96 +478,36 @@ object DeltaInterchange {
     * commit per lakehouse commit needs this to keep reader startup
     * O(live files), not O(history). Returns the checkpointed version. */
   def checkpoint(spark: SparkSession, destDir: String): Long = {
-    import org.apache.spark.sql.Row
     val logDir = Paths.get(destDir, "_delta_log")
     val prevCkpt = lastCheckpointVersion(logDir)
     val versions = listJsonVersions(logDir).filter(v => prevCkpt.forall(v > _))
     require(versions.nonEmpty,
       s"no commits newer than the last checkpoint under $destDir")
-    prevCkpt.foreach(c => require(versions.head == c + 1,
-      s"commit gap after checkpoint $c (next JSON is ${versions.head})"))
     val v = versions.last
-    // full-fidelity state: seed from the previous checkpoint when one
-    // exists (after cleanupLog the older JSONs are gone), then replay the
-    // newer commits, keeping raw add rows so stats survive
-    var protocolRow: Row = null
-    var metaRow: Row = null
-    val adds = scala.collection.mutable.LinkedHashMap.empty[String, Row]
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    prevCkpt.foreach { c =>
-      spark.read.schema(checkpointSchema)
-        .parquet(logDir.resolve(f"$c%020d.checkpoint.parquet").toString)
-        .collect().foreach { r =>
-          if (!r.isNullAt(4)) protocolRow = r.getStruct(4)
-          if (!r.isNullAt(3)) metaRow = r.getStruct(3)
-          if (!r.isNullAt(1)) adds(r.getStruct(1).getString(0)) = r.getStruct(1)
-          if (!r.isNullAt(0)) txns(r.getStruct(0).getString(0)) = r.getStruct(0).getLong(1)
-        }
-    }
-    replayRawActions(logDir, versions) { node =>
-      if (node.has("protocol")) {
-        val p = node.get("protocol")
-        // the classic checkpoint row schema drops deletionVector and
-        // readerFeatures — checkpointing a reader-feature table would
-        // silently resurrect DV-masked rows on the next read
-        require(p.get("minReaderVersion").asInt() <= 1,
-          s"minReaderVersion ${p.get("minReaderVersion").asInt()}: " +
-            "checkpointing reader-feature tables (column mapping / deletion " +
-            "vectors) is not supported — the checkpoint would drop their " +
-            "add-action fields; refusing")
-        protocolRow = Row(p.get("minReaderVersion").asInt(),
-          p.get("minWriterVersion").asInt())
-      } else if (node.has("add") && node.get("add").has("deletionVector")) {
-        throw new IllegalArgumentException(
-          "add action carries a deletionVector — checkpointing deletion-" +
-            "vector tables is not supported (the classic checkpoint row " +
-            "schema here would drop the descriptor); refusing")
-      } else if (node.has("metaData")) {
-        val m = node.get("metaData")
-        // configuration survives checkpointing (delta.enableChangeDataFeed
-        // must remain visible once the JSON commits are cleaned up)
-        val conf = Option(m.get("configuration"))
-          .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-          .getOrElse(Map.empty[String, String])
-        // partitionColumns survive checkpointing: a Hive-layout partitioned
-        // table whose JSONs were cleaned up must still project per-file
-        // partitionValues — dropping them here would silently read the
-        // table as unpartitioned (partition columns all null)
-        val partCols = Option(m.get("partitionColumns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq)
-          .getOrElse(Seq.empty[String])
-        metaRow = Row(m.get("id").asText(),
-          Row(m.get("format").get("provider").asText(), Map.empty[String, String]),
-          m.get("schemaString").asText(),
-          partCols, conf,
-          m.get("createdTime").asLong())
-      } else if (node.has("add")) {
-        val a = node.get("add")
-        // null partition values must survive as NULLS: NullNode.asText()
-        // is the string "null", which importDelta would project as
-        // lit("null") — a silently wrong value for string partitions
-        val partVals = Option(a.get("partitionValues"))
-          .map(_.properties().asScala.map(e => e.getKey ->
-            (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty[String, String])
-        adds(a.get("path").asText()) = Row(a.get("path").asText(),
-          partVals, a.get("size").asLong(),
-          a.get("modificationTime").asLong(), a.get("dataChange").asBoolean(),
-          Option(a.get("stats")).map(_.asText()).orNull)
-      } else if (node.has("remove")) {
-        adds.remove(node.get("remove").get("path").asText())
-      } else if (node.has("txn")) {
-        val t = node.get("txn")
-        txns(t.get("appId").asText()) = t.get("version").asLong()
-      }
-    }
-    require(protocolRow != null && metaRow != null, "log has no protocol/metaData")
+    // full-fidelity state: the one replay seeds from the previous
+    // checkpoint when one exists (after cleanupLog the older JSONs are
+    // gone) and keeps the raw add actions, so stats survive
+    val state = replay(spark, destDir, None)
+    // the classic checkpoint row schema drops deletionVector and
+    // readerFeatures — checkpointing a reader-feature table would
+    // silently resurrect DV-masked rows on the next read
+    require(state.readerVersion <= 1,
+      s"minReaderVersion ${state.readerVersion}: checkpointing reader-feature " +
+        "tables (column mapping / deletion vectors) is not supported — the " +
+        "checkpoint would drop their add-action fields; refusing")
+    require(!state.adds.values.exists(_.has("deletionVector")),
+      "add action carries a deletionVector — checkpointing deletion-vector " +
+        "tables is not supported (the classic checkpoint row schema here " +
+        "would drop the descriptor); refusing")
+    require(state.protocol.nonEmpty && state.metaData.nonEmpty,
+      "log has no protocol/metaData")
+    def row(action: String, node: JsonNode): Row = Row.fromSeq(checkpointSchema.fields
+      .toSeq.map(f => if (f.name == action) fromJson(node, f.dataType) else null))
     val rows: Seq[Row] =
-      Seq(Row(null, null, null, null, protocolRow),
-        Row(null, null, null, metaRow, null)) ++
-        txns.toSeq.sortBy(_._1).map { case (a, ver) =>
+      Seq(row("protocol", state.protocol.get), row("metaData", state.metaData.get)) ++
+        state.txns.toSeq.sortBy(_._1).map { case (a, ver) =>
           Row(Row(a, ver), null, null, null, null) } ++
-        adds.values.toSeq.map(a => Row(null, a, null, null, null))
+        state.adds.values.toSeq.map(row("add", _))
     val tmp = Files.createTempDirectory("graft_delta_ckpt").toString
     spark.createDataFrame(rows.asJava, checkpointSchema)
       .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -707,224 +561,193 @@ object DeltaInterchange {
   private def lastCheckpointVersion(logDir: Path): Option[Long] = {
     val p = logDir.resolve("_last_checkpoint")
     if (!Files.exists(p)) None
-    else Some(mapper.readTree(Files.readAllBytes(p)).get("version").asLong())
+    else {
+      val v = mapper.readTree(Files.readAllBytes(p)).get("version")
+      require(v != null && v.canConvertToLong,
+        s"_last_checkpoint under $logDir names no version — refusing rather " +
+          "than replaying a partial log")
+      Some(v.asLong())
+    }
   }
 
   private def replayRawActions(logDir: Path, versions: Seq[Long])(
-      f: com.fasterxml.jackson.databind.JsonNode => Unit): Unit =
+      f: JsonNode => Unit): Unit =
     versions.foreach { v =>
       Files.readAllLines(logDir.resolve(f"$v%020d.json")).asScala
         .filter(_.trim.nonEmpty).foreach(line => f(mapper.readTree(line)))
     }
 
-  /** Checkpoint-aware replay: seed from the last checkpoint when one
-    * exists, then replay only the newer JSON commits. Falls back to the
-    * plain from-zero [[readLog]] otherwise. */
-  def readLog(spark: SparkSession, srcDir: String): DeltaSnapshot =
-    readLog(spark, srcDir, None)
+  /** An action's `partitionValues`; null values stay NULLS (NullNode's
+    * text is the string "null", a silently wrong partition value). */
+  private def partitionValues(action: JsonNode): Map[String, String] =
+    Option(action.get("partitionValues"))
+      .map(_.properties().asScala.map(e =>
+        e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
+      .getOrElse(Map.empty)
 
-  /** Checkpoint-aware replay with optional time travel: `asOfVersion`
-    * must be AT or AFTER the checkpointed version — the commits below it
-    * were cleaned up, so older states are gone (Delta's own
-    * `versionAsOf` retention behavior). */
-  def readLog(spark: SparkSession, srcDir: String,
-      asOfVersion: Option[Long]): DeltaSnapshot = {
+  /** A checkpoint row's action struct as the JSON action it records. */
+  private def toJson(v: Any, dt: DataType): JsonNode = (v, dt) match {
+    case (null, _) => com.fasterxml.jackson.databind.node.NullNode.instance
+    case (r: Row, s: StructType) =>
+      val o = mapper.createObjectNode()
+      s.fields.indices.filterNot(r.isNullAt).foreach(i =>
+        o.set[JsonNode](s(i).name, toJson(r.get(i), s(i).dataType)))
+      o
+    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
+      val o = mapper.createObjectNode()
+      m.foreach { case (k, x) => o.set[JsonNode](k.toString, toJson(x, vt)) }
+      o
+    case (xs: scala.collection.Seq[_], ArrayType(et, _)) =>
+      val a = mapper.createArrayNode()
+      xs.foreach(x => a.add(toJson(x, et)))
+      a
+    case _ => mapper.valueToTree[JsonNode](v)
+  }
+
+  /** A JSON action as the checkpoint row struct `dt`. */
+  private def fromJson(n: JsonNode, dt: DataType): Any =
+    if (n == null || n.isNull) null
+    else dt match {
+      case s: StructType => Row.fromSeq(s.fields.toSeq.map(f => fromJson(n.get(f.name), f.dataType)))
+      case MapType(_, vt, _) =>
+        n.properties().asScala.map(e => e.getKey -> fromJson(e.getValue, vt)).toMap
+      case ArrayType(et, _) => n.elements().asScala.map(fromJson(_, et)).toSeq
+      case IntegerType => n.asInt()
+      case LongType => n.asLong()
+      case BooleanType => n.asBoolean()
+      case _ => n.asText()
+    }
+
+  /** The replayed state of a `_delta_log`: the latest protocol and
+    * metaData, the live `add` actions by path (a re-add keeps its
+    * position and replaces the action, so the latest DV wins and an add
+    * WITHOUT one clears it), and the txn map. */
+  private final class LogState {
+    var protocol: Option[JsonNode] = None
+    var metaData: Option[JsonNode] = None
+    val adds = scala.collection.mutable.LinkedHashMap.empty[String, JsonNode]
+    val txns = scala.collection.mutable.Map.empty[String, Long]
+
+    def readerVersion: Int = protocol.map(_.get("minReaderVersion").asInt()).getOrElse(1)
+
+    def configuration(key: String): Option[String] =
+      metaData.flatMap(m => Option(m.get("configuration")))
+        .flatMap(c => Option(c.get(key))).map(_.asText())
+
+    def mappingMode: String = configuration("delta.columnMapping.mode").getOrElse("none")
+
+    /** Apply one action; commitInfo / cdc / domainMetadata are
+      * informational and skipped. */
+    def apply(node: JsonNode): Unit =
+      if (node.has("protocol")) {
+        checkReaderSupport(node.get("protocol"))
+        protocol = Some(node.get("protocol"))
+      } else if (node.has("metaData")) {
+        metaData = Some(node.get("metaData"))
+        require(Seq("none", "name", "id").contains(mappingMode),
+          s"delta.columnMapping.mode '$mappingMode' is not in the " +
+            "protocol (none / name / id) — refusing")
+      } else if (node.has("add")) {
+        val a = node.get("add")
+        adds(a.get("path").asText()) = a
+      } else if (node.has("remove")) {
+        adds.remove(node.get("remove").get("path").asText())
+      } else if (node.has("txn")) {
+        val t = node.get("txn")
+        txns(t.get("appId").asText()) = t.get("version").asLong()
+      }
+
+    def snapshot(srcDir: String): DeltaSnapshot = {
+      val md = metaData.getOrElse(
+        throw new IllegalStateException("log has no metaData action"))
+      def abs(p: String) = Paths.get(srcDir, p).toString
+      val dvs = adds.toSeq.flatMap { case (p, a) =>
+        Option(a.get("deletionVector")).map(dv =>
+          abs(p) -> DeltaReaderFeatures.parseDescriptor(dv, srcDir)) }.toMap
+      val physicalRows = adds.values.toSeq.map(a => Option(a.get("stats"))
+        .map(s => mapper.readTree(s.asText()).get("numRecords").asLong()).getOrElse(0L)).sum
+      DeltaSnapshot(
+        DataType.fromJson(md.get("schemaString").asText()).asInstanceOf[StructType],
+        adds.keys.toSeq.map(abs), txns.toMap,
+        // numRecords is the LOGICAL row count: physical stats minus the
+        // rows each live deletion vector masks
+        physicalRows - dvs.values.map(_.cardinality).sum,
+        Option(md.get("partitionColumns"))
+          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
+        adds.toSeq.map { case (p, a) => abs(p) -> partitionValues(a) }.toMap,
+        mappingMode, dvs)
+    }
+  }
+
+  /** THE log replay behind every reader, [[checkpoint]] and the mirror's
+    * resume: seed from the last checkpoint when one exists, then apply
+    * every later JSON commit up to `asOfVersion` with the full action
+    * handler. Time travel must land AT or AFTER the checkpoint — the
+    * commits below it were cleaned up, so older states are gone (Delta's
+    * own `versionAsOf` retention behavior); a version beyond the head
+    * refuses loudly, and so does a commit gap. */
+  private def replay(spark: SparkSession, srcDir: String,
+      asOfVersion: Option[Long]): LogState = {
     val logDir = Paths.get(srcDir, "_delta_log")
     require(Files.isDirectory(logDir), s"no _delta_log under $srcDir")
-    lastCheckpointVersion(logDir) match {
-      case None => readLog(srcDir, asOfVersion)
-      case Some(ckptV) =>
-        val ckptFile = logDir.resolve(f"$ckptV%020d.checkpoint.parquet")
-        require(Files.exists(ckptFile),
-          s"_last_checkpoint points at version $ckptV but ${ckptFile.getFileName} " +
-            "is missing — refusing rather than replaying a truncated log")
-        var schema: Option[StructType] = None
-        var partitionCols: Seq[String] = Nil
-        val fileParts = scala.collection.mutable.Map.empty[String, Map[String, String]]
-        val live = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        val txns = scala.collection.mutable.Map.empty[String, Long]
-        spark.read.schema(checkpointSchema).parquet(ckptFile.toString)
-          .collect().foreach { r =>
-            if (!r.isNullAt(4)) {
-              val reader = r.getStruct(4).getInt(0)
-              // the classic checkpoint schema here has no deletionVector /
-              // readerFeatures columns, so a checkpoint-SEEDED read of a
-              // reader-feature table could silently resurrect DV-masked
-              // rows — those tables must retain their full JSON log
-              require(reader <= 1,
-                s"minReaderVersion $reader: checkpoint-seeded reads support " +
-                  "base tables only; reader-feature tables (column mapping / " +
-                  "deletion vectors) must keep their JSON commits")
-            }
-            if (!r.isNullAt(3)) {
-              val md = r.getStruct(3)
-              schema = Some(DataType.fromJson(md.getString(2))
-                .asInstanceOf[StructType])
-              partitionCols =
-                if (md.isNullAt(3)) Nil else md.getSeq[String](3)
-            }
-            if (!r.isNullAt(1)) {
-              val a = r.getStruct(1)
-              val rows = Option(a.getString(5))
-                .map(s => mapper.readTree(s).get("numRecords").asLong()).getOrElse(0L)
-              live(a.getString(0)) = rows
-              fileParts(a.getString(0)) =
-                if (a.isNullAt(1)) Map.empty
-                else a.getMap[String, String](1).toMap
-            }
-            if (!r.isNullAt(0)) {
-              val t = r.getStruct(0)
-              txns(t.getString(0)) = t.getLong(1)
-            }
-          }
-        asOfVersion.foreach { v =>
-          require(v >= ckptV,
-            s"versionAsOf $v is below the checkpoint at $ckptV — those " +
-              "commits were cleaned up, the state is gone")
-          require(v <= listJsonVersions(logDir).maxOption.getOrElse(ckptV),
-            s"versionAsOf $v is beyond the latest commit — nothing was " +
-              "committed there")
-        }
-        val newer = listJsonVersions(logDir)
-          .filter(v => v > ckptV && asOfVersion.forall(v <= _))
-        newer.headOption.foreach(first => require(first == ckptV + 1,
-          s"commit gap after checkpoint $ckptV (next JSON is $first) — " +
-            "refusing rather than skipping commits"))
-        newer.zipWithIndex.foreach { case (v, i) =>
-          require(v == ckptV + 1 + i, s"commit gap at version $v") }
-        replayRawActions(logDir, newer) { node =>
-          if (node.has("metaData"))
-            schema = Some(DataType.fromJson(
-              node.get("metaData").get("schemaString").asText())
-              .asInstanceOf[StructType])
-          else if (node.has("add")) {
-            val a = node.get("add")
-            val rows = Option(a.get("stats"))
-              .map(s => mapper.readTree(s.asText()).get("numRecords").asLong())
-              .getOrElse(0L)
-            live(a.get("path").asText()) = rows
-            fileParts(a.get("path").asText()) = Option(a.get("partitionValues"))
-              .map(_.properties().asScala.map(e =>
-                e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText()))
-                .toMap).getOrElse(Map.empty)
-          } else if (node.has("remove"))
-            live.remove(node.get("remove").get("path").asText())
-          else if (node.has("txn")) {
-            val t = node.get("txn")
-            txns(t.get("appId").asText()) = t.get("version").asLong()
-          }
-        }
-        DeltaSnapshot(
-          schema.getOrElse(throw new IllegalStateException("no metaData in log")),
-          live.keys.toSeq.map(p => Paths.get(srcDir, p).toString),
-          txns.toMap, live.values.sum, partitionCols,
-          live.keys.toSeq.map(p =>
-            Paths.get(srcDir, p).toString -> fileParts.getOrElse(p, Map.empty)).toMap)
+    val ckpt = lastCheckpointVersion(logDir)
+    val json = listJsonVersions(logDir)
+    if (ckpt.isEmpty) {
+      require(json.nonEmpty, s"empty _delta_log under $srcDir")
+      require(json.head == 0L,
+        f"log does not start at version 0 (earliest: ${json.head}%020d.json) — a " +
+          "truncated log cannot be replayed without a checkpoint")
     }
+    val head = (json ++ ckpt).max
+    asOfVersion.foreach { v =>
+      ckpt.foreach(c => require(v >= c,
+        s"versionAsOf $v is below the checkpoint at $c — those commits were " +
+          "cleaned up, the state is gone"))
+      require(v >= 0 && v <= head,
+        s"versionAsOf $v is not in the log (head: $head) — nothing was committed there")
+    }
+    val first = ckpt.map(_ + 1).getOrElse(0L)
+    val versions = json.filter(v => v >= first && asOfVersion.forall(v <= _))
+    versions.zipWithIndex.foreach { case (v, i) =>
+      require(v == first + i, s"commit gap at version ${first + i} (next JSON is $v) " +
+        "— refusing rather than skipping commits") }
+    val state = new LogState
+    ckpt.foreach { c =>
+      val file = logDir.resolve(f"$c%020d.checkpoint.parquet")
+      require(Files.exists(file),
+        s"_last_checkpoint points at version $c but ${file.getFileName} " +
+          "is missing — refusing rather than replaying a truncated log")
+      spark.read.schema(checkpointSchema).parquet(file.toString).collect().foreach { r =>
+        checkpointSchema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+          val action = mapper.createObjectNode()
+          action.set[JsonNode](checkpointSchema(i).name,
+            toJson(r.get(i), checkpointSchema(i).dataType))
+          state.apply(action)
+        }
+      }
+      // the classic checkpoint schema here has no deletionVector /
+      // readerFeatures columns, so a checkpoint-SEEDED read of a
+      // reader-feature table could silently resurrect DV-masked rows —
+      // those tables must retain their full JSON log
+      require(state.readerVersion <= 1,
+        s"minReaderVersion ${state.readerVersion}: checkpoint-seeded reads " +
+          "support base tables only; reader-feature tables (column mapping / " +
+          "deletion vectors) must keep their JSON commits")
+    }
+    replayRawActions(logDir, versions)(state.apply)
+    state
   }
 
   /** Replay a `_delta_log` into the live state at the latest version. */
-  def readLog(srcDir: String): DeltaSnapshot = readLog(srcDir, None)
+  def readLog(spark: SparkSession, srcDir: String): DeltaSnapshot =
+    readLog(spark, srcDir, None)
 
   /** Replay a `_delta_log`, optionally stopping AT `asOfVersion` — Delta
     * time travel (`versionAsOf`): the state is exactly what a reader at
-    * that commit saw. A version beyond the head refuses loudly. */
-  def readLog(srcDir: String, asOfVersion: Option[Long]): DeltaSnapshot = {
-    val logDir = Paths.get(srcDir, "_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $srcDir")
-    require(!Files.exists(logDir.resolve("_last_checkpoint")),
-      "checkpointed Delta logs are not supported (parquet checkpoint reader " +
-        "not implemented) — refusing rather than replaying a partial log")
-    val allVersions = Files.list(logDir).iterator.asScala
-      .map(_.getFileName.toString)
-      .filter(_.matches("\\d{20}\\.json"))
-      .toSeq.sorted
-    require(allVersions.nonEmpty, s"empty _delta_log under $srcDir")
-    require(allVersions.head == f"${0L}%020d.json",
-      s"log does not start at version 0 (earliest: ${allVersions.head}) — a " +
-        "truncated log cannot be replayed without a checkpoint")
-    asOfVersion.foreach { v =>
-      require(v >= 0 && allVersions.contains(f"$v%020d.json"),
-        s"versionAsOf $v is not in the log (head: " +
-          s"${allVersions.last.stripSuffix(".json").toLong}) — nothing was " +
-          "committed there")
-    }
-    val versions = asOfVersion match {
-      case None => allVersions
-      case Some(v) => allVersions.filter(_ <= f"$v%020d.json")
-    }
-
-    var schema: Option[StructType] = None
-    var partitionCols: Seq[String] = Nil
-    var mappingMode = "none"
-    val fileParts = scala.collection.mutable.Map.empty[String, Map[String, String]]
-    val fileDvs =
-      scala.collection.mutable.Map.empty[String, DeltaReaderFeatures.DvDescriptor]
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    var numRecords = 0L
-    val fileRecords = scala.collection.mutable.Map.empty[String, Long]
-    versions.foreach { v =>
-      Files.readAllLines(logDir.resolve(v)).asScala.filter(_.trim.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) {
-          checkReaderSupport(node.get("protocol"))
-        } else if (node.has("metaData")) {
-          val md = node.get("metaData")
-          val parts = md.get("partitionColumns")
-          partitionCols =
-            if (parts == null) Nil
-            else parts.elements().asScala.map(_.asText()).toSeq
-          mappingMode = Option(md.get("configuration"))
-            .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-            .map(_.asText()).getOrElse("none")
-          require(Seq("none", "name", "id").contains(mappingMode),
-            s"delta.columnMapping.mode '$mappingMode' is not in the " +
-              "protocol (none / name / id) — refusing")
-          schema = Some(DataType.fromJson(md.get("schemaString").asText())
-            .asInstanceOf[StructType])
-        } else if (node.has("add")) {
-          val a = node.get("add")
-          val p = a.get("path").asText()
-          live += p
-          // a DV update re-adds the same path with a new descriptor — the
-          // latest add wins, and an add WITHOUT one clears it
-          Option(a.get("deletionVector")) match {
-            case Some(dv) =>
-              fileDvs(p) = DeltaReaderFeatures.parseDescriptor(dv, srcDir)
-            case None => fileDvs.remove(p)
-          }
-          fileParts(p) = Option(a.get("partitionValues"))
-            .map(_.properties().asScala.map(e =>
-              e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText()))
-              .toMap).getOrElse(Map.empty)
-          val rows = Option(a.get("stats"))
-            .map(s => mapper.readTree(s.asText()).get("numRecords").asLong()).getOrElse(0L)
-          fileRecords(p) = rows
-        } else if (node.has("remove")) {
-          val p = node.get("remove").get("path").asText()
-          live -= p
-          fileDvs.remove(p)
-        } else if (node.has("txn")) {
-          val t = node.get("txn")
-          txns(t.get("appId").asText()) = t.get("version").asLong()
-        } // commitInfo / cdc / domainMetadata: informational, skipped
-      }
-    }
-    // numRecords is the LOGICAL row count: physical stats minus the rows
-    // each live deletion vector masks
-    numRecords = live.iterator.map(p => fileRecords.getOrElse(p, 0L)).sum -
-      live.iterator.flatMap(fileDvs.get).map(_.cardinality).sum
-    DeltaSnapshot(
-      schema.getOrElse(throw new IllegalStateException("log has no metaData action")),
-      live.toSeq.map(p => Paths.get(srcDir, p).toString),
-      txns.toMap, numRecords, partitionCols,
-      live.toSeq.map(p =>
-        Paths.get(srcDir, p).toString -> fileParts.getOrElse(p, Map.empty)).toMap,
-      mappingMode,
-      live.toSeq.flatMap(p => fileDvs.get(p).map(d =>
-        Paths.get(srcDir, p).toString -> d)).toMap)
-  }
+    * that commit saw. */
+  def readLog(spark: SparkSession, srcDir: String,
+      asOfVersion: Option[Long]): DeltaSnapshot =
+    replay(spark, srcDir, asOfVersion).snapshot(srcDir)
 
   /** Reader-version gate: base tables (1), column mapping (2), and
     * version-3 tables whose `readerFeatures` this importer implements —
@@ -932,7 +755,7 @@ object DeltaInterchange {
     * `timestampNtz` (a type the schema already expresses) and
     * `vacuumProtocolCheck` (constrains VACUUM, not reads). Anything else
     * refuses loudly rather than reading wrong data. */
-  private def checkReaderSupport(p: com.fasterxml.jackson.databind.JsonNode): Unit = {
+  private def checkReaderSupport(p: JsonNode): Unit = {
     val reader = p.get("minReaderVersion").asInt()
     require(reader <= 3,
       s"minReaderVersion $reader is newer than the table-features protocol " +
@@ -962,40 +785,19 @@ object DeltaInterchange {
   def readChangeFeed(spark: SparkSession, srcDir: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     val logDir = Paths.get(srcDir, "_delta_log")
-    val snap = readLog(spark, srcDir)
+    val state = replay(spark, srcDir, None)
+    val snap = state.snapshot(srcDir)
     // PARTITIONED tables: cdc files do not store partition columns — the
     // per-action partitionValues project back exactly like data files
-    // (bounded to the same unambiguous serializations as importDelta)
-    snap.partitionColumns.foreach { c =>
-      val dt = snap.schema(c).dataType
-      require(!Seq(TimestampType, TimestampNTZType, BinaryType).contains(dt),
-        s"partition column '$c': $dt partition-value serialization is " +
-          "not supported by this reader — refusing")
-    }
+    requireCastablePartitions(snap)
     require(snap.columnMappingMode == "none",
       "change-feed reads of COLUMN-MAPPED Delta tables are not supported: " +
         "cdc files store physical column names and this reader resolves " +
         "cdc rows by logical name — refusing rather than feeding silent " +
         "nulls")
-    // CDF flag: newest metaData wins — checkpoint first (older), then the
-    // JSON commits (configuration survives checkpointing)
-    var cdfOn = false
-    lastCheckpointVersion(logDir).foreach { c =>
-      spark.read.schema(checkpointSchema)
-        .parquet(logDir.resolve(f"$c%020d.checkpoint.parquet").toString)
-        .collect().foreach { r =>
-          if (!r.isNullAt(3))
-            cdfOn = r.getStruct(3).getMap[String, String](4)
-              .get("delta.enableChangeDataFeed").contains("true")
-        }
-    }
-    replayRawActions(logDir, listJsonVersions(logDir)) { node =>
-      if (node.has("metaData"))
-        cdfOn = Option(node.get("metaData").get("configuration"))
-          .exists(c => Option(c.get("delta.enableChangeDataFeed"))
-            .exists(_.asText() == "true"))
-    }
-    require(cdfOn, "delta.enableChangeDataFeed is not set on this table — " +
+    // CDF flag of the newest metaData (configuration survives checkpointing)
+    require(state.configuration("delta.enableChangeDataFeed").contains("true"),
+      "delta.enableChangeDataFeed is not set on this table — " +
       "a window read would silently return nothing")
     val retained = listJsonVersions(logDir)
     val latest = retained.maxOption.getOrElse(-1L)
@@ -1014,10 +816,7 @@ object DeltaInterchange {
         if (node.has("cdc")) {
           val c = node.get("cdc")
           paths += ((Paths.get(srcDir, c.get("path").asText()).toString,
-            Option(c.get("partitionValues"))
-              .map(_.properties().asScala.map(e =>
-                e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText()))
-                .toMap).getOrElse(Map.empty)))
+            partitionValues(c)))
         }
       }
       if (paths.isEmpty) None
@@ -1053,6 +852,17 @@ object DeltaInterchange {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else perCommit.reduce(_ unionAll _)
   }
+
+  /** Partition-value strings project back by a cast, so the partition
+    * columns are bounded to types whose strings cast unambiguously;
+    * timestamp/binary partition columns refuse. */
+  private def requireCastablePartitions(snap: DeltaSnapshot): Unit =
+    snap.partitionColumns.foreach { c =>
+      val dt = snap.schema(c).dataType
+      require(!Seq(TimestampType, TimestampNTZType, BinaryType).contains(dt),
+        s"partition column '$c': $dt partition-value serialization is " +
+          "not supported by this reader — refusing")
+    }
 
   /** Read the live table state as a DataFrame under the log's schema
     * (checkpoint-aware: seeds from `_last_checkpoint` when present). */
@@ -1115,14 +925,8 @@ object DeltaInterchange {
     // Hive-layout partitioning: the files do NOT store partition columns;
     // the per-file string values from add.partitionValues project back as
     // constants per file group (the Delta analog of Iceberg's Column
-    // Projection). Bounded to types whose partition-value strings cast
-    // unambiguously; timestamp/binary partition columns refuse.
-    snap.partitionColumns.foreach { c =>
-      val dt = snap.schema(c).dataType
-      require(!Seq(TimestampType, TimestampNTZType, BinaryType).contains(dt),
-        s"partition column '$c': $dt partition-value serialization is " +
-          "not supported by this importer — refusing")
-    }
+    // Projection).
+    requireCastablePartitions(snap)
     snap.files.groupBy(f => snap.partitionColumns.map(c =>
         snap.filePartitions.getOrElse(f, Map.empty).getOrElse(c, null)))
       .toSeq.sortBy(_._1.mkString(","))

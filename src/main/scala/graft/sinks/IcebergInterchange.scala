@@ -602,33 +602,6 @@ object IcebergInterchange {
       v.toString.getBytes(UTF_8))
   }
 
-  /** rows for each add, resolving the merge path's `-1` sentinels with one
-    * footer-only parquet count pass (same contract as the Delta side). */
-  private def resolveRowCounts(spark: SparkSession, table: LakehouseTable,
-      files: Seq[LakehouseFormat.AddFile]): Map[String, Long] = {
-    val unknown = files.filter(_.rows < 0)
-    val counted: Map[String, Long] =
-      if (unknown.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.input_file_name
-        spark.read
-          .parquet(unknown.map(f => Paths.get(table.dir, f.path).toString): _*)
-          .groupBy(input_file_name().as("f")).count()
-          .collect()
-          .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1)))
-          .toMap
-      }
-    files.map { f =>
-      f.path -> (if (f.rows >= 0) f.rows
-                 else counted.getOrElse(
-                   Paths.get(table.dir, f.path).toAbsolutePath.toString,
-                   throw new IllegalStateException(s"no footer count for ${f.path}")))
-    }.toMap
-  }
-
-  private def copyDataFile(table: LakehouseTable, dest: String,
-      f: LakehouseFormat.AddFile): (Path, Long) = copyFile(table, dest, f.path)
-
   private def copyFile(table: LakehouseTable, dest: String,
       relPath: String): (Path, Long) = {
     val dataDir = Paths.get(dest, "data")
@@ -638,17 +611,6 @@ object IcebergInterchange {
     Files.copy(src, out, StandardCopyOption.REPLACE_EXISTING)
     (out, Files.size(src))
   }
-
-  /** Footer-only row counts for arbitrary parquet paths (delete files do
-    * not carry row counts in the lakehouse log). */
-  private[sinks] def countRows(spark: SparkSession, paths: Seq[String]): Map[String, Long] =
-    if (paths.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions.input_file_name
-      spark.read.parquet(paths: _*)
-        .groupBy(input_file_name().as("f")).count().collect()
-        .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1))).toMap
-    }
 
   private def baseMetadata(dest: String, schemas: Seq[ObjectNode],
       currentSchemaId: Int, lastColumnId: Int, props: Map[String, String]): ObjectNode = {
@@ -695,47 +657,86 @@ object IcebergInterchange {
     val meta = snap.meta.getOrElse(
       throw new IllegalStateException("table has no meta action (not created)"))
     val (schemaNode, lastCol) = icebergSchema(meta.schema.struct, 0)
-    val schemaJson = mapper.writeValueAsString(schemaNode)
-    val rows = resolveRowCounts(spark, table, snap.files)
+    val rows = InterchangeMirror.resolveRowCounts(spark, table.dir, snap.files)
     val snapshotId = table.latestVersion() + 1
     val entries = snap.files.sortBy(_.path).map { f =>
-      val (out, size) = copyDataFile(table, destDir, f)
+      val (out, size) = copyFile(table, destDir, f.path)
       Entry(Added, snapshotId, 1L, out.toString, rows(f.path), size,
         bounds = boundsOf(f.stats, meta.schema.struct))
     }
+    writeOneSnapshotTable(destDir, schemaNode, lastCol, snapshotId, entries,
+      Map(MirrorProperty -> table.latestVersion().toString), Some(table.latestVersion()))
+  }
+
+  /** Write a complete one-snapshot v2 table (metadata version 1): one
+    * manifest of ADDED `entries`, its manifest list and the metadata, with
+    * an identity partition spec when `partTypes` is non-empty. */
+  private def writeOneSnapshotTable(destDir: String, schemaNode: ObjectNode,
+      lastCol: Int, snapshotId: Long, entries: Seq[Entry], props: Map[String, String],
+      lakehouseVersion: Option[Long], partTypes: Seq[(String, DataType)] = Nil,
+      specJson: String = "[]"): Unit = {
     Files.createDirectories(metadataDir(destDir))
     val mPath = metadataDir(destDir).resolve(s"m-$snapshotId-0.avro")
-    writeManifest(mPath, schemaJson, entries)
+    writeManifest(mPath, mapper.writeValueAsString(schemaNode), entries,
+      partitionTypes = partTypes, partitionSpecJson = specJson)
     val info = ManifestInfo(mPath, Files.size(mPath), 1L, 1L, snapshotId, entries)
     val listPath = metadataDir(destDir).resolve(s"snap-$snapshotId.avro")
+    writeManifestList(listPath, snapshotId, None, 1L, Seq(manifestListRecord(info)))
+    val root = baseMetadata(destDir, Seq(schemaNode), 0, lastCol,
+      props + ("schema.name-mapping.default" -> nameMapping(schemaNode)))
+    if (partTypes.nonEmpty) {
+      val specs = root.putArray("partition-specs") // replace the empty default
+      specs.add(mapper.readTree(s"""{"spec-id":0,"fields":$specJson}"""))
+      root.put("last-partition-id", 999 + partTypes.size)
+    }
+    putSnapshots(root, destDir, 1L, snapshotId,
+      Seq(snapshotNode(snapshotId, -1L, 1L, listPath, 0, "append", lakehouseVersion)), 0)
+    writeMetadata(destDir, 1, root)
+  }
+
+  private def writeManifestList(listPath: Path, snapshotId: Long,
+      parentId: Option[Long], seq: Long, records: Seq[GenericRecord]): Unit =
     writeAvro(listPath, manifestFileSchema, Map(
       "format-version" -> "2", "snapshot-id" -> snapshotId.toString,
-      "sequence-number" -> "1",
-    ), Seq(manifestListRecord(info)))
+      "sequence-number" -> seq.toString) ++
+      parentId.map(p => "parent-snapshot-id" -> p.toString), records)
 
-    val root = baseMetadata(destDir, Seq(schemaNode), 0, lastCol, Map(
-      "schema.name-mapping.default" -> nameMapping(schemaNode),
-      MirrorProperty -> table.latestVersion().toString))
-    root.put("last-sequence-number", 1L)
-    root.put("current-snapshot-id", snapshotId)
-    val refs = root.putObject("refs")
-    val main = refs.putObject("main")
-    main.put("snapshot-id", snapshotId); main.put("type", "branch")
-    val snaps = root.putArray("snapshots")
-    val sn = snaps.addObject()
+  /** One entry of the metadata `snapshots` list (`parentId` < 0: none). */
+  private def snapshotNode(snapshotId: Long, parentId: Long, seq: Long,
+      listPath: Path, schemaId: Int, operation: String,
+      lakehouseVersion: Option[Long]): ObjectNode = {
+    val sn = mapper.createObjectNode()
     sn.put("snapshot-id", snapshotId)
-    sn.put("sequence-number", 1L)
+    if (parentId >= 0) sn.put("parent-snapshot-id", parentId)
+    sn.put("sequence-number", seq)
     sn.put("timestamp-ms", 0L)
     sn.put("manifest-list", listPath.toString)
-    sn.put("schema-id", 0)
+    sn.put("schema-id", schemaId)
     val sum = sn.putObject("summary")
-    sum.put("operation", "append")
-    sum.put("graft-lakehouse-version", table.latestVersion().toString)
+    sum.put("operation", operation)
+    lakehouseVersion.foreach(v => sum.put("graft-lakehouse-version", v.toString))
+    sn
+  }
+
+  /** The snapshot state of a metadata version: last sequence number, the
+    * current snapshot and its `main` ref, the snapshots and their log, and
+    * the log of the `priorVersions` metadata files before this one. */
+  private def putSnapshots(root: ObjectNode, destDir: String, lastSeq: Long,
+      currentSnapshotId: Long, snapshots: Seq[ObjectNode], priorVersions: Int): Unit = {
+    root.put("last-sequence-number", lastSeq)
+    root.put("current-snapshot-id", currentSnapshotId)
+    if (currentSnapshotId >= 0) {
+      val main = root.putObject("refs").putObject("main")
+      main.put("snapshot-id", currentSnapshotId); main.put("type", "branch")
+    }
+    val sArr = root.putArray("snapshots")
+    snapshots.foreach(sArr.add)
     val slog = root.putArray("snapshot-log")
-    val sl = slog.addObject()
-    sl.put("timestamp-ms", 0L); sl.put("snapshot-id", snapshotId)
-    root.putArray("metadata-log")
-    writeMetadata(destDir, 1, root)
+    snapshots.foreach(s => slog.addObject().put("timestamp-ms", 0L)
+      .put("snapshot-id", s.get("snapshot-id").asLong()))
+    val mlog = root.putArray("metadata-log")
+    (1 to priorVersions).foreach(mv => mlog.addObject().put("timestamp-ms", 0L)
+      .put("metadata-file", metadataDir(destDir).resolve(s"v$mv.metadata.json").toString))
   }
 
   /** Export a DataFrame as an identity-partitioned Iceberg v2 table: one
@@ -839,21 +840,14 @@ object IcebergInterchange {
       partitionCols: Seq[String]): Unit = {
     val schema = df.schema
     require(partitionCols.nonEmpty, "use export for unpartitioned tables")
-    partitionCols.foreach(c => require(schema.fieldNames.contains(c),
-      s"partition column '$c' is not in the schema"))
+    InterchangeMirror.requirePartitionTypes(schema, partitionCols)
     val partTypes = partitionCols.map(c => c -> schema(c).dataType)
-    partTypes.foreach { case (c, dt) =>
-      require(Seq(IntegerType, LongType, StringType, BooleanType).contains(dt),
-        s"partition column '$c': type $dt has no identity-partition " +
-          "serialization here — refusing")
-    }
 
     val moved = writeSplitDataFiles(df, destDir, partitionCols, schema, None,
       (n, _, _) => f"part-$n%05d.parquet").map { case (p, part, _) => (p, part) }
-    val rows = countRows(spark, moved.map(_._1.toString))
+    val rows = InterchangeMirror.countRows(spark, moved.map(_._1.toString))
 
     val (schemaNode, lastCol) = icebergSchema(schema, 0)
-    val schemaJson = mapper.writeValueAsString(schemaNode)
     val snapshotId = 1L
     val entries = moved.map { case (out, part) =>
       Entry(Added, snapshotId, 1L, out.toString,
@@ -868,40 +862,8 @@ object IcebergInterchange {
       }
       mapper.writeValueAsString(arr)
     }
-    Files.createDirectories(metadataDir(destDir))
-    val mPath = metadataDir(destDir).resolve(s"m-$snapshotId-0.avro")
-    writeManifest(mPath, schemaJson, entries,
-      partitionTypes = partTypes, partitionSpecJson = specJson)
-    val info = ManifestInfo(mPath, Files.size(mPath), 1L, 1L, snapshotId, entries)
-    val listPath = metadataDir(destDir).resolve(s"snap-$snapshotId.avro")
-    writeAvro(listPath, manifestFileSchema, Map(
-      "format-version" -> "2", "snapshot-id" -> snapshotId.toString,
-      "sequence-number" -> "1",
-    ), Seq(manifestListRecord(info)))
-
-    val root = baseMetadata(destDir, Seq(schemaNode), 0, lastCol, Map(
-      "schema.name-mapping.default" -> nameMapping(schemaNode)))
-    val specs = root.putArray("partition-specs") // replace the empty default
-    specs.add(mapper.readTree(s"""{"spec-id":0,"fields":$specJson}"""))
-    root.put("last-partition-id", 999 + partitionCols.size)
-    root.put("last-sequence-number", 1L)
-    root.put("current-snapshot-id", snapshotId)
-    val refs = root.putObject("refs")
-    val main = refs.putObject("main")
-    main.put("snapshot-id", snapshotId); main.put("type", "branch")
-    val snaps = root.putArray("snapshots")
-    val sn = snaps.addObject()
-    sn.put("snapshot-id", snapshotId)
-    sn.put("sequence-number", 1L)
-    sn.put("timestamp-ms", 0L)
-    sn.put("manifest-list", listPath.toString)
-    sn.put("schema-id", 0)
-    sn.putObject("summary").put("operation", "append")
-    val slog = root.putArray("snapshot-log")
-    val sl = slog.addObject()
-    sl.put("timestamp-ms", 0L); sl.put("snapshot-id", snapshotId)
-    root.putArray("metadata-log")
-    writeMetadata(destDir, 1, root)
+    writeOneSnapshotTable(destDir, schemaNode, lastCol, snapshotId, entries,
+      Map.empty, None, partTypes, specJson)
   }
 
   // ---------------------------------------------------------------- import
@@ -1029,20 +991,20 @@ object IcebergInterchange {
     // Unknown transform names still refuse: an unrecognized derivation on
     // a spec this reader has never seen could mean unreadable files.
     val knownDerived = Set("year", "month", "day", "hour", "void")
+    def requireKnownTransforms(fields: Iterator[JsonNode]): Unit = fields.foreach { f =>
+      val tr = f.get("transform").asText()
+      require(tr == "identity" || knownDerived.contains(tr) ||
+        tr.matches("bucket\\[\\d+\\]") || tr.matches("truncate\\[\\d+\\]"),
+        s"partition transform '$tr' is not a transform this importer " +
+          "knows — refusing rather than guessing at its read semantics")
+    }
     // legacy v1 metadata carries a single flat "partition-spec" field list
     // instead of "partition-specs" — treat it as the one-and-only spec 0
-    val defaultSpecFields: Seq[com.fasterxml.jackson.databind.JsonNode] =
+    val defaultSpecFields: Seq[JsonNode] =
       Option(root.get("partition-specs")) match {
         case Some(specs) =>
-          specs.elements().asScala.foreach { s =>
-            s.get("fields").elements().asScala.foreach { f =>
-              val tr = f.get("transform").asText()
-              require(tr == "identity" || knownDerived.contains(tr) ||
-                tr.matches("bucket\\[\\d+\\]") || tr.matches("truncate\\[\\d+\\]"),
-                s"partition transform '$tr' is not a transform this importer " +
-                  "knows — refusing rather than guessing at its read semantics")
-            }
-          }
+          specs.elements().asScala.foreach(s =>
+            requireKnownTransforms(s.get("fields").elements().asScala))
           val defaultSpecId =
             Option(root.get("default-spec-id")).map(_.asInt()).getOrElse(0)
           specs.elements().asScala
@@ -1051,16 +1013,11 @@ object IcebergInterchange {
         case None =>
           require(fv == 1,
             "v2 metadata without partition-specs is corrupt — refusing")
-          Option(root.get("partition-spec"))
+          val fields = Option(root.get("partition-spec"))
             .map(_.elements().asScala.toSeq).getOrElse(Nil)
+          requireKnownTransforms(fields.iterator)
+          fields
       }
-    defaultSpecFields.foreach { f =>
-      val tr = f.get("transform").asText()
-      require(tr == "identity" || knownDerived.contains(tr) ||
-        tr.matches("bucket\\[\\d+\\]") || tr.matches("truncate\\[\\d+\\]"),
-        s"partition transform '$tr' is not a transform this importer " +
-          "knows — refusing rather than guessing at its read semantics")
-    }
     val partitionCols = defaultSpecFields
       .filter(_.get("transform").asText() == "identity")
       .map { f =>
@@ -1584,26 +1541,17 @@ object IcebergInterchange {
       }
     }
     val listPath = metadataDir(destDir).resolve(s"snap-$snapshotId.avro")
-    writeAvro(listPath, manifestFileSchema, Map(
-      "format-version" -> "2", "snapshot-id" -> snapshotId.toString,
-      "sequence-number" -> newSeq.toString,
-    ), carried :+ manifestListRecord(newInfo))
+    writeManifestList(listPath, snapshotId, None, newSeq,
+      carried :+ manifestListRecord(newInfo))
     root.put("format-version", 3)
     root.put("last-sequence-number", newSeq)
     root.put("current-snapshot-id", snapshotId)
     val refs = root.withObject("/refs")
     val main = refs.withObject("/main")
     main.put("snapshot-id", snapshotId); main.put("type", "branch")
-    val sn = root.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
-      "snapshots").addObject()
-    sn.put("snapshot-id", snapshotId)
-    sn.put("sequence-number", newSeq)
-    sn.put("timestamp-ms", 0L)
-    sn.put("manifest-list", listPath.toString)
-    sn.put("schema-id", schemaId)
-    val sum = sn.putObject("summary")
-    sum.put("operation", "delete")
-    root.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
+    root.withArray[ArrayNode]("snapshots").add(
+      snapshotNode(snapshotId, -1L, newSeq, listPath, schemaId, "delete", None))
+    root.withArray[ArrayNode]("snapshot-log")
       .addObject().put("timestamp-ms", 0L).put("snapshot-id", snapshotId)
     writeMetadata(destDir, v + 1, root)
   }
@@ -1615,10 +1563,11 @@ object IcebergInterchange {
     * Iceberg's `expire_snapshots` + `remove_orphan_files` maintenance.
     * Without this a continuous [[mirror]] accrues snapshot history without
     * bound (every commit keeps every file it ever referenced alive). A
-    * path is deleted only when NO retained snapshot's manifests reference
-    * it under ANY entry status — a DELETED entry still pins its file, so
-    * incremental readers of retained history never dangle. Returns
-    * (snapshots expired, manifest/list files deleted, data files deleted).
+    * retained manifest keeps its file only through a LIVE (ADDED or
+    * EXISTING) entry: a DELETED entry records a removal and pins nothing,
+    * so a file that no retained snapshot can scan is deleted even when a
+    * retained manifest still names it as DELETED. Returns (snapshots
+    * expired, manifest/list files deleted, data files deleted).
     */
   def expireSnapshots(destDir: String, keepLast: Int): (Int, Int, Int) = {
     require(keepLast >= 1, "must retain at least the current snapshot")
@@ -1634,42 +1583,16 @@ object IcebergInterchange {
       "the current snapshot must survive expiry")
     val location = root.get("location").asText()
 
-    // reachability from the retained snapshots only
-    val keepLists = retained.map(s =>
-      resolvePath(location, s.get("manifest-list").asText())).toSet
-    val keepManifestSeqs = keepLists.flatMap(lp =>
-      readAvro(lp).map(mf =>
-        resolvePath(location, str(mf, "manifest_path")) ->
-          long(mf, "sequence_number")))
-    val keepManifests = keepManifestSeqs.map(_._1)
-    // LIVE references only: a DELETED entry in a retained manifest records
-    // a removal, it does not keep the bytes reachable for scans
-    val keepData = keepManifestSeqs.flatMap { case (mp, seq) =>
-      readManifest(mp, seq).filter(_.status != Deleted)
-        .map(e => resolvePath(location, e.filePath)) }
-
+    def listOf(s: JsonNode) = resolvePath(location, s.get("manifest-list").asText())
+    def dataOf(entries: Seq[Entry]) = entries.map(e => resolvePath(location, e.filePath))
     val expired = snaps.dropRight(keepLast)
-    var metaDeleted = 0
-    var dataDeleted = 0
-    expired.foreach { s =>
-      val lp = resolvePath(location, s.get("manifest-list").asText())
-      if (!keepLists.contains(lp)) {
-        val manifests = readAvro(lp).map(mf =>
-          resolvePath(location, str(mf, "manifest_path")) ->
-            long(mf, "sequence_number"))
-        manifests.foreach { case (mp, seq) =>
-          if (!keepManifests.contains(mp) && Files.exists(mp)) {
-            readManifest(mp, seq).foreach { e =>
-              val dp = resolvePath(location, e.filePath)
-              if (!keepData.contains(dp) && Files.deleteIfExists(dp))
-                dataDeleted += 1
-            }
-            Files.delete(mp); metaDeleted += 1
-          }
-        }
-        Files.delete(lp); metaDeleted += 1
-      }
-    }
+    val (metaDeleted, dataDeleted) = InterchangeMirror.sweepExpired[(Path, Long)](
+      retained.map(listOf), expired.map(listOf),
+      manifestsOf = lp => readAvro(lp).map(mf =>
+        resolvePath(location, str(mf, "manifest_path")) -> long(mf, "sequence_number")),
+      manifestPath = _._1,
+      keptData = { case (mp, seq) => dataOf(readManifest(mp, seq).filter(_.status != Deleted)) },
+      expiredData = { case (mp, seq) => dataOf(readManifest(mp, seq)) })
 
     val sArr = root.putArray("snapshots")
     retained.foreach(sArr.add)
@@ -1685,25 +1608,45 @@ object IcebergInterchange {
   // ---------------------------------------------------------------- mirror
 
   /** Incrementally mirror NEW lakehouse commits, one Iceberg snapshot per
-    * lakehouse commit. Returns the number of snapshots written. */
-  def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int = {
-    val head = table.latestVersion()
-    require(head >= 0, "cannot mirror a table with no commits")
+    * lakehouse commit that changed files. Returns the number of snapshots
+    * written. */
+  def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int =
+    MirrorFormat.mirror(spark, table, destDir)
 
-    // ---- recover mirror state from the destination metadata alone
-    val prior = latestMetadataVersion(destDir)
-    var metaVersion = prior.getOrElse(0)
-    var schemas = Vector.empty[ObjectNode]
-    var lastColumnId = 0
-    var snapshots = Vector.empty[ObjectNode] // prior snapshot nodes, carried
-    var lastSeq = 0L
-    var currentSnapshotId = -1L
-    var manifests = Vector.empty[ManifestInfo]
-    var lastMirrored = -1L
-    prior.foreach { v =>
+  /** The Iceberg side of [[InterchangeMirror]]: one snapshot per version
+    * that changed files, ONE metadata version per call (Iceberg metadata
+    * versions are per-commit-attempt, not per-snapshot; every snapshot is
+    * individually time-travelable from the snapshots list); maintenance
+    * is `snapshots.keep` ([[expireSnapshots]] per sync). */
+  private[sinks] object MirrorFormat extends InterchangeMirror.Format {
+    val maintenance: Set[String] = Set(InterchangeMirror.SnapshotsKeep)
+
+    def open(spark: SparkSession, table: LakehouseTable,
+        destDir: String): InterchangeMirror.Writer = new MirrorWriter(spark, table, destDir)
+
+    def maintain(spark: SparkSession, destDir: String, written: Int,
+        m: InterchangeMirror.Maintenance): Unit =
+      if (m(InterchangeMirror.SnapshotsKeep) > 0)
+        expireSnapshots(destDir, m(InterchangeMirror.SnapshotsKeep))
+  }
+
+  private final class MirrorWriter(spark: SparkSession, table: LakehouseTable,
+      destDir: String) extends InterchangeMirror.Writer {
+    // ---- mirror state, recovered from the destination metadata alone
+    private val prior = latestMetadataVersion(destDir)
+    private var schemas = Vector.empty[ObjectNode]
+    private var lastColumnId = 0
+    private var snapshots = Vector.empty[ObjectNode] // prior snapshot nodes, carried
+    private var lastSeq = 0L
+    private var currentSnapshotId = -1L
+    private var manifests = Vector.empty[ManifestInfo]
+    private var partitionKeys = Seq.empty[String]
+    private var written = 0
+
+    val lastMirrored: Long = prior.map { v =>
       val root = readMetadata(destDir, v)
       require(root.get("format-version").asInt() == 2, "mirror target must be v2")
-      lastMirrored = Option(root.get("properties"))
+      val recorded = Option(root.get("properties"))
         .flatMap(p => Option(p.get(MirrorProperty))).map(_.asText().toLong)
         .getOrElse(throw new IllegalStateException(
           s"$destDir has Iceberg metadata but no $MirrorProperty property — " +
@@ -1717,11 +1660,9 @@ object IcebergInterchange {
         snapshots :+= s.deepCopy[ObjectNode]())
       if (currentSnapshotId >= 0) {
         val cur = snapshots.find(_.get("snapshot-id").asLong() == currentSnapshotId).get
-        val listPath = resolvePath(Paths.get(destDir).toAbsolutePath.toString,
-          cur.get("manifest-list").asText())
-        manifests = readAvro(listPath).map { mf =>
-          val p = resolvePath(Paths.get(destDir).toAbsolutePath.toString,
-            str(mf, "manifest_path"))
+        val location = Paths.get(destDir).toAbsolutePath.toString
+        manifests = readAvro(resolvePath(location, cur.get("manifest-list").asText())).map { mf =>
+          val p = resolvePath(location, str(mf, "manifest_path"))
           // DELETED entries from prior snapshots age out here: a carried
           // manifest re-lists only its live entries
           ManifestInfo(p, long(mf, "manifest_length"), long(mf, "sequence_number"),
@@ -1731,60 +1672,15 @@ object IcebergInterchange {
             int(mf, "partition_spec_id"))
         }.toVector
       }
-    }
-    if (lastMirrored >= head) return 0
+      recorded
+    }.getOrElse(-1L)
 
-    var written = 0
-    var prev = if (lastMirrored < 0) None else Some(table.snapshot(Some(lastMirrored)))
-    // pinned on the first mirrored version: identity-partition layout is
-    // fixed for the table's life (like Paimon's partition-key pin)
-    var mirrorPartitionKeys: Option[Seq[String]] = None
-
-    ((lastMirrored + 1) to head).foreach { v =>
-      val cur = table.snapshot(Some(v))
-      val curMeta = cur.meta.getOrElse(
-        throw new IllegalStateException("table has no meta action (not created)"))
-      val partitionKeys = curMeta.schema.partitionKeys
-      mirrorPartitionKeys match {
-        case None => mirrorPartitionKeys = Some(partitionKeys)
-        case Some(pk) => require(pk == partitionKeys,
-          s"partition keys cannot evolve mid-mirror ($pk -> $partitionKeys) " +
-            "— the identity layout is fixed at table creation; refusing")
-      }
-      val partitioned = partitionKeys.nonEmpty
-      val struct = curMeta.schema.struct
-      val partTypes: Seq[(String, DataType)] =
-        partitionKeys.map(c => c -> struct(c).dataType)
-      if (partitioned) {
-        partitionKeys.foreach(c => require(struct.fieldNames.contains(c),
-          s"partition column '$c' is not in the schema"))
-        partTypes.foreach { case (c, dt) =>
-          require(Seq(IntegerType, LongType, StringType, BooleanType).contains(dt),
-            s"partition column '$c': type $dt has no identity-partition " +
-              "serialization here — refusing")
-        }
-        // pk-less tables (append-only fact streams — the classic time-
-        // partitioned shape) mirror too: appends never remove, so the
-        // pk-bucket removal mapping is not needed; single-partition
-        // commits take the metadata-only copy path. A commit that DOES
-        // remove on a pk-less partitioned mirror refuses below.
-      }
-      val prevFiles = prev.map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
-      val curFiles = cur.files.map(f => f.path -> f).toMap
-      val adds = cur.files.filterNot(f => prevFiles.contains(f.path)).sortBy(_.path)
-      val removes = prev.map(_.files.filterNot(f => curFiles.contains(f.path)))
-        .getOrElse(Seq.empty).sortBy(_.path)
-      // MERGE-ON-READ delete files map 1:1 onto Iceberg v2 equality
-      // deletes (the lakehouse MOR model is built on that spec): a new
-      // delete file becomes a delete manifest at this snapshot's sequence
-      // number, so it masks exactly the data files of EARLIER snapshots —
-      // the lakehouse's own `AddFile.ver < delete.ver` rule
-      val delPrev = prev.map(_.deleteFiles.map(f => f.path -> f).toMap)
-        .getOrElse(Map.empty)
-      val delCur = cur.deleteFiles.map(f => f.path -> f).toMap
-      val delAdds = cur.deleteFiles.filterNot(f => delPrev.contains(f.path)).sortBy(_.path)
-      val delRemoves = prev.map(_.deleteFiles.filterNot(f => delCur.contains(f.path)))
-        .getOrElse(Seq.empty).sortBy(_.path)
+    def write(d: InterchangeMirror.VersionDiff): Unit = {
+      val v = d.version
+      partitionKeys = d.partitionKeys
+      val partitioned = d.partitioned
+      val struct = d.struct
+      val partTypes: Seq[(String, DataType)] = partitionKeys.map(c => c -> struct(c).dataType)
       // compare at the Iceberg-schema level (field nodes, schema-id aside):
       // Spark structs do not round-trip exactly through Iceberg types
       // (short → int), so a struct compare would re-append forever after
@@ -1795,18 +1691,21 @@ object IcebergInterchange {
       // positional allocation would shift nested ids whenever a top-level
       // column is appended after an array column.
       val (candNode, candLc) = schemas.lastOption match {
-        case None => icebergSchema(curMeta.schema.struct, 0)
+        case None => icebergSchema(struct, 0)
         case Some(prevNode) => extendIcebergSchema(
-          prevNode, curMeta.schema.struct, schemas.size, lastColumnId, v)
+          prevNode, struct, schemas.size, lastColumnId, v)
       }
-      val schemaChanged = schemas.isEmpty ||
-        candNode.get("fields") != schemas.last.get("fields")
-      if (schemaChanged) {
+      if (schemas.isEmpty || candNode.get("fields") != schemas.last.get("fields")) {
         schemas :+= candNode
         lastColumnId = math.max(lastColumnId, candLc)
       }
-      if (adds.nonEmpty || removes.nonEmpty || delAdds.nonEmpty ||
-          delRemoves.nonEmpty) {
+      // MERGE-ON-READ delete files map 1:1 onto Iceberg v2 equality
+      // deletes (the lakehouse MOR model is built on that spec): a new
+      // delete file becomes a delete manifest at this snapshot's sequence
+      // number, so it masks exactly the data files of EARLIER snapshots —
+      // the lakehouse's own `AddFile.ver < delete.ver` rule
+      if (d.filesChanged) {
+        val (adds, removes, delAdds, delRemoves) = (d.adds, d.removes, d.delAdds, d.delRemoves)
         val snapshotId = v + 1
         lastSeq += 1
         val schemaJson = mapper.writeValueAsString(schemas.last)
@@ -1814,20 +1713,7 @@ object IcebergInterchange {
         // across append-only evolution)
         val specJson =
           if (!partitioned) "[]"
-          else {
-            val fields = schemas.last.get("fields").elements().asScala.toSeq
-            val arr = mapper.createArrayNode()
-            partitionKeys.zipWithIndex.foreach { case (c, i) =>
-              val id = fields.find(_.get("name").asText() == c).getOrElse(
-                throw new IllegalStateException(
-                  s"partition column '$c' missing from the Iceberg schema"))
-                .get("id").asInt()
-              val f = arr.addObject()
-              f.put("name", c); f.put("transform", "identity")
-              f.put("source-id", id); f.put("field-id", 1000 + i)
-            }
-            mapper.writeValueAsString(arr)
-          }
+          else mapper.writeValueAsString(identitySpecFields(schemas.last, partitionKeys))
         val mdir = metadataDir(destDir)
         Files.createDirectories(mdir)
 
@@ -1844,13 +1730,7 @@ object IcebergInterchange {
             // `part-s<snap>-b<srcBucket>-<n>`: the source lakehouse bucket
             // (the COW removal granularity — whole buckets rewrite) rides
             // in the NAME, so removals map exactly with no sidecar
-            require(curMeta.schema.primaryKeys.nonEmpty || removes.isEmpty,
-              s"version $v removes files from a PK-LESS partitioned " +
-                "Iceberg mirror: removals map through the pk-hash bucket " +
-                "in split-file names, which pk-less tables do not have — " +
-                "only append-only commits mirror for them (compaction/" +
-                "overwrite/delete are unsupported); refusing")
-            val rb = PartitionedMirror.wholeBucketRemovalSet(v, removes, prev)
+            val rb = PartitionedMirror.wholeBucketRemovalSet(d, "Iceberg")
             val deadData = manifests.filter(_.content == 0).flatMap(_.live)
               .map(e => Paths.get(e.filePath).getFileName.toString)
               .filter(n => PartitionedMirror.srcBucketOf(n).exists(rb.contains))
@@ -1865,6 +1745,9 @@ object IcebergInterchange {
         removedNames.foreach(n => require(matchedNames.contains(n),
           s"removed file $n is in no live manifest — mirror state is out of sync"))
         var mNum = 0
+        def nextManifest(): Path = {
+          val p = mdir.resolve(s"m-$snapshotId-$mNum.avro"); mNum += 1; p
+        }
         val rewritten = affected.map { m =>
           val entries = m.live.map { e =>
             val name = Paths.get(e.filePath).getFileName.toString
@@ -1872,7 +1755,7 @@ object IcebergInterchange {
               e.copy(status = Deleted, snapshotId = snapshotId)
             else e.copy(status = Existing)
           }
-          val p = mdir.resolve(s"m-$snapshotId-$mNum.avro"); mNum += 1
+          val p = nextManifest()
           // rewritten DATA manifests of a partitioned table keep their
           // partition struct (entries parsed it under the writer schema)
           val dataPart = m.content == 0 && partitioned
@@ -1887,13 +1770,13 @@ object IcebergInterchange {
         val addedManifest =
           if (adds.isEmpty) None
           else if (!partitioned) {
-            val rows = resolveRowCounts(spark, table, adds)
+            val rows = InterchangeMirror.resolveRowCounts(spark, table.dir, adds)
             val entries = adds.map { f =>
-              val (out, size) = copyDataFile(table, destDir, f)
+              val (out, size) = copyFile(table, destDir, f.path)
               Entry(Added, snapshotId, lastSeq, out.toString, rows(f.path), size,
-                bounds = boundsOf(f.stats, curMeta.schema.struct))
+                bounds = boundsOf(f.stats, struct))
             }
-            val p = mdir.resolve(s"m-$snapshotId-$mNum.avro"); mNum += 1
+            val p = nextManifest()
             writeManifest(p, schemaJson, entries)
             Some(ManifestInfo(p, Files.size(p), lastSeq, lastSeq, snapshotId, entries))
           } else {
@@ -1908,15 +1791,15 @@ object IcebergInterchange {
             // dropped (the lakehouse stats are per source file) — pruning
             // comes from the partition tuple.
             val (moved, rows) = PartitionedMirror.splitOrCopyAdds(
-              spark, table.dir, adds, struct, curMeta.schema.primaryKeys,
-              curMeta.buckets, destDir, partitionKeys,
+              spark, table.dir, adds, struct, d.schema.primaryKeys,
+              d.meta.buckets, destDir, partitionKeys,
               (n, _, srcb) => f"part-s$snapshotId-b${srcb.get}-$n%05d.parquet")
             val entries = moved.map { case (out, part, _) =>
               Entry(Added, snapshotId, lastSeq, out.toString,
                 rows(out.toAbsolutePath.toString), Files.size(out),
                 partition = part)
             }
-            val p = mdir.resolve(s"m-$snapshotId-$mNum.avro"); mNum += 1
+            val p = nextManifest()
             writeManifest(p, schemaJson, entries,
               partitionTypes = partTypes, partitionSpecJson = specJson)
             Some(ManifestInfo(p, Files.size(p), lastSeq, lastSeq, snapshotId, entries))
@@ -1926,13 +1809,13 @@ object IcebergInterchange {
         val deleteManifest =
           if (delAdds.isEmpty) None
           else {
-            val names = curMeta.schema.struct.fieldNames.toSeq
-            val eqIds = curMeta.schema.primaryKeys.map { k =>
+            val names = struct.fieldNames.toSeq
+            val eqIds = d.schema.primaryKeys.map { k =>
               val i = names.indexOf(k)
               require(i >= 0, s"primary key $k not in schema")
               i + 1
             }
-            val counts = countRows(spark, delAdds.map(f =>
+            val counts = InterchangeMirror.countRows(spark, delAdds.map(f =>
               Paths.get(table.dir, f.path).toAbsolutePath.toString))
             val entries = delAdds.map { f =>
               val (out, size) = copyFile(table, destDir, f.path)
@@ -1940,13 +1823,13 @@ object IcebergInterchange {
                 counts(Paths.get(table.dir, f.path).toAbsolutePath.toString),
                 size, content = 2, equalityIds = eqIds)
             }
-            val p = mdir.resolve(s"m-$snapshotId-$mNum.avro"); mNum += 1
+            val p = nextManifest()
             // equality deletes mask by key GLOBALLY: on a partitioned table
             // they park on the secondary UNPARTITIONED spec (id 1)
-            writeManifest(p, schemaJson, entries, deletes = true,
-              specId = if (partitioned) 1 else 0)
+            val specId = if (partitioned) 1 else 0
+            writeManifest(p, schemaJson, entries, deletes = true, specId = specId)
             Some(ManifestInfo(p, Files.size(p), lastSeq, lastSeq, snapshotId,
-              entries, content = 1, specId = if (partitioned) 1 else 0))
+              entries, content = 1, specId = specId))
           }
         // a rewritten manifest that became ALL-DELETED still appears in
         // THIS snapshot's list (it records the deletion), then ages out of
@@ -1954,81 +1837,58 @@ object IcebergInterchange {
         val listed = carried ++ rewritten ++ addedManifest ++ deleteManifest
         manifests = listed.filter(_.entries.exists(_.status != Deleted)).toVector
         val listPath = mdir.resolve(s"snap-$snapshotId.avro")
-        writeAvro(listPath, manifestFileSchema, Map(
-          "format-version" -> "2", "snapshot-id" -> snapshotId.toString,
-          "parent-snapshot-id" -> currentSnapshotId.toString,
-          "sequence-number" -> lastSeq.toString,
-        ), listed.map(manifestListRecord))
-
-        val sn = mapper.createObjectNode()
-        sn.put("snapshot-id", snapshotId)
-        if (currentSnapshotId >= 0) sn.put("parent-snapshot-id", currentSnapshotId)
-        sn.put("sequence-number", lastSeq)
-        sn.put("timestamp-ms", 0L)
-        sn.put("manifest-list", listPath.toString)
-        sn.put("schema-id", schemas.size - 1)
-        val sum = sn.putObject("summary")
-        sum.put("operation",
+        writeManifestList(listPath, snapshotId, Some(currentSnapshotId), lastSeq,
+          listed.map(manifestListRecord))
+        val operation =
           if (removes.isEmpty && delRemoves.isEmpty && delAdds.nonEmpty &&
             adds.isEmpty) "delete"
           else if (removes.isEmpty && delRemoves.isEmpty) "append"
-          else "overwrite")
-        sum.put("graft-lakehouse-version", v.toString)
-        snapshots :+= sn
+          else "overwrite"
+        snapshots :+= snapshotNode(snapshotId, currentSnapshotId, lastSeq, listPath,
+          schemas.size - 1, operation, Some(v))
         currentSnapshotId = snapshotId
         written += 1
       }
-      prev = Some(cur)
     }
 
-    // ---- one new metadata version for the whole call (Iceberg metadata
-    // versions are per-commit-attempt, not per-snapshot; every snapshot
-    // above is individually time-travelable from the snapshots list)
-    val curSchemaNode = schemas.last
-    val root = baseMetadata(destDir, schemas, schemas.size - 1, lastColumnId, Map(
-      "schema.name-mapping.default" -> nameMapping(curSchemaNode),
-      MirrorProperty -> head.toString))
-    mirrorPartitionKeys.filter(_.nonEmpty).foreach { pk =>
-      // spec 0 (default): the identity layout; spec 1: the UNPARTITIONED
-      // spec the equality-delete manifests ride on
-      val fields = curSchemaNode.get("fields").elements().asScala.toSeq
-      val specs = root.putArray("partition-specs")
-      val s0 = specs.addObject()
-      s0.put("spec-id", 0)
-      val f0 = s0.putArray("fields")
-      pk.zipWithIndex.foreach { case (c, i) =>
-        val id = fields.find(_.get("name").asText() == c).get.get("id").asInt()
-        val f = f0.addObject()
-        f.put("name", c); f.put("transform", "identity")
-        f.put("source-id", id); f.put("field-id", 1000 + i)
+    def finish(head: Long): Int = {
+      val curSchemaNode = schemas.last
+      val root = baseMetadata(destDir, schemas, schemas.size - 1, lastColumnId, Map(
+        "schema.name-mapping.default" -> nameMapping(curSchemaNode),
+        MirrorProperty -> head.toString))
+      if (partitionKeys.nonEmpty) {
+        // spec 0 (default): the identity layout; spec 1: the UNPARTITIONED
+        // spec the equality-delete manifests ride on
+        val specs = root.putArray("partition-specs")
+        val s0 = specs.addObject()
+        s0.put("spec-id", 0)
+        s0.set[JsonNode]("fields", identitySpecFields(curSchemaNode, partitionKeys))
+        val s1 = specs.addObject()
+        s1.put("spec-id", 1); s1.putArray("fields")
+        root.put("last-partition-id", 999 + partitionKeys.size)
       }
-      val s1 = specs.addObject()
-      s1.put("spec-id", 1); s1.putArray("fields")
-      root.put("last-partition-id", 999 + pk.size)
+      val metaVersion = prior.getOrElse(0)
+      putSnapshots(root, destDir, lastSeq, currentSnapshotId, snapshots, metaVersion)
+      writeMetadata(destDir, metaVersion + 1, root)
+      written
     }
-    root.put("last-sequence-number", lastSeq)
-    root.put("current-snapshot-id", currentSnapshotId)
-    if (currentSnapshotId >= 0) {
-      val refs = root.putObject("refs")
-      val main = refs.putObject("main")
-      main.put("snapshot-id", currentSnapshotId); main.put("type", "branch")
+  }
+
+  /** Identity partition-spec fields over `schemaNode`'s field ids
+    * (partition field ids 1000+). */
+  private def identitySpecFields(schemaNode: JsonNode,
+      partitionKeys: Seq[String]): ArrayNode = {
+    val fields = schemaNode.get("fields").elements().asScala.toSeq
+    val arr = mapper.createArrayNode()
+    partitionKeys.zipWithIndex.foreach { case (c, i) =>
+      val id = fields.find(_.get("name").asText() == c).getOrElse(
+        throw new IllegalStateException(
+          s"partition column '$c' missing from the Iceberg schema"))
+        .get("id").asInt()
+      val f = arr.addObject()
+      f.put("name", c); f.put("transform", "identity")
+      f.put("source-id", id); f.put("field-id", 1000 + i)
     }
-    val sArr = root.putArray("snapshots")
-    snapshots.foreach(sArr.add)
-    val slog = root.putArray("snapshot-log")
-    snapshots.foreach { s =>
-      val e = slog.addObject()
-      e.put("timestamp-ms", 0L); e.put("snapshot-id", s.get("snapshot-id").asLong())
-    }
-    val mlog = root.putArray("metadata-log")
-    (1 to metaVersion).foreach { mv =>
-      val e = mlog.addObject()
-      e.put("timestamp-ms", 0L)
-      e.put("metadata-file",
-        metadataDir(destDir).resolve(s"v$mv.metadata.json").toString)
-    }
-    metaVersion += 1
-    writeMetadata(destDir, metaVersion, root)
-    written
+    arr
   }
 }

@@ -1,0 +1,198 @@
+package graft.sinks
+
+import graft.core.TableSchema
+import graft.sinks.LakehouseFormat.{AddFile, EqualityDeleteFile, Meta, Snapshot}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
+import java.nio.file.{Files, Path, Paths}
+
+/** The incremental-mirror loop shared by the Delta, Iceberg and Paimon
+  * interchange formats, plus the helpers all three repeat.
+  *
+  * One invariant drives every mirror: sink progress is recorded in the
+  * target's OWN log (a Delta `txn`, an Iceberg table property, Paimon's
+  * `commitIdentifier`), so a call after a crash or a no-op resumes from
+  * the recorded lakehouse version and re-applies idempotently — no
+  * side-channel state. [[run]] owns the walk `(lastMirrored + 1) to head`,
+  * the meta and partition-key pins, and the diff of consecutive lakehouse
+  * snapshots; a [[Format]] owns only its commit writer, its manifest or
+  * action codec, how it records a version that changed no files, and its
+  * maintenance.
+  */
+private[sinks] object InterchangeMirror {
+
+  /** Maintenance options a mirror sink can set (0 = off). */
+  val CheckpointEvery = "checkpoint.every"
+  val SnapshotsKeep = "snapshots.keep"
+  val FullCompactionEvery = "full-compaction.delta-commits"
+
+  /** One table's maintenance settings plus the cadence state the sink
+    * keeps between calls. The compaction counter is in-memory: a restart
+    * delays the next compaction by at most one cycle, which is maintenance
+    * cadence, not correctness. */
+  final class Maintenance(settings: Map[String, Int]) {
+    def apply(option: String): Int = settings.getOrElse(option, 0)
+    var sinceCompaction = 0
+  }
+
+  /** One lakehouse version against its predecessor (`prev` is None for
+    * the table's first mirrored version). */
+  final class VersionDiff(table: LakehouseTable, val version: Long,
+      val prev: Option[Snapshot], val cur: Snapshot, val meta: Meta) {
+    def schema: TableSchema = meta.schema
+    def struct: StructType = schema.struct
+    def partitionKeys: Seq[String] = schema.partitionKeys
+    def partitioned: Boolean = partitionKeys.nonEmpty
+
+    val adds: Seq[AddFile] = {
+      val before = prev.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
+      cur.files.filterNot(f => before.contains(f.path)).sortBy(_.path)
+    }
+    val removes: Seq[AddFile] = {
+      val after = cur.files.map(_.path).toSet
+      prev.map(_.files.filterNot(f => after.contains(f.path))).getOrElse(Nil).sortBy(_.path)
+    }
+    /** MERGE-ON-READ delete files new at / dropped by this version. */
+    val delAdds: Seq[EqualityDeleteFile] = {
+      val before = prev.map(_.deleteFiles.map(_.path).toSet).getOrElse(Set.empty)
+      cur.deleteFiles.filterNot(f => before.contains(f.path)).sortBy(_.path)
+    }
+    val delRemoves: Seq[EqualityDeleteFile] = {
+      val after = cur.deleteFiles.map(_.path).toSet
+      prev.map(_.deleteFiles.filterNot(f => after.contains(f.path))).getOrElse(Nil)
+        .sortBy(_.path)
+    }
+    def filesChanged: Boolean =
+      adds.nonEmpty || removes.nonEmpty || delAdds.nonEmpty || delRemoves.nonEmpty
+    /** The table's own txn actions this version recorded. */
+    val newTxns: Seq[(String, Long)] = {
+      val before = prev.map(_.txns).getOrElse(Map.empty)
+      cur.txns.toSeq.filter { case (a, v) => !before.get(a).contains(v) }.sortBy(_._1)
+    }
+    def schemaChanged: Boolean = !prev.flatMap(_.meta).map(_.schema.struct).contains(struct)
+    /** Row-level change files of a changelog table's commit. */
+    lazy val changeFiles: Seq[String] =
+      if (meta.changelog) table.changeFilesOf(version) else Seq.empty
+  }
+
+  /** One destination, opened for one mirror call. */
+  trait Writer {
+    /** The last lakehouse version the destination recorded; -1 when empty. */
+    def lastMirrored: Long
+    /** Record one lakehouse version: a commit, a snapshot, or nothing. */
+    def write(d: VersionDiff): Unit
+    /** Close the call; returns the number of destination commits written. */
+    def finish(head: Long): Int
+  }
+
+  /** What differs between the interchange formats. */
+  trait Format {
+    /** The maintenance options [[maintain]] runs. */
+    def maintenance: Set[String]
+    def open(spark: SparkSession, table: LakehouseTable, destDir: String): Writer
+    def maintain(spark: SparkSession, destDir: String, written: Int, m: Maintenance): Unit
+
+    final def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int =
+      run(spark, table, destDir, this)
+
+    /** Mirror, then run the maintenance `m` asks for. */
+    final def sync(spark: SparkSession, table: LakehouseTable, destDir: String,
+        m: Maintenance): Unit =
+      maintain(spark, destDir, mirror(spark, table, destDir), m)
+  }
+
+  /** Mirror every lakehouse version past the one the destination recorded,
+    * in order, one [[VersionDiff]] each. Returns the destination commits
+    * written; 0 when the destination is already at the head. */
+  private def run(spark: SparkSession, table: LakehouseTable, destDir: String,
+      format: Format): Int = {
+    val head = table.latestVersion()
+    require(head >= 0, "cannot mirror a table with no commits")
+    val w = format.open(spark, table, destDir)
+    if (w.lastMirrored >= head) return 0
+    var prev = if (w.lastMirrored < 0) None else Some(table.snapshot(Some(w.lastMirrored)))
+    // the partition layout is pinned on the first mirrored version: it is
+    // fixed for the table's life in every format
+    var pinned: Option[Seq[String]] = None
+    ((w.lastMirrored + 1) to head).foreach { v =>
+      val cur = table.snapshot(Some(v))
+      val meta = cur.meta.getOrElse(
+        throw new IllegalStateException("table has no meta action (not created)"))
+      val keys = meta.schema.partitionKeys
+      pinned.foreach(pk => require(pk == keys,
+        s"partition keys cannot evolve mid-mirror ($pk -> $keys) — the " +
+          "partition layout is fixed at table creation; refusing"))
+      pinned = Some(keys)
+      requirePartitionTypes(meta.schema.struct, keys)
+      w.write(new VersionDiff(table, v, prev, cur, meta))
+      prev = Some(cur)
+    }
+    w.finish(head)
+  }
+
+  /** Partition columns must exist and have a type whose partition-value
+    * string round trips unambiguously (what the importers cast back);
+    * everything else refuses loudly. */
+  def requirePartitionTypes(struct: StructType, partitionKeys: Seq[String]): Unit =
+    partitionKeys.foreach { c =>
+      require(struct.fieldNames.contains(c), s"partition column '$c' is not in the schema")
+      require(Seq(IntegerType, LongType, StringType, BooleanType).contains(struct(c).dataType),
+        s"partition column '$c': type ${struct(c).dataType} has no " +
+          "partition-value serialization here — refusing")
+    }
+
+  /** Footer-only row counts for parquet files, keyed by absolute path (a
+    * parquet count() never touches row data). */
+  def countRows(spark: SparkSession, paths: Seq[String]): Map[String, Long] =
+    if (paths.isEmpty) Map.empty
+    else {
+      import org.apache.spark.sql.functions.input_file_name
+      spark.read.parquet(paths: _*)
+        .groupBy(input_file_name().as("f")).count().collect()
+        .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1))).toMap
+    }
+
+  /** Rows of each lakehouse file by its relative path: merge-written
+    * files carry `-1` (unknown) in the lakehouse log, and those resolve
+    * with one footer-only count pass. */
+  def resolveRowCounts(spark: SparkSession, tableDir: String,
+      files: Seq[AddFile]): Map[String, Long] = {
+    def abs(f: AddFile) = Paths.get(tableDir, f.path).toAbsolutePath.toString
+    val counted = countRows(spark, files.filter(_.rows < 0).map(abs))
+    files.map { f =>
+      f.path -> (if (f.rows >= 0) f.rows
+                 else counted.getOrElse(abs(f),
+                   throw new IllegalStateException(s"no footer count for ${f.path}")))
+    }.toMap
+  }
+
+  /** The reachability sweep of snapshot expiry: delete every manifest
+    * list of an expired snapshot, every manifest only those lists
+    * reference, and every data file only those manifests reference. A
+    * retained list keeps its manifests, and `keptData` of a retained
+    * manifest keeps its files. Returns (manifest + list files deleted,
+    * data files deleted). */
+  def sweepExpired[M](keptLists: Seq[Path], expiredLists: Seq[Path],
+      manifestsOf: Path => Seq[M], manifestPath: M => Path,
+      keptData: M => Seq[Path], expiredData: M => Seq[Path]): (Int, Int) = {
+    val keepLists = keptLists.toSet
+    val keepManifests = keptLists.distinct.flatMap(manifestsOf).distinct
+    val keepManifestPaths = keepManifests.map(manifestPath).toSet
+    val keepData = keepManifests.flatMap(keptData).toSet
+    var metaDeleted = 0
+    var dataDeleted = 0
+    expiredLists.filterNot(keepLists.contains).foreach { lp =>
+      manifestsOf(lp).foreach { m =>
+        val mp = manifestPath(m)
+        if (!keepManifestPaths.contains(mp) && Files.exists(mp)) {
+          expiredData(m).foreach { dp =>
+            if (!keepData.contains(dp) && Files.deleteIfExists(dp)) dataDeleted += 1
+          }
+          Files.delete(mp); metaDeleted += 1
+        }
+      }
+      if (Files.deleteIfExists(lp)) metaDeleted += 1
+    }
+    (metaDeleted, dataDeleted)
+  }
+}

@@ -18,12 +18,18 @@ import java.nio.file.Paths
   * one interchange commit per micro-batch forever:
   *  - `delta` + `checkpoint.every=N`: a classic checkpoint + `cleanupLog`
   *    whenever N commit JSONs accumulate past the last checkpoint.
-  *  - `iceberg` + `snapshots.keep=N`: `expireSnapshots(N)` per sync (a
-  *    no-op while history is short).
+  *  - `iceberg` / `paimon` + `snapshots.keep=N`: `expireSnapshots(N)` per
+  *    sync (a no-op while history is short).
+  *  - `paimon` + `full-compaction.delta-commits=N`: a full LSM compaction
+  *    every N mirrored snapshots.
+  * A maintenance option the format does not run is refused at
+  * construction rather than silently ignored.
   *
   * Exactly-once riding through: batch tracking uses the inner lakehouse
-  * `txn` action, and BOTH mirrors forward txn bookkeeping, so a reader of
-  * the mirrored format can see which (runId, batchId) are durable.
+  * `txn` action. The Delta mirror forwards the txn actions themselves;
+  * every mirror records the lakehouse version it reflects (Delta `txn`,
+  * Iceberg table property, Paimon `commitIdentifier`), and that version's
+  * txns are durable.
   */
 final class MirroredLakehouseSink(
     spark: SparkSession,
@@ -36,16 +42,24 @@ final class MirroredLakehouseSink(
     fullCompactionEvery: Int = 0)
     extends DataSink {
 
-  require(format == "delta" || format == "iceberg" || format == "paimon",
-    s"unknown mirror format $format")
-  require(fullCompactionEvery == 0 || format == "paimon",
-    "full-compaction.delta-commits is a Paimon option (LSM full compaction)")
+  private val mirrorFormat: InterchangeMirror.Format = format match {
+    case "delta" => DeltaInterchange.MirrorFormat
+    case "iceberg" => IcebergInterchange.MirrorFormat
+    case "paimon" => PaimonInterchange.MirrorFormat
+    case _ => throw new IllegalArgumentException(s"unknown mirror format $format")
+  }
 
-  // delta commits since the last full compaction, per table. In-memory:
-  // a restart delays the next compaction by at most one cycle, which is
-  // maintenance cadence, not correctness
-  private val sinceCompaction =
-    scala.collection.mutable.Map.empty[TableId, Int].withDefaultValue(0)
+  private val settings = Map(
+    InterchangeMirror.CheckpointEvery -> checkpointEvery,
+    InterchangeMirror.SnapshotsKeep -> snapshotsKeep,
+    InterchangeMirror.FullCompactionEvery -> fullCompactionEvery).filter(_._2 != 0)
+  settings.keys.foreach(o => require(mirrorFormat.maintenance.contains(o),
+    s"$o is not maintenance the $format mirror runs (it runs " +
+      s"${mirrorFormat.maintenance.toSeq.sorted.mkString(", ")}) — refusing " +
+      "rather than ignoring it"))
+
+  private val maintenance =
+    scala.collection.mutable.Map.empty[TableId, InterchangeMirror.Maintenance]
 
   private val inner = new LakehouseSink(
     spark, Paths.get(rootDir, "_staging").toString, buckets,
@@ -57,30 +71,9 @@ final class MirroredLakehouseSink(
   def mirrorDir(t: TableId): String =
     Paths.get(rootDir, t.identifier.replace('.', '_')).toString
 
-  private def sync(t: TableId): Unit = format match {
-    case "delta" =>
-      DeltaInterchange.mirror(spark, inner.table(t), mirrorDir(t))
-      if (checkpointEvery > 0)
-        DeltaInterchange.maintainCheckpoint(spark, mirrorDir(t), checkpointEvery)
-    case "iceberg" =>
-      IcebergInterchange.mirror(spark, inner.table(t), mirrorDir(t))
-      if (snapshotsKeep > 0)
-        IcebergInterchange.expireSnapshots(mirrorDir(t), snapshotsKeep)
-    case "paimon" =>
-      val written = PaimonInterchange.mirror(spark, inner.table(t), mirrorDir(t))
-      // the reference Paimon connector's `full-compaction.delta-commits`:
-      // run a FULL COMPACTION every N delta commits so readers keep the
-      // no-overlap fast path instead of paying an ever-growing LSM merge
-      if (fullCompactionEvery > 0) {
-        sinceCompaction(t) += written
-        if (sinceCompaction(t) >= fullCompactionEvery) {
-          PaimonInterchange.compact(spark, mirrorDir(t))
-          sinceCompaction(t) = 0
-        }
-      }
-      if (snapshotsKeep > 0)
-        PaimonInterchange.expireSnapshots(mirrorDir(t), snapshotsKeep)
-  }
+  private def sync(t: TableId): Unit =
+    mirrorFormat.sync(spark, inner.table(t), mirrorDir(t),
+      maintenance.getOrElseUpdate(t, new InterchangeMirror.Maintenance(settings)))
 
   override def applySchemaChange(event: SchemaChangeEvent): Unit = {
     inner.applySchemaChange(event)

@@ -292,6 +292,9 @@ object PaimonInterchange {
     /** `p1=v1/p2=v2/` path prefix (empty when unpartitioned). */
     def partitionPath(keys: Seq[String]): String =
       keys.zip(partition).map { case (k, v) => s"$k=$v/" }.mkString
+    /** The file under table root `dir`: `p1=v1/…/bucket-N/<name>`. */
+    def path(dir: String, keys: Seq[String]): Path =
+      Paths.get(dir, s"${partitionPath(keys)}bucket-$bucket", fileName)
   }
 
   private[sinks] final case class PaimonSnapshot(
@@ -718,9 +721,7 @@ object PaimonInterchange {
         val fileKv =
           if (keys.isEmpty) StructType(fileStruct.fields.toSeq)
           else keyValueSchema(fileStruct, fileKeys)
-        val prefix = files.head.partitionPath(snap.partitionKeys)
-        val paths = files.map(f =>
-          Paths.get(srcDir, s"${prefix}bucket-${f.bucket}", f.fileName).toString)
+        val paths = files.map(_.path(srcDir, snap.partitionKeys).toString)
         if (!checkedSchemas.contains(sid)) {
           checkedSchemas += sid
           val sample = spark.read.parquet(paths.minBy(identity)).schema.fieldNames
@@ -1241,6 +1242,32 @@ object PaimonInterchange {
     Files.write(trackingPath(dir, snapshotId), mapper.writeValueAsBytes(tn))
   }
 
+  /** Check a snapshot window `(from, to]` against the retained history;
+    * returns the schema at `to`: (struct, primary keys, partition keys). */
+  private def windowSchema(srcDir: String, from: Long, to: Long,
+      what: String): (StructType, Seq[String], Seq[String]) = {
+    val latest = latestSnapshotId(srcDir).getOrElse(
+      throw new IllegalArgumentException(s"no Paimon snapshot under $srcDir"))
+    require(to <= latest, s"toSnapshot $to is beyond the latest snapshot $latest")
+    val earliest = new String(Files.readAllBytes(
+      snapshotDir(srcDir).resolve("EARLIEST")), UTF_8).trim.toLong
+    require(from >= earliest - 1,
+      s"$what window ($from, $to] reaches below the earliest retained " +
+        s"snapshot $earliest (expired) — those changes are undeliverable")
+    require(from < to, s"empty or inverted window ($from, $to]")
+    val (struct, pks, _, _, parts) =
+      readSchemaFile(srcDir, readSnapshot(srcDir, to).get("schemaId").asLong())
+    (struct, pks, parts)
+  }
+
+  /** Absolute paths of the data files a manifest list ADDs. */
+  private def addedFiles(srcDir: String, list: String, partitionKeys: Seq[String],
+      partTypes: Seq[DataType]): Seq[String] =
+    readManifestList(srcDir, list).flatMap { case (mf, _, _, _, _) =>
+      readManifest(manifestDir(srcDir).resolve(mf), partTypes)
+        .filter(_.kind == Add).map(_.file.path(srcDir, partitionKeys).toString)
+    }
+
   /** Incremental changelog read (Paimon's `incremental-between` scan): the
     * key-value rows of data files ADDed by snapshots in
     * `(fromSnapshotId, toSnapshotId]`, with `_VALUE_KIND` preserved — so a
@@ -1257,20 +1284,7 @@ object PaimonInterchange {
     * Cost is O(delta manifests + added files in range), never O(table). */
   def readDeltaBetween(spark: SparkSession, srcDir: String,
       fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    val latest = latestSnapshotId(srcDir).getOrElse(
-      throw new IllegalArgumentException(s"no Paimon snapshot under $srcDir"))
-    require(toSnapshotId <= latest,
-      s"toSnapshot $toSnapshotId is beyond the latest snapshot $latest")
-    val earliest = new String(Files.readAllBytes(
-      snapshotDir(srcDir).resolve("EARLIEST")), UTF_8).trim.toLong
-    require(fromSnapshotId >= earliest - 1,
-      s"snapshot window ($fromSnapshotId, $toSnapshotId] reaches below the " +
-        s"earliest retained snapshot $earliest (expired) — those changes " +
-        "are undeliverable")
-    require(fromSnapshotId < toSnapshotId,
-      s"empty or inverted window ($fromSnapshotId, $toSnapshotId]")
-    val head = readSnapshot(srcDir, toSnapshotId)
-    val (struct, pks, _, _, dbParts) = readSchemaFile(srcDir, head.get("schemaId").asLong())
+    val (struct, pks, dbParts) = windowSchema(srcDir, fromSnapshotId, toSnapshotId, "snapshot")
     val partTypes = dbParts.map(struct(_).dataType)
     val keys = pks.filterNot(dbParts.contains)
     val files = ((fromSnapshotId + 1) to toSnapshotId).flatMap { id =>
@@ -1281,14 +1295,7 @@ object PaimonInterchange {
           s"snapshot $id is '${s.get("commitKind").asText()}', not an APPEND: " +
             "a rewritten bucket may drop keys with no tombstone in the " +
             "delta — an incremental consumer would silently miss deletions")
-        readManifestList(srcDir, s.get("deltaManifestList").asText())
-          .flatMap { case (mf, _, _, _, _) =>
-            readManifest(manifestDir(srcDir).resolve(mf), partTypes)
-              .filter(_.kind == Add)
-              .map(e => Paths.get(srcDir,
-                s"${e.file.partitionPath(dbParts)}bucket-${e.file.bucket}",
-                e.file.fileName).toString)
-          }
+        addedFiles(srcDir, s.get("deltaManifestList").asText(), dbParts, partTypes)
       }
     }.distinct
     val kvSchema = keyValueSchema(struct, keys)
@@ -1307,20 +1314,7 @@ object PaimonInterchange {
     * expired) rather than silently returning a partial feed. */
   def readChangelogBetween(spark: SparkSession, srcDir: String,
       fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    val latest = latestSnapshotId(srcDir).getOrElse(
-      throw new IllegalArgumentException(s"no Paimon snapshot under $srcDir"))
-    require(toSnapshotId <= latest,
-      s"toSnapshot $toSnapshotId is beyond the latest snapshot $latest")
-    val earliest = new String(Files.readAllBytes(
-      snapshotDir(srcDir).resolve("EARLIEST")), UTF_8).trim.toLong
-    require(fromSnapshotId >= earliest - 1,
-      s"changelog window ($fromSnapshotId, $toSnapshotId] reaches below " +
-        s"the earliest retained snapshot $earliest (expired) — those " +
-        "changes are undeliverable")
-    require(fromSnapshotId < toSnapshotId,
-      s"empty or inverted window ($fromSnapshotId, $toSnapshotId]")
-    val head = readSnapshot(srcDir, toSnapshotId)
-    val (struct, pks, _, _, dbParts) = readSchemaFile(srcDir, head.get("schemaId").asLong())
+    val (struct, pks, dbParts) = windowSchema(srcDir, fromSnapshotId, toSnapshotId, "changelog")
     val partTypes = dbParts.map(struct(_).dataType)
     val keys = pks.filterNot(dbParts.contains)
     val perSnapshot = ((fromSnapshotId + 1) to toSnapshotId).flatMap { id =>
@@ -1334,14 +1328,7 @@ object PaimonInterchange {
             "expired; refusing a silently partial change feed")
         None
       } else {
-        val files = readManifestList(srcDir, cl.asText())
-          .flatMap { case (mf, _, _, _, _) =>
-            readManifest(manifestDir(srcDir).resolve(mf), partTypes)
-              .filter(_.kind == Add)
-              .map(e => Paths.get(srcDir,
-                s"${e.file.partitionPath(dbParts)}bucket-${e.file.bucket}",
-                e.file.fileName).toString)
-          }
+        val files = addedFiles(srcDir, cl.asText(), dbParts, partTypes)
         if (files.isEmpty) None
         else Some((s.get("commitIdentifier").asLong(), files))
       }
@@ -1385,44 +1372,25 @@ object PaimonInterchange {
       latestSchemaId(destDir).getOrElse(
         throw new IllegalArgumentException(s"no Paimon schema under $destDir")))
     val partTypes = pKeys.map(pStruct(_).dataType)
-    def dataPath(f: PaimonFile): Path = Paths.get(destDir,
-      s"${f.partitionPath(pKeys)}bucket-${f.bucket}", f.fileName)
     val earliestPath = snapshotDir(destDir).resolve("EARLIEST")
     val earliest = new String(Files.readAllBytes(earliestPath), UTF_8).trim.toLong
     val cut = latest - keepLast + 1
     if (cut <= earliest) return (0, 0, 0)
 
-    def listsOf(id: Long): Seq[String] = {
+    def listsOf(id: Long): Seq[Path] = {
       val s = readSnapshot(destDir, id)
-      Seq(s.get("baseManifestList").asText(), s.get("deltaManifestList").asText()) ++
-        Option(s.get("changelogManifestList")).filterNot(_.isNull).map(_.asText())
+      (Seq(s.get("baseManifestList").asText(), s.get("deltaManifestList").asText()) ++
+        Option(s.get("changelogManifestList")).filterNot(_.isNull).map(_.asText()))
+        .map(manifestDir(destDir).resolve)
     }
-    val keepLists = (cut to latest).flatMap(listsOf).toSet
-    val keepManifests = keepLists.flatMap(l =>
-      readManifestList(destDir, l).map(_._1))
-    val keepData = keepManifests.flatMap(m =>
-      readManifest(manifestDir(destDir).resolve(m), partTypes)
-        .filter(_.kind == Add)
-        .map(e => dataPath(e.file)))
-
-    var metaDeleted = 0
-    var dataDeleted = 0
+    def addedData(m: Path): Seq[Path] =
+      readManifest(m, partTypes).filter(_.kind == Add).map(_.file.path(destDir, pKeys))
+    val (metaDeleted, dataDeleted) = InterchangeMirror.sweepExpired[Path](
+      (cut to latest).flatMap(listsOf), (earliest until cut).flatMap(listsOf),
+      manifestsOf = l => readManifestList(destDir, l.getFileName.toString)
+        .map(m => manifestDir(destDir).resolve(m._1)),
+      manifestPath = identity, keptData = addedData, expiredData = addedData)
     (earliest until cut).foreach { id =>
-      listsOf(id).filterNot(keepLists.contains).foreach { l =>
-        readManifestList(destDir, l).map(_._1)
-          .filterNot(keepManifests.contains).foreach { m =>
-            val mp = manifestDir(destDir).resolve(m)
-            if (Files.exists(mp)) {
-              readManifest(mp, partTypes).filter(_.kind == Add).foreach { e =>
-                val dp = dataPath(e.file)
-                if (!keepData.contains(dp) && Files.deleteIfExists(dp))
-                  dataDeleted += 1
-              }
-              Files.delete(mp); metaDeleted += 1
-            }
-          }
-        if (Files.deleteIfExists(manifestDir(destDir).resolve(l))) metaDeleted += 1
-      }
       Files.deleteIfExists(snapshotDir(destDir).resolve(s"snapshot-$id"))
       Files.deleteIfExists(trackingPath(destDir, id)) // graft sidecar
     }
@@ -1450,54 +1418,83 @@ object PaimonInterchange {
     * version — Paimon's own exactly-once marker — so restarts resume from
     * the destination alone. Cost per call is O(new commits + prior
     * manifest list), never O(data). Returns snapshots written. */
-  def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int = {
-    val head = table.latestVersion()
-    require(head >= 0, "cannot mirror a table with no commits")
-    val prior = latestSnapshotId(destDir)
-    var lastMirrored = -1L
-    var nextSnapshotId = 1L
-    var totalRecords = 0L
-    var liveManifests = Vector.empty[ManifestMeta]
-    prior.foreach { id =>
+  def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int =
+    MirrorFormat.mirror(spark, table, destDir)
+
+  /** The Paimon side of [[InterchangeMirror]]: one snapshot per lakehouse
+    * version, an EMPTY snapshot (empty delta, progress advances) for a
+    * version that changed no files; maintenance is `snapshots.keep`
+    * ([[expireSnapshots]]) and `full-compaction.delta-commits` — the
+    * reference Paimon connector's option: a FULL COMPACTION every N delta
+    * commits, so readers keep the no-overlap fast path instead of paying
+    * an ever-growing LSM merge. */
+  private[sinks] object MirrorFormat extends InterchangeMirror.Format {
+    val maintenance: Set[String] =
+      Set(InterchangeMirror.SnapshotsKeep, InterchangeMirror.FullCompactionEvery)
+
+    def open(spark: SparkSession, table: LakehouseTable,
+        destDir: String): InterchangeMirror.Writer = new MirrorWriter(spark, table, destDir)
+
+    def maintain(spark: SparkSession, destDir: String, written: Int,
+        m: InterchangeMirror.Maintenance): Unit = {
+      val every = m(InterchangeMirror.FullCompactionEvery)
+      if (every > 0) {
+        m.sinceCompaction += written
+        if (m.sinceCompaction >= every) {
+          compact(spark, destDir)
+          m.sinceCompaction = 0
+        }
+      }
+      if (m(InterchangeMirror.SnapshotsKeep) > 0)
+        expireSnapshots(destDir, m(InterchangeMirror.SnapshotsKeep))
+    }
+  }
+
+  private final class MirrorWriter(spark: SparkSession, table: LakehouseTable,
+      destDir: String) extends InterchangeMirror.Writer {
+    private val prior = latestSnapshotId(destDir)
+    private var nextSnapshotId = prior.map(_ + 1).getOrElse(1L)
+    private var totalRecords = 0L
+    private var liveManifests = Vector.empty[ManifestMeta]
+    private var written = 0
+    // manifest files are immutable once written: parse each at most once
+    // per mirror() call — the loop revisits the live set every commit, and
+    // without a cache that is O(commits x live manifests) Avro decodes
+    private val manifestCache = scala.collection.mutable.HashMap.empty[String, Seq[ParsedEntry]]
+    private def parsedManifest(n: String, partTypes: Seq[DataType]): Seq[ParsedEntry] =
+      manifestCache.getOrElseUpdate(
+        n, readManifest(manifestDir(destDir).resolve(n), partTypes))
+
+    val lastMirrored: Long = prior.map { id =>
       val s = readSnapshot(destDir, id)
-      lastMirrored = s.get("commitIdentifier").asLong()
-      nextSnapshotId = id + 1
       totalRecords = s.get("totalRecordCount").asLong()
       liveManifests =
         (readManifestList(destDir, s.get("baseManifestList").asText()) ++
           readManifestList(destDir, s.get("deltaManifestList").asText())).toVector
-    }
-    if (lastMirrored >= head) return 0
+      s.get("commitIdentifier").asLong()
+    }.getOrElse(-1L)
 
-    var written = 0
-    // manifest files are immutable once written: parse each at most once
-    // per mirror() call — the loop revisits the live set every commit, and
-    // without a cache that is O(commits x live manifests) Avro decodes
-    val manifestCache = scala.collection.mutable.HashMap.empty[String, Seq[ParsedEntry]]
-    def parsedManifest(n: String, partTypes: Seq[DataType]): Seq[ParsedEntry] =
-      manifestCache.getOrElseUpdate(
-        n, readManifest(manifestDir(destDir).resolve(n), partTypes))
     // the sidecar of the LATEST durable snapshot is authoritative; an
     // orphan left by a crash between sidecar and snapshot is overwritten
-    var track = prior.map(id => readSourceTracking(destDir, id)).getOrElse(Map.empty)
-    var prev = if (lastMirrored < 0) None else Some(table.snapshot(Some(lastMirrored)))
-    ((lastMirrored + 1) to head).foreach { v =>
-      val cur = table.snapshot(Some(v))
-      val meta = cur.meta.getOrElse(
-        throw new IllegalStateException("table has no meta action (not created)"))
-      val struct = meta.schema.struct
-      val pks = meta.schema.primaryKeys
+    private var track = prior.map(id => readSourceTracking(destDir, id)).getOrElse(Map.empty)
+
+    def write(d: InterchangeMirror.VersionDiff): Unit = {
+      val v = d.version
+      val struct = d.struct
+      val pks = d.schema.primaryKeys
       // pk-less APPEND-ONLY tables mirror too (the round-11 append-table
       // surface, now continuous): each commit's adds become level-0 plain
       // rows with the append bucket spread — appends never remove, so the
       // LSM tombstone/rescue machinery is not needed; any removal
       // (overwrite/compaction/delete) refuses below.
       val isAppend = pks.isEmpty
-      val partitionKeys = meta.schema.partitionKeys
+      val partitionKeys = d.partitionKeys
       val partTypes = partitionKeys.map(struct(_).dataType)
       val keys = pks.filterNot(partitionKeys.contains) // trimmed LSM key
-      val buckets = meta.buckets
+      val buckets = d.meta.buckets
       val schemaId = ensureSchema(destDir, struct, pks, buckets, partitionKeys)
+      val (adds, removes, delAdds) = (d.adds, d.removes, d.delAdds)
+      val tag = f"s$nextSnapshotId%04d"
       // the SOURCE lakehouse bucket of a row — full-pk hash, the removal
       // granularity of the lakehouse (COW rewrites remove whole buckets).
       // Under partitioning this is NOT the Paimon bucket (trimmed-key
@@ -1505,19 +1502,14 @@ object PaimonInterchange {
       // bucket equality.
       def withSrcBucket(df: DataFrame): DataFrame =
         df.withColumn("__pm_srcb", pmod(hash(pks.map(col): _*), lit(buckets)))
-      val prevFiles = prev.map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
-      val curFiles = cur.files.map(f => f.path -> f).toMap
-      val adds = cur.files.filterNot(f => prevFiles.contains(f.path)).sortBy(_.path)
-      val removes = prev.map(_.files.filterNot(f => curFiles.contains(f.path)))
-        .getOrElse(Seq.empty).sortBy(_.path)
-      val delPrev = prev.map(_.deleteFiles.map(_.path).toSet).getOrElse(Set.empty)
-      val delAdds = cur.deleteFiles.filterNot(f => delPrev.contains(f.path)).sortBy(_.path)
 
       if (isAppend)
         require(removes.isEmpty && delAdds.isEmpty,
           s"version $v removes or deletes on an APPEND-ONLY Paimon mirror " +
             "— append tables never remove; overwrite/compaction/delete are " +
             "unsupported for them; refusing")
+      val baseList = s"manifest-list-$tag-base"
+      val deltaList = s"manifest-list-$tag-delta"
       if (adds.nonEmpty || removes.nonEmpty || delAdds.nonEmpty) {
         // data adds -> level-0 key-value files; tombstones ride in their
         // OWN files so a later bucket rewrite can drop data files without
@@ -1538,25 +1530,24 @@ object PaimonInterchange {
             writeKeyValueFiles(spark, destDir,
               readAdds.select(struct.fieldNames.map(col).toSeq :+
                   pmod(spark_partition_id(), lit(buckets)).as("__pm_bucket"): _*),
-              keys, struct, v, schemaId, level = 0,
-              tag = f"s$nextSnapshotId%04d", partitionKeys)
+              keys, struct, v, schemaId, level = 0, tag = tag, partitionKeys)
           else writeKeyValueFiles(spark, destDir,
             withSrcBucket(toKeyValue(
               readAdds, struct, keys, v, KindInsert, buckets, partitionKeys)),
-            keys, struct, v, schemaId, level = 0, tag = f"s$nextSnapshotId%04d",
+            keys, struct, v, schemaId, level = 0, tag = tag,
             partitionKeys, trackSrcBucket = true)
-        val tombFiles = delAdds.zipWithIndex.flatMap { case (d, i) =>
+        val tombFiles = delAdds.zipWithIndex.flatMap { case (del, i) =>
           val pkRows = spark.read
             .schema(StructType(pks.map(p => struct(p))))
-            .parquet(Paths.get(table.dir, d.path).toString)
+            .parquet(Paths.get(table.dir, del.path).toString)
             .coalesce(1) // one small delete file -> one task
           val full = pkRows.select(struct.fieldNames.map(n =>
             (if (pks.contains(n)) col(n)
              else lit(null).cast(struct(n).dataType)).as(n)): _*)
           writeKeyValueFiles(spark, destDir,
-            toKeyValue(full, struct, keys, d.ver, KindDelete, buckets, partitionKeys),
-            keys, struct, d.ver, schemaId, level = 0,
-            tag = f"s$nextSnapshotId%04d-d$i", partitionKeys)
+            toKeyValue(full, struct, keys, del.ver, KindDelete, buckets, partitionKeys),
+            keys, struct, del.ver, schemaId, level = 0,
+            tag = s"$tag-d$i", partitionKeys)
         }
 
         // removed lakehouse files -> DELETE entries for the mirrored files
@@ -1599,16 +1590,14 @@ object PaimonInterchange {
             require(f.deleteRows == 0,
               s"partially-dead mirrored file ${f.fileName} carries " +
                 "tombstones — tombstone files map to no sources; corrupt sidecar")
-            val kvPath = Paths.get(destDir,
-              s"${f.partitionPath(partitionKeys)}bucket-${f.bucket}", f.fileName)
+            val kvPath = f.path(destDir, partitionKeys)
             val surviving = withSrcBucket(
               spark.read.schema(keyValueSchema(struct, keys))
                 .parquet(kvPath.toString).coalesce(1)) // one file -> one task
               .filter(!col("__pm_srcb").isin(removedBuckets.toSeq: _*))
               .withColumn("__pm_bucket", lit(f.bucket))
             writeKeyValueFiles(spark, destDir, surviving, keys, struct,
-              f.minSeq, schemaId, level = 0,
-              tag = f"s$nextSnapshotId%04d-r$i", partitionKeys,
+              f.minSeq, schemaId, level = 0, tag = s"$tag-r$i", partitionKeys,
               trackSrcBucket = true)
           }
         val newFiles = dataFiles ++ tombFiles ++ rescueFiles
@@ -1618,8 +1607,7 @@ object PaimonInterchange {
             partTypes)) ++
             deadMirrored.map(f => entryRecord(Delete, buckets, f, emptyRow, emptyRow,
               partTypes))
-        val mMeta = writeManifest(destDir,
-          f"manifest-s$nextSnapshotId%04d-0", schemaId, entries)
+        val mMeta = writeManifest(destDir, s"manifest-$tag-0", schemaId, entries)
         if (liveManifests.size > ManifestCompactThreshold) {
           // full-compact the base: net live entries (ADDs minus later
           // DELETEs) re-listed as ADDs in one manifest; expired manifests
@@ -1632,20 +1620,18 @@ object PaimonInterchange {
               else net.remove((e.file.partition, e.file.fileName))
             }
           }
-          val merged = writeManifest(destDir,
-            f"manifest-s$nextSnapshotId%04d-compacted", schemaId,
+          val merged = writeManifest(destDir, s"manifest-$tag-compacted", schemaId,
             net.values.toSeq.map(f =>
               entryRecord(Add, buckets, f, emptyRow, emptyRow, partTypes)))
           liveManifests = Vector(merged)
         }
-        val baseList = f"manifest-list-s$nextSnapshotId%04d-base"
-        val deltaList = f"manifest-list-s$nextSnapshotId%04d-delta"
         writeManifestList(destDir, baseList, liveManifests)
         writeManifestList(destDir, deltaList, Seq(mMeta))
         liveManifests :+= mMeta
 
         val survivingSrcsOf: Map[String, Seq[String]] = deadMirrored.map(f =>
           f.fileName -> track(f.fileName).filterNot(removedNames.contains)).toMap
+        val prevFiles = d.prev.map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
         track = (track -- deadNames) ++
           dataFiles.map(w =>
             // append mirrors never remove, so their files need no source
@@ -1665,7 +1651,7 @@ object PaimonInterchange {
         // CHANGELOG FILES in the same snapshot (changelogManifestList) —
         // key-value files whose per-row `_VALUE_KIND` carries the real
         // RowKind (+I / -U / +U / -D), the exact Delta-CDF parity
-        val changeFiles = if (meta.changelog) table.changeFilesOf(v) else Seq.empty
+        val changeFiles = d.changeFiles
         val clResult =
           if (changeFiles.isEmpty) None
           else {
@@ -1680,34 +1666,27 @@ object PaimonInterchange {
               .otherwise(KindDelete)
             val clFiles = writeKeyValueFiles(spark, destDir,
               toKeyValueKinded(cdf, struct, keys, v, kindCol, buckets),
-              keys, struct, v, schemaId, level = 0,
-              tag = f"s$nextSnapshotId%04d-cl", partitionKeys)
-            val clMeta = writeManifest(destDir,
-              f"manifest-s$nextSnapshotId%04d-cl", schemaId,
+              keys, struct, v, schemaId, level = 0, tag = s"$tag-cl", partitionKeys)
+            val clMeta = writeManifest(destDir, s"manifest-$tag-cl", schemaId,
               clFiles.map(w =>
                 entryRecord(Add, buckets, w.file, w.minKey, w.maxKey, partTypes)))
-            val clList = f"manifest-list-s$nextSnapshotId%04d-changelog"
+            val clList = s"manifest-list-$tag-changelog"
             writeManifestList(destDir, clList, Seq(clMeta))
             Some((clList, clFiles.map(_.file.rows).sum))
           }
 
         val deltaRecords = newFiles.map(_.file.rows).sum
         totalRecords = totalRecords + deltaRecords - deadMirrored.map(_.rows).sum
-        val kind = if (removes.isEmpty) "APPEND" else "COMPACT"
         writeSnapshot(destDir, nextSnapshotId, snapshotNode(
           nextSnapshotId, schemaId, baseList, deltaList,
-          commitIdentifier = v, commitKind = kind,
+          commitIdentifier = v, commitKind = if (removes.isEmpty) "APPEND" else "COMPACT",
           totalRecords = totalRecords, deltaRecords = deltaRecords,
           changelogList = clResult.map(_._1),
           changelogRecords = clResult.map(_._2).getOrElse(0L)))
-        nextSnapshotId += 1
-        written += 1
       } else {
         // metadata-only lakehouse commit: empty delta, progress advances;
         // the tracking sidecar carries forward under the new snapshot id
         // so resume always finds the latest snapshot's sidecar
-        val baseList = f"manifest-list-s$nextSnapshotId%04d-base"
-        val deltaList = f"manifest-list-s$nextSnapshotId%04d-delta"
         writeManifestList(destDir, baseList, liveManifests)
         writeManifestList(destDir, deltaList, Nil)
         writeSourceTracking(destDir, nextSnapshotId, track)
@@ -1715,11 +1694,11 @@ object PaimonInterchange {
           nextSnapshotId, schemaId, baseList, deltaList,
           commitIdentifier = v, commitKind = "APPEND",
           totalRecords = totalRecords, deltaRecords = 0L))
-        nextSnapshotId += 1
-        written += 1
       }
-      prev = Some(cur)
+      nextSnapshotId += 1
+      written += 1
     }
-    written
+
+    def finish(head: Long): Int = written
   }
 }

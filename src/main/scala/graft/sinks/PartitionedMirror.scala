@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.sinks.LakehouseFormat.{AddFile, Snapshot}
+import graft.sinks.LakehouseFormat.AddFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Path, Paths}
@@ -68,15 +68,22 @@ private[sinks] object PartitionedMirror {
     * WHOLE (the lakehouse COW model always rewrites a bucket's full file
     * set), because removals map to mirrored split files only through the
     * bucket number in their names. Returns the removed bucket set;
-    * refuses loudly on a partial-bucket removal. */
-  def wholeBucketRemovalSet(v: Long, removes: Seq[AddFile],
-      prev: Option[Snapshot]): Set[Int] = {
-    val rb = removes.map(_.bucket).toSet
-    prev.foreach { p =>
+    * refuses loudly on a partial-bucket removal, and on any removal from a
+    * pk-less table (append-only fact streams mirror, but their split-file
+    * names carry no pk-hash bucket). */
+  def wholeBucketRemovalSet(d: InterchangeMirror.VersionDiff, format: String): Set[Int] = {
+    require(d.schema.primaryKeys.nonEmpty || d.removes.isEmpty,
+      s"version ${d.version} removes files from a PK-LESS partitioned " +
+        s"$format mirror: removals map through the pk-hash bucket in split-" +
+        "file names, which pk-less tables do not have — only append-only " +
+        "commits mirror for them (compaction/overwrite/delete are " +
+        "unsupported); refusing")
+    val rb = d.removes.map(_.bucket).toSet
+    d.prev.foreach { p =>
       val partial = p.files.filter(f => rb.contains(f.bucket))
-        .filterNot(f => removes.exists(_.path == f.path))
+        .filterNot(f => d.removes.exists(_.path == f.path))
       require(partial.isEmpty,
-        s"version $v removes only part of lakehouse bucket(s) " +
+        s"version ${d.version} removes only part of lakehouse bucket(s) " +
           s"${partial.map(_.bucket).distinct.sorted.mkString(",")} — " +
           "the name-mapped removal model assumes whole-bucket " +
           "rewrites; refusing")
@@ -104,7 +111,7 @@ private[sinks] object PartitionedMirror {
         else pmod(hash(primaryKeys.map(col): _*), lit(buckets)))
     val moved = IcebergInterchange.writeSplitDataFiles(addsDf, destDir,
       partitionKeys, struct, Some("__srcb"), nameFor)
-    (moved, IcebergInterchange.countRows(spark, moved.map(_._1.toString)))
+    (moved, InterchangeMirror.countRows(spark, moved.map(_._1.toString)))
   }
 
   /** Prove from the parquet FOOTERS alone that every add file is

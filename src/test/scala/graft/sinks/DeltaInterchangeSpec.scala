@@ -49,7 +49,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     val back = DeltaInterchange.importDelta(spark, dest)
     val want = t.read()
     assert(back.exceptAll(want).isEmpty && want.exceptAll(back).isEmpty)
-    val snap = DeltaInterchange.readLog(dest)
+    val snap = DeltaInterchange.readLog(spark, dest)
     assert(snap.txns == Map("app-a" -> 7L), "exactly-once bookkeeping must survive")
     assert(snap.numRecords == 120L)
     assert(snap.schema == schema.struct)
@@ -127,7 +127,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     // unknown readerFeatures refusals live in DeltaReaderFeaturesSpec)
     Files.write(logFile, original.replace(
       "\"minReaderVersion\":1", "\"minReaderVersion\":4").getBytes(UTF_8))
-    val e1 = intercept[IllegalArgumentException] { DeltaInterchange.readLog(dest) }
+    val e1 = intercept[IllegalArgumentException] { DeltaInterchange.readLog(spark, dest) }
     assert(e1.getMessage.contains("minReaderVersion"))
 
     // partitioned tables now READ (partitionValues project back); the
@@ -135,7 +135,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     // serialization is ambiguous (timestamp)
     Files.write(logFile, original.replace(
       "\"partitionColumns\":[]", "\"partitionColumns\":[\"v\"]").getBytes(UTF_8))
-    assert(DeltaInterchange.readLog(dest).partitionColumns == Seq("v"))
+    assert(DeltaInterchange.readLog(spark, dest).partitionColumns == Seq("v"))
     Files.write(logFile, original
       .replace("\"partitionColumns\":[]", "\"partitionColumns\":[\"v\"]")
       .replace("""{\"name\":\"v\",\"type\":\"string\"""",
@@ -148,7 +148,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     // checkpoint marker
     Files.write(logFile, original.getBytes(UTF_8))
     Files.write(logFile.getParent.resolve("_last_checkpoint"), "{}".getBytes(UTF_8))
-    val e3 = intercept[IllegalArgumentException] { DeltaInterchange.readLog(dest) }
+    val e3 = intercept[IllegalArgumentException] { DeltaInterchange.readLog(spark, dest) }
     assert(e3.getMessage.contains("checkpoint"))
   }
 
@@ -182,7 +182,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     val back2 = DeltaInterchange.importDelta(spark, dest)
     assert(back2.exceptAll(t.read()).isEmpty && t.read().exceptAll(back2).isEmpty)
     // progress txn carries the lakehouse version
-    assert(DeltaInterchange.readLog(dest)
+    assert(DeltaInterchange.readLog(spark, dest)
       .txns(DeltaInterchange.MirrorAppId) == t.latestVersion())
   }
 
@@ -198,7 +198,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     t.merge(Seq((2L, "b", 7L)).toDF("k", "v", "extra"),
       spark.range(0).select($"id".as("k")))
     DeltaInterchange.mirror(spark, t, dest)
-    val snap = DeltaInterchange.readLog(dest)
+    val snap = DeltaInterchange.readLog(spark, dest)
     assert(snap.schema == evolved.struct, "the latest metaData wins")
     val back = DeltaInterchange.importDelta(spark, dest)
     assert(back.columns.toSeq == Seq("k", "v", "extra"))
@@ -227,7 +227,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     Files.write(Paths.get(dest, "_delta_log", f"${1L}%020d.json"),
       s"""{"remove":{"path":"${adds.head}","deletionTimestamp":0,"dataChange":true}}
          |""".stripMargin.getBytes(UTF_8))
-    val snap = DeltaInterchange.readLog(dest)
+    val snap = DeltaInterchange.readLog(spark, dest)
     assert(snap.files.size == 1 && snap.files.head.endsWith(adds(1)))
   }
 
@@ -328,8 +328,8 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     assert(DeltaInterchange.cleanupLog(dest) == 3, "all pre-checkpoint JSON commits removed")
     val logDir = Paths.get(dest, "_delta_log")
     assert(!Files.exists(logDir.resolve(f"${0L}%020d.json")))
-    // pure-JVM readLog refuses a checkpointed log; the spark one seeds it
-    intercept[IllegalArgumentException] { DeltaInterchange.readLog(dest) }
+    // the replay seeds from the checkpoint: no JSON at or below it is needed
+    assert(DeltaInterchange.readLog(spark, dest).numRecords == 2L)
     val back = DeltaInterchange.importDelta(spark, dest)
     assert(back.count() == 2L)
     // the mirror resumes THROUGH the checkpoint: next commit replays only
@@ -378,7 +378,7 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     Files.write(logDir.resolve(f"${0L}%020d.json"),
       lines.mkString("", "\n", "\n").getBytes(UTF_8))
 
-    val snap = DeltaInterchange.readLog(dest)
+    val snap = DeltaInterchange.readLog(spark, dest)
     assert(snap.partitionColumns == Seq("lang"))
     val back = DeltaInterchange.importDelta(spark, dest).orderBy("k")
       .collect().map(r => (r.getLong(0), r.getString(1),

@@ -138,7 +138,7 @@ class DeltaReaderFeaturesSpec extends AnyFunSuite {
         s""""modificationTime":0,"dataChange":true,"stats":"{\\"numRecords\\":6}",""" +
         s""""deletionVector":{"storageType":"i","pathOrInlineDv":"$podB",""" +
         s""""sizeInBytes":$szB,"cardinality":$cardB}}}"""))
-    val snap = DeltaInterchange.readLog(dest)
+    val snap = DeltaInterchange.readLog(spark, dest)
     assert(snap.fileDvs.size == 2)
     assert(snap.numRecords == 16 - 3 - 1,
       "snapshot numRecords is the logical (DV-masked) count")
@@ -278,7 +278,7 @@ class DeltaReaderFeaturesSpec extends AnyFunSuite {
       """{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},""" +
         """"schemaString":"{\"type\":\"struct\",\"fields\":[]}",""" +
         """"partitionColumns":[],"configuration":{},"createdTime":0}}"""))
-    assert(intercept[IllegalArgumentException](DeltaInterchange.readLog(d1))
+    assert(intercept[IllegalArgumentException](DeltaInterchange.readLog(spark, d1))
       .getMessage.contains("typeWidening-preview"))
 
     // column-mapped partitioned tables refuse (physical-name partitionValues)
