@@ -879,21 +879,6 @@ class LakehouseSpec extends AnyFunSuite {
     assert(t.latestVersion() == 6) // create + one commit per append
   }
 
-  test("optimistic concurrency: losing the claim race retries on the new state") {
-    val t = newTable()
-    t.merge(Seq((1L, "a")).toDF("k", "v"), empty(t))
-    // a concurrent writer claims the next version first (valid empty-ish commit)
-    val v = t.latestVersion()
-    Files.write(
-      Paths.get(t.dir, "_log", f"${v + 1}%020d.json"),
-      LakehouseFormat.encode(LakehouseFormat.Txn("rival", 99L)).getBytes("UTF-8"))
-    t.merge(Seq((2L, "b")).toDF("k", "v"), empty(t))
-    // our merge landed AFTER the rival's commit, on top of its state
-    assert(t.latestVersion() == v + 2)
-    assert(t.snapshot().txns("rival") == 99L)
-    assert(t.read().count() == 2)
-  }
-
   test("log checkpoints: snapshot from checkpoint == full replay; time travel intact") {
     val t = newTable(buckets = 2)
     (1 to 25).foreach { i =>
