@@ -299,31 +299,12 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     require(pdef.config.contains("checkpoint.dir"),
       "runHandlingDdl requires pipeline.checkpoint.dir (restarts must resume)")
     composer.createTables(sourceSchemas)
-    var applied = 0
-    var restarts = 0
-    var continue = true
-    while (continue && restarts <= maxRestarts) {
-      val q = CdcStream.start(readerFor(sourceId).load(), composer, queryName = pdef.name,
+    val applied = drainHandlingDdl(Seq(sourceId), maxRestarts, n =>
+      s"runHandlingDdl exhausted $maxRestarts restarts with schema changes still arriving " +
+        s"(applied $n); raise maxRestarts or inspect the DDL stream") { () =>
+      CdcStream.start(readerFor(sourceId).load(), composer, queryName = pdef.name,
         checkpointDir = pdef.config.get("checkpoint.dir"), tables = tablesOf(Seq(sourceId)))
-      q.processAllAvailable()
-      q.stop()
-      ChangeSourceRegistry.pendingDdl(sourceId) match {
-        case Some((_, ddl)) =>
-          composer.processSchemaChange(ddl)
-          ChangeSourceRegistry.ackPendingDdl(sourceId)
-          applied += 1
-          restarts += 1 // resume past the DDL with the evolved schema
-        case None => continue = false
-      }
     }
-    // a truncated drain must not look like a completed one: if the loop exits
-    // because the restart budget ran out (continue still true), data behind
-    // the last applied DDL was never drained — the pending entry itself was
-    // just acked, so `continue` is the only reliable signal
-    if (continue)
-      throw new IllegalStateException(
-        s"runHandlingDdl exhausted $maxRestarts restarts with schema changes still arriving " +
-          s"(applied $applied); raise maxRestarts or inspect the DDL stream")
     // partitions past the first (multi-partition kafka): each drains as its
     // own checkpointed stream — data topics carry no DDL, so a plain
     // AvailableNow pass per partition completes the drain
@@ -472,29 +453,10 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     * logs also carry DDL (the kafka-partition drain stays data-only; this is
     * the multi-database merge shape). Returns schema changes applied.
     */
-  def drainTableHandlingDdl(newSourceId: String, maxRestarts: Int = 100): Int = {
-    var applied = 0
-    var restarts = 0
-    var continue = true
-    while (continue && restarts <= maxRestarts) {
-      val q = addTable(newSourceId)
-      q.processAllAvailable()
-      q.stop()
-      ChangeSourceRegistry.pendingDdl(newSourceId) match {
-        case Some((_, ddl)) =>
-          composer.processSchemaChange(ddl)
-          ChangeSourceRegistry.ackPendingDdl(newSourceId)
-          applied += 1
-          restarts += 1
-        case None => continue = false
-      }
-    }
-    if (continue)
-      throw new IllegalStateException(
-        s"drainTableHandlingDdl($newSourceId) exhausted $maxRestarts restarts " +
-          s"with schema changes still arriving (applied $applied)")
-    applied
-  }
+  def drainTableHandlingDdl(newSourceId: String, maxRestarts: Int = 100): Int =
+    drainHandlingDdl(Seq(newSourceId), maxRestarts, n =>
+      s"drainTableHandlingDdl($newSourceId) exhausted $maxRestarts restarts " +
+        s"with schema changes still arriving (applied $n)")(() => addTable(newSourceId))
 
   /** Drain the primary + `extraSourceIds` sources through ONE checkpointed
     * streaming query — the union of their DSv2 readers. The reference runs a
@@ -519,32 +481,44 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     }
     composer.createTables(sourceSchemas ++ extras.toMap)
     val allIds = sourceId +: extraSourceIds
-    var applied = 0
-    var restarts = 0
-    var continue = true
-    while (continue && restarts <= maxRestarts) {
-      val df = allIds.map(readerFor(_).load()).reduce(_ unionByName _)
-      val q = CdcStream.start(df, composer,
+    drainHandlingDdl(allIds, maxRestarts, n =>
+      s"runMultiplexedHandlingDdl exhausted $maxRestarts restarts " +
+        s"with schema changes still arriving (applied $n)") { () =>
+      CdcStream.start(allIds.map(readerFor(_).load()).reduce(_ unionByName _), composer,
         queryName = s"${pdef.name}-multiplex",
         checkpointDir = pdef.config.get("checkpoint.dir").map(d => s"$d/multiplex"),
         tables = tablesOf(allIds))
+    }
+  }
+
+  /** The park / evolve / ack loop of every DDL-handling drain: `start` a
+    * stream, drain everything available, stop it. A DDL parked on one of
+    * `sourceIds` goes through the evolution driver (sink DDL applied at the
+    * batch boundary) and is acknowledged, and the stream restarts past it
+    * with the evolved schema. Returns the schema changes applied. A drain
+    * cut short must not look like a completed one: when `maxRestarts`
+    * restarts still end at a parked DDL, the data behind the last applied
+    * one was never drained, and the loop throws `exhausted(applied)`. */
+  private def drainHandlingDdl(
+      sourceIds: Seq[String], maxRestarts: Int, exhausted: Int => String)(
+      start: () => StreamingQuery): Int = {
+    var applied = 0
+    var parked = true
+    while (parked && applied <= maxRestarts) {
+      val q = start()
       q.processAllAvailable()
       q.stop()
-      allIds.iterator
+      sourceIds.iterator
         .flatMap(id => ChangeSourceRegistry.pendingDdl(id).map(id -> _._2))
         .nextOption() match {
         case Some((id, ddl)) =>
           composer.processSchemaChange(ddl)
           ChangeSourceRegistry.ackPendingDdl(id)
           applied += 1
-          restarts += 1
-        case None => continue = false
+        case None => parked = false
       }
     }
-    if (continue)
-      throw new IllegalStateException(
-        s"runMultiplexedHandlingDdl exhausted $maxRestarts restarts " +
-          s"with schema changes still arriving (applied $applied)")
+    if (parked) throw new IllegalStateException(exhausted(applied))
     applied
   }
 

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.core._
 import graft.pipeline.SchemaDerivator
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -85,9 +86,9 @@ object LakehouseFormat {
       txns: Map[String, Long],
       deleteFiles: Seq[EqualityDeleteFile] = Seq.empty,
       /** Version at/after which `meta` is known to be in force: the commit
-        * that carried the last Meta action, or the CHECKPOINT version when
-        * the meta came from a checkpoint (a conservative upper bound — the
-        * checkpoint does not record when its meta landed). A data file with
+        * that carried the last Meta action. A checkpoint records that version
+        * beside its meta; one written before the record falls back to its
+        * own version (a conservative upper bound). A data file with
         * `ver >= metaVer` was provably written under `meta.schema`, which
         * lets reads pin that schema instead of running a per-read
         * `mergeSchema` footer-inference job (r19). `-1` = unknown. */
@@ -96,6 +97,18 @@ object LakehouseFormat {
       throw new IllegalStateException("table has no meta action (not created)")).schema
     def buckets: Int = meta.map(_.buckets).getOrElse(16)
   }
+
+  /** One staged attempt of a writer: the actions to commit at version `v`
+    * (new files carry `v` as their sequence number), the commit directories
+    * it wrote, and its rule for a lost claim: whether a newer snapshot
+    * conflicts with what was staged (the directories are deleted and the
+    * writer stages again) or the staged actions claim the next version as
+    * they are. */
+  private[sinks] final case class Staged[A](
+      result: A,
+      actionsAt: Long => Seq[Action],
+      dirs: Seq[String] = Nil,
+      conflicts: Snapshot => Boolean = (_: Snapshot) => true)
 
   private val mapper = new ObjectMapper
 
@@ -186,6 +199,15 @@ object LakehouseFormat {
       ChangeFile(n.get("cdc").get("path").asText)
     } else throw new IllegalArgumentException(s"unknown lakehouse action: $line")
   }
+
+  /** A checkpoint's meta line also carries the version that meta landed at
+    * ([[Snapshot.metaVer]]) as a top-level `metaVer` field, which [[decode]]
+    * ignores; checkpoints written before the field have none. */
+  private[sinks] def withMetaVer(line: String, metaVer: Long): String =
+    mapper.writeValueAsString(mapper.readTree(line).asInstanceOf[ObjectNode].put("metaVer", metaVer))
+
+  private[sinks] def metaVerOf(line: String): Option[Long] =
+    Option(mapper.readTree(line).get("metaVer")).map(_.asLong)
 }
 
 /** One lakehouse table rooted at `dir` (log in `dir/_log`, data files in
@@ -212,7 +234,15 @@ final class LakehouseTable(
     Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(cap + 1))
   }
 
-  private def logFile(v: Long): Path = logDir.resolve(f"$v%020d.json")
+  private def logFile(v: Long, checkpoint: Boolean = false): Path =
+    logDir.resolve(if (checkpoint) f"$v%020d.checkpoint.json" else f"$v%020d.json")
+
+  /** The non-empty lines of commit (or checkpoint) `v`. */
+  private def logLines(v: Long, checkpoint: Boolean = false): Seq[String] =
+    Files.readAllLines(logFile(v, checkpoint)).asScala.filter(_.nonEmpty).toSeq
+
+  /** The actions of commit `v`: every reader of one commit decodes here. */
+  private def actionsOf(v: Long): Seq[Action] = logLines(v).map(decode)
 
   private val commitName = """^(\d{20})\.json$""".r
   private val checkpointName = """^(\d{20})\.checkpoint\.json$""".r
@@ -251,21 +281,19 @@ final class LakehouseTable(
   /** Returns true when the lines carried a Meta action (so the caller can
     * track the version the current meta landed at — see Snapshot.metaVer). */
   private def replayInto(
-      lines: Iterable[String],
+      actions: Iterable[Action],
       meta: Array[Option[Meta]],
       files: scala.collection.mutable.LinkedHashMap[String, AddFile],
       txns: scala.collection.mutable.Map[String, Long],
       deletes: scala.collection.mutable.LinkedHashMap[String, EqualityDeleteFile]): Boolean = {
     var sawMeta = false
-    lines.filter(_.nonEmpty).foreach {
-      decode(_) match {
-        case m: Meta => meta(0) = Some(m); sawMeta = true
-        case a: AddFile => files(a.path) = a
-        case RemoveFile(p) => files.remove(p); deletes.remove(p)
-        case d: EqualityDeleteFile => deletes(d.path) = d
-        case Txn(run, batch) => txns(run) = math.max(batch, txns.getOrElse(run, Long.MinValue))
-        case _: ChangeFile => () // per-commit change data, never live state
-      }
+    actions.foreach {
+      case m: Meta => meta(0) = Some(m); sawMeta = true
+      case a: AddFile => files(a.path) = a
+      case RemoveFile(p) => files.remove(p); deletes.remove(p)
+      case d: EqualityDeleteFile => deletes(d.path) = d
+      case Txn(run, batch) => txns(run) = math.max(batch, txns.getOrElse(run, Long.MinValue))
+      case _: ChangeFile => () // per-commit change data, never live state
     }
     sawMeta
   }
@@ -291,14 +319,14 @@ final class LakehouseTable(
     val deletes = scala.collection.mutable.LinkedHashMap.empty[String, EqualityDeleteFile]
     var metaVer = -1L
     ckpt.foreach { cv =>
-      if (replayInto(
-          Files.readAllLines(logDir.resolve(f"$cv%020d.checkpoint.json")).asScala,
-          meta, files, txns, deletes))
-        metaVer = cv // conservative: the meta landed at or before cv
+      val lines = logLines(cv, checkpoint = true)
+      // the meta line comes first; a checkpoint without its landing version
+      // gives the conservative bound: the meta landed at or before cv
+      if (replayInto(lines.map(decode), meta, files, txns, deletes))
+        metaVer = lines.headOption.flatMap(metaVerOf).getOrElse(cv)
     }
     versions.foreach { v =>
-      if (replayInto(Files.readAllLines(logFile(v)).asScala, meta, files, txns, deletes))
-        metaVer = v
+      if (replayInto(actionsOf(v), meta, files, txns, deletes)) metaVer = v
     }
     Snapshot(
       versions.lastOption.orElse(ckpt).getOrElse(-1L), meta(0), files.values.toSeq,
@@ -312,12 +340,12 @@ final class LakehouseTable(
 
   private def writeCheckpoint(v: Long): Unit = {
     val snap = snapshot(Some(v))
-    val actions: Seq[Action] =
-      snap.meta.toSeq ++ snap.files ++ snap.deleteFiles ++
-        snap.txns.map { case (run, b) => Txn(run, b) }
+    val lines = snap.meta.map(m => withMetaVer(encode(m), snap.metaVer)).toSeq ++
+      (snap.files ++ snap.deleteFiles ++ snap.txns.map { case (run, b) => Txn(run, b) })
+        .map(encode)
     val tmp = Files.createTempFile(logDir, s"ckpt-$v-", ".tmp")
-    Files.write(tmp, actions.map(encode).mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, logDir.resolve(f"$v%020d.checkpoint.json"),
+    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
+    Files.move(tmp, logFile(v, checkpoint = true),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
@@ -338,13 +366,13 @@ final class LakehouseTable(
     val expired = versions.filter(_ < cutoff)
     expired.foreach(v => Files.deleteIfExists(logFile(v)))
     listLogNames().collect { case checkpointName(v) if v.toLong < cutoff => v.toLong }
-      .foreach(v => Files.deleteIfExists(logDir.resolve(f"$v%020d.checkpoint.json")))
+      .foreach(v => Files.deleteIfExists(logFile(v, checkpoint = true)))
     expired
   }
 
-  /** Atomically claim version `v`: write a temp file, rename WITHOUT replace.
-    * A concurrent winner makes the rename fail → caller re-snapshots and
-    * retries (optimistic concurrency).
+  /** Atomically claim version `v`: write a temp file, link it WITHOUT
+    * replace. A concurrent winner makes the claim fail, and
+    * [[commitOptimistically]] decides what happens next.
     */
   private def tryCommit(v: Long, actions: Seq[Action]): Boolean = {
     Files.createDirectories(logDir)
@@ -367,6 +395,46 @@ final class LakehouseTable(
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => Files.delete(tmp); false
     }
+  }
+
+  /** The optimistic-commit protocol every writer shares. An attempt
+    * snapshots the log, skips a batch whose `txn` is already recorded,
+    * stages through `stage` and claims `version + 1` with the batch's `txn`
+    * riding in the same commit: a batch id commits atomically with its data
+    * and never twice. A lost claim backs off (jittered) and re-snapshots.
+    * The txn check runs again, since the winner may have committed this very
+    * batch; then the staging's conflict rule either re-claims with the files
+    * already written or deletes them and stages again, at most `maxAttempts`
+    * stagings. Returns the committed staging's result, or None when nothing
+    * was committed (a replayed batch, or a staging with nothing to commit).
+    */
+  private def commitOptimistically[A](
+      txn: Option[(String, Long)] = None,
+      maxAttempts: Int = 8)(stage: Snapshot => Option[Staged[A]]): Option[A] = {
+    val txnAction = txn.map { case (run, b) => Txn(run, b) }
+    def abandon(s: Option[Staged[A]]): Unit =
+      s.foreach(_.dirs.foreach(d => deleteRecursively(Paths.get(dir, d))))
+    var staged: Option[Staged[A]] = None
+    var attempts = 0
+    while (true) {
+      val snap = snapshot()
+      if (txn.exists { case (run, b) => snap.txns.get(run).exists(_ >= b) }) {
+        abandon(staged)
+        return None
+      }
+      if (staged.forall(_.conflicts(snap))) {
+        abandon(staged)
+        if (attempts >= maxAttempts) throw new IllegalStateException(
+          s"lakehouse commit contention: gave up after $maxAttempts attempts")
+        attempts += 1
+        staged = stage(snap)
+        if (staged.isEmpty) return None
+      }
+      val v = snap.version + 1
+      if (tryCommit(v, staged.get.actionsAt(v) ++ txnAction)) return Some(staged.get.result)
+      contentionBackoff(attempts)
+    }
+    None
   }
 
   def create(
@@ -433,29 +501,24 @@ final class LakehouseTable(
       require(schema.struct.fieldNames.contains(c),
         s"bloom column '$c' is not a table column")
     }
-    if (snapshot().meta.isEmpty &&
-      !tryCommit(latestVersion() + 1,
-        Seq(Meta(schema, buckets, changelog, mergeEngine, aggregations, sequenceField,
-          bloomColumns))))
-      create(schema, buckets, changelog, mergeEngine, aggregations, sequenceField,
-        bloomColumns)
+    val meta = Meta(schema, buckets, changelog, mergeEngine, aggregations, sequenceField,
+      bloomColumns)
+    // a rival that created the table first wins: nothing is staged on its state
+    commitOptimistically() { snap =>
+      Option.when(snap.meta.isEmpty)(Staged((), _ => Seq(meta), conflicts = _.meta.isDefined))
+    }
   }
 
-  /** Commit arbitrary actions at the next version (retrying past losers of
-    * the claim race). Metadata-plane helper for DDL paths. */
+  /** Commit arbitrary actions at the next version (re-claiming past winners
+    * of the claim race: they never conflict). Metadata-plane helper for DDL
+    * paths. */
   def commit(actions: Seq[Action]): Unit =
-    if (!tryCommit(snapshot().version + 1, actions)) commit(actions)
+    commitOptimistically()(_ => Some(Staged((), _ => actions, conflicts = _ => false)))
 
   /** Update table metadata (schema evolution): one metadata-only commit.
     * Bucket count, changelog flag, and merge engine carry over. */
-  def updateMeta(schema: TableSchema): Unit = {
-    val m = snapshot().meta
-    commit(Seq(Meta(schema, m.map(_.buckets).getOrElse(16),
-      m.exists(_.changelog), m.map(_.mergeEngine).getOrElse("last-wins"),
-      m.map(_.aggregations).getOrElse(Map.empty),
-      m.flatMap(_.sequenceField),
-      m.map(_.bloomColumns).getOrElse(Seq.empty))))
-  }
+  def updateMeta(schema: TableSchema): Unit =
+    commit(Seq(snapshot().meta.fold(Meta(schema, 16))(_.copy(schema = schema))))
 
   /** Current (or time-traveled) contents. Missing columns in old files read
     * as null under the declared schema; remaining representation drift is
@@ -477,9 +540,6 @@ final class LakehouseTable(
     */
   private def readData(snap: Snapshot, keep: Seq[AddFile]): DataFrame = {
     val schema = snap.schema
-    if (keep.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.struct)
     // Pinned-schema fast path (r19, measured with the b6/b5 probes): a file
     // whose `ver` is at or past the snapshot's `metaVer` was provably
     // written under the CURRENT schema, so when that holds for every kept
@@ -490,18 +550,10 @@ final class LakehouseTable(
     // are identical either way (the coerce to the latest schema runs in
     // both, and pre-change files only ever need widening/null-fill, which
     // the merged-footer union performed identically).
-    def raw(fs: Seq[AddFile]): DataFrame = {
-      val src =
-        if (snap.metaVer >= 0 && fs.forall(_.ver >= snap.metaVer))
-          spark.read.schema(schema.struct)
-            .parquet(fs.map(f => Paths.get(dir, f.path).toString): _*)
-        else
-          spark.read.option("mergeSchema", "true")
-            .parquet(fs.map(f => Paths.get(dir, f.path).toString): _*)
-      SchemaDerivator.coerce(src, schema.struct)
-    }
+    def raw(fs: Seq[AddFile]): DataFrame = scan(fs.map(_.path), schema.struct,
+      pinned = snap.metaVer >= 0 && fs.forall(_.ver >= snap.metaVer))
     val dels = snap.deleteFiles
-    if (dels.isEmpty) raw(keep)
+    if (dels.isEmpty || keep.isEmpty) raw(keep)
     else {
       val pks = schema.primaryKeys
       keep.groupBy(f => dels.filter(_.ver > f.ver).map(_.path)).toSeq
@@ -516,6 +568,18 @@ final class LakehouseTable(
         .reduce(_ unionByName _)
     }
   }
+
+  /** The one scan of table parquet files (`rel`: paths under the table
+    * root), coerced to `schema`. Pinned, every file is known to be written
+    * under `schema`, so it is the read schema; otherwise the read schema
+    * merges the files' footers, which costs a schema-inference job. */
+  private def scan(rel: Seq[String], schema: StructType, pinned: Boolean): DataFrame =
+    if (rel.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else {
+      val reader =
+        if (pinned) spark.read.schema(schema) else spark.read.option("mergeSchema", "true")
+      SchemaDerivator.coerce(reader.parquet(rel.map(p => Paths.get(dir, p).toString): _*), schema)
+    }
 
   private def bucketOf(pks: Seq[String], buckets: Int) =
     pmod(hash(pks.map(col): _*), lit(buckets))
@@ -536,245 +600,213 @@ final class LakehouseTable(
       deletedKeys: DataFrame,
       txn: Option[(String, Long)] = None,
       maxAttempts: Int = 8): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val snap = snapshot()
+    def stage(snap: Snapshot): Option[Staged[Unit]] = {
       val schema = snap.schema
       val pks = schema.primaryKeys
       require(pks.nonEmpty, "lakehouse MERGE requires primary keys; use append() for PK-less tables")
-      if (txn.exists { case (run, b) => snap.txns.get(run).exists(_ >= b) }) {
-        done = true // replayed batch: already committed atomically with its data
-      } else {
-        val coerced = SchemaDerivator.coerce(upserts, schema.struct)
-        // ONE Spark action per merge collects every changed key with its
-        // bucket. That result answers both questions the rewrite asks:
-        // which buckets to rewrite, and which old rows to drop from them
-        // (the left-anti join below builds on it as a local relation, so
-        // the keys are neither aggregated nor shuffled a second time).
-        // Driver memory: the collect is batch-sized — one row per changed
-        // key, exactly what the broadcast build side of that anti-join
-        // always materialized on the driver.
-        val keys = coerced.select(pks.map(col): _*)
-          .unionByName(deletedKeys.select(pks.map(col): _*))
-        val changed = keys.withColumn(bucketColName, bucketOf(pks, snap.buckets)).collect()
-        // nothing upserted or deleted: no files to write, so no version.
-        // The batch's txn is not recorded either — replaying an empty batch
-        // changes nothing.
-        if (changed.isEmpty) return
-        val touched = changed.map(_.getInt(pks.size)).toSet
-        val changedKeys = spark.createDataFrame(
-          changed.map(r => Row.fromSeq(r.toSeq.take(pks.size))).distinct.toSeq.asJava,
-          keys.schema)
-        val oldFiles = snap.files.filter(f => touched.contains(f.bucket))
-        // readData applies outstanding MOR deletes: a key deleted by an
-        // equality-delete file must not resurrect into the rewritten bucket
-        val cur = if (oldFiles.isEmpty) None else Some(readData(snap, oldFiles))
-        val kept = cur.map(_.join(broadcast(changedKeys), pks, "left_anti"))
-        // the merge ENGINE decides what an upsert of an existing key means:
-        //  - last-wins: the batch row replaces the whole old row
-        //  - partial-update (Paimon's CDC wide-table assembly): per column,
-        //    the batch's NON-NULL values overwrite, nulls keep the old value
-        //  - aggregate: per column, fold batch into old with the table's
-        //    aggregation (sum | max | min); unlisted columns last-non-null
-        // Non-last-wins engines combine via a full-outer join of the
-        // (batch-bounded) old rows of the upserted keys with the batch.
-        val engine = snap.meta.map(_.mergeEngine).getOrElse("last-wins")
-        val aggs = snap.meta.map(_.aggregations).getOrElse(Map.empty)
-        val nonPk = schema.struct.fieldNames.toSeq.filterNot(pks.contains)
-        // Non-last-wins engines fold intra-batch duplicate keys FIRST, with
-        // the same per-column semantics as the cross-batch merge (Paimon's
-        // aggregation engine folds within a batch too). Without this, two
-        // increments for one key would each pair with the single old row in
-        // the full_outer join below and emit two rows for one PK — the old
-        // value double-counted. last-non-null columns have no defined order
-        // WITHIN one batch, so conflicting non-null values raise loudly
-        // instead of picking one nondeterministically; a single distinct
-        // non-null value (the wide-table assembly case) folds fine.
-        val batch = if (engine == "last-wins" || nonPk.isEmpty) coerced else {
-          val fieldType = schema.struct.fields.map(f => f.name -> f.dataType).toMap
-          val folds = nonPk.map { x =>
-            val fold = (if (engine == "aggregate") aggs.get(x) else None) match {
-              case Some("sum") => sum(col(x)).cast(fieldType(x))
-              case Some("max") => max(col(x))
-              case Some("min") => min(col(x))
-              case Some("hll") => hll_union_agg(col(x))
-              case Some("bool_or") => bool_or(col(x))
-              case Some("bool_and") => bool_and(col(x))
-              case _ =>
-                when(count_distinct(col(x)) > 1, raise_error(concat(
-                  lit(s"merge engine '$engine': column '$x' has conflicting " +
-                    "non-null values within one batch for key ["),
-                  concat_ws(",", pks.map(col): _*),
-                  lit("] — intra-batch rows have no defined order; " +
-                    "pre-combine them or split the batch"))))
-                  .otherwise(first(col(x), ignoreNulls = true))
-            }
-            fold.as(x)
+      val coerced = SchemaDerivator.coerce(upserts, schema.struct)
+      // ONE Spark action per merge collects every changed key with its
+      // bucket. That result answers both questions the rewrite asks:
+      // which buckets to rewrite, and which old rows to drop from them
+      // (the left-anti join below builds on it as a local relation, so
+      // the keys are neither aggregated nor shuffled a second time).
+      // Driver memory: the collect is batch-sized — one row per changed
+      // key, exactly what the broadcast build side of that anti-join
+      // always materialized on the driver.
+      val keys = coerced.select(pks.map(col): _*)
+        .unionByName(deletedKeys.select(pks.map(col): _*))
+      val changed = keys.withColumn(bucketColName, bucketOf(pks, snap.buckets)).collect()
+      // nothing upserted or deleted: no files to write, so no version.
+      // The batch's txn is not recorded either — replaying an empty batch
+      // changes nothing.
+      if (changed.isEmpty) return None
+      val touched = changed.map(_.getInt(pks.size)).toSet
+      val changedKeys = spark.createDataFrame(
+        changed.map(r => Row.fromSeq(r.toSeq.take(pks.size))).distinct.toSeq.asJava,
+        keys.schema)
+      val oldFiles = snap.files.filter(f => touched.contains(f.bucket))
+      // readData applies outstanding MOR deletes: a key deleted by an
+      // equality-delete file must not resurrect into the rewritten bucket
+      val cur = if (oldFiles.isEmpty) None else Some(readData(snap, oldFiles))
+      val kept = cur.map(_.join(broadcast(changedKeys), pks, "left_anti"))
+      // the merge ENGINE decides what an upsert of an existing key means:
+      //  - last-wins: the batch row replaces the whole old row
+      //  - partial-update (Paimon's CDC wide-table assembly): per column,
+      //    the batch's NON-NULL values overwrite, nulls keep the old value
+      //  - aggregate: per column, fold batch into old with the table's
+      //    aggregation (sum | max | min); unlisted columns last-non-null
+      // Non-last-wins engines combine via a full-outer join of the
+      // (batch-bounded) old rows of the upserted keys with the batch.
+      val engine = snap.meta.map(_.mergeEngine).getOrElse("last-wins")
+      val aggs = snap.meta.map(_.aggregations).getOrElse(Map.empty)
+      val nonPk = schema.struct.fieldNames.toSeq.filterNot(pks.contains)
+      // Non-last-wins engines fold intra-batch duplicate keys FIRST, with
+      // the same per-column semantics as the cross-batch merge (Paimon's
+      // aggregation engine folds within a batch too). Without this, two
+      // increments for one key would each pair with the single old row in
+      // the full_outer join below and emit two rows for one PK — the old
+      // value double-counted. last-non-null columns have no defined order
+      // WITHIN one batch, so conflicting non-null values raise loudly
+      // instead of picking one nondeterministically; a single distinct
+      // non-null value (the wide-table assembly case) folds fine.
+      val batch = if (engine == "last-wins" || nonPk.isEmpty) coerced else {
+        val fieldType = schema.struct.fields.map(f => f.name -> f.dataType).toMap
+        val folds = nonPk.map { x =>
+          val fold = (if (engine == "aggregate") aggs.get(x) else None) match {
+            case Some("sum") => sum(col(x)).cast(fieldType(x))
+            case Some("max") => max(col(x))
+            case Some("min") => min(col(x))
+            case Some("hll") => hll_union_agg(col(x))
+            case Some("bool_or") => bool_or(col(x))
+            case Some("bool_and") => bool_and(col(x))
+            case _ =>
+              when(count_distinct(col(x)) > 1, raise_error(concat(
+                lit(s"merge engine '$engine': column '$x' has conflicting " +
+                  "non-null values within one batch for key ["),
+                concat_ws(",", pks.map(col): _*),
+                lit("] — intra-batch rows have no defined order; " +
+                  "pre-combine them or split the batch"))))
+                .otherwise(first(col(x), ignoreNulls = true))
           }
-          coerced.groupBy(pks.map(col): _*).agg(folds.head, folds.tail: _*)
-            .select(schema.struct.fieldNames.toSeq.map(col): _*)
+          fold.as(x)
         }
-        // sequence-field last-wins (Paimon's sequence.field): the winner per
-        // key is the row with the LARGEST sequence value across the old row
-        // and every batch row — late-arriving events with older sequence
-        // never clobber newer state, and batches need not arrive in event
-        // order. One hash aggregate over (old rows of upserted keys) ∪ batch:
-        // max of (sequence, arrival, row) — arrival (old=0, batch=1) breaks
-        // sequence ties toward the batch; the packed row makes the pick
-        // total-ordered, hence deterministic. A null sequence loses to any
-        // non-null one (nulls-first struct ordering). Deletes stay
-        // positional: sequence governs upsert-vs-upsert only.
-        val seqField = snap.meta.flatMap(_.sequenceField)
-        val incoming = (engine, cur) match {
-          case ("last-wins", curOpt) if seqField.isDefined =>
-            val sf = seqField.get
-            val withSrc = (df: DataFrame, src: Int) =>
-              df.select(
-                pks.map(col) :+
-                  struct(col(sf).as("__s"), lit(src).as("__arrival"),
-                    struct(schema.struct.fieldNames.map(col): _*).as("__row"))
-                    .as("__packed"): _*)
-            val upKeys = batch.select(pks.map(col): _*).distinct()
-            val unioned = curOpt match {
-              case Some(c) =>
-                withSrc(c.join(broadcast(upKeys), pks, "left_semi"), 0)
-                  .unionByName(withSrc(batch, 1))
-              case None => withSrc(batch, 1)
-            }
-            unioned.groupBy(pks.map(col): _*).agg(max(col("__packed")).as("__m"))
-              .select(col("__m.__row.*"))
-          case ("partial-update" | "aggregate", Some(c)) =>
-            val upKeys = batch.select(pks.map(col): _*).distinct()
-            val o = c.join(broadcast(upKeys), pks, "left_semi")
-              .select(pks.map(col) ++ nonPk.map(x => col(x).as(s"__o_$x")): _*)
-            val n = batch
-              .select(pks.map(col) ++ nonPk.map(x => col(x).as(s"__n_$x")): _*)
-            def combined(x: String): org.apache.spark.sql.Column = {
-              val oc = col(s"__o_$x"); val nc = col(s"__n_$x")
-              (if (engine == "aggregate") aggs.get(x) else None) match {
-                case Some("sum") =>
-                  when(oc.isNull && nc.isNull, lit(null))
-                    .otherwise(coalesce(oc, lit(0)) + coalesce(nc, lit(0)))
-                case Some("max") => greatest(oc, nc) // null-ignoring by definition
-                case Some("min") => least(oc, nc)
-                case Some("hll") =>
-                  when(oc.isNull, nc).when(nc.isNull, oc)
-                    .otherwise(hll_union(oc, nc))
-                case Some("bool_or") =>
-                  when(oc.isNull, nc).when(nc.isNull, oc).otherwise(oc || nc)
-                case Some("bool_and") =>
-                  when(oc.isNull, nc).when(nc.isNull, oc).otherwise(oc && nc)
-                case _ => coalesce(nc, oc) // last non-null
-              }
-            }
-            o.join(n, pks, "full_outer")
-              .select(pks.map(col) ++ nonPk.map(x => combined(x).as(x)): _*)
-          case _ => batch
-        }
-        // Coerce the merged output BACK to the declared schema before the
-        // write (r19): the aggregate engine's fold widens types (e.g.
-        // decimal(18,2) + decimal(18,2) is decimal(19,2)), so without this
-        // the written files drift from the declared schema and every later
-        // read must heal the drift via the mergeSchema footer-inference job
-        // + read-side coerce. Writing the declared types makes "files match
-        // the snapshot schema" an invariant the pinned-schema read fast path
-        // can rely on. Values are identical: the identical cast previously
-        // ran at read time on exactly these cells.
-        val next = SchemaDerivator.coerce(
-          kept.map(_.unionByName(incoming)).getOrElse(incoming), schema.struct)
-
-        // write the rewritten buckets as a new immutable commit directory.
-        // CLUSTER BY BUCKET before the partitioned write (guide §6 / Iceberg
-        // write.distribution-mode=hash): without the repartition every write
-        // task holds rows of every touched bucket, so a commit emits
-        // O(tasks × buckets) small files — measured 24 CPU-s per 100k-event
-        // merge at local[32] (~1k files/commit) vs ~3.5 at 8 cpus; clustered,
-        // the file count is O(touched buckets) regardless of parallelism and
-        // every later read of the bucket opens one file per commit, not one
-        // per task. The one extra exchange moves only the rewritten buckets'
-        // rows — bounded by the COW rewrite itself, and at 100 TB it is the
-        // shuffle that Iceberg/Delta deliberately pay to avoid the
-        // many-small-files failure mode.
-        val commitRel = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
-        val bucketCol = "__graft_bucket"
-        next.withColumn(bucketCol, bucketOf(pks, snap.buckets))
-          .repartition(col(bucketCol))
-          .write.partitionBy(bucketCol)
-          .parquet(Paths.get(dir, commitRel).toString)
-        // sequence number: these files postdate every outstanding delete
-        val adds = listCommitFiles(commitRel, bucketCol, snap.meta).map(_.copy(ver = snap.version + 1))
-        // Row-level change data (Delta CDF / Paimon changelog-producer
-        // shape), classified by LOOKUP against the touched buckets we scan
-        // for the rewrite anyway: pre-images of updated keys, the old rows
-        // of deleted keys, and the batch split into update_postimage vs
-        // insert by whether an old row existed. Every join broadcasts the
-        // batch-bounded side; the pre-image set is localCheckpointed (it is
-        // <= batch-sized) so deriving the update-key set does not rescan
-        // the buckets.
-        val cdcRel = s"$commitRel-cdc"
-        val ct = "_change_type"
-        val cdcActions: Seq[Action] =
-          if (!snap.meta.exists(_.changelog)) Seq.empty
-          else {
-            val changes = cur match {
-              case None => coerced.withColumn(ct, lit("insert"))
-              case Some(c) =>
-                val upKeys = coerced.select(pks.map(col): _*).distinct()
-                val delKeys = deletedKeys.select(pks.map(col): _*).distinct()
-                val preUp = c.join(broadcast(upKeys), pks, "left_semi").localCheckpoint()
-                val oldUpKeys = preUp.select(pks.map(col): _*)
-                preUp.withColumn(ct, lit("update_preimage"))
-                  .unionByName(c.join(broadcast(delKeys), pks, "left_semi")
-                    .withColumn(ct, lit("delete")))
-                  .unionByName(coerced.join(broadcast(oldUpKeys), pks, "left_semi")
-                    .withColumn(ct, lit("update_postimage")))
-                  .unionByName(coerced.join(broadcast(oldUpKeys), pks, "left_anti")
-                    .withColumn(ct, lit("insert")))
-            }
-            changes.write.parquet(Paths.get(dir, cdcRel).toString)
-            val root = Paths.get(dir, cdcRel)
-            usingStream(Files.walk(root))(_
-              .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-              .map(p => ChangeFile(Paths.get(dir).relativize(p).toString))
-              .toSeq)
-          }
-        def actionsAt(v: Long): Seq[Action] =
-          adds.map(_.copy(ver = v)) ++ oldFiles.map(f => RemoveFile(f.path)) ++
-            cdcActions ++ txn.map { case (run, b) => Txn(run, b) }
-        if (tryCommit(snap.version + 1, actionsAt(snap.version + 1))) done = true
-        else {
-          // Lost the claim race. Delta-style conflict detection decides
-          // whether the rewrite is still valid against the winners' state:
-          // if no interim commit changed the table metadata, the files of
-          // OUR touched buckets, or the outstanding equality-delete set (a
-          // new delete logically precedes us — re-committing would
-          // resurrect its keys), the already-written files can re-claim the
-          // next version directly. Only a REAL conflict pays the re-merge.
-          var fast = true
-          while (!done && fast) {
-            val again = snapshot()
-            val conflict = again.meta != snap.meta ||
-              again.files.filter(f => touched.contains(f.bucket)).map(_.path).toSet !=
-                oldFiles.map(_.path).toSet ||
-              again.deleteFiles.map(_.path).toSet != snap.deleteFiles.map(_.path).toSet
-            if (conflict) fast = false
-            else if (tryCommit(again.version + 1, actionsAt(again.version + 1)))
-              done = true
-            else contentionBackoff(1)
-          }
-          if (!done) {
-            // real conflict: discard our files, re-merge on the new state
-            deleteRecursively(Paths.get(dir, commitRel))
-            deleteRecursively(Paths.get(dir, cdcRel))
-            if (attempt >= maxAttempts) throw new IllegalStateException(
-              s"lakehouse commit contention: gave up after $maxAttempts attempts")
-            contentionBackoff(attempt)
-          }
-        }
+        coerced.groupBy(pks.map(col): _*).agg(folds.head, folds.tail: _*)
+          .select(schema.struct.fieldNames.toSeq.map(col): _*)
       }
+      // sequence-field last-wins (Paimon's sequence.field): the winner per
+      // key is the row with the LARGEST sequence value across the old row
+      // and every batch row — late-arriving events with older sequence
+      // never clobber newer state, and batches need not arrive in event
+      // order. One hash aggregate over (old rows of upserted keys) ∪ batch:
+      // max of (sequence, arrival, row) — arrival (old=0, batch=1) breaks
+      // sequence ties toward the batch; the packed row makes the pick
+      // total-ordered, hence deterministic. A null sequence loses to any
+      // non-null one (nulls-first struct ordering). Deletes stay
+      // positional: sequence governs upsert-vs-upsert only.
+      val seqField = snap.meta.flatMap(_.sequenceField)
+      val incoming = (engine, cur) match {
+        case ("last-wins", curOpt) if seqField.isDefined =>
+          val sf = seqField.get
+          val withSrc = (df: DataFrame, src: Int) =>
+            df.select(
+              pks.map(col) :+
+                struct(col(sf).as("__s"), lit(src).as("__arrival"),
+                  struct(schema.struct.fieldNames.map(col): _*).as("__row"))
+                  .as("__packed"): _*)
+          val upKeys = batch.select(pks.map(col): _*).distinct()
+          val unioned = curOpt match {
+            case Some(c) =>
+              withSrc(c.join(broadcast(upKeys), pks, "left_semi"), 0)
+                .unionByName(withSrc(batch, 1))
+            case None => withSrc(batch, 1)
+          }
+          unioned.groupBy(pks.map(col): _*).agg(max(col("__packed")).as("__m"))
+            .select(col("__m.__row.*"))
+        case ("partial-update" | "aggregate", Some(c)) =>
+          val upKeys = batch.select(pks.map(col): _*).distinct()
+          val o = c.join(broadcast(upKeys), pks, "left_semi")
+            .select(pks.map(col) ++ nonPk.map(x => col(x).as(s"__o_$x")): _*)
+          val n = batch
+            .select(pks.map(col) ++ nonPk.map(x => col(x).as(s"__n_$x")): _*)
+          def combined(x: String): org.apache.spark.sql.Column = {
+            val oc = col(s"__o_$x"); val nc = col(s"__n_$x")
+            (if (engine == "aggregate") aggs.get(x) else None) match {
+              case Some("sum") =>
+                when(oc.isNull && nc.isNull, lit(null))
+                  .otherwise(coalesce(oc, lit(0)) + coalesce(nc, lit(0)))
+              case Some("max") => greatest(oc, nc) // null-ignoring by definition
+              case Some("min") => least(oc, nc)
+              case Some("hll") =>
+                when(oc.isNull, nc).when(nc.isNull, oc)
+                  .otherwise(hll_union(oc, nc))
+              case Some("bool_or") =>
+                when(oc.isNull, nc).when(nc.isNull, oc).otherwise(oc || nc)
+              case Some("bool_and") =>
+                when(oc.isNull, nc).when(nc.isNull, oc).otherwise(oc && nc)
+              case _ => coalesce(nc, oc) // last non-null
+            }
+          }
+          o.join(n, pks, "full_outer")
+            .select(pks.map(col) ++ nonPk.map(x => combined(x).as(x)): _*)
+        case _ => batch
+      }
+      // Coerce the merged output BACK to the declared schema before the
+      // write (r19): the aggregate engine's fold widens types (e.g.
+      // decimal(18,2) + decimal(18,2) is decimal(19,2)), so without this
+      // the written files drift from the declared schema and every later
+      // read must heal the drift via the mergeSchema footer-inference job
+      // + read-side coerce. Writing the declared types makes "files match
+      // the snapshot schema" an invariant the pinned-schema read fast path
+      // can rely on. Values are identical: the identical cast previously
+      // ran at read time on exactly these cells.
+      val next = SchemaDerivator.coerce(
+        kept.map(_.unionByName(incoming)).getOrElse(incoming), schema.struct)
+
+      // write the rewritten buckets as a new immutable commit directory.
+      // CLUSTER BY BUCKET before the partitioned write (guide §6 / Iceberg
+      // write.distribution-mode=hash): without the repartition every write
+      // task holds rows of every touched bucket, so a commit emits
+      // O(tasks × buckets) small files — measured 24 CPU-s per 100k-event
+      // merge at local[32] (~1k files/commit) vs ~3.5 at 8 cpus; clustered,
+      // the file count is O(touched buckets) regardless of parallelism and
+      // every later read of the bucket opens one file per commit, not one
+      // per task. The one extra exchange moves only the rewritten buckets'
+      // rows — bounded by the COW rewrite itself, and at 100 TB it is the
+      // shuffle that Iceberg/Delta deliberately pay to avoid the
+      // many-small-files failure mode.
+      val commitRel = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
+      next.withColumn(bucketColName, bucketOf(pks, snap.buckets))
+        .repartition(col(bucketColName))
+        .write.partitionBy(bucketColName)
+        .parquet(Paths.get(dir, commitRel).toString)
+      val adds = listCommitFiles(commitRel, snap.meta)
+      // Row-level change data (Delta CDF / Paimon changelog-producer
+      // shape), classified by LOOKUP against the touched buckets we scan
+      // for the rewrite anyway: pre-images of updated keys, the old rows
+      // of deleted keys, and the batch split into update_postimage vs
+      // insert by whether an old row existed. Every join broadcasts the
+      // batch-bounded side; the pre-image set is localCheckpointed (it is
+      // <= batch-sized) so deriving the update-key set does not rescan
+      // the buckets.
+      val cdcRel = s"$commitRel-cdc"
+      val ct = "_change_type"
+      val cdcActions: Seq[Action] =
+        if (!snap.meta.exists(_.changelog)) Seq.empty
+        else {
+          val changes = cur match {
+            case None => coerced.withColumn(ct, lit("insert"))
+            case Some(c) =>
+              val upKeys = coerced.select(pks.map(col): _*).distinct()
+              val delKeys = deletedKeys.select(pks.map(col): _*).distinct()
+              val preUp = c.join(broadcast(upKeys), pks, "left_semi").localCheckpoint()
+              val oldUpKeys = preUp.select(pks.map(col): _*)
+              preUp.withColumn(ct, lit("update_preimage"))
+                .unionByName(c.join(broadcast(delKeys), pks, "left_semi")
+                  .withColumn(ct, lit("delete")))
+                .unionByName(coerced.join(broadcast(oldUpKeys), pks, "left_semi")
+                  .withColumn(ct, lit("update_postimage")))
+                .unionByName(coerced.join(broadcast(oldUpKeys), pks, "left_anti")
+                  .withColumn(ct, lit("insert")))
+          }
+          changes.write.parquet(Paths.get(dir, cdcRel).toString)
+          filesUnder(cdcRel).map(p => ChangeFile(p.toString))
+        }
+      // A lost claim is a conflict (Delta-style) only if an interim commit
+      // changed the table metadata, the files of OUR touched buckets, or the
+      // outstanding equality-delete set (a new delete logically precedes us:
+      // re-committing would resurrect its keys). Otherwise the files already
+      // written re-claim the next version; only a real conflict re-merges.
+      // New files take the commit version as their sequence number: they
+      // postdate every outstanding delete.
+      Some(Staged((),
+        v => adds.map(_.copy(ver = v)) ++ oldFiles.map(f => RemoveFile(f.path)) ++ cdcActions,
+        Seq(commitRel, cdcRel),
+        again => again.meta != snap.meta ||
+          again.files.filter(f => touched.contains(f.bucket)).map(_.path).toSet !=
+            oldFiles.map(_.path).toSet ||
+          again.deleteFiles.map(_.path).toSet != snap.deleteFiles.map(_.path).toSet))
     }
+    commitOptimistically(txn, maxAttempts)(stage)
   }
 
   /** APPEND write, no merge: rows land as new files in their buckets without
@@ -786,58 +818,28 @@ final class LakehouseTable(
   def append(
       df: DataFrame,
       txn: Option[(String, Long)] = None,
-      maxAttempts: Int = 8,
-      overwrite: Boolean = false): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val snap = snapshot()
-      if (txn.exists { case (run, b) => snap.txns.get(run).exists(_ >= b) }) {
-        done = true // replayed batch
-      } else {
-        val coerced = SchemaDerivator.coerce(df, snap.schema.struct)
-        val commitRel = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
-        coerced.withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), snap.buckets))
-          .write.partitionBy(bucketColName)
-          .parquet(Paths.get(dir, commitRel).toString)
-        val adds = listCommitFiles(commitRel, bucketColName, snap.meta)
-          .map(_.copy(ver = snap.version + 1))
-        // Delta-style OVERWRITE: the removes of the currently-live files ride
-        // in the SAME commit as the adds — readers see the old table or the
-        // new one, never an empty one, and a crash before the commit leaves
-        // the previous output intact. Removes come from this retry's
-        // snapshot, so losing a commit race re-targets the winner's files.
-        val removes: Seq[Action] =
-          if (overwrite) snap.files.map(f => RemoveFile(f.path)) else Seq.empty
-        def actionsAt(v: Long): Seq[Action] =
-          removes ++ adds.map(_.copy(ver = v)) ++ txn.map { case (run, b) => Txn(run, b) }
-        if (actionsAt(0).isEmpty || tryCommit(snap.version + 1, actionsAt(snap.version + 1)))
-          done = true
-        else {
-          // lost the claim race: a plain append never conflicts with other
-          // appends (it removes nothing), so unless the metadata changed
-          // (rescale — our bucket layout is stale) or this is an OVERWRITE
-          // (whose removes target a stale file set), the written files
-          // simply re-claim the next version
-          var fast = !overwrite
-          while (!done && fast) {
-            val again = snapshot()
-            if (again.meta != snap.meta) fast = false
-            else if (tryCommit(again.version + 1, actionsAt(again.version + 1)))
-              done = true
-            else contentionBackoff(1)
-          }
-          if (!done) {
-            deleteRecursively(Paths.get(dir, commitRel))
-            if (attempt >= maxAttempts) throw new IllegalStateException(
-              s"lakehouse commit contention: gave up after $maxAttempts attempts")
-            contentionBackoff(attempt)
-          }
-        }
-      }
+      overwrite: Boolean = false): Unit =
+    commitOptimistically(txn) { snap =>
+      val coerced = SchemaDerivator.coerce(df, snap.schema.struct)
+      val commitRel = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
+      coerced.withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), snap.buckets))
+        .write.partitionBy(bucketColName)
+        .parquet(Paths.get(dir, commitRel).toString)
+      val adds = listCommitFiles(commitRel, snap.meta)
+      // Delta-style OVERWRITE: the removes of the currently-live files ride
+      // in the SAME commit as the adds — readers see the old table or the
+      // new one, never an empty one, and a crash before the commit leaves
+      // the previous output intact. Removes come from this staging's
+      // snapshot, so a lost claim re-targets the winner's files.
+      val removes = if (overwrite) snap.files.map(f => RemoveFile(f.path)) else Seq.empty
+      // a lost claim: a plain append never conflicts with other appends (it
+      // removes nothing), so unless the metadata changed (rescale — our
+      // bucket layout is stale) or this is an OVERWRITE (whose removes
+      // target a stale file set), the written files re-claim the next version
+      Option.when(removes.nonEmpty || adds.nonEmpty || txn.nonEmpty)(Staged((),
+        v => removes ++ adds.map(_.copy(ver = v)), Seq(commitRel),
+        again => overwrite || again.meta != snap.meta))
     }
-  }
 
   /** MERGE-ON-READ delete (Iceberg v2 equality deletes): write the keys as
     * a delete FILE — O(batch) — instead of rewriting the touched buckets
@@ -862,42 +864,19 @@ final class LakehouseTable(
     * partial retraction (subtracting one contribution) is unexpressible —
     * the table stores only the fold, not the contributions.
     */
-  def deleteWhere(
-      keys: DataFrame,
-      txn: Option[(String, Long)] = None,
-      maxAttempts: Int = 8): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val snap = snapshot()
+  def deleteWhere(keys: DataFrame, txn: Option[(String, Long)] = None): Unit =
+    commitOptimistically(txn) { snap =>
       val pks = snap.schema.primaryKeys
       require(pks.nonEmpty, "MOR delete requires primary keys")
       require(!snap.meta.exists(_.changelog),
         "MOR delete cannot produce changelog pre-images; use merge() on " +
           "changelog-enabled tables")
-      if (txn.exists { case (run, b) => snap.txns.get(run).exists(_ >= b) }) {
-        done = true // replayed batch
-      } else {
-        val delRel = s"eqdel-${java.util.UUID.randomUUID().toString.take(12)}"
-        keys.select(pks.map(col): _*).distinct()
-          .write.parquet(Paths.get(dir, delRel).toString)
-        val delFiles = usingStream(Files.walk(Paths.get(dir, delRel)))(_
-          .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-          .map(p => EqualityDeleteFile(
-            Paths.get(dir).relativize(p).toString, snap.version + 1))
-          .toSeq)
-        val actions = delFiles ++ txn.map { case (run, b) => Txn(run, b) }
-        if (tryCommit(snap.version + 1, actions)) done = true
-        else {
-          deleteRecursively(Paths.get(dir, delRel))
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"lakehouse commit contention: gave up after $maxAttempts attempts")
-          contentionBackoff(attempt)
-        }
-      }
+      val delRel = s"eqdel-${java.util.UUID.randomUUID().toString.take(12)}"
+      keys.select(pks.map(col): _*).distinct()
+        .write.parquet(Paths.get(dir, delRel).toString)
+      val delFiles = filesUnder(delRel)
+      Some(Staged((), v => delFiles.map(p => EqualityDeleteFile(p.toString, v)), Seq(delRel)))
     }
-  }
 
   /** Small-file compaction (Delta OPTIMIZE / Paimon compact): every bucket
     * fragmented into more than `maxFilesPerBucket` live files is rewritten to
@@ -908,14 +887,8 @@ final class LakehouseTable(
     * append streams; only fragmented buckets are read or written.
     * Returns (filesBefore, filesAfter) over the compacted buckets.
     */
-  def compact(
-      maxFilesPerBucket: Int = 1,
-      maxAttempts: Int = 8,
-      full: Boolean = false): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val snap = snapshot()
+  def compact(maxFilesPerBucket: Int = 1, full: Boolean = false): (Int, Int) =
+    commitOptimistically() { snap =>
       // `full` (Paimon full compaction): also rewrite buckets whose files are
       // merely UNSORTED — after it, every bucket is one PK-clustered file and
       // the bucketed scan reports ordering (sort-free merge joins)
@@ -932,40 +905,35 @@ final class LakehouseTable(
           .select(bucketOf(snap.schema.primaryKeys, snap.buckets).as("b"))
           .distinct().collect().map(_.getInt(0)).toSet
       val buckets = fragmented.keySet ++ delBuckets
+      val dropDeletes = snap.deleteFiles.map(d => RemoveFile(d.path))
       if (buckets.isEmpty) {
-        // key-less delete files (all their keys already absent) still drop
-        if (snap.deleteFiles.nonEmpty)
-          commit(snap.deleteFiles.map(d => RemoveFile(d.path)))
-        return (0, 0)
+        // key-less delete files (all their keys already absent) still drop,
+        // in a metadata commit that never conflicts
+        Option.when(dropDeletes.nonEmpty)(
+          Staged((0, 0), _ => dropDeletes, conflicts = _ => false))
+      } else {
+        val oldFiles = snap.files.filter(f => buckets.contains(f.bucket))
+        val commitRel = s"compact-${java.util.UUID.randomUUID().toString.take(12)}"
+        // repartition on the bucket tag: each bucket's rows land in one task →
+        // exactly one output file per bucket directory. Rows sort by PK within
+        // the bucket (clustering): compacted files carry sorted=true, which
+        // the bucketed DSv2 scan reports as output ordering — merge joins over
+        // two compacted tables then skip BOTH the shuffle and the sort.
+        // readData applies the deletes during the rewrite.
+        val sortCols = bucketColName +: snap.schema.primaryKeys
+        readData(snap, oldFiles)
+          .withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), snap.buckets))
+          .repartition(col(bucketColName))
+          .sortWithinPartitions(sortCols.map(col): _*)
+          .write.partitionBy(bucketColName)
+          .parquet(Paths.get(dir, commitRel).toString)
+        val adds = listCommitFiles(commitRel, snap.meta)
+        Some(Staged((oldFiles.size, adds.size),
+          v => adds.map(_.copy(ver = v, sorted = snap.schema.primaryKeys.nonEmpty)) ++
+            oldFiles.map(f => RemoveFile(f.path)) ++ dropDeletes,
+          Seq(commitRel)))
       }
-      val oldFiles = snap.files.filter(f => buckets.contains(f.bucket))
-      val commitRel = s"compact-${java.util.UUID.randomUUID().toString.take(12)}"
-      // readData applies the deletes during the rewrite
-      val df = readData(snap, oldFiles)
-      // repartition on the bucket tag: each bucket's rows land in one task →
-      // exactly one output file per bucket directory. Rows sort by PK within
-      // the bucket (clustering): compacted files carry sorted=true, which
-      // the bucketed DSv2 scan reports as output ordering — merge joins over
-      // two compacted tables then skip BOTH the shuffle and the sort.
-      val sortCols = bucketColName +: snap.schema.primaryKeys
-      df.withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), snap.buckets))
-        .repartition(col(bucketColName))
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.partitionBy(bucketColName)
-        .parquet(Paths.get(dir, commitRel).toString)
-      val adds = listCommitFiles(commitRel, bucketColName, snap.meta)
-        .map(_.copy(ver = snap.version + 1, sorted = snap.schema.primaryKeys.nonEmpty))
-      val removes = oldFiles.map(f => RemoveFile(f.path)) ++
-        snap.deleteFiles.map(d => RemoveFile(d.path))
-      if (tryCommit(snap.version + 1, adds ++ removes))
-        return (oldFiles.size, adds.size)
-      deleteRecursively(Paths.get(dir, commitRel))
-      if (attempt >= maxAttempts) throw new IllegalStateException(
-        s"lakehouse commit contention: gave up after $maxAttempts attempts")
-      contentionBackoff(attempt)
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    }.getOrElse((0, 0))
 
   /** Z-ORDER clustering rewrite for append tables (Delta's OPTIMIZE ZORDER
     * BY): rewrite the table so each file holds one tile of the Z-curve over
@@ -985,12 +953,9 @@ final class LakehouseTable(
     * load-bearing for merge; they cluster within buckets via [[compact]].
     * Returns the number of files written.
     */
-  def zorderCompact(cols: Seq[String], targetFiles: Int = 0, maxAttempts: Int = 8): Int = {
+  def zorderCompact(cols: Seq[String], targetFiles: Int = 0): Int = {
     require(cols.size >= 2, "z-order needs at least two columns (one column = plain sort)")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val snap = snapshot()
+    def stage(snap: Snapshot): Option[Staged[Int]] = {
       require(snap.schema.primaryKeys.isEmpty,
         "z-order clustering is for append tables; PK tables cluster within " +
           "their hash buckets via compact()")
@@ -1000,7 +965,7 @@ final class LakehouseTable(
         require(dt.isInstanceOf[NumericType] || dt == DateType || dt == TimestampType ||
           dt == TimestampNTZType, s"z-order column '$c' must be orderable-numeric, got $dt")
       }
-      if (snap.files.isEmpty) return 0
+      if (snap.files.isEmpty) return None
       val df = readData(snap, snap.files)
       val aggs = cols.flatMap(c => Seq(
         min(col(c).cast("double")).as(s"lo_$c"), max(col(c).cast("double")).as(s"hi_$c")))
@@ -1034,16 +999,10 @@ final class LakehouseTable(
         .drop("__graft_z")
         .write.partitionBy(bucketColName)
         .parquet(Paths.get(dir, commitRel).toString)
-      val adds = listCommitFiles(commitRel, bucketColName, snap.meta).map(_.copy(ver = snap.version + 1))
-      val removes = snap.files.map(f => RemoveFile(f.path)) ++
-        snap.deleteFiles.map(d => RemoveFile(d.path))
-      if (tryCommit(snap.version + 1, adds ++ removes)) return adds.size
-      deleteRecursively(Paths.get(dir, commitRel))
-      if (attempt >= maxAttempts) throw new IllegalStateException(
-        s"lakehouse commit contention: gave up after $maxAttempts attempts")
-      contentionBackoff(attempt)
+      val adds = listCommitFiles(commitRel, snap.meta)
+      Some(Staged(adds.size, v => adds.map(_.copy(ver = v)) ++ removeAll(snap), Seq(commitRel)))
     }
-    throw new IllegalStateException("unreachable")
+    commitOptimistically()(stage).getOrElse(0)
   }
 
   /** Bucket-layout migration (Paimon rescale): rewrite the whole table into
@@ -1053,53 +1012,45 @@ final class LakehouseTable(
     * time-traveling behind the rescale replay the OLD meta, so their bucket
     * arithmetic still matches the old files.
     */
-  def rescaleBuckets(newBuckets: Int, maxAttempts: Int = 8): Unit = {
+  def rescaleBuckets(newBuckets: Int): Unit = {
     require(newBuckets > 0, s"bucket count must be positive: $newBuckets")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val snap = snapshot()
-      if (snap.buckets == newBuckets) return
-      val commitRel = s"rescale-${java.util.UUID.randomUUID().toString.take(12)}"
-      val adds = if (snap.files.isEmpty) Seq.empty else {
-        // whole-table rewrite: outstanding MOR deletes materialize here too
-        readData(snap, snap.files)
-          .withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), newBuckets))
-          .repartition(col(bucketColName))
-          .write.partitionBy(bucketColName)
-          .parquet(Paths.get(dir, commitRel).toString)
-        listCommitFiles(commitRel, bucketColName, snap.meta)
-          .map(_.copy(ver = snap.version + 1))
-      }
-      val actions = Meta(snap.schema, newBuckets, snap.meta.exists(_.changelog),
-        snap.meta.map(_.mergeEngine).getOrElse("last-wins"),
-        snap.meta.map(_.aggregations).getOrElse(Map.empty),
-        snap.meta.flatMap(_.sequenceField),
-        snap.meta.map(_.bloomColumns).getOrElse(Seq.empty)) +:
-        (adds ++ snap.files.map(f => RemoveFile(f.path)) ++
-          snap.deleteFiles.map(d => RemoveFile(d.path)))
-      if (tryCommit(snap.version + 1, actions)) done = true
-      else {
-        deleteRecursively(Paths.get(dir, commitRel))
-        if (attempt >= maxAttempts) throw new IllegalStateException(
-          s"lakehouse commit contention: gave up after $maxAttempts attempts")
-        contentionBackoff(attempt)
+    commitOptimistically() { snap =>
+      Option.when(snap.buckets != newBuckets) {
+        val commitRel = s"rescale-${java.util.UUID.randomUUID().toString.take(12)}"
+        val adds = if (snap.files.isEmpty) Seq.empty else {
+          // whole-table rewrite: outstanding MOR deletes materialize here too
+          readData(snap, snap.files)
+            .withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), newBuckets))
+            .repartition(col(bucketColName))
+            .write.partitionBy(bucketColName)
+            .parquet(Paths.get(dir, commitRel).toString)
+          listCommitFiles(commitRel, snap.meta)
+        }
+        // (snap.schema throws for a table that was never created)
+        val meta = snap.meta.fold(Meta(snap.schema, newBuckets))(_.copy(buckets = newBuckets))
+        Staged((), v => meta +: (adds.map(_.copy(ver = v)) ++ removeAll(snap)), Seq(commitRel))
       }
     }
   }
 
-  private def listCommitFiles(commitRel: String, bucketCol: String,
-      meta: Option[Meta]): Seq[AddFile] = {
-    val root = Paths.get(dir, commitRel)
-    val adds = usingStream(Files.walk(root))(_
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .map { p =>
-        val rel = Paths.get(dir).relativize(p).toString
-        val bucket = p.getParent.getFileName.toString.stripPrefix(s"$bucketCol=").toInt
-        AddFile(rel, bucket, -1L)
-      }.toSeq)
+  /** Removes of every live data and delete file: whole-table rewrites. */
+  private def removeAll(snap: Snapshot): Seq[Action] =
+    (snap.files.map(_.path) ++ snap.deleteFiles.map(_.path)).map(RemoveFile)
+
+  private def listCommitFiles(commitRel: String, meta: Option[Meta]): Seq[AddFile] = {
+    val adds = filesUnder(commitRel).map(p => AddFile(p.toString,
+      p.getParent.getFileName.toString.stripPrefix(s"$bucketColName=").toInt, -1L))
     attachBlooms(attachStats(adds, meta), meta)
+  }
+
+  /** The files ending in `suffix` under directory `rel` of the table ("" is
+    * the table root), as paths relative to the root. */
+  private def filesUnder(rel: String, suffix: String = ".parquet"): Seq[Path] = {
+    val root = Paths.get(dir, rel)
+    if (!Files.isDirectory(root)) Seq.empty
+    else usingStream(Files.walk(root))(_
+      .filter(p => p.toString.endsWith(suffix) && Files.isRegularFile(p))
+      .map(Paths.get(dir).relativize(_)).toSeq)
   }
 
   /** Columns that get zone maps: top-level orderable scalars. */
@@ -1485,19 +1436,23 @@ final class LakehouseTable(
     */
   def vacuum(retainFromVersion: Option[Long] = None,
       retentionMs: Long = 6L * 3600 * 1000): Seq[String] = {
-    val from = retainFromVersion.getOrElse(latestVersion())
-    // change-data files of RETAINED commits must survive: they are reachable
-    // through readChangelogBetween even though no snapshot references them
-    // (expired commits' change files become unreferenced and are reclaimed)
-    val cdcReferenced = listVersions()
-      .flatMap(v => Files.readAllLines(logFile(v)).asScala.filter(_.nonEmpty)
-        .map(LakehouseFormat.decode).collect { case ChangeFile(p) => p })
-      .toSet
-    val referenced = (from to latestVersion())
-      .flatMap { v =>
-        val s = snapshot(Some(v))
-        s.files.map(_.path) ++ s.deleteFiles.map(_.path)
-      }.toSet ++ cdcReferenced
+    val latest = latestVersion()
+    val from = retainFromVersion.getOrElse(latest)
+    // past the latest version no snapshot is retained, and every live file
+    // would count as unreferenced
+    require(from <= latest,
+      s"retainFromVersion $from is past the latest version $latest of $dir")
+    // A file is referenced by some snapshot in [from, latest] iff it is live
+    // at `from` or added by a commit after it. Change-data files of RETAINED
+    // commits survive too: readChangelogBetween reaches them although no
+    // snapshot references them (expired commits' change files are reclaimed).
+    val base = snapshot(Some(from))
+    val referenced = (base.files.map(_.path) ++ base.deleteFiles.map(_.path) ++
+      listVersions().flatMap(v => actionsOf(v).collect {
+        case ChangeFile(p) => p
+        case a: AddFile if v > from => a.path
+        case d: EqualityDeleteFile if v > from => d.path
+      })).toSet
     val root = Paths.get(dir)
     // retention window (Delta VACUUM's retain-hours): a CONCURRENT writer
     // follows write-data-then-claim, so its fresh files are unreferenced by
@@ -1507,24 +1462,14 @@ final class LakehouseTable(
     // an in-flight write older than hours is a crashed writer whose claim
     // can no longer win, which is exactly what vacuum exists to reclaim.
     val horizon = System.currentTimeMillis() - math.max(0L, retentionMs)
-    val removed = usingStream(Files.walk(root))(_
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .filter(p => Files.getLastModifiedTime(p).toMillis < horizon)
-      .map(p => root.relativize(p).toString)
-      .filterNot(referenced.contains)
-      .toSeq)
+    val removed = filesUnder("").map(_.toString).filter(rel => !referenced.contains(rel) &&
+      Files.getLastModifiedTime(root.resolve(rel)).toMillis < horizon)
     removed.foreach(rel => Files.deleteIfExists(root.resolve(rel)))
     // bloom sidecars live and die with their data file: reclaim any whose
     // data file is no longer referenced (the sidecar of a vacuumed file)
-    val idx = root.resolve("_index")
-    if (Files.isDirectory(idx)) {
-      usingStream(Files.walk(idx))(_
-        .filter(p => p.toString.endsWith(".bloom") && Files.isRegularFile(p))
-        .toSeq)
-        .foreach { p =>
-          val dataRel = idx.relativize(p).toString.stripSuffix(".bloom")
-          if (!referenced.contains(dataRel)) Files.deleteIfExists(p)
-        }
+    filesUnder("_index", ".bloom").foreach { p =>
+      val dataRel = Paths.get("_index").relativize(p).toString.stripSuffix(".bloom")
+      if (!referenced.contains(dataRel)) Files.deleteIfExists(root.resolve(p))
     }
     removed
   }
@@ -1553,59 +1498,12 @@ final class LakehouseTable(
     * offset ranges onto. Same maintenance-rewrite skipping as
     * [[readChangesSince]]. */
   def readChangesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
-    // same guard as snapshot(): if expireSnapshots has dropped commits the
-    // cursor still needs, fail with the retained basis instead of a raw
-    // NoSuchFileException — those rows are permanently undeliverable, and
-    // the caller must know. Change-feed cursors therefore bound how far
-    // expireSnapshots may safely advance.
-    val oldest = listVersions().headOption
-    if (fromVersion < toVersion && oldest.exists(_ > fromVersion + 1))
-      throw new IllegalArgumentException(
-        s"change feed from version $fromVersion of $dir is expired " +
-          s"(oldest retained commit: ${oldest.get}); rows in expired commits " +
-          "are undeliverable — expire snapshots only past consumed cursors")
-    // the ONE log replay of this call: it gives the output schema, and it
-    // pins the read schema below
-    val snap = snapshot()
-    val schema = snap.schema
-    val perVersion = ((fromVersion + 1) to toVersion).map { v =>
-      Files.readAllLines(logFile(v)).asScala
-        .filter(_.nonEmpty).map(LakehouseFormat.decode).toSeq
-    }
-    val newFiles = perVersion.flatMap { actions =>
+    val (snap, commits, pinned) = changeRange("change feed", fromVersion, toVersion)
+    val newFiles = commits.flatMap { case (_, actions) =>
       if (actions.exists(_.isInstanceOf[RemoveFile])) Nil
-      else actions.collect { case a: AddFile => a }
+      else actions.collect { case a: AddFile => a.path }
     }
-    if (newFiles.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.struct)
-    else {
-      val paths = newFiles.map(f => Paths.get(dir, f.path).toString)
-      // Pinned-schema fast path (r19, measured): when NO Meta action lands
-      // inside the range, every file in it was written under the ONE schema
-      // in force at `toVersion` — so the read schema is known from the LOG
-      // and the per-batch `mergeSchema` parquet footer-inference job (plus
-      // its distributed listing) is pure overhead. The b6 probe measured
-      // those two stages at ~0.4–0.5 s wall per micro-batch with ~zero
-      // useful CPU. A range that does contain a schema change (impossible
-      // mid-stream — the source refuses it — but legal through the batch
-      // API) keeps the mergeSchema path. Values are identical either way:
-      // files written under the pinned schema read exactly; a file with a
-      // missing column (never written by this table) nulls it in both
-      // paths; the coerce to the LATEST schema is unchanged.
-      // The schema in force at `toVersion` is the latest one whenever the
-      // last Meta landed at or before `toVersion` (`metaVer`), which holds
-      // for every read up to the latest version; only a range that ends
-      // before a later schema change (a metaVer past `toVersion`, or an
-      // unknown one) falls back to mergeSchema instead of replaying the log
-      // a second time.
-      val pinned = !perVersion.exists(_.exists(_.isInstanceOf[Meta])) &&
-        snap.metaVer >= 0 && snap.metaVer <= toVersion
-      val raw =
-        if (pinned) spark.read.schema(schema.struct).parquet(paths: _*)
-        else spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      SchemaDerivator.coerce(raw, schema.struct)
-    }
+    scan(newFiles, snap.schema.struct, pinned)
   }
 
   /** Row-level changes of the MERGE commits in `(fromVersion, toVersion]` —
@@ -1618,47 +1516,45 @@ final class LakehouseTable(
     * rows the table merely moved. Changelog availability is bounded by log
     * retention, exactly like the append-table change feed. */
   def readChangelogBetween(fromVersion: Long, toVersion: Long): DataFrame = {
-    val snap = snapshot()
+    val (snap, commits, pinned) = changeRange("changelog", fromVersion, toVersion)
     require(snap.meta.exists(_.changelog),
       s"table $dir was not created with changelog = true")
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    // change files carry the declared columns plus the _change_type column
+    // merge() appends
+    val withCt = StructType(snap.schema.struct.fields :+
+      StructField("_change_type", StringType, nullable = false))
+    commits.flatMap { case (v, actions) =>
+      val cdc = actions.collect { case ChangeFile(p) => p }
+      Option.when(cdc.nonEmpty)(scan(cdc, withCt, pinned).withColumn("_commit_version", lit(v)))
+    }.reduceOption(_ unionByName _).getOrElse(scan(Nil, StructType(withCt.fields :+
+      StructField("_commit_version", LongType, nullable = false)), pinned))
+  }
+
+  /** One log replay for a change read of `(fromVersion, toVersion]`: the
+    * latest snapshot (its schema is the output schema), each commit's
+    * actions, and whether the read is pinned to that schema. It is when the
+    * last schema change landed at or before `fromVersion` (`metaVer`): then
+    * every file in the range was written under the latest schema, and the
+    * per-read `mergeSchema` footer-inference job (with its distributed
+    * listing, ~0.4–0.5 s per micro-batch in the r19 b6 probe) is pure
+    * overhead. A range holding or ending before a schema change reads with
+    * mergeSchema; values are identical either way, the coerce to the latest
+    * schema being unchanged. If expireSnapshots has dropped commits the
+    * cursor still needs, the read fails with the retained basis instead of
+    * a raw NoSuchFileException: those rows are undeliverable, so change-feed
+    * cursors bound how far expireSnapshots may safely advance. */
+  private def changeRange(what: String, fromVersion: Long, toVersion: Long)
+      : (Snapshot, Seq[(Long, Seq[Action])], Boolean) = {
     val oldest = listVersions().headOption
     if (fromVersion < toVersion && oldest.exists(_ > fromVersion + 1))
       throw new IllegalArgumentException(
-        s"changelog from version $fromVersion of $dir is expired " +
+        s"$what from version $fromVersion of $dir is expired " +
           s"(oldest retained commit: ${oldest.get}); rows in expired commits " +
           "are undeliverable — expire snapshots only past consumed cursors")
-    import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    val withCt = StructType(snap.schema.struct.fields :+
-      StructField("_change_type", StringType, nullable = false))
-    val full = StructType(withCt.fields :+
-      StructField("_commit_version", LongType, nullable = false))
-    // same pinned-schema fast path as readChangesBetween (r19): when no
-    // Meta action lands in the range, every change-data file in it was
-    // written under the one schema in force at `toVersion` (+ the
-    // _change_type column merge() appends), so the per-range mergeSchema
-    // footer-inference job is removable; a range containing a schema
-    // change keeps the mergeSchema path
-    val perVersionActions = ((fromVersion + 1) to toVersion).map { v =>
-      v -> Files.readAllLines(logFile(v)).asScala
-        .filter(_.nonEmpty).map(LakehouseFormat.decode).toSeq
-    }
-    val pinned: Option[StructType] =
-      if (perVersionActions.exists(_._2.exists(_.isInstanceOf[Meta]))) None
-      else Some(StructType(
-        snapshot(Some(toVersion)).schema.struct.fields :+
-          StructField("_change_type", StringType, nullable = true)))
-    val perCommit = perVersionActions.flatMap { case (v, actions) =>
-      val cdc = actions.collect { case ChangeFile(p) => Paths.get(dir, p).toString }
-      if (cdc.isEmpty) None
-      else Some(
-        SchemaDerivator.coerce(
-          pinned.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
-            .parquet(cdc: _*), withCt)
-          .withColumn("_commit_version", lit(v)))
-    }
-    if (perCommit.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    else perCommit.reduce(_ unionByName _)
+    val snap = snapshot()
+    val commits = ((fromVersion + 1) to toVersion).map(v => v -> actionsOf(v))
+    (snap, commits, snap.metaVer >= 0 && snap.metaVer <= fromVersion)
   }
 
   /** [[readChangelogBetween]] up to the latest commit, plus the version to
@@ -1671,16 +1567,11 @@ final class LakehouseTable(
   /** Relative change-data file paths of ONE commit (empty when the commit
     * wrote none) — the per-version accessor interchange mirrors use to
     * forward row-level changes at O(commit), not O(history). */
-  def changeFilesOf(v: Long): Seq[String] =
-    Files.readAllLines(logFile(v)).asScala.filter(_.nonEmpty)
-      .map(LakehouseFormat.decode).collect { case ChangeFile(p) => p }.toSeq
+  def changeFilesOf(v: Long): Seq[String] = actionsOf(v).collect { case ChangeFile(p) => p }
 
   /** (version, action) history — the audit trail a lakehouse DESCRIBE HISTORY
     * surfaces. */
-  def history(): Seq[(Long, Action)] =
-    listVersions().flatMap(v =>
-      Files.readAllLines(logFile(v)).asScala.filter(_.nonEmpty)
-        .map(l => v -> decode(l)))
+  def history(): Seq[(Long, Action)] = listVersions().flatMap(v => actionsOf(v).map(v -> _))
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

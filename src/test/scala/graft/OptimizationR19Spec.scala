@@ -145,6 +145,35 @@ class OptimizationR19Spec extends AnyFunSuite {
     assert(err.getMessage.contains("expired"))
   }
 
+  test("a checkpoint records when its meta landed, so reads past it stay pinned") {
+    import graft.core._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("opt19_ckpt").toString
+    val t = new graft.sinks.LakehouseTable(spark, dir)
+    t.create(TableSchema(StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("v", LongType))), primaryKeys = Seq.empty), buckets = 2)
+    (1L to 12L).foreach(i => t.append(spark.range(i, i + 1).select(col("id").as("k"), col("id").as("v"))))
+    val ckpt = Paths.get(dir, "_log", f"${10L}%020d.checkpoint.json")
+    assert(Files.exists(ckpt))
+    // the meta landed at version 0 (create), with no schema change since
+    assert(t.snapshot().metaVer == 0L)
+    // every file was written under that meta: read() construction pins the
+    // schema and runs no footer schema-inference job
+    val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+    val df = t.read()
+    val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+    assert(jobsAfter == jobsBefore, "read() past a checkpoint ran a schema-inference job")
+    assert(df.orderBy("k").as[(Long, Long)].collect().toSeq == (1L to 12L).map(i => (i, i)))
+    // a checkpoint written before the field falls back to its own version
+    val lines = Files.readAllLines(ckpt)
+    lines.set(0, lines.get(0).replaceAll(",?\"metaVer\":\\d+", ""))
+    Files.write(ckpt, lines)
+    assert(t.snapshot().metaVer == 10L)
+    assert(t.read().count() == 12)
+  }
+
   test("q3/q5 revenue aggregates sum DECIMAL, not unscaled longs (overflow headroom)") {
     // the unscaled-long form reaches ~93% of Long.MaxValue per n_name group
     // at SF≈100k and wraps silently past it; the decimal buffers overflow

@@ -262,6 +262,34 @@ class LakehouseLostClaimSpec extends AnyFunSuite {
     assert(rows(t) == (0L until 30L).map(i => i -> s"v$i"))
   }
 
+  test("append: a rival that records the same batch id first leaves nothing to commit") {
+    val t = table(pkSchema.copy(primaryKeys = Seq.empty), buckets = 2)
+    t.append(Seq((1L, "a")).toDF("k", "v"))
+    val v = t.latestVersion(); val before = commitDirs(t)
+    LostClaim.arm(txnRival(t, "run", 5L))
+    val dirs = staged(t)(t.append(
+      Seq((2L, "b")).toDF("k", "v").withColumn("v", LostClaim.passThrough($"v")),
+      txn = Some(("run", 5L))))
+    assert(LostClaim.fired, "the rival commit never landed")
+    assert(t.latestVersion() == v + 1, "batch (run, 5) was committed twice")
+    assert(rows(t) == Seq(1L -> "a"))
+    assert(dirs.size == 1 && commitDirs(t) == before, "the abandoned staging is deleted")
+  }
+
+  test("merge: a rival that records the same batch id first leaves nothing to commit") {
+    val t = table(pkSchema, buckets = 2)
+    t.merge(Seq((1L, "a")).toDF("k", "v"), noKeys(t))
+    val v = t.latestVersion(); val before = commitDirs(t)
+    LostClaim.arm(txnRival(t, "run", 5L))
+    val dirs = staged(t)(t.merge(
+      Seq((1L, "b")).toDF("k", "v").withColumn("v", LostClaim.passThrough($"v")), noKeys(t),
+      txn = Some(("run", 5L))))
+    assert(LostClaim.fired, "the rival commit never landed")
+    assert(t.latestVersion() == v + 1, "batch (run, 5) was committed twice")
+    assert(rows(t) == Seq(1L -> "a"))
+    assert(dirs.size == 1 && commitDirs(t) == before, "the abandoned staging is deleted")
+  }
+
   private def bucketOf(k: Long): Int =
     Seq(Tuple1(k)).toDF("k").select(pmod(hash($"k"), lit(4))).as[Int].head()
 }

@@ -913,6 +913,19 @@ class LakehouseSpec extends AnyFunSuite {
     assert(t.read().filter($"v" === "w0").count() == 1)
   }
 
+  test("vacuum keeps every retained version readable and refuses a version past the latest") {
+    val t = newTable()
+    (1 to 3).foreach(i => t.merge((0L until 20L).map(k => (k, s"r$i")).toDF("k", "v"), empty(t)))
+    val latest = t.latestVersion()
+    // past the latest version no snapshot is retained: refuse, delete nothing
+    intercept[IllegalArgumentException](t.vacuum(Some(latest + 1), retentionMs = 0))
+    assert(t.read().count() == 20)
+    assert(t.vacuum(Some(latest - 1), retentionMs = 0).nonEmpty) // the first round's files
+    assert(t.read(Some(latest - 1)).filter($"v" === "r2").count() == 20)
+    assert(t.read().filter($"v" === "r3").count() == 20)
+    assert(t.vacuum(Some(latest - 1), retentionMs = 0).isEmpty)
+  }
+
   test("vacuum retention protects an in-flight concurrent writer's fresh files") {
     // write-data-then-claim: a concurrent writer's parquet is unreferenced
     // by every committed snapshot until its commit lands — the default

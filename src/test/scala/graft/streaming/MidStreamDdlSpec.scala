@@ -126,6 +126,51 @@ class MidStreamDdlSpec extends AnyFunSuite {
     }
   }
 
+  test("a restart budget exhausted at a parked DDL throws, never passes for a full drain") {
+    val ids = Seq("budget-main", "budget-added", "budget-mux-a", "budget-mux-b")
+    val sources = ids.map { id =>
+      val t = TableId.parse(s"app.${id.replace('-', '_')}")
+      val src = new ScriptedChangeSource(t, mkSchema,
+        Seq(Map[String, Any]("id" -> 1L, "v" -> "v1")))
+      ChangeSourceRegistry.register(id, src)
+      id -> (t, src)
+    }.toMap
+    // after a first full drain, a DDL parks with a row behind it (a
+    // TRUNCATE for the multiplexed drain, whose union needs one envelope
+    // shape across its sources)
+    def park(id: String, addColumn: Boolean = true): Unit = {
+      val (t, src) = sources(id)
+      src.appendDdl(if (addColumn)
+        AddColumnEvent(t, Seq(AddColumnEvent.ColumnWithPosition("extra", CdcTypes.IntT())))
+      else TruncateTableEvent(t))
+      src.append(DataChangeEvent.insert(t, Map("id" -> 2L, "v" -> "v2")))
+    }
+    def runner(id: String) = new PipelineRunner(YamlPipelineParser.parse(yamlFor(id,
+      java.nio.file.Files.createTempDirectory(s"$id-ckpt").toString)))
+    try {
+      // maxRestarts = 0: the one pass applies the DDL, and no restart is left
+      // to drain the row behind it
+      val main = runner("budget-main")
+      assert(main.runHandlingDdl() == 0)
+      park("budget-main")
+      val single = intercept[IllegalStateException](main.runHandlingDdl(0))
+      assert(single.getMessage == "runHandlingDdl exhausted 0 restarts with schema changes " +
+        "still arriving (applied 1); raise maxRestarts or inspect the DDL stream")
+      assert(main.drainTableHandlingDdl("budget-added") == 0)
+      park("budget-added")
+      val added = intercept[IllegalStateException](main.drainTableHandlingDdl("budget-added", 0))
+      assert(added.getMessage == "drainTableHandlingDdl(budget-added) exhausted 0 restarts " +
+        "with schema changes still arriving (applied 1)")
+      val mux = runner("budget-mux-a")
+      assert(mux.runMultiplexedHandlingDdl(Seq("budget-mux-b")) == 0)
+      park("budget-mux-b", addColumn = false)
+      val multiplexed = intercept[IllegalStateException](
+        mux.runMultiplexedHandlingDdl(Seq("budget-mux-b"), 0))
+      assert(multiplexed.getMessage == "runMultiplexedHandlingDdl exhausted 0 restarts " +
+        "with schema changes still arriving (applied 1)")
+    } finally ids.foreach(ChangeSourceRegistry.remove)
+  }
+
   test("registry parks a clause queue: head served, acks pop in order") {
     val t = TableId.parse("app.q")
     val e1 = AddColumnEvent(t, Seq(AddColumnEvent.ColumnWithPosition("a", CdcTypes.IntT())))
