@@ -27,8 +27,9 @@ import scala.jdk.CollectionConverters._
   *    version and sees exactly that version's file set; concurrent writers
   *    never disturb it.
   *  - **Optimistic concurrency**: a commit claims `_log/<v>.json` with an
-  *    atomic no-replace rename; the loser re-reads the snapshot and retries
-  *    its merge against the winner's state.
+  *    atomic no-replace link; the loser re-reads the snapshot and, by its
+  *    writer's conflict rule, re-claims with the files it wrote or redoes
+  *    the write against the winner's state.
   *  - **Atomic exactly-once batch tracking**: the streaming runner's
   *    (runId, batchId) rides IN the commit as a `txn` action — data and
   *    commit record are one atomic rename, so replay detection cannot desync
