@@ -19,12 +19,14 @@ import scala.jdk.CollectionConverters._
   * job-start listener for writers whose input is the table itself. */
 object LostClaim {
   @volatile private var rival: () => Unit = () => ()
+  @volatile private var landed = false
   private val pending = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  def arm(r: () => Unit): Unit = { rival = r; pending.set(true) }
+  def arm(r: () => Unit): Unit = { rival = r; landed = false; pending.set(true) }
   def disarm(): Unit = pending.set(false)
-  def fire(): Unit = if (pending.compareAndSet(true, false)) rival()
-  def fired: Boolean = !pending.get()
+  def fire(): Unit = if (pending.compareAndSet(true, false)) { rival(); landed = true }
+  /** The armed rival ran (a disarmed, never-fired rival does not count). */
+  def fired: Boolean = landed
 
   val passThrough = udf { (s: String) => fire(); s }.asNondeterministic()
   val passThroughKey = udf { (k: Long) => fire(); k }.asNondeterministic()

@@ -879,6 +879,23 @@ class LakehouseSpec extends AnyFunSuite {
     assert(t.latestVersion() == 6) // create + one commit per append
   }
 
+  test("optimistic concurrency: losing the claim race retries on the new state") {
+    val t = newTable()
+    t.merge(Seq((1L, "a")).toDF("k", "v"), empty(t))
+    val v = t.latestVersion()
+    // a concurrent writer claims the next version AFTER our merge took its
+    // snapshot: the rival lands from inside the merge's own input job
+    LostClaim.arm(() => t.commit(Seq(LakehouseFormat.Txn("rival", 99L))))
+    try t.merge(Seq((2L, "b")).toDF("k", "v").withColumn("v", LostClaim.passThrough($"v")),
+      empty(t))
+    finally LostClaim.disarm()
+    assert(LostClaim.fired, "the rival commit never landed")
+    // our merge landed AFTER the rival's commit, on top of its state
+    assert(t.latestVersion() == v + 2)
+    assert(t.snapshot().txns("rival") == 99L)
+    assert(t.read().count() == 2)
+  }
+
   test("log checkpoints: snapshot from checkpoint == full replay; time travel intact") {
     val t = newTable(buckets = 2)
     (1 to 25).foreach { i =>
