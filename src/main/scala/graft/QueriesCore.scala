@@ -391,10 +391,13 @@ object QueriesCore {
         .orderBy("o_orderkey")
     }),
     "t_metadata" -> ((s, dir) => {
-      val env = eventsChangelog(s, dir)
-      Envelope.withMetadataColumns(env)
-        .selectExpr("seq", Envelope.NamespaceName, Envelope.SchemaName,
-          Envelope.TableName, Envelope.DataEventType)
+      // the metadata columns of each event's image: after, or before for
+      // a DELETE (whose token is -D on both sides)
+      val rule = TransformRule("app.events",
+        projection = Some(Envelope.MetadataColumns.mkString(", ")))
+      EnvelopeTransform(eventsChangelog(s, dir), rule, TableId.parse("app.events"))
+        .select(col("seq"), coalesce(col("after"), col("before")).as("m"))
+        .select("seq", "m.*")
         .orderBy("seq")
     }),
     "t_soft_delete" -> ((s, dir) => {

@@ -82,22 +82,6 @@ object Envelope {
       map().cast(MapType(StringType, StringType)).as(MetaCol))
   }
 
-  /** Add the four reserved metadata columns so projection/filter expressions can
-    * reference them (`transform.md:66-71`). They are plain computed columns —
-    * Catalyst constant-folds the three id parts.
-    */
-  def withMetadataColumns(env: DataFrame): DataFrame = {
-    val parts = split(col(TableIdCol), "\\.")
-    val n = size(parts)
-    env
-      .withColumn(NamespaceName, when(n === 3, parts.getItem(0)).otherwise(lit("")))
-      .withColumn(
-        SchemaName,
-        when(n === 3, parts.getItem(1)).when(n === 2, parts.getItem(0)).otherwise(lit("")))
-      .withColumn(TableName, element_at(parts, -1))
-      .withColumn(DataEventType, opTypeToken(col(OpCol), isAfter = true))
-  }
-
   /** `__data_event_type__` values are the reference's per-image RowKind
     * tokens (`DataChangeEvent.opTypeString:82-93`,
     * `FlinkPipelineTransformITCase.testConvertDeleteAsInsert` expects `+I`,

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.core.{Selectors, TableId}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 /** A transform rule: per-table projection + filter, the reference's entire
   * row-local query surface.
@@ -26,6 +26,13 @@ final case class TransformRule(
   def matches(tableId: TableId): Boolean = selectors.isMatch(tableId)
 }
 
+/** The rule's text: projection entries, their output names and the
+  * source-metadata keys they read. [[EnvelopeTransform]] is the one
+  * implementation of what a rule does to rows; `applyToRows` runs a plain
+  * row frame through it, so a transformed sink table's CREATE schema
+  * (`PipelineComposer.transformedSchema`), the `t_*` queries and the change
+  * stream all get the same semantics.
+  */
 object TransformOp {
 
   /** Split a projection string on top-level commas (ignoring commas inside
@@ -56,20 +63,39 @@ object TransformOp {
     out.toSeq
   }
 
-  /** Expand `*` to the table's physical columns, mirroring
-    * `TransformParser.expandWildcard:256` — the wildcard keeps original columns
-    * (never metadata columns) in their original order.
+  private val Plain = "[A-Za-z_][A-Za-z0-9_]*"
+  private val PlainName = Plain.r
+  private val Backquoted = "`([^`]+)`".r
+  /** `expr AS name` or ``expr AS `name` `` closing a projection entry */
+  private val AliasOf = s"(?i)\\s+AS\\s+(?:($Plain)|`([^`]+)`)\\s*$$".r
+
+  /** (output name, expression) of each projection entry over the payload
+    * columns. `*` expands to the payload columns in their order, never the
+    * metadata columns (`TransformParser.expandWildcard:256`); a non-plain
+    * name expands backquoted, or the parser reads `foo-bar` as a
+    * subtraction. No projection is `*`. An alias, plain or backquoted, names
+    * its entry's output; so does a bare backquoted identifier, without its
+    * backquotes. Shading: a later entry with the SAME output name REPLACES
+    * the earlier one AT THE EARLIER POSITION (`generateProjectionColumns`,
+    * `TransformParser.java:370-380`), so `*, 0.5 + CAST(col1 AS DOUBLE) AS
+    * col1` redefines col1 in place, possibly with another type
+    * (`FlinkPipelineTransformITCase.testShadeOriginalColumnsWithDifferentType:2755`).
     */
-  private[operators] def expandProjection(
-      projection: String,
-      physicalColumns: Seq[String]): Seq[String] =
-    splitProjection(projection).flatMap {
-      // a DASHED (or otherwise non-plain) physical name must expand
-      // BACKQUOTED or the parser reads `foo-bar` as a subtraction
-      case "*" => physicalColumns.map(n =>
-        if (n.matches("[A-Za-z_][A-Za-z0-9_]*")) n else s"`$n`")
-      case e => Seq(e)
+  private[operators] def projectionExprs(
+      rule: TransformRule, payloadFields: Seq[String]): Seq[(String, String)] = {
+    val pairs = splitProjection(rule.projection.getOrElse("*")).flatMap {
+      case "*" => payloadFields.map {
+        case n @ PlainName() => n -> n
+        case n => n -> s"`$n`"
+      }
+      case e => Seq(AliasOf.findFirstMatchIn(e) match {
+        case Some(m) => Option(m.group(1)).getOrElse(m.group(2)) -> e.substring(0, m.start)
+        case None => (e match { case Backquoted(n) => n; case _ => e }) -> e
+      })
     }
+    val last = pairs.toMap
+    pairs.map(_._1).distinct.map(n => n -> last(n))
+  }
 
   /** SOURCE-DEFINED metadata columns: BACKQUOTED identifiers in the rule's
     * expressions that are not payload columns resolve against the event's
@@ -77,205 +103,25 @@ object TransformOp {
     * surface (a source exposes extra metadata columns by name; the values
     * test source exposes `timestamp-type`,
     * `FlinkPipelineTransformITCase.testTransformWithColumnNameMap:975`).
+    * A backquote inside a string literal is data and an alias names an
+    * output column: neither is a metadata read.
     */
-  /** Declared types of known source-metadata columns — the
-    * `SupportedMetadataColumn` contract: the values/scripted source's
-    * `op_ts` reads as BIGINT (`OpTsMetadataColumn.getType` = BIGINT,
-    * `read` = `Long.parseLong`), so a projection `op_ts AS opts` must type
-    * the sink column BIGINT, not the meta map's raw STRING
-    * (`FlinkPipelineBatchComposerITCase.testOpTypeMetadataColumnInBatchMode:611`
-    * pins `opts` BIGINT). Unlisted keys stay STRING
-    * (the generic `Map<String,String>` view). */
-  private[operators] val SourceMetadataTypes: Map[String, org.apache.spark.sql.types.DataType] =
-    Map("op_ts" -> org.apache.spark.sql.types.LongType)
-
-  /** the envelope column reading source-metadata key `n`, cast to its
-    * declared type when the key is a known SupportedMetadataColumn */
-  private[operators] def metaKeyColumn(metaCol: Column, n: String): Column = {
-    val raw = org.apache.spark.sql.functions.element_at(metaCol, n)
-    SourceMetadataTypes.get(n).fold(raw)(t => raw.cast(t)).as(n)
-  }
-
   private[operators] def metaKeyColumns(
-      rule: TransformRule, payloadFields: Seq[String]): Seq[String] = {
-    val tick = "`([^`]+)`".r
-    // a backquote inside a STRING LITERAL is data, not an identifier, and a
-    // backquoted name in ALIAS position (`expr AS \`my-col\``) names an
-    // OUTPUT column — neither may become an element_at(meta, ...) read
-    def stripLiterals(t: String): String = t.replaceAll("'(?:[^']|'')*'", "''")
-    val aliasTick = "(?i)\\bAS\\s+`([^`]+)`".r
-    (rule.projection.toSeq ++ rule.filter.toSeq).map(stripLiterals)
-      .flatMap { t =>
-        val aliased = aliasTick.findAllMatchIn(t).map(_.group(1)).toSet
-        tick.findAllMatchIn(t).map(_.group(1)).filterNot(aliased.contains)
-      }
+      rule: TransformRule, payloadFields: Seq[String]): Seq[String] =
+    (projectionExprs(rule, payloadFields).map(_._2) ++ rule.filter)
+      .map(_.replaceAll("'(?:[^']|'')*'", "''"))
+      .flatMap(Backquoted.findAllMatchIn(_).map(_.group(1)))
       .distinct
-      .filterNot(payloadFields.contains)
-      .filterNot(Envelope.MetadataColumns.contains)
-      .filterNot(_ == graft.functions.Dialect.EpochCol)
-  }
+      .filterNot(n => payloadFields.contains(n) || Envelope.MetadataColumns.contains(n) ||
+        n == graft.functions.Dialect.EpochCol)
 
-  /** a projection entry that is JUST a backquoted identifier names its
-    * output without the ticks */
-  private[operators] def outputName(expr: String): String = {
-    val e = expr.trim
-    if (e.length > 2 && e.head == '`' && e.last == '`' && !e.substring(1, e.length - 1).contains("`"))
-      e.substring(1, e.length - 1)
-    else e
-  }
-
-  /** Apply projection+filter to a plain row DataFrame (one table's rows).
-    *
-    * Semantics per `docs/content/docs/core-concept/transform.md:34-63`:
-    *   - filter sees original AND computed columns (reference evaluates filter
-    *     after projection computation but before projection narrowing) — so we
-    *     evaluate filter on a frame extended with the computed columns.
-    *   - metadata columns are available to both when `tableId` is provided.
+  /** Projection + filter over a plain row frame (one table's rows), as a
+    * snapshot of INSERT events through [[EnvelopeTransform]]. The metadata
+    * columns read `tableId` (empty names when absent) and `+I`.
     */
   def applyToRows(
-      rows: DataFrame,
-      rule: TransformRule,
-      tableId: Option[TableId] = None,
-      opLiteral: String = "+I"): DataFrame = {
-    graft.functions.DialectCastExpr.ensureRegistered(rows.sparkSession)
-    val physical = rows.columns.toSeq
-    // dialect expression parse with type-strict equality (StrictEquality):
-    // operand types resolved against the input row schema
-    def dExpr(sql: String): org.apache.spark.sql.Column =
-      graft.functions.StrictEquality.parse(rows.sparkSession, sql,
-        n => rows.schema.fields.find(_.name == n).map(_.dataType),
-        timeTagged = n => rows.schema.fields.find(_.name == n).exists(
-          _.metadata.contains(graft.functions.DialectCastExpr.TimeTypeKey)))
-    // make metadata columns referenceable
-    val withMeta0 = tableId match {
-      case Some(t) =>
-        rows
-          .withColumn(Envelope.NamespaceName, lit(t.namespace))
-          .withColumn(Envelope.SchemaName, lit(t.schemaName))
-          .withColumn(Envelope.TableName, lit(t.tableName))
-          .withColumn(Envelope.DataEventType, lit(opLiteral))
-      case None => rows
-    }
-    // per-record epoch for the now-family (see EnvelopeTransform.epochMillis);
-    // a pinned `spark.graft.epoch.millis` makes gates deterministic
-    val withMeta1 = withMeta0.withColumn(graft.functions.Dialect.EpochCol,
-      rows.sparkSession.conf.getOption("spark.graft.epoch.millis") match {
-        case Some(v) => lit(v.toLong)
-        case None => unix_millis(current_timestamp())
-      })
-    // source-defined metadata columns: the PLAIN-ROW path carries no
-    // connector metadata, so they resolve to NULL strings here (the envelope
-    // path reads the event's meta map); the column must still EXIST so the
-    // projected schema derives correctly
-    val withMeta = metaKeyColumns(rule, physical).foldLeft(withMeta1)((d, n) =>
-      d.withColumn(n, lit(null).cast(
-        SourceMetadataTypes.getOrElse(n, org.apache.spark.sql.types.StringType))))
-    val rawExprs = rule.projection match {
-      case Some(p) => expandProjection(p, physical)
-      case None => physical
-    }
-    // Shading: a later projection column with the SAME output name REPLACES
-    // the earlier one AT THE EARLIER POSITION (the reference's
-    // `generateProjectionColumns`, TransformParser.java:370-380) — so
-    // `*, 0.5 + CAST(col1 AS DOUBLE) AS col1` redefines col1 in place,
-    // possibly with a different type, instead of emitting a duplicate
-    // (`FlinkPipelineTransformITCase.testShadeOriginalColumnsWithDifferentType:2755`).
-    val shadeAlias = "(?i)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-    val projExprs: Seq[String] = {
-      val firstIdx = scala.collection.mutable.HashMap.empty[String, Int]
-      val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-      rawExprs.foreach { e =>
-        val n = shadeAlias.findFirstMatchIn(e).map(_.group(1)).getOrElse(outputName(e))
-        firstIdx.get(n) match {
-          case Some(i) => kept(i) = e
-          case None => firstIdx(n) = kept.size; kept += e
-        }
-      }
-      kept.toSeq
-    }
-    // computed columns must be visible to the filter: extend, filter, then
-    // narrow. A redefinition like `UPPER(name) AS name` OVERWRITES the
-    // original column in the extended frame — the filter sees the
-    // post-projection value uniformly, for redefined columns exactly as
-    // for new computed columns (the computed-columns-visible-to-filter
-    // contract; the reference evaluates the filter on the projected row).
-    // Every projection expression evaluates against the ORIGINAL input
-    // columns in ONE select — no sequential withColumn fold, so
-    // `UPPER(name) AS name, name AS name2` gives name2 the original value,
-    // matching the reference's evaluate-all-against-the-input-record.
-    val aliasOf = "(?i)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-    val aliased: Seq[(String, org.apache.spark.sql.Column)] = projExprs.flatMap { e =>
-      aliasOf.findFirstMatchIn(e).map(m =>
-        m.group(1) -> dExpr(e.substring(0, m.start)))
-    }
-    val aliasNames = aliased.map(_._1).toSet
-    // non-aliased expressions compute in the SAME single select, under
-    // generated internal names — evaluating them later against the
-    // extended frame would see sibling aliases' redefinitions
-    // (`bal + 1 AS bal, bal * 2` must NOT yield (bal+1)*2); every
-    // projection expression evaluates against the original input columns
-    val nonAliased: Seq[(Int, org.apache.spark.sql.Column)] =
-      projExprs.zipWithIndex.collect {
-        case (e, i) if aliasOf.findFirstMatchIn(e).isEmpty =>
-          i -> dExpr(e)
-      }
-    def internal(i: Int) = s"__graft_p$i"
-    val extended = withMeta.select(
-      (withMeta.columns.filterNot(aliasNames.contains).map(col).toSeq ++
-        aliased.map { case (n, c) => c.as(n) } ++
-        nonAliased.map { case (i, c) => c.as(internal(i)) }): _*)
-    val filtered = rule.filter match {
-      case Some(f) =>
-        // the filter sees POST-projection values, so its operand types must
-        // resolve against the effective projection: a shading redefinition
-        // (`CAST(col1 AS INT) AS col1`) changes the boxed class StrictEquality
-        // folds on — resolve redefined names to the redefining expression's
-        // inferred type, never the stale input type (see
-        // EnvelopeTransform.filterExpr for the envelope-side twin)
-        val base: String => Option[org.apache.spark.sql.types.DataType] =
-          n => rows.schema.fields.find(_.name == n).map(_.dataType)
-        val redefined = aliased.map(_._1).distinct.map { n =>
-          val e = projExprs.collectFirst {
-            case p if aliasOf.findFirstMatchIn(p).exists(_.group(1) == n) =>
-              aliasOf.findFirstMatchIn(p).map(m => p.substring(0, m.start)).get
-          }
-          n -> e.flatMap(ex =>
-            graft.functions.StrictEquality.inferType(rows.sparkSession, ex, base))
-        }.toMap
-        val fc = graft.functions.StrictEquality.parse(rows.sparkSession, f,
-          n => redefined.getOrElse(n, base(n)),
-          timeTagged = n => !redefined.contains(n) &&
-            rows.schema.fields.find(_.name == n).exists(
-              _.metadata.contains(graft.functions.DialectCastExpr.TimeTypeKey)))
-        extended.filter(fc)
-      case None => extended
-    }
-    val outNames = projExprs.map { e =>
-      aliasOf.findFirstMatchIn(e).map(_.group(1)).getOrElse(outputName(e))
-    }
-    // every output was already computed (against the original inputs) in
-    // the extended frame — select it BY NAME, never re-evaluate: a second
-    // evaluation of `x + 1 AS x` against the extended frame would
-    // double-apply the redefinition
-    filtered.select(outNames.zipWithIndex.map { case (name, i) =>
-      if (aliasNames.contains(name) &&
-          aliasOf.findFirstMatchIn(projExprs(i)).isDefined) col(name)
-      else col(internal(i)).as(name)
-    }.toIndexedSeq: _*)
-  }
-
-  /** Referenced-column analysis for scan pruning
-    * (`TransformParser.generateReferencedColumns:207`). With DataFrames this is
-    * Catalyst's ColumnPruning; exposed here for the DSv2 source's
-    * `pruneColumns` and for tests asserting the pruned read schema.
-    */
-  def referencedColumns(rule: TransformRule, physicalColumns: Seq[String]): Seq[String] = {
-    val exprs = rule.projection.map(splitProjection).getOrElse(Seq("*")) ++ rule.filter.toSeq
-    if (exprs.contains("*")) physicalColumns
-    else {
-      val ident = "[A-Za-z_][A-Za-z0-9_]*".r
-      val used = exprs.flatMap(e => ident.findAllIn(e)).toSet
-      physicalColumns.filter(used.contains)
-    }
+      rows: DataFrame, rule: TransformRule, tableId: Option[TableId] = None): DataFrame = {
+    val t = tableId.getOrElse(TableId(""))
+    EnvelopeTransform.rows(Envelope.fromSnapshot(rows, t, lit(0L)), rule, t)
   }
 }

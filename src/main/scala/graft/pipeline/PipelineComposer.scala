@@ -61,8 +61,10 @@ final class PipelineComposer(
     rulesFor(tableId).headOption
 
   /** Output schema of the transform for a source table — each rule's
-    * projection runs over an empty frame (Catalyst analysis gives the exact
-    * types) and multiple matching rules STRICTLY merge
+    * projection runs over an empty snapshot through [[EnvelopeTransform]],
+    * the one implementation the data path runs too (Catalyst analysis gives
+    * the exact types, nullability and field metadata), and multiple
+    * matching rules STRICTLY merge
     * (`PostTransformOperator.processCreateTableEvent:204-210`
     * strictlyMergeSchemas): same column names in the same order, types
     * widened to the least common type.

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.operators.{TransformOp, TransformRule}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `TransformParserTest.java` + the portable half of `JaninoCompilerTest.java`
@@ -227,23 +226,6 @@ class DialectParserSpec extends AnyFunSuite {
       t :: Option(t.getCause).map(rootChain).getOrElse(Nil)
     assert(rootChain(e).exists(c =>
       Option(c.getMessage).exists(_.contains("TIMESTAMPDIFF(unit, start, end)"))))
-  }
-
-  // testParseComputedColumnNames:157 / testParseFilterColumnNameList:166 /
-  // testGenerateReferencedColumns:543 — referenced-column analysis feeds
-  // scan pruning; computed aliases are NOT referenced columns
-  test("referenced-column analysis") {
-    val physical = Seq("id", "name", "age", "address", "weight", "height", "birthday")
-    val rule = TransformRule("db.t",
-      projection =
-        Some("id, upper(name) as name, age + 1 as newage, weight / (height * height) as bmi"),
-      filter = Some("bmi > 17 and char_length(address) > 10"))
-    assert(TransformOp.referencedColumns(rule, physical) ==
-      Seq("id", "name", "age", "address", "weight", "height"))
-    // a filter-only rule references its filter columns
-    val filterOnly = TransformRule("db.t", filter = Some(" uniq_id > 10 and id is not null"))
-    assert(TransformOp.referencedColumns(
-      filterOnly, Seq("uniq_id", "id", "other")).toSet == Set("uniq_id", "id", "other"))
   }
 
   // testParsingExpressionWithUnicodeLiterals:748 — equality against unicode

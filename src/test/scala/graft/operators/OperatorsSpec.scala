@@ -29,15 +29,6 @@ class EnvelopeSpec extends AnyFunSuite {
       .select($"before.name", $"after.name").as[(String, String)].head() == ("a2", "a2"))
   }
 
-  test("metadata columns") {
-    val env = Envelope.withMetadataColumns(changelog())
-    val r = env.select(
-      col(Envelope.NamespaceName), col(Envelope.SchemaName), col(Envelope.TableName),
-      col(Envelope.DataEventType)).distinct().collect()
-    assert(r.forall(row => row.getString(0) == "" && row.getString(1) == "db" &&
-      row.getString(2) == "t"))
-  }
-
   test("softDelete rewrites DELETE into INSERT of before-image") {
     val out = Envelope.softDelete(changelog())
     assert(out.filter($"op" === "DELETE").count() == 0)
@@ -188,13 +179,6 @@ class TransformOpSpec extends AnyFunSuite {
   test("splitProjection respects parens and quotes") {
     assert(TransformOp.splitProjection("a, CONCAT(b, ',', c) AS x, 'y,z' AS w") ==
       Seq("a", "CONCAT(b, ',', c) AS x", "'y,z' AS w"))
-  }
-
-  test("referencedColumns for pruning") {
-    val rule = TransformRule("db.t", projection = Some("id, UPPER(name) AS un"),
-      filter = Some("bal > 1"))
-    assert(TransformOp.referencedColumns(rule, Seq("id", "name", "bal", "unused")) ==
-      Seq("id", "name", "bal"))
   }
 
   test("metaKeyColumns skips string literals and backquoted ALIASES") {
