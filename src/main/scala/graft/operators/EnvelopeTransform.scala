@@ -166,6 +166,9 @@ object EnvelopeTransform {
 
   def apply(env: DataFrame, rule: TransformRule, tableId: TableId): DataFrame = {
     val payload = payloadOf(env)
+    require(
+      payload.fieldNames.intersect(EnvCols).isEmpty,
+      s"payload columns may not shadow envelope columns: $EnvCols")
     def projectImage(df: DataFrame, imageCol: String): DataFrame = {
       val (frame, outs) = projected(df, rule, tableId, payload, imageCol)
       frame.select(EnvCols.map {

@@ -176,6 +176,15 @@ class TransformOpSpec extends AnyFunSuite {
     assert(out.select($"tbl").distinct().head().getString(0) == "t")
   }
 
+  test("a rule without a projection keeps a dashed column") {
+    // no projection is `*`: a dashed name must expand backquoted, or the
+    // parser reads `dash-col` as the subtraction dash - col
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "dash-col")
+    val out = TransformOp.applyToRows(df, TransformRule("db.t", filter = Some("id > 1")))
+    assert(out.columns.toSeq == Seq("id", "dash-col"))
+    assert(out.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((2L, "b")))
+  }
+
   test("splitProjection respects parens and quotes") {
     assert(TransformOp.splitProjection("a, CONCAT(b, ',', c) AS x, 'y,z' AS w") ==
       Seq("a", "CONCAT(b, ',', c) AS x", "'y,z' AS w"))
