@@ -176,39 +176,47 @@ object SchemaDerivator {
     * select over all columns, not two `withColumn`s: each withColumn
     * re-analyzes the whole projection, and with wide evolved schemas (the
     * B4 probe reaches 100+ fields per image struct) that doubles the
-    * per-batch plan-compile cost for nothing. */
+    * per-batch plan-compile cost for nothing.
+    *
+    * An image whose struct already has the target's field names in order,
+    * with types equal up to nullability, passes through unchanged: every
+    * field would copy as is and the rename chase cannot apply, and Catalyst
+    * keeps such a copy as one more struct build per row. */
   def coerceEnvelope(
       env: DataFrame,
       target: StructType,
       pendingRenames: Seq[(Long, Map[String, String])] = Seq.empty): DataFrame = {
     def coerceStruct(c: String): org.apache.spark.sql.Column = {
       val src = env.schema(c).dataType.asInstanceOf[StructType]
-      val present = src.fields.map(f => f.name -> f.dataType).toMap
-      when(col(c).isNotNull, struct(target.fields.map { f =>
-        // a sink column absent from the envelope may exist there under a
-        // LATER name: the envelope rides the source's live schema while the
-        // sink only evolves at the ack boundary, so a parked-but-unacked
-        // rename leaves the sink one epoch behind. Chase the rename chain
-        // forward; only a name genuinely absent at both epochs pads null.
-        def chained: Option[String] = {
-          val end = pendingRenames.foldLeft(f.name) { case (n, (_, rm)) =>
-            rm.getOrElse(n, n)
+      if (sameUpToNullability(src, target)) col(c)
+      else {
+        val present = src.fields.map(f => f.name -> f.dataType).toMap
+        when(col(c).isNotNull, struct(target.fields.map { f =>
+          // a sink column absent from the envelope may exist there under a
+          // LATER name: the envelope rides the source's live schema while the
+          // sink only evolves at the ack boundary, so a parked-but-unacked
+          // rename leaves the sink one epoch behind. Chase the rename chain
+          // forward; only a name genuinely absent at both epochs pads null.
+          def chained: Option[String] = {
+            val end = pendingRenames.foldLeft(f.name) { case (n, (_, rm)) =>
+              rm.getOrElse(n, n)
+            }
+            if (end != f.name && present.contains(end)) Some(end) else None
           }
-          if (end != f.name && present.contains(end)) Some(end) else None
-        }
-        present.get(f.name) match {
-          case Some(dt) if sameUpToNullability(dt, f.dataType) =>
-            col(s"$c.${f.name}").as(f.name)
-          case Some(dt) if coercible(dt, f.dataType) =>
-            coercionCast(col(s"$c.${f.name}"), dt, f.dataType).as(f.name)
-          // refused coercion: tolerance mode NULLS the cell (coerceRow:271)
-          case Some(_) => lit(null).cast(f.dataType).as(f.name)
-          case None => chained match {
-            case Some(n) => col(s"$c.$n").cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
+          present.get(f.name) match {
+            case Some(dt) if sameUpToNullability(dt, f.dataType) =>
+              col(s"$c.${f.name}").as(f.name)
+            case Some(dt) if coercible(dt, f.dataType) =>
+              coercionCast(col(s"$c.${f.name}"), dt, f.dataType).as(f.name)
+            // refused coercion: tolerance mode NULLS the cell (coerceRow:271)
+            case Some(_) => lit(null).cast(f.dataType).as(f.name)
+            case None => chained match {
+              case Some(n) => col(s"$c.$n").cast(f.dataType).as(f.name)
+              case None => lit(null).cast(f.dataType).as(f.name)
+            }
           }
-        }
-      }.toIndexedSeq: _*)).as(c)
+        }.toIndexedSeq: _*)).as(c)
+      }
     }
     env.select(env.columns.map {
       // the shared envelope contract (graft.operators.Envelope) names the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.TableId
 import graft.pipeline.PipelineComposer
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftStreamingBridge}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming runner: envelope stream → `foreachBatch` → composer.
@@ -22,6 +22,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * envelope more than once ([[PipelineComposer.rereadsEnvelope]]). Streams
   * over several tables, or over tables the caller cannot name (test streams),
   * pin the batch and fan out through [[PipelineComposer.splitByTable]].
+  *
+  * The batch's work runs in the session that built the stream, not in the
+  * per-query clone that `foreachBatch` hands it in
+  * ([[GraftStreamingBridge.inSession]]). Every query start clones the
+  * session, the executor gives each clone its own class loader, and Spark
+  * caches generated code per class loader, so a drain run on the clone
+  * recompiles every whole-stage class the previous drains already compiled.
+  * The drain loops start a query per drain, which made that a fixed cost of
+  * every commit; rebound, a repeated drain of the same shape compiles
+  * nothing new.
   */
 object CdcStream {
 
@@ -38,18 +48,20 @@ object CdcStream {
       // (each ChangeSource serves exactly one table); empty = unknown
       tables: Seq[TableId] = Seq.empty): StreamingQuery = {
     val known = tables.distinct
+    val session = envelopeStream.sparkSession
     var b = envelopeStream.writeStream
       .queryName(queryName)
       .trigger(if (singleBatch) Trigger.Once() else Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (streamBatch: DataFrame, batchId: Long) =>
         // run identity = the streaming QUERY id (persisted in checkpoint
         // metadata, regenerated when a checkpoint is wiped or absent): batch
         // ids are only comparable within one checkpoint lineage. The path
         // alone would alias a wiped-and-recreated checkpoint dir and all
         // checkpoint-less runs.
-        val runId = Option(batch.sparkSession.sparkContext
+        val runId = Option(session.sparkContext
             .getLocalProperty("sql.streaming.queryId"))
           .getOrElse(checkpointDir.getOrElse(""))
+        val batch = GraftStreamingBridge.inSession(streamBatch, session)
         // pin the micro-batch whenever it has more than one reader: the
         // multi-table fan-out issues one distinct() pass plus one filter
         // per table, and over a multiplexed source (a union of N per-table

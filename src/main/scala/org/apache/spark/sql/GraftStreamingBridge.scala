@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
-/** The one `private[sql]` door an out-of-tree DSv1 streaming source needs:
+/** The two `private[sql]` doors graft's streaming code needs.
+  *
+  * [[asStreaming]]: an out-of-tree DSv1 streaming source's
   * `Source.getBatch` must return a DataFrame with `isStreaming = true`.
   *
   * HOW matters for performance (r19, measured): the r18 form materialized
@@ -20,6 +22,14 @@ package org.apache.spark.sql
   * stream-stream join. Every other plan (no relation leaf, as in the empty
   * batch's `LocalRelation`, or several leaves) falls back to the RDD wrap:
   * correct for any plan, only slower where it hides a file scan.
+  *
+  * [[inSession]]: a `foreachBatch` micro-batch arrives bound to the clone
+  * of the session that each query start makes. The executor gives that
+  * clone's session id its own class loader, and Spark 4.1 caches generated
+  * classes per class loader, so work run on the batch as given recompiles
+  * every whole-stage class once per query start. Rebinding the batch to
+  * the session that built the stream keeps one class loader across
+  * starts.
   */
 object GraftStreamingBridge {
 
@@ -40,4 +50,12 @@ object GraftStreamingBridge {
           df.queryExecution.toRdd, df.schema, isStreaming = true)
     }
   }
+
+  /** The same micro-batch, bound to `session`. `ForeachBatchSink` already
+    * wraps the batch as a `LogicalRDD` over the stream's RDD, so the plan
+    * is reused as is: nothing is re-planned, and the source is not read
+    * again. */
+  def inSession(batch: DataFrame, session: SparkSession): DataFrame =
+    classic.Dataset.ofRows(
+      session.asInstanceOf[classic.SparkSession], batch.queryExecution.logical)
 }

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the Upsert aggregate payload carries the DELETE flag as a BOOLEAN,
   *    not the op string, and the op-string semantics are preserved;
   *  - q3/q5 sum DECIMAL (not unscaled longs): their n_name groups grow with
-  *    SF and the long form wraps silently near the 100 TB design point.
+  *    SF and the long form wraps silently near the 100 TB design point;
+  *    q_topk/q10 sum unscaled longs only per order/customer key.
   */
 class OptimizationR19Spec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
@@ -185,10 +186,23 @@ class OptimizationR19Spec extends AnyFunSuite {
         s"$q must aggregate decimals, not unscaled longs:\n$plan")
     }
     // q_topk/q10 keep the long fast path: per-group row counts are bounded
-    // by order/customer cardinality (safe by ~9 orders of magnitude)
-    val topk = SparkEntry.queries("q_topk")(spark, sf)
-      .queryExecution.optimizedPlan.toString
-    assert(topk.contains("UnscaledValue"),
-      s"q_topk keeps the unscaled-long aggregation:\n$topk")
+    // by order/customer cardinality (safe by ~9 orders of magnitude). That
+    // bound holds only while the unscaled sum groups by that key, so the
+    // grouping keys are pinned too.
+    def unscaledGroupings(q: String): Seq[Seq[String]] = {
+      import org.apache.spark.sql.catalyst.expressions.{NamedExpression, UnscaledValue}
+      import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+      SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan.collect {
+        case a: Aggregate
+            if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[UnscaledValue])) =>
+          a.groupingExpressions.map {
+            case n: NamedExpression => n.name
+            case e => e.sql
+          }
+      }
+    }
+    assert(unscaledGroupings("q_topk") == Seq(Seq("l_orderkey")))
+    assert(unscaledGroupings("q10_returned") ==
+      Seq(Seq("c_custkey", "c_name", "c_acctbal", "n_name")))
   }
 }

@@ -20,6 +20,15 @@ object SparkTestBase {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
+  /** Block until every posted listener event has been delivered: job and
+    * streaming-progress events post asynchronously. `listenerBus` is
+    * `private[spark]` in source but public in bytecode. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   /** All messages down the cause chain, joined — Spark wraps task-side
     * failures (e.g. `raise_error`) in several layers of SparkException. */
   def rootMessage(e: Throwable): String =

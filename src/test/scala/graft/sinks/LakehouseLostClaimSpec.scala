@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.SparkTestBase
+import graft.SparkTestBase.drainListenerBus
 import graft.core._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
@@ -64,12 +65,6 @@ class LakehouseLostClaimSpec extends AnyFunSuite {
       .map(_.getFileName.toString)
       .filter(n => !n.startsWith("_") && Files.isDirectory(Paths.get(t.dir, n)))
       .toSet
-
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-  }
 
   /** The commit directories `body` staged under `t`, in write order. */
   private def staged(t: LakehouseTable)(body: => Unit): Seq[String] = {

@@ -215,4 +215,71 @@ class CdcStreamSpec extends AnyFunSuite {
         (1L, "v1", null), (2L, "V2", null), (3L, "v3", null), (5L, "v5", null)))
     } finally ChangeSourceRegistry.remove("full-stack")
   }
+
+  test("runDistributed(interleaved = true): one batch per partition per turn until all run dry") {
+    import graft.sources.cdc._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.types._
+    val t = TableId.parse("app.dist")
+    val schema = TableSchema(
+      StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("v", StringType))),
+      primaryKeys = Seq("id"))
+    def row(id: Long, v: String): Map[String, Any] = Map("id" -> id, "v" -> v)
+    // two partitions of one table, each with a snapshot of two chunks
+    val srcs = Seq(1L, 101L).map(base =>
+      new ScriptedChangeSource(t, schema, (base to base + 3).map(i => row(i, s"v$i"))))
+    val ids = Seq("dist-p0", "dist-p1")
+    val inputRows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name.startsWith("dist-"))
+          inputRows.add(e.progress.name -> e.progress.numInputRows)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    ids.zip(srcs).foreach { case (id, src) => ChangeSourceRegistry.register(id, src) }
+    spark.streams.addListener(listener)
+    try {
+      val runner = new PipelineRunner(YamlPipelineParser.parse(
+        s"""source:
+           |  type: cdc
+           |  sourceId: dist-p0
+           |  chunk.size: 2
+           |  chunks.per-batch: 1
+           |sink:
+           |  type: values
+           |pipeline:
+           |  name: dist
+           |  checkpoint.dir: ${java.nio.file.Files.createTempDirectory("dist-ck")}
+           |""".stripMargin))
+      val sink = runner.sink.asInstanceOf[MemoryDatabase]
+      def drain(): Seq[(String, Long)] = {
+        inputRows.clear()
+        assert(runner.runDistributed(ids, interleaved = true) == 0)
+        SparkTestBase.drainListenerBus()
+        inputRows.toArray(Array.empty[(String, Long)]).toSeq
+      }
+      // the loop goes round while some partition's turn read a row, so the
+      // two-chunk snapshots only land whole if a non-empty turn reports its
+      // input rows
+      val snapshot = drain()
+      assert(sink.rowsOf(t).map(_.head.asInstanceOf[Long]).sorted ==
+        ((1L to 4L) ++ (101L to 104L)))
+      ids.foreach(id => assert(snapshot.count { case (n, r) => n.endsWith(id) && r > 0 } >= 2,
+        snapshot.mkString(", ")))
+
+      srcs(0).append(DataChangeEvent.update(t, row(2L, "v2"), row(2L, "w2")))
+      srcs(1).append(DataChangeEvent.insert(t, row(105L, "v105")))
+      srcs(1).append(DataChangeEvent.delete(t, row(101L, "v101")))
+      val log = drain()
+      assert(log.map(_._2).sum == 3, log.mkString(", "))
+      assert(sink.rowsOf(t).map(_.mkString(",")).sorted == Seq(
+        "1,v1", "102,v102", "103,v103", "104,v104", "105,v105", "2,w2", "3,v3", "4,v4"))
+    } finally {
+      spark.streams.removeListener(listener)
+      ids.foreach(ChangeSourceRegistry.remove)
+    }
+  }
 }

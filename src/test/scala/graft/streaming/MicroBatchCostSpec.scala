@@ -1,11 +1,13 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.SparkTestBase.drainListenerBus
 import graft.core._
 import graft.pipeline._
 import graft.sinks.{LakehouseSink, LakehouseTable, MemoryDatabase}
 import graft.sources.cdc.{ChangeSourceRegistry, LogRecord, ScriptedChangeSource}
 import org.apache.spark.TaskContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -15,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The fixed Spark cost of a CDC micro-batch commit: every job a micro-batch
   * runs is paid again by every commit, so the job count per commit is pinned,
   * and so are the paths that avoid jobs (single-table streams skip the table
-  * fan-out; the lakehouse merge collects its changed keys once).
+  * fan-out; the lakehouse merge collects its changed keys once). Generated
+  * code is a fixed cost too: a drain of a shape already drained compiles no
+  * class.
   */
 class MicroBatchCostSpec extends AnyFunSuite {
   implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -58,12 +62,12 @@ class MicroBatchCostSpec extends AnyFunSuite {
     jobs.toArray(Array.empty[Job]).toSeq
   }
 
-  /** Job events post asynchronously; `listenerBus` is `private[spark]` in
-    * source but public in bytecode. */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  /** Classes Spark's code generator compiled while `body` ran: the
+    * compile-time histogram takes one sample per cache miss. */
+  private def compilesOf(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
   private def tmp(prefix: String): String =
@@ -110,6 +114,29 @@ class MicroBatchCostSpec extends AnyFunSuite {
       assert(table.latestVersion() == before + 1)
       assert(table.read().filter("id = 3").head().getString(1) == "w3")
     } finally ChangeSourceRegistry.remove("cost")
+  }
+
+  test("a repeated drain of the same shape compiles no new class") {
+    val t = TableId.parse("app.codegen")
+    val src = new ScriptedChangeSource(t, schema, (1L to 5L).map(i => row(i, s"v$i")))
+    ChangeSourceRegistry.register("codegen", src)
+    try {
+      val runner = new PipelineRunner(YamlPipelineParser.parse(
+        lakehouseYaml("codegen", tmp("codegen-sink"), tmp("codegen-ck"))))
+      assert(runner.runHandlingDdl() == 0)
+      // warm-up: the first log-phase drain compiles the one-row shape
+      Seq(6L, 7L).foreach { i =>
+        src.append(DataChangeEvent.insert(t, row(i, s"v$i")))
+        runner.runHandlingDdl()
+      }
+      src.append(DataChangeEvent.insert(t, row(8L, "v8")))
+      // each drain starts a new streaming query, whose micro-batch arrives
+      // bound to a fresh session clone; run there, every drain recompiled
+      // the classes of the drains before it
+      assert(compilesOf(runner.runHandlingDdl()) == 0)
+      val table = runner.sink.asInstanceOf[LakehouseSink].table(t)
+      assert(table.read().orderBy("id").collect().map(_.getLong(0)).toSeq == (1L to 8L))
+    } finally ChangeSourceRegistry.remove("codegen")
   }
 
   test("a micro-batch with no data rows writes no lakehouse version and runs no extra job") {
@@ -244,6 +271,36 @@ class MicroBatchCostSpec extends AnyFunSuite {
     } finally {
       spark.streams.removeListener(listener)
       ChangeSourceRegistry.remove("mux-a"); ChangeSourceRegistry.remove("mux-b")
+    }
+  }
+
+  test("runMultiplexedHandlingDdl: a repeated drain compiles no new class and unpersists") {
+    val tA = TableId.parse("app.mcg_a"); val tB = TableId.parse("app.mcg_b")
+    val srcA = new ScriptedChangeSource(tA, schema, (1L to 3L).map(i => row(i, s"a$i")))
+    val srcB = new ScriptedChangeSource(tB, schema, (1L to 2L).map(i => row(i, s"b$i")))
+    ChangeSourceRegistry.register("mcg-a", srcA)
+    ChangeSourceRegistry.register("mcg-b", srcB)
+    try {
+      val runner = new PipelineRunner(YamlPipelineParser.parse(
+        lakehouseYaml("mcg-a", tmp("mcg-sink"), tmp("mcg-ck"))))
+      assert(runner.runMultiplexedHandlingDdl(Seq("mcg-b")) == 0)
+      def oneRowEach(i: Long): Unit = {
+        srcA.append(DataChangeEvent.insert(tA, row(i, s"a$i")))
+        srcB.append(DataChangeEvent.insert(tB, row(i, s"b$i")))
+      }
+      Seq(10L, 11L).foreach { i => oneRowEach(i); runner.runMultiplexedHandlingDdl(Seq("mcg-b")) }
+      oneRowEach(12L)
+      // two tables: the batch is pinned and fans out through splitByTable
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      assert(compilesOf(runner.runMultiplexedHandlingDdl(Seq("mcg-b"))) == 0)
+      assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+        "the pinned micro-batch must be unpersisted")
+      val sink = runner.sink.asInstanceOf[LakehouseSink]
+      def ids(t: TableId) = sink.table(t).read().orderBy("id").collect().map(_.getLong(0)).toSeq
+      assert(ids(tA) == Seq(1L, 2L, 3L, 10L, 11L, 12L))
+      assert(ids(tB) == Seq(1L, 2L, 10L, 11L, 12L))
+    } finally {
+      ChangeSourceRegistry.remove("mcg-a"); ChangeSourceRegistry.remove("mcg-b")
     }
   }
 }
