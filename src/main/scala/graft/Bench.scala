@@ -28,16 +28,6 @@ object Bench {
     "x_perplexity_lm", "x_nb_classify",
     "a_ann_bruteforce")
 
-  /** Self-defending calibration (round 10's lesson: the committed artifact
-    * landed in a dirty shared-box window and could not certify the bench).
-    * Every measurement family runs inside a PROBED WINDOW: a short fixed
-    * CPU probe before and after the timed runs, whose WALL/CPU-TIME STEAL
-    * RATIO detects scheduler contention. A window whose steal ratio
-    * exceeds [[driftTolerance]] is re-run (up to two retries), and the
-    * accepted window's ratio is recorded next to its raw times in the JSON
-    * "drift" map — a dirty window is healed when the box clears or
-    * EXPLICITLY marked when it does not, never silently committed.
-    */
   /** Per-run executor-task CPU seconds via `SparkListenerTaskEnd.taskMetrics
     * .executorCpuTime` — steal-invariant where wall time is not: shared-box
     * scheduler contention inflates wall but not task CPU, so cross-round
@@ -73,6 +63,16 @@ object Bench {
     }
   }
 
+  /** Self-defending calibration (round 10's lesson: the committed artifact
+    * landed in a dirty shared-box window and could not certify the bench).
+    * Every measurement family runs inside a PROBED WINDOW: a short fixed
+    * CPU probe before and after the timed runs, whose WALL/CPU-TIME STEAL
+    * RATIO detects scheduler contention. A window whose steal ratio
+    * exceeds [[driftTolerance]] is re-run (up to two retries), and the
+    * accepted window's ratio is recorded next to its raw times in the JSON
+    * "drift" map — a dirty window is healed when the box clears or
+    * EXPLICITLY marked when it does not, never silently committed.
+    */
   final class SentinelDefense {
     val driftTolerance = 0.05
     private val bean = java.lang.management.ManagementFactory.getThreadMXBean

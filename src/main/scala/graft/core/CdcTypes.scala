@@ -99,7 +99,6 @@ object CdcTypes {
     def toSpark = StructType(fields.map { case (n0, t) => StructField(n0, t.toSpark, t.nullable) })
   }
 
-  /** Best-effort inverse of `toSpark` (used when schemas come from parquet/catalog). */
   /** StructField metadata key carrying width the Spark type erases
     * (CHAR/VARCHAR/BINARY/VARBINARY lengths): Spark has no bounded
     * char/binary types, but the reference's merged-route diff is
@@ -143,6 +142,7 @@ object CdcTypes {
     if (f.metadata.contains(TypeKey)) parseErased(f.metadata.getString(TypeKey), f.nullable)
     else fromSpark(f.dataType, f.nullable)
 
+  /** Best-effort inverse of `toSpark` (used when schemas come from parquet/catalog). */
   def fromSpark(dt: DataType, nullable: Boolean = true): CdcType = dt match {
     case BooleanType        => BooleanT(nullable)
     case ByteType           => TinyIntT(nullable)

@@ -90,13 +90,6 @@ object Dedup {
         col("r.payload").as("payloadB"))
   }
 
-  /** Candidate pairs via LSH banding: equal band-hash ⇒ candidate. Returns
-    * (idA, idB, sigSimilarity) with idA < idB, deduplicated across bands.
-    *
-    * Plan shape: signature (narrow, computed once) → explode bands (narrow) →
-    * ONE shuffle into (band, hash) buckets → within-bucket pair explosion →
-    * pair dedup. No cartesian product anywhere.
-    */
   /** Banded MinHash signature rows `(band, bucketKey, id, payload)` — the
     * unit both the in-run candidate join ([[minHashLshCandidates]]) and the
     * maintained cross-run signature index
@@ -135,6 +128,13 @@ object Dedup {
       zip_with(a, b, (x, y) => when(x === y, 1.0).otherwise(0.0)),
       lit(0.0), (acc, v) => acc + v).divide(lit(numHashes))
 
+  /** Candidate pairs via LSH banding: equal band-hash ⇒ candidate. Returns
+    * (idA, idB, sigSimilarity) with idA < idB, deduplicated across bands.
+    *
+    * Plan shape: signature (narrow, computed once) → explode bands (narrow) →
+    * ONE shuffle into (band, hash) buckets → within-bucket pair explosion →
+    * pair dedup. No cartesian product anywhere.
+    */
   def minHashLshCandidates(
       df: DataFrame,
       idCol: String,

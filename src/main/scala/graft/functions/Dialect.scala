@@ -17,13 +17,13 @@ package graft.functions
   */
 object Dialect {
 
-  /** Rewrites performed on a dialect expression before handing it to Catalyst.
-    * Conservative token-level rewrites outside of string literals.
-    */
   /** the per-record epoch column name the parser binds the now-family to
     * (the reference's `__epoch_time__`, JaninoCompiler.java:83-84) */
   val EpochCol = "__epoch_time__"
 
+  /** Rewrites performed on a dialect expression before handing it to Catalyst.
+    * Conservative token-level rewrites outside of string literals.
+    */
   def translate(
       sql0: String,
       epochTimeColumn: Option[String] = None,

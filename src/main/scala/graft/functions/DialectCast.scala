@@ -106,16 +106,6 @@ case class DialectCeilFloorExpr(child: Expression, isCeil: Boolean)
   override def prettyName: String = if (isCeil) "graft_ceil" else "graft_floor"
 }
 
-/** Type-preserving ROUND with the reference's BigDecimal semantics
-  * (`SystemFunctionUtils.round:676-744`): every overload rounds through
-  * `BigDecimal` HALF_UP and returns the OPERAND's own type. The FLOAT
-  * overload goes through `new BigDecimal(value.toString())` — the float's
-  * SHORTEST DECIMAL string — so `ROUND(5.555f, 2)` is 5.56, while widening
-  * the binary float to double first (5.554999828…) would give 5.55
-  * (`testFloorCeilAndRoundFunction:2528` pins 5.56). DECIMAL(p,s) rounded to
-  * scale `o` returns DECIMAL(p-s+o, o) like Spark's own rule. Registered as
-  * `graft_round`; Dialect.translate rewrites ROUND calls.
-  */
 /** The reference's `DATE_FORMAT(ts, pattern)` — a SimpleDateFormat-pattern
   * render (`SystemFunctionUtils.dateFormat` via `DateTimeUtils`) in the
   * PIPELINE time zone: a TIMESTAMP_LTZ operand formats its instant AT
@@ -299,6 +289,16 @@ case class ToDateExpr(child: Expression, patternExpr: Expression, zoneId: String
   override def prettyName: String = "graft_to_date"
 }
 
+/** Type-preserving ROUND with the reference's BigDecimal semantics
+  * (`SystemFunctionUtils.round:676-744`): every overload rounds through
+  * `BigDecimal` HALF_UP and returns the OPERAND's own type. The FLOAT
+  * overload goes through `new BigDecimal(value.toString())` — the float's
+  * SHORTEST DECIMAL string — so `ROUND(5.555f, 2)` is 5.56, while widening
+  * the binary float to double first (5.554999828…) would give 5.55
+  * (`testFloorCeilAndRoundFunction:2528` pins 5.56). DECIMAL(p,s) rounded to
+  * scale `o` returns DECIMAL(p-s+o, o) like Spark's own rule. Registered as
+  * `graft_round`; Dialect.translate rewrites ROUND calls.
+  */
 case class DialectRoundExpr(child: Expression, scaleExpr: Expression)
     extends BinaryExpression with CodegenFallback {
   override def left: Expression = child

@@ -2,14 +2,13 @@ package graft.functions.udfexamples
 
 import graft.functions.UserDefinedFunction
 
-/** Behavior-equivalent re-implementations of the reference's UDF example
-  * classes (`flink-cdc-pipeline-udf-examples/src/main/java/org/apache/flink/
-  * cdc/udf/examples/java/` — FormatFunctionClass.java, AddOneFunctionClass
-  * .java, TypeOfFunctionClass.java) — the classes its UDF ITCases load by
-  * classpath. The YAML `user-defined-function` section resolves these
-  * reflectively ([[graft.pipeline.PipelineRunner]]), exactly like the
-  * reference's `UserDefinedFunctionDescriptor` does for the originals.
-  */
+// Behavior-equivalent re-implementations of the reference's UDF example
+// classes (`flink-cdc-pipeline-udf-examples/src/main/java/org/apache/flink/
+// cdc/udf/examples/java/` — FormatFunctionClass.java, AddOneFunctionClass
+// .java, TypeOfFunctionClass.java) — the classes its UDF ITCases load by
+// classpath. The YAML `user-defined-function` section resolves these
+// reflectively (graft.pipeline.PipelineRunner), exactly like the
+// reference's `UserDefinedFunctionDescriptor` does for the originals.
 
 /** `FormatFunctionClass.eval(String format, Object... args)` =
   * `String.format`. VARIADIC like the reference's `Object...` signature —

@@ -21,13 +21,6 @@ object Upsert {
   private def keyCol(k: String): Column =
     coalesce(col(s"${Envelope.AfterCol}.$k"), col(s"${Envelope.BeforeCol}.$k")).as(k)
 
-  /** Materialize the final state of one table from its envelope changelog.
-    *
-    * @param env      envelope DataFrame (single table or pre-filtered)
-    * @param keyCols  primary-key columns inside before/after
-    * @return one row per surviving key, payload columns only, where the
-    *         highest-`seq` event is not a DELETE
-    */
   /** The shared per-key last-event aggregate: ONE `max_by(payload, seq)`
     * hash aggregate per (optional route, key) group. Every materialize
     * variant derives from this single definition so tie-breaking and the
@@ -68,6 +61,13 @@ object Upsert {
     (upserts, deletes)
   }
 
+  /** Materialize the final state of one table from its envelope changelog.
+    *
+    * @param env      envelope DataFrame (single table or pre-filtered)
+    * @param keyCols  primary-key columns inside before/after
+    * @return one row per surviving key, payload columns only, where the
+    *         highest-`seq` event is not a DELETE
+    */
   def materialize(env: DataFrame, keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "upsert materialization requires primary keys")
     splitLatest(latestByKey(env, keyCols.map(keyCol)), keyCols)._1

@@ -388,14 +388,6 @@ final class PipelineComposer(
       .map(_.trim).filter(_.matches("[A-Za-z_][A-Za-z0-9_]*")).toSet)
       .getOrElse(Set.empty)
 
-  /** Handle a schema-change event on the control path (between batches):
-    * transform-project it, track the upstream schema, then deduce per routed
-    * sink table and run the deduced events through the evolution driver
-    * (behavior normalization + sink filter + apply). A CREATE for an
-    * already-known upstream table is skipped whole — the duplicate-CREATE
-    * redundancy case of `SchemaUtils.isSchemaChangeEventRedundant`
-    * (see [[SchemaDerivator.isRedundant]] for why only creates).
-    */
   /** FIRST/LAST add positions anchor to the PRE-transform schema's boundary
     * columns whenever the pipeline carries ANY transform — the reference's
     * PreTransformOperator sits in the chain for every table once a transform
@@ -421,6 +413,14 @@ final class PipelineComposer(
         })
       }.getOrElse(ev)
 
+  /** Handle a schema-change event on the control path (between batches):
+    * transform-project it, track the upstream schema, then deduce per routed
+    * sink table and run the deduced events through the evolution driver
+    * (behavior normalization + sink filter + apply). A CREATE for an
+    * already-known upstream table is skipped whole — the duplicate-CREATE
+    * redundancy case of `SchemaUtils.isSchemaChangeEventRedundant`
+    * (see [[SchemaDerivator.isRedundant]] for why only creates).
+    */
   def processSchemaChange(event: SchemaChangeEvent): Seq[SchemaChangeEvent] = {
     // a DANGLING table-level event — DROP/TRUNCATE for a table this
     // pipeline never announced (dropped before the start offset, outside

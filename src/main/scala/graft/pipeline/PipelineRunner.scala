@@ -231,9 +231,7 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     * checkpoint) through the same transform → route → schema-coerce →
     * PK-upsert path. Per-chunk HW backfill still applies, so each chunk is
     * internally consistent; changes after a chunk's HW are out of the run's
-    * scope by definition of batch mode.
-    */
-  /** BATCH runtime-mode: one bounded materialization pass. All sources'
+    * scope by definition of batch mode. All sources'
     * schemas are known up front, so sink creates derive from the FULL union
     * ([[PipelineComposer.createTablesBatch]]); `extraSourceIds` lets the
     * batch read several registered sources (the reference's batch fixtures
@@ -339,8 +337,8 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     * call repeatedly (the conformance scripts drain incrementally); sink
     * tables are created once from the reduced initial views. Returns
     * schema changes applied to the sink across all partitions.
-    */
-  /** @param interleaved true = ROUND-ROBIN draining: each turn gives every
+    *
+    * @param interleaved true = ROUND-ROBIN draining: each turn gives every
     *   partition exactly ONE micro-batch (Trigger.Once) before moving on, so
     *   two partitions' batches genuinely alternate and a DDL parking one
     *   partition leaves the others streaming — the coordinator-fidelity mode.
@@ -439,15 +437,6 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
       scala.collection.mutable.LinkedHashMap[String, (TableId, graft.core.SchemaManager)],
       graft.core.SchemaManager)] = None
 
-  /** `scan.newly-added-table.enabled` analog (`MySqlDataSourceOptions.java:239`):
-    * a table that appears mid-run is picked up WITHOUT disturbing running
-    * streams — the driver routes + creates its sink tables and starts a
-    * dedicated per-table stream that snapshots the new table from scratch
-    * while existing streams keep their checkpoints. The reference's assigner
-    * re-enumerates matched tables and snapshots the new ones while the binlog
-    * split continues; per-table DSv2 streams give the same effect with
-    * driver-side discovery.
-    */
   /** Drain an ADDITIONAL source to completion with the same park/evolve/ack
     * loop as [[runHandlingDdl]] — for multi-source pipelines whose secondary
     * logs also carry DDL (the kafka-partition drain stays data-only; this is
@@ -522,6 +511,15 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     applied
   }
 
+  /** `scan.newly-added-table.enabled` analog (`MySqlDataSourceOptions.java:239`):
+    * a table that appears mid-run is picked up WITHOUT disturbing running
+    * streams — the driver routes + creates its sink tables and starts a
+    * dedicated per-table stream that snapshots the new table from scratch
+    * while existing streams keep their checkpoints. The reference's assigner
+    * re-enumerates matched tables and snapshots the new ones while the binlog
+    * split continues; per-table DSv2 streams give the same effect with
+    * driver-side discovery.
+    */
   def addTable(newSourceId: String): StreamingQuery = {
     addedSourceIds.add(newSourceId)
     val src = ChangeSourceRegistry.get(newSourceId)

@@ -88,10 +88,6 @@ object SchemaDerivator {
     case other => Seq(other)
   }
 
-  /** Coerce rows of `df` (any historical schema) into `target` — generated
-    * casts + null-fill, the Spark form of `SchemaDerivator.coerceDataRecord:298`.
-    * Missing columns become NULL; extra columns are dropped; type changes cast.
-    */
   /** Equal up to nullability (`containsNull`/`valueContainsNull`/field
     * nullability at any depth): parquet round-trips erase non-null markers,
     * so an `array<float> containsNull=false` table schema meets
@@ -158,6 +154,10 @@ object SchemaDerivator {
     }
   }
 
+  /** Coerce rows of `df` (any historical schema) into `target` — generated
+    * casts + null-fill, the Spark form of `SchemaDerivator.coerceDataRecord:298`.
+    * Missing columns become NULL; extra columns are dropped; type changes cast.
+    */
   def coerce(df: DataFrame, target: StructType): DataFrame = {
     val present = df.schema.fields.map(f => f.name -> f.dataType).toMap
     df.select(target.fields.map { f =>

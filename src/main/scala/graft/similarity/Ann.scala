@@ -217,7 +217,6 @@ object Ann {
         .map(_._1)
         .toSeq
 
-    /** Search: probe the `nprobe` nearest inverted lists per query. */
     /** Filtered ANN — vector search with a metadata predicate: each query
       * retrieves only candidates whose `attrCol` equals the query's own
       * attribute (label-scoped search, the tenant/language/split filter of a
@@ -252,6 +251,7 @@ object Ann {
         .select(col("qid"), col("cid"), round(col("cosine"), 6).as("cosine"), col("rank"))
     }
 
+    /** Search: probe the `nprobe` nearest inverted lists per query. */
     def topK(
         queries: Seq[(Long, Array[Double])],
         k: Int,

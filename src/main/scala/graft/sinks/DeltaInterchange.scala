@@ -22,13 +22,15 @@ import scala.jdk.CollectionConverters._
   *    vocabulary), under `delta.enableChangeDataFeed` and writer
   *    version 4 — downstream CDF readers consume the pipeline's changes
   *    at commit granularity.
-  *  - [[export]]: materialize a [[LakehouseTable]] snapshot as a
-  *    Delta-readable directory — data files copied to the root, one
-  *    `_delta_log/00000000000000000000.json` commit with `protocol`,
-  *    `metaData` (the Spark StructType JSON as `schemaString`), one `add`
-  *    per live file carrying `stats` (numRecords + min/maxValues from the
-  *    zone maps), and one `txn` per recorded (appId, version) — so
-  *    exactly-once bookkeeping survives interchange.
+  *  - [[export]]: the [[mirror]]'s first commit, written into an empty
+  *    directory — one `_delta_log/00000000000000000000.json` with
+  *    `protocol`, `metaData` (the Spark StructType JSON as
+  *    `schemaString`), one `txn` per recorded (appId, version) so
+  *    exactly-once bookkeeping survives interchange, the mirror's own
+  *    progress `txn`, and one `add` per live file: unpartitioned files
+  *    copied to the root with `stats` (numRecords + min/maxValues from
+  *    the zone maps), partitioned rows split per partition tuple the way
+  *    the mirror splits them. A later [[mirror]] call continues it.
   *  - [[importDelta]]: replay a `_delta_log` directory (versioned JSON
   *    commits, `add`/`remove` with `dataChange` replay, `metaData` schema,
   *    `txn` map) into a DataFrame + metadata. Hive-layout PARTITIONED
@@ -67,56 +69,11 @@ object DeltaInterchange {
 
   private val mapper = new ObjectMapper()
 
-  /** Export the table's LATEST snapshot. Refuses MERGE-ON-READ delete
-    * files (Delta models deletes by file rewrite; run `compact()` first)
-    * — silently dropping them would resurrect deleted rows. */
-  def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit = {
-    val snap = table.snapshot()
-    require(snap.deleteFiles.isEmpty,
-      "export requires a compacted table: Delta has no equality-delete files — " +
-        "run compact() so deletes are materialized into rewritten data files")
-    val meta = snap.meta.getOrElse(
-      throw new IllegalStateException("table has no meta action (not created)"))
-    val dest = Paths.get(destDir)
-    val logDir = dest.resolve("_delta_log")
-    Files.createDirectories(logDir)
-
-    val actions = scala.collection.mutable.Buffer.empty[String]
-    actions += protocolJson(meta.changelog)
-    actions += metaActionJson(meta.schema, meta.changelog)
-
-    snap.txns.toSeq.sortBy(_._1).foreach { case (appId, v) => actions += txnJson(appId, v) }
-
-    val partitionKeys = meta.schema.partitionKeys
-    if (partitionKeys.nonEmpty) {
-      // Hive-style partitioned export: the live rows split into one file
-      // per partition tuple under data/, partition columns OUT of the
-      // files — add.partitionValues is the source of truth the importer
-      // projects back (the Delta analog of Iceberg Column Projection)
-      InterchangeMirror.requirePartitionTypes(meta.schema.struct, partitionKeys)
-      val live =
-        if (snap.files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            meta.schema.struct)
-        else spark.read.schema(meta.schema.struct)
-          .parquet(snap.files.map(f => Paths.get(table.dir, f.path).toString): _*)
-      val moved = IcebergInterchange.writeSplitDataFiles(live, destDir,
-        partitionKeys, meta.schema.struct, None,
-        (n, _, _) => f"part-$n%05d.parquet")
-      val rows = InterchangeMirror.countRows(spark, moved.map(_._1.toString))
-      moved.foreach { case (out, part, _) =>
-        actions += splitAddActionJson(s"data/${out.getFileName}",
-          Files.size(out), rows(out.toAbsolutePath.toString), part, partitionKeys)
-      }
-    } else {
-      // merge-written files carry rows = -1 (unknown) in the native log;
-      // Delta stats need the real count
-      val rows = InterchangeMirror.resolveRowCounts(spark, table.dir, snap.files)
-      snap.files.sortBy(_.path).foreach(f => actions += copyAdd(table, dest, meta.schema, f, rows))
-    }
-    writeCommit(logDir, 0L, actions.toSeq)
-  }
+  /** Export the table's head snapshot as the [[mirror]]'s first commit
+    * ([[InterchangeMirror.Format.export]]). Refuses MERGE-ON-READ delete
+    * files: Delta models deletes by file rewrite, so run `compact()` first. */
+  def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit =
+    MirrorFormat.export(spark, table, destDir)
 
   /** `add` action for a SPLIT partitioned data file: partitionValues carry
     * the tuple (all strings, the spec's serialization; null stays null),
@@ -306,9 +263,9 @@ object DeltaInterchange {
         val actions = scala.collection.mutable.Buffer.empty[String]
         if (deltaV == 0L) actions += protocolJson(d.meta.changelog)
         if (d.schemaChanged) actions += metaActionJson(d.schema, d.meta.changelog)
-        // the table's OWN txn actions forward too (export already does):
-        // exactly-once bookkeeping must survive continuous interchange, so
-        // a sink resuming from the Delta mirror skips replayed batches
+        // the table's OWN txn actions forward too: exactly-once bookkeeping
+        // must survive interchange, so a sink resuming from the Delta
+        // mirror skips replayed batches
         d.newTxns.foreach { case (appId, ver) => actions += txnJson(appId, ver) }
         actions += txnJson(MirrorAppId, d.version)
         if (d.partitioned) actions ++= partitionedActions(d)

@@ -23,9 +23,11 @@ import scala.jdk.CollectionConverters._
   * files (`manifest_entry`/`data_file` records, field-ids 0–4/100–134)
   * pointing at plain parquet data files.
   *
-  *  - [[export]]: materialize a [[LakehouseTable]] snapshot as a one-shot
-  *    Iceberg table (single snapshot, one manifest of ADDED entries).
-  *    Data files are written without parquet field-ids, so the metadata
+  *  - [[export]]: the [[mirror]]'s first commit, written into an empty
+  *    directory: one snapshot, one manifest of ADDED entries (split files
+  *    under an identity spec for a partitioned table), which a later
+  *    [[mirror]] call continues. Data files carry no parquet field-ids,
+  *    so the metadata
   *    carries `schema.name-mapping.default` — the spec's sanctioned
   *    name-based fallback readers apply to id-less files.
   *  - [[importIceberg]] / [[readTable]]: replay the latest metadata
@@ -644,62 +646,22 @@ object IcebergInterchange {
 
   // ---------------------------------------------------------------- export
 
-  /** Export the table's LATEST snapshot as a complete Iceberg v2 table:
-    * one snapshot, one manifest of ADDED entries. Refuses MERGE-ON-READ
-    * delete files (run `compact()` first) — exporting them as Iceberg
-    * equality deletes needs per-file stats this exporter does not write,
-    * and silently dropping them would resurrect deleted rows. */
-  def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit = {
-    val snap = table.snapshot()
-    require(snap.deleteFiles.isEmpty,
-      "export requires a compacted table: run compact() so MERGE-ON-READ " +
-        "deletes are materialized into rewritten data files")
-    val meta = snap.meta.getOrElse(
-      throw new IllegalStateException("table has no meta action (not created)"))
-    val (schemaNode, lastCol) = icebergSchema(meta.schema.struct, 0)
-    val rows = InterchangeMirror.resolveRowCounts(spark, table.dir, snap.files)
-    val snapshotId = table.latestVersion() + 1
-    val entries = snap.files.sortBy(_.path).map { f =>
-      val (out, size) = copyFile(table, destDir, f.path)
-      Entry(Added, snapshotId, 1L, out.toString, rows(f.path), size,
-        bounds = boundsOf(f.stats, meta.schema.struct))
-    }
-    writeOneSnapshotTable(destDir, schemaNode, lastCol, snapshotId, entries,
-      Map(MirrorProperty -> table.latestVersion().toString), Some(table.latestVersion()))
-  }
+  /** Export the table's head snapshot as the [[mirror]]'s first commit
+    * ([[InterchangeMirror.Format.export]]): one snapshot whose manifest
+    * ADDs every live file. Refuses MERGE-ON-READ delete files (run
+    * `compact()` first). */
+  def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit =
+    MirrorFormat.export(spark, table, destDir)
 
-  /** Write a complete one-snapshot v2 table (metadata version 1): one
-    * manifest of ADDED `entries`, its manifest list and the metadata, with
-    * an identity partition spec when `partTypes` is non-empty. */
-  private def writeOneSnapshotTable(destDir: String, schemaNode: ObjectNode,
-      lastCol: Int, snapshotId: Long, entries: Seq[Entry], props: Map[String, String],
-      lakehouseVersion: Option[Long], partTypes: Seq[(String, DataType)] = Nil,
-      specJson: String = "[]"): Unit = {
-    Files.createDirectories(metadataDir(destDir))
-    val mPath = metadataDir(destDir).resolve(s"m-$snapshotId-0.avro")
-    writeManifest(mPath, mapper.writeValueAsString(schemaNode), entries,
-      partitionTypes = partTypes, partitionSpecJson = specJson)
-    val info = ManifestInfo(mPath, Files.size(mPath), 1L, 1L, snapshotId, entries)
-    val listPath = metadataDir(destDir).resolve(s"snap-$snapshotId.avro")
-    writeManifestList(listPath, snapshotId, None, 1L, Seq(manifestListRecord(info)))
-    val root = baseMetadata(destDir, Seq(schemaNode), 0, lastCol,
-      props + ("schema.name-mapping.default" -> nameMapping(schemaNode)))
-    if (partTypes.nonEmpty) {
-      val specs = root.putArray("partition-specs") // replace the empty default
-      specs.add(mapper.readTree(s"""{"spec-id":0,"fields":$specJson}"""))
-      root.put("last-partition-id", 999 + partTypes.size)
-    }
-    putSnapshots(root, destDir, 1L, snapshotId,
-      Seq(snapshotNode(snapshotId, -1L, 1L, listPath, 0, "append", lakehouseVersion)), 0)
-    writeMetadata(destDir, 1, root)
-  }
-
+  /** A snapshot's manifest list. `parentId` follows [[snapshotNode]]'s
+    * rule (< 0: none), so the list and the metadata node name the same
+    * parent. */
   private def writeManifestList(listPath: Path, snapshotId: Long,
-      parentId: Option[Long], seq: Long, records: Seq[GenericRecord]): Unit =
+      parentId: Long, seq: Long, records: Seq[GenericRecord]): Unit =
     writeAvro(listPath, manifestFileSchema, Map(
       "format-version" -> "2", "snapshot-id" -> snapshotId.toString,
       "sequence-number" -> seq.toString) ++
-      parentId.map(p => "parent-snapshot-id" -> p.toString), records)
+      Option.when(parentId >= 0)("parent-snapshot-id" -> parentId.toString), records)
 
   /** One entry of the metadata `snapshots` list (`parentId` < 0: none). */
   private def snapshotNode(snapshotId: Long, parentId: Long, seq: Long,
@@ -739,15 +701,6 @@ object IcebergInterchange {
       .put("metadata-file", metadataDir(destDir).resolve(s"v$mv.metadata.json").toString))
   }
 
-  /** Export a DataFrame as an identity-partitioned Iceberg v2 table: one
-    * snapshot whose manifest entries carry the spec's per-file partition
-    * struct (partition field-ids 1000+) under an identity-transform
-    * partition spec. Data files are written WITHOUT the partition
-    * columns — the spec's Column Projection rule restores them from
-    * partition metadata on read (what [[importIceberg]] does), so each
-    * constant is stored once per FILE, not once per row, and partition
-    * pruning needs no file I/O. Partition source columns are bounded to
-    * int/long/string/boolean; anything else refuses loudly. */
   /** Split `df` into one parquet file per partition tuple (and optional
     * integer `extraCol`, consumed by the split and NOT part of the public
     * layout) under `dest/data/`, dropping the partition columns from the
@@ -836,6 +789,15 @@ object IcebergInterchange {
     moved
   }
 
+  /** Export a DataFrame as an identity-partitioned Iceberg v2 table: one
+    * snapshot whose manifest entries carry the spec's per-file partition
+    * struct (partition field-ids 1000+) under an identity-transform
+    * partition spec. Data files are written WITHOUT the partition
+    * columns — the spec's Column Projection rule restores them from
+    * partition metadata on read (what [[importIceberg]] does), so each
+    * constant is stored once per FILE, not once per row, and partition
+    * pruning needs no file I/O. Partition source columns are bounded to
+    * int/long/string/boolean; anything else refuses loudly. */
   def exportPartitioned(spark: SparkSession, df: DataFrame, destDir: String,
       partitionCols: Seq[String]): Unit = {
     val schema = df.schema
@@ -862,8 +824,21 @@ object IcebergInterchange {
       }
       mapper.writeValueAsString(arr)
     }
-    writeOneSnapshotTable(destDir, schemaNode, lastCol, snapshotId, entries,
-      Map.empty, None, partTypes, specJson)
+    Files.createDirectories(metadataDir(destDir))
+    val mPath = metadataDir(destDir).resolve(s"m-$snapshotId-0.avro")
+    writeManifest(mPath, mapper.writeValueAsString(schemaNode), entries,
+      partitionTypes = partTypes, partitionSpecJson = specJson)
+    val info = ManifestInfo(mPath, Files.size(mPath), 1L, 1L, snapshotId, entries)
+    val listPath = metadataDir(destDir).resolve(s"snap-$snapshotId.avro")
+    writeManifestList(listPath, snapshotId, -1L, 1L, Seq(manifestListRecord(info)))
+    val root = baseMetadata(destDir, Seq(schemaNode), 0, lastCol,
+      Map("schema.name-mapping.default" -> nameMapping(schemaNode)))
+    val specs = root.putArray("partition-specs") // replace the empty default
+    specs.add(mapper.readTree(s"""{"spec-id":0,"fields":$specJson}"""))
+    root.put("last-partition-id", 999 + partTypes.size)
+    putSnapshots(root, destDir, 1L, snapshotId,
+      Seq(snapshotNode(snapshotId, -1L, 1L, listPath, 0, "append", None)), 0)
+    writeMetadata(destDir, 1, root)
   }
 
   // ---------------------------------------------------------------- import
@@ -1143,12 +1118,6 @@ object IcebergInterchange {
     else spark.read.schema(schema).parquet(files.toSeq: _*)
   }
 
-  /** Read the live table state as a DataFrame under the metadata schema,
-    * applying equality deletes by the spec's sequence rule: a delete at
-    * sequence S masks matching rows in data files with sequence < S (so a
-    * key deleted then re-written survives). The apply is one broadcastable
-    * hash join on the equality columns — per key, only the MAX delete
-    * sequence matters, so deletes aggregate to one row per key first. */
   /** Snapshot ids retained in the table metadata, oldest first — the
     * discoverable range [[readTable]]'s time travel accepts. */
   def snapshotIds(srcDir: String): Seq[Long] = {
@@ -1158,13 +1127,6 @@ object IcebergInterchange {
       .map(_.get("snapshot-id").asLong()).toSeq.sorted
   }
 
-  /** Top-level (name, field-id) pairs of each data file's parquet FOOTER —
-    * O(files) driver-side metadata reads, no data scan, parallelized on a
-    * bounded pool. This recovers the per-file schema identity Iceberg
-    * manifests do not carry (unlike Paimon's per-file `schemaId`,
-    * `PaimonInterchange.importPaimon`): a table whose retained history
-    * spans a RENAME has live files under BOTH names, and only the footer
-    * says which name each file stores. */
   /** One footer column's identity: (name, Iceberg field id if stamped,
     * physical type spelling). The type is part of the identity so files
     * written under a pre-promotion type (int32 before an int→long
@@ -1173,6 +1135,13 @@ object IcebergInterchange {
     * misread the other's pages. */
   private[sinks] type FooterField = (String, Option[Int], String)
 
+  /** Top-level (name, field-id) pairs of each data file's parquet FOOTER —
+    * O(files) driver-side metadata reads, no data scan, parallelized on a
+    * bounded pool. This recovers the per-file schema identity Iceberg
+    * manifests do not carry (unlike Paimon's per-file `schemaId`,
+    * `PaimonInterchange.importPaimon`): a table whose retained history
+    * spans a RENAME has live files under BOTH names, and only the footer
+    * says which name each file stores. */
   private def footerFields(spark: SparkSession, files: Seq[String])
       : Map[String, Seq[FooterField]] = {
     lazy val conf = spark.sessionState.newHadoopConf()
@@ -1263,6 +1232,12 @@ object IcebergInterchange {
       }: _*)
   }
 
+  /** Read the live table state as a DataFrame under the metadata schema,
+    * applying equality deletes by the spec's sequence rule: a delete at
+    * sequence S masks matching rows in data files with sequence < S (so a
+    * key deleted then re-written survives). The apply is one broadcastable
+    * hash join on the equality columns — per key, only the MAX delete
+    * sequence matters, so deletes aggregate to one row per key first. */
   def importIceberg(spark: SparkSession, srcDir: String): DataFrame =
     importIceberg(spark, srcDir, None)
 
@@ -1541,7 +1516,7 @@ object IcebergInterchange {
       }
     }
     val listPath = metadataDir(destDir).resolve(s"snap-$snapshotId.avro")
-    writeManifestList(listPath, snapshotId, None, newSeq,
+    writeManifestList(listPath, snapshotId, curId, newSeq,
       carried :+ manifestListRecord(newInfo))
     root.put("format-version", 3)
     root.put("last-sequence-number", newSeq)
@@ -1550,7 +1525,7 @@ object IcebergInterchange {
     val main = refs.withObject("/main")
     main.put("snapshot-id", snapshotId); main.put("type", "branch")
     root.withArray[ArrayNode]("snapshots").add(
-      snapshotNode(snapshotId, -1L, newSeq, listPath, schemaId, "delete", None))
+      snapshotNode(snapshotId, curId, newSeq, listPath, schemaId, "delete", None))
     root.withArray[ArrayNode]("snapshot-log")
       .addObject().put("timestamp-ms", 0L).put("snapshot-id", snapshotId)
     writeMetadata(destDir, v + 1, root)
@@ -1837,7 +1812,7 @@ object IcebergInterchange {
         val listed = carried ++ rewritten ++ addedManifest ++ deleteManifest
         manifests = listed.filter(_.entries.exists(_.status != Deleted)).toVector
         val listPath = mdir.resolve(s"snap-$snapshotId.avro")
-        writeManifestList(listPath, snapshotId, Some(currentSnapshotId), lastSeq,
+        writeManifestList(listPath, snapshotId, currentSnapshotId, lastSeq,
           listed.map(manifestListRecord))
         val operation =
           if (removes.isEmpty && delRemoves.isEmpty && delAdds.nonEmpty &&

@@ -18,6 +18,10 @@ import java.nio.file.{Files, Path, Paths}
   * snapshots; a [[Format]] owns only its commit writer, its manifest or
   * action codec, how it records a version that changed no files, and its
   * maintenance.
+  *
+  * An export is the same writer's first commit: [[Format.export]] hands
+  * it one diff from nothing to the head snapshot, so the destination it
+  * leaves is a mirror that a later `mirror` call continues.
   */
 private[sinks] object InterchangeMirror {
 
@@ -35,8 +39,9 @@ private[sinks] object InterchangeMirror {
     var sinceCompaction = 0
   }
 
-  /** One lakehouse version against its predecessor (`prev` is None for
-    * the table's first mirrored version). */
+  /** Lakehouse version `version` against `prev`, the last version the
+    * destination holds (None: an empty destination). A mirror diffs
+    * consecutive versions; an export diffs the head against nothing. */
   final class VersionDiff(table: LakehouseTable, val version: Long,
       val prev: Option[Snapshot], val cur: Snapshot, val meta: Meta) {
     def schema: TableSchema = meta.schema
@@ -70,9 +75,13 @@ private[sinks] object InterchangeMirror {
       cur.txns.toSeq.filter { case (a, v) => !before.get(a).contains(v) }.sortBy(_._1)
     }
     def schemaChanged: Boolean = !prev.flatMap(_.meta).map(_.schema.struct).contains(struct)
-    /** Row-level change files of a changelog table's commit. */
+    /** Row-level change files of a changelog table's commit. Only a diff
+      * that spans exactly one version has them: the change files of one
+      * commit describe that commit, not a jump over several. */
     lazy val changeFiles: Seq[String] =
-      if (meta.changelog) table.changeFilesOf(version) else Seq.empty
+      if (meta.changelog && prev.fold(-1L)(_.version) == version - 1)
+        table.changeFilesOf(version)
+      else Seq.empty
   }
 
   /** One destination, opened for one mirror call. */
@@ -95,6 +104,27 @@ private[sinks] object InterchangeMirror {
     final def mirror(spark: SparkSession, table: LakehouseTable, destDir: String): Int =
       run(spark, table, destDir, this)
 
+    /** Write the table's head snapshot into an empty destination as the
+      * mirror's first commit. Refuses MERGE-ON-READ delete files: in one
+      * diff over the whole history a delete file would land at the same
+      * sequence as the rows it masks, and dropping it would resurrect
+      * deleted rows. Refuses a destination that already records a
+      * mirrored version too. */
+    final def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit = {
+      val head = table.latestVersion()
+      require(head >= 0, "cannot export a table with no commits")
+      val d = diff(table, head, None)
+      require(d.cur.deleteFiles.isEmpty,
+        "export requires a compacted table: run compact() so MERGE-ON-READ " +
+          "deletes are materialized into rewritten data files")
+      val w = open(spark, table, destDir)
+      require(w.lastMirrored < 0,
+        s"$destDir already records mirrored lakehouse version ${w.lastMirrored} — " +
+          "export writes into an empty destination; mirror continues one")
+      w.write(d)
+      w.finish(head)
+    }
+
     /** Mirror, then run the maintenance `m` asks for. */
     final def sync(spark: SparkSession, table: LakehouseTable, destDir: String,
         m: Maintenance): Unit =
@@ -115,19 +145,24 @@ private[sinks] object InterchangeMirror {
     // fixed for the table's life in every format
     var pinned: Option[Seq[String]] = None
     ((w.lastMirrored + 1) to head).foreach { v =>
-      val cur = table.snapshot(Some(v))
-      val meta = cur.meta.getOrElse(
-        throw new IllegalStateException("table has no meta action (not created)"))
-      val keys = meta.schema.partitionKeys
-      pinned.foreach(pk => require(pk == keys,
-        s"partition keys cannot evolve mid-mirror ($pk -> $keys) — the " +
-          "partition layout is fixed at table creation; refusing"))
-      pinned = Some(keys)
-      requirePartitionTypes(meta.schema.struct, keys)
-      w.write(new VersionDiff(table, v, prev, cur, meta))
-      prev = Some(cur)
+      val d = diff(table, v, prev)
+      pinned.foreach(pk => require(pk == d.partitionKeys,
+        s"partition keys cannot evolve mid-mirror ($pk -> ${d.partitionKeys}) — " +
+          "the partition layout is fixed at table creation; refusing"))
+      pinned = Some(d.partitionKeys)
+      w.write(d)
+      prev = Some(d.cur)
     }
     w.finish(head)
+  }
+
+  /** Lakehouse version `v` against `prev`, its partition columns checked. */
+  private def diff(table: LakehouseTable, v: Long, prev: Option[Snapshot]): VersionDiff = {
+    val cur = table.snapshot(Some(v))
+    val meta = cur.meta.getOrElse(
+      throw new IllegalStateException("table has no meta action (not created)"))
+    requirePartitionTypes(meta.schema.struct, meta.schema.partitionKeys)
+    new VersionDiff(table, v, prev, cur, meta)
   }
 
   /** Partition columns must exist and have a type whose partition-value

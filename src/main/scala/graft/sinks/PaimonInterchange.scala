@@ -44,6 +44,10 @@ import scala.jdk.CollectionConverters._
   *    `commitIdentifier` is Paimon's exactly-once marker and records the
   *    mirrored lakehouse version, so a restarted [[mirror]] resumes from
   *    the destination alone with no side-channel state.
+  *  - [[export]]: the [[mirror]]'s first commit, written into an empty
+  *    directory — the head snapshot's rows as level-0 files at one
+  *    sequence number (the head version), which the importer reads
+  *    without a merge. A later [[mirror]] call continues it.
   *  - '''Import merge''': the reader unions live files and keeps, per key,
   *    the row with the highest `_SEQUENCE_NUMBER`, dropping retract kinds —
   *    real LSM merge-on-read, exercised in the spec against hand-written
@@ -64,8 +68,8 @@ import scala.jdk.CollectionConverters._
   * partition pruning on import) are supported across the WHOLE surface —
   * export, import, the per-commit [[mirror]] (tombstones, changelog,
   * [[readDeltaBetween]]/[[readChangelogBetween]], [[expireSnapshots]]).
-  * APPEND-ONLY (no-PK) tables (plain rows, no merge) are export/import
-  * scope (the mirror needs primary keys). Dynamic buckets, non-identity
+  * APPEND-ONLY (no-PK) tables (plain rows, no merge) export and mirror
+  * as long as no commit removes a file. Dynamic buckets, non-identity
   * partitioning, and non-parquet data files refuse loudly on import.
   */
 object PaimonInterchange {
@@ -851,8 +855,6 @@ object PaimonInterchange {
     df.select(keyCols ++ sys ++ values :+ bucketCol(pks, buckets).as("__pm_bucket"): _*)
   }
 
-  /** Per-bucket key bounds as BinaryRows — real bounds for a single
-    * BIGINT/INT key, the empty row otherwise (disables key pruning only). */
   /** One written key-value data file: its metadata, its BinaryRow key
     * bounds, and (when tracked) the SOURCE lakehouse bucket whose rows it
     * carries — the mirror's sidecar granularity. */
@@ -1036,70 +1038,13 @@ object PaimonInterchange {
 
   // ----------------------------------------------------------------- export
 
-  /** Export the table's LATEST snapshot as a complete Paimon table: one
-    * snapshot whose delta manifest ADDs one max-level key-value file per
-    * (partition, bucket) (fully merged state — the no-overlap fast path on
-    * read). Identity partitions (the schema's partitionKeys) write the
-    * public `p1=v1/…/bucket-N` layout with the partition tuple in every
-    * manifest entry's `_PARTITION` BinaryRow; the LSM key is Paimon's
-    * TRIMMED primary key (pk minus partition fields). A table WITHOUT
-    * primary keys exports as a Paimon APPEND table: plain rows, no
-    * key-value system columns, level 0. MOR delete files refuse (compact
-    * first), exactly like the Delta/Iceberg exporters. */
-  def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit = {
-    val snap = table.snapshot()
-    require(snap.deleteFiles.isEmpty,
-      "export requires a compacted table: run compact() so MERGE-ON-READ " +
-        "deletes are materialized into rewritten data files")
-    val meta = snap.meta.getOrElse(
-      throw new IllegalStateException("table has no meta action (not created)"))
-    val struct = meta.schema.struct
-    val pks = meta.schema.primaryKeys
-    val partitionKeys = meta.schema.partitionKeys
-    val buckets = meta.buckets
-    val schemaId = ensureSchema(destDir, struct, pks, buckets, partitionKeys)
-    val partTypes = partitionKeys.map(struct(_).dataType)
-    val live =
-      if (snap.files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], struct)
-      else spark.read.schema(struct)
-        .parquet(snap.files.map(f => Paths.get(table.dir, f.path).toString): _*)
-    val seq = math.max(table.latestVersion(), 0L)
-    val keys = pks.filterNot(partitionKeys.contains)
-    val (rows, level) =
-      if (pks.isEmpty)
-        // APPEND table: plain rows, round-robin bucket spread (Paimon's
-        // bucket-key-less append distribution), level 0
-        (live.select(struct.fieldNames.map(col).toSeq :+
-          pmod(spark_partition_id(), lit(buckets)).as("__pm_bucket"): _*), 0)
-      else
-        (toKeyValue(live, struct, keys, seq, KindInsert, buckets, partitionKeys), 5)
-    val files = writeKeyValueFiles(spark, destDir, rows,
-      keys, struct, seq, schemaId, level = level, tag = "export", partitionKeys)
-    val mMeta = writeManifest(destDir, "manifest-export-0", schemaId,
-      files.map(w => entryRecord(Add, buckets, w.file, w.minKey, w.maxKey, partTypes)))
-    writeManifestList(destDir, "manifest-list-export-base", Nil)
-    writeManifestList(destDir, "manifest-list-export-delta", Seq(mMeta))
-    // Sidecar: unpartitioned, the Paimon bucket IS the lakehouse bucket
-    // (both hash the full pk), so each file maps to exactly its sources.
-    // Partitioned, an exported (partition, bucket) file spans MANY
-    // lakehouse buckets (trimmed-key hash vs full-pk hash) — it maps to
-    // every source file, and a resumed [[mirror]]'s partial-source-death
-    // rescue cuts it apart on the first source rewrite. The one-file-per-
-    // (partition, bucket) level-5 layout is kept either way: Paimon's
-    // level>0 sorted-run invariant forbids overlapping files in a level.
-    writeSourceTracking(destDir, 1L, files.map { w =>
-      w.file.fileName -> (
-        if (partitionKeys.isEmpty) snap.files.filter(_.bucket == w.file.bucket)
-        else snap.files).map(_.path)
-    }.toMap)
-    val total = files.map(_.file.rows).sum
-    writeSnapshot(destDir, 1, snapshotNode(1, schemaId,
-      "manifest-list-export-base", "manifest-list-export-delta",
-      commitIdentifier = table.latestVersion(), commitKind = "APPEND",
-      totalRecords = total, deltaRecords = total))
-  }
+  /** Export the table's head snapshot as the [[mirror]]'s first commit
+    * ([[InterchangeMirror.Format.export]]): one snapshot of level-0 files
+    * at one sequence number, so the importer skips the LSM merge. A table
+    * WITHOUT primary keys exports as a Paimon APPEND table. Refuses
+    * MERGE-ON-READ delete files (run `compact()` first). */
+  def export(spark: SparkSession, table: LakehouseTable, destDir: String): Unit =
+    MirrorFormat.export(spark, table, destDir)
 
   // ------------------------------------------------------------- compaction
 
@@ -1525,8 +1470,8 @@ object PaimonInterchange {
         val dataFiles =
           if (adds.isEmpty) Nil
           else if (isAppend)
-            // append shape (the export's pk-less path): plain rows, no
-            // key-value system columns, round-robin bucket spread
+            // append shape: plain rows, no key-value system columns,
+            // round-robin bucket spread
             writeKeyValueFiles(spark, destDir,
               readAdds.select(struct.fieldNames.map(col).toSeq :+
                   pmod(spark_partition_id(), lit(buckets)).as("__pm_bucket"): _*),
@@ -1570,15 +1515,16 @@ object PaimonInterchange {
           }.distinctBy(_.fileName)
 
         // PARTIAL source death: a dead mirrored file some of whose sources
-        // SURVIVE this commit. Only an export-seeded PARTITIONED sidecar
-        // can produce one (export writes one file per (partition, Paimon
-        // bucket) spanning many lakehouse buckets; mirror-written files map
-        // to exactly one). Its surviving rows — those whose full-pk hash
-        // lands outside the removed lakehouse buckets — are re-written as
-        // new level-0 adds at their ORIGINAL per-row sequence before the
-        // file goes dead, so a whole-bucket source rewrite never drops
-        // other buckets' rows. O(partially-dead files), and only on the
-        // first rewrites after an export seed.
+        // SURVIVE this commit. Only a [[compact]]ed PARTITIONED mirror can
+        // produce one (compaction merges a (partition, Paimon bucket)'s
+        // files, which span many lakehouse buckets, into one file that
+        // inherits all their sources; mirror-written files map to exactly
+        // one). Its surviving rows — those whose full-pk hash lands outside
+        // the removed lakehouse buckets — are re-written as new level-0
+        // adds at their ORIGINAL per-row sequence before the file goes
+        // dead, so a whole-bucket source rewrite never drops other buckets'
+        // rows. O(partially-dead files), and only on the first rewrites
+        // after a compaction.
         val removedBuckets = removes.map(_.bucket).toSet
         val rescueFiles = deadMirrored
           .filter(f => track(f.fileName).exists(s => !removedNames.contains(s)))

@@ -5,14 +5,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Path, Paths}
 
-/** Machinery shared by the Delta and Iceberg PARTITIONED mirrors: both
-  * rewrite each lakehouse commit's adds into Hive/identity-partitioned
-  * split files and map the lakehouse's whole-bucket COW removals onto
-  * those split files by NAME — the source bucket rides in the file name,
-  * so no sidecar is needed. Keeping the regex, the whole-bucket-removal
-  * invariant, and the split job in one place means a fix to the removal
-  * model cannot drift between the two formats.
-  */
 /** Driver-side parquet footer access shared by the mirrors and the
   * Iceberg importer. Local paths read through parquet's plain-NIO
   * `LocalInputFile` — the Hadoop input path costs ~4x per footer (filesystem
@@ -51,6 +43,14 @@ private[sinks] object ParquetFooters {
   }
 }
 
+/** Machinery shared by the Delta and Iceberg PARTITIONED mirrors: both
+  * rewrite each lakehouse commit's adds into Hive/identity-partitioned
+  * split files and map the lakehouse's whole-bucket COW removals onto
+  * those split files by NAME — the source bucket rides in the file name,
+  * so no sidecar is needed. Keeping the regex, the whole-bucket-removal
+  * invariant, and the split job in one place means a fix to the removal
+  * model cannot drift between the two formats.
+  */
 private[sinks] object PartitionedMirror {
 
   /** Mirrored split-file names encode the SOURCE lakehouse bucket (the

@@ -202,14 +202,6 @@ object TrainingData {
 
   // ------------------------------------------------------------- decontamination
 
-  /** Strict lowercase word k-grams (documents with fewer than k words yield
-    * none — no short-text fallback; this is the decontamination contract, not
-    * the LSH shingle contract). Evaluated by the one-pass native
-    * [[graft.functions.CatalystExprs.StrictWordGramsExpr]] (stays inside
-    * whole-stage codegen); [[strictWordGramsHof]] keeps the higher-order
-    * formulation the DuckDB oracle mirrors, and the two are asserted
-    * equivalent in TrainingDataSpec.
-    */
   /** Budgeted mixture sampling — the "data recipe" step of a corpus build
     * (domain weights expressed as per-domain TOKEN budgets): within each
     * domain, documents are taken in quality-descending order (ties to the
@@ -284,6 +276,14 @@ object TrainingData {
       .drop(keyCol)
   }
 
+  /** Strict lowercase word k-grams (documents with fewer than k words yield
+    * none — no short-text fallback; this is the decontamination contract, not
+    * the LSH shingle contract). Evaluated by the one-pass native
+    * [[graft.functions.CatalystExprs.StrictWordGramsExpr]] (stays inside
+    * whole-stage codegen); [[strictWordGramsHof]] keeps the higher-order
+    * formulation the DuckDB oracle mirrors, and the two are asserted
+    * equivalent in TrainingDataSpec.
+    */
   def strictWordGrams(text: Column, k: Int): Column =
     graft.functions.CatalystExprs.strictWordGrams(text, k)
 

@@ -50,7 +50,10 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     val want = t.read()
     assert(back.exceptAll(want).isEmpty && want.exceptAll(back).isEmpty)
     val snap = DeltaInterchange.readLog(spark, dest)
-    assert(snap.txns == Map("app-a" -> 7L), "exactly-once bookkeeping must survive")
+    assert(snap.txns - DeltaInterchange.MirrorAppId == Map("app-a" -> 7L),
+      "exactly-once bookkeeping must survive")
+    assert(snap.txns(DeltaInterchange.MirrorAppId) == t.latestVersion(),
+      "the export records the mirror's progress")
     assert(snap.numRecords == 120L)
     assert(snap.schema == schema.struct)
   }
@@ -207,11 +210,17 @@ class DeltaInterchangeSpec extends AnyFunSuite {
     assert(back.filter($"k" === 1L).select($"extra").head().isNullAt(0))
   }
 
-  test("mirror refuses a plain-export directory (it is not a mirror)") {
+  test("mirror refuses a log without its progress txn (not a mirror)") {
     val t = newTable()
     t.merge(Seq((1L, "a")).toDF("k", "v"), spark.range(0).select($"id".as("k")))
     val dest = Files.createTempDirectory("graft_dl_dst").toString
     DeltaInterchange.export(spark, t, dest)
+    // the same log without the mirror's progress txn: a Delta table that
+    // another writer made
+    val log = Paths.get(dest, "_delta_log", f"${0L}%020d.json")
+    Files.write(log, Files.readAllLines(log).asScala
+      .filterNot(_.contains(DeltaInterchange.MirrorAppId))
+      .mkString("", "\n", "\n").getBytes(UTF_8))
     val e = intercept[IllegalStateException] { DeltaInterchange.mirror(spark, t, dest) }
     assert(e.getMessage.contains("not a mirror"))
   }

@@ -936,6 +936,16 @@ class IcebergInterchangeSpec extends AnyFunSuite {
     val after = IcebergInterchange.importIceberg(spark, dest)
       .as[(Long, String)].collect().toSet
     assert(after == before -- dead, s"DV must mask exactly $dead")
+    // the DV snapshot commits on top of the export's snapshot: its metadata
+    // node and its manifest list both name that parent
+    val dvSnapshot = metadata(dest).get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == IcebergInterchange.snapshotIds(dest).max).get
+    assert(dvSnapshot.get("parent-snapshot-id").asLong() == preDvSnapshot)
+    val dvList = new DataFileReader[GenericRecord](
+      Paths.get(dvSnapshot.get("manifest-list").asText()).toFile,
+      new GenericDatumReader[GenericRecord]())
+    try assert(dvList.getMetaString("parent-snapshot-id") == preDvSnapshot.toString)
+    finally dvList.close()
     // time travel to the pre-DV snapshot still sees every row
     assert(IcebergInterchange.importIceberg(spark, dest, Some(preDvSnapshot))
       .as[(Long, String)].collect().toSet == before)

@@ -16,7 +16,11 @@ import scala.jdk.CollectionConverters._
   * commit sequence is mirrored into Delta, Iceberg and Paimon twice — once
   * after every commit, once at the end — and a canonical dump of every
   * destination must equal the committed one under
-  * `src/test/resources/interchange-golden/`.
+  * `src/test/resources/interchange-golden/`. The pk and partitioned tables
+  * also pin the export's shape: an export partway through the sequence,
+  * continued by a mirror of the commits after it. Each export point has
+  * every live file in one lakehouse commit directory: files of several
+  * commits sort by their random directory names.
   *
   * The dump is the destination's file listing plus each file's content:
   * log / metadata / snapshot text byte-for-byte, Avro files as their
@@ -42,21 +46,26 @@ class InterchangeGoldenSpec extends AnyFunSuite {
 
   private val noKeys = spark.range(0).select($"id".as("k"))
 
-  /** One mirror target: a format's mirror function into its own directory. */
+  /** One mirror target: a format's mirror (and export) function into its
+    * own directory. */
   private final case class Target(name: String, dir: Path,
-      mirror: (LakehouseTable, String) => Int) {
-    val calls = scala.collection.mutable.Buffer.empty[Int]
-    def sync(t: LakehouseTable): Unit = calls += mirror(t, dir.toString)
+      mirror: (LakehouseTable, String) => Int,
+      export: (LakehouseTable, String) => Unit) {
+    val calls = scala.collection.mutable.Buffer.empty[String]
+    def sync(t: LakehouseTable): Unit = calls += mirror(t, dir.toString).toString
+    /** Seed the directory with an export, which a later sync continues. */
+    def exportTo(t: LakehouseTable): Unit = { export(t, dir.toString); calls += "export" }
   }
 
   private def targets(root: Path, kind: String, formats: Seq[String],
       mode: String): Seq[Target] = formats.map { f =>
-    val run: (LakehouseTable, String) => Int = f match {
-      case "delta" => (t, d) => DeltaInterchange.mirror(spark, t, d)
-      case "iceberg" => (t, d) => IcebergInterchange.mirror(spark, t, d)
-      case "paimon" => (t, d) => PaimonInterchange.mirror(spark, t, d)
+    val format = f match {
+      case "delta" => DeltaInterchange.MirrorFormat
+      case "iceberg" => IcebergInterchange.MirrorFormat
+      case "paimon" => PaimonInterchange.MirrorFormat
     }
-    Target(s"$kind-$f-$mode", root.resolve(s"$kind-$f-$mode"), run)
+    Target(s"$kind-$f-$mode", root.resolve(s"$kind-$f-$mode"),
+      format.mirror(spark, _, _), format.export(spark, _, _))
   }
 
   private def isAvro(p: Path): Boolean = {
@@ -164,6 +173,8 @@ class InterchangeGoldenSpec extends AnyFunSuite {
       val step = targets(root, "pk", Seq("delta", "iceberg", "paimon"), "step")
       val end = targets(root, "pk", Seq("delta", "iceberg", "paimon"), "end")
       val Seq(deltaEnd, icebergEnd, paimonEnd) = end
+      val exported = targets(root, "pk", Seq("delta", "iceberg", "paimon"), "export")
+      val (deltaExported, morExported) = exported.partition(_.name.contains("delta"))
       def commit(stepTargets: Seq[Target])(body: => Unit): Unit = {
         body
         stepTargets.foreach(_.sync(t))
@@ -176,6 +187,7 @@ class InterchangeGoldenSpec extends AnyFunSuite {
         .select($"k", concat(lit("a"), $"k").as("v")), noKeys))
       commit(step)(t.merge((1L to 6L).toDF("k")
         .select($"k", concat(lit("b"), $"k").as("v")), noKeys))
+      exported.foreach(_.exportTo(t))
       val evolved = StructType(base.fields :+ StructField("extra", LongType))
       commit(step)(t.updateMeta(TableSchema(evolved, primaryKeys = Seq("k"))))
       commit(step)(t.merge(Seq((7L, "c7", 70L)).toDF("k", "v", "extra"), noKeys,
@@ -185,11 +197,13 @@ class InterchangeGoldenSpec extends AnyFunSuite {
       commit(step)(t.commit(Seq(Txn("app-h", 5L))))
       commit(step)(t.commit(Seq(Txn("app-h", 5L))))
       deltaEnd.sync(t)
+      deltaExported.foreach(_.sync(t))
       // Delta has no equality deletes: only Iceberg and Paimon mirror MOR
       commit(step.filterNot(_.name.contains("delta")))(t.deleteWhere(Seq(2L).toDF("k")))
       icebergEnd.sync(t)
       paimonEnd.sync(t)
-      check(root, t, step ++ end)
+      morExported.foreach(_.sync(t))
+      check(root, t, step ++ end ++ exported)
     }
   }
 
@@ -217,6 +231,7 @@ class InterchangeGoldenSpec extends AnyFunSuite {
       val t = new LakehouseTable(spark, root.resolve("lh").toString)
       val step = targets(root, "partitioned", Seq("delta", "iceberg", "paimon"), "step")
       val end = targets(root, "partitioned", Seq("delta", "iceberg", "paimon"), "end")
+      val exported = targets(root, "partitioned", Seq("delta", "iceberg", "paimon"), "export")
       def commit(body: => Unit): Unit = { body; step.foreach(_.sync(t)) }
       commit(t.create(TableSchema(StructType(Seq(
         StructField("dt", StringType, nullable = false),
@@ -226,10 +241,12 @@ class InterchangeGoldenSpec extends AnyFunSuite {
       commit(t.merge(Seq(("d1", 1L, "a"), ("d1", 2L, "a"), ("d2", 3L, "a"),
         ("d2", 4L, "a")).toDF("dt", "k", "v"), spark.range(0)
         .select(lit("x").as("dt"), $"id".as("k"))))
+      exported.foreach(_.exportTo(t))
       commit(t.merge(Seq(("d1", 1L, "b"), ("d2", 4L, "b"), ("d3", 5L, "b"))
         .toDF("dt", "k", "v"), spark.range(0).select(lit("x").as("dt"), $"id".as("k"))))
       end.foreach(_.sync(t))
-      check(root, t, step ++ end)
+      exported.foreach(_.sync(t))
+      check(root, t, step ++ end ++ exported)
     }
   }
 }

@@ -178,9 +178,15 @@ class PaimonInterchangeSpec extends AnyFunSuite {
     val e0 = mf.head
     assert(e0.get("_KIND").asInstanceOf[Int] == 0)
     val fileRec = e0.get("_FILE").asInstanceOf[org.apache.avro.generic.GenericRecord]
-    assert(fileRec.get("_LEVEL").asInstanceOf[Int] == 5)
+    assert(fileRec.get("_LEVEL").asInstanceOf[Int] == 0,
+      "an export is the mirror's first commit: level-0 files")
     assert(fileRec.get("_MIN_KEY").asInstanceOf[java.nio.ByteBuffer].remaining == 16,
       "single-BIGINT key bounds are real binary rows")
+    // its files share one sequence number: the import takes the no-overlap
+    // fast path, with no merge window in the plan
+    val plan = PaimonInterchange.importPaimon(spark, dest).queryExecution.optimizedPlan
+    assert(plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+      .isEmpty, plan.toString)
   }
 
   test("round trip: export -> import is data-identical") {
@@ -916,21 +922,25 @@ class PaimonInterchangeSpec extends AnyFunSuite {
     assertSame(dest, t)
   }
 
-  test("partitioned mirror resumes from an export: partial death rescues") {
+  test("partitioned mirror after a compaction: partial death rescues") {
     val t = newPartTable()
     val dest = Files.createTempDirectory("graft_pmp_rsc").toString
     val rows = for (dt <- Seq("a", "b"); k <- 1L to 8L) yield (dt, k, s"$dt$k")
     t.merge(rows.toDF("dt", "k", "v"), noPartKeys)
     assert(t.snapshot().files.map(_.bucket).distinct.size == 2,
       "fixture must occupy both lakehouse buckets")
-    PaimonInterchange.export(spark, t, dest)
-    // rewrite ONE lakehouse bucket: the exported (partition, bucket) files
-    // span BOTH lakehouse buckets, so each goes partially dead — without
-    // the rescue, the untouched bucket's rows would silently vanish
+    PaimonInterchange.mirror(spark, t, dest)
+    // compaction merges each (partition, Paimon bucket)'s files, which
+    // carry rows of BOTH lakehouse buckets, into one file
+    assert(PaimonInterchange.compact(spark, dest) > 0)
+    // rewrite ONE lakehouse bucket: each merged file goes partially dead —
+    // without the rescue, the untouched bucket's rows would silently vanish
     t.merge(Seq(("a", 1L, "A1")).toDF("dt", "k", "v"), noPartKeys)
     assert(t.snapshot().files.map(_.bucket).distinct.size == 2,
       "the rewrite must leave the other lakehouse bucket's files live")
     assert(PaimonInterchange.mirror(spark, t, dest) == 1)
+    assert(PaimonInterchange.readTable(dest).files.exists(_.fileName.contains("-r")),
+      "the rewrite must cut a compacted file apart")
     assertSame(dest, t)
     // post-rescue the sidecar is exact per lakehouse bucket: further
     // rewrites kill only their own bucket's mirrored rows
