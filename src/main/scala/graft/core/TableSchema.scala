@@ -14,10 +14,6 @@ final case class TableSchema(
     comment: Option[String] = None) {
 
   def columnNames: Seq[String] = struct.fieldNames.toSeq
-
-  def withPrimaryKeys(pks: String*): TableSchema = copy(primaryKeys = pks)
-  def withPartitionKeys(pks: String*): TableSchema = copy(partitionKeys = pks)
-  def withOption(k: String, v: String): TableSchema = copy(options = options + (k -> v))
 }
 
 object TableSchema {

@@ -218,18 +218,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  // ---------- n-gram Jaccard -------------------------------------------------
-
-  /** Exact word-n-gram Jaccard for a bounded candidate set (e.g. same source
-    * bucket) — the oracle-checkable verifier; candidates come from LSH at scale.
-    */
-  def ngramJaccard(aText: Column, bText: Column, n: Int): Column = {
-    val aSet = array_distinct(TextFunctions.shingles(aText, n))
-    val bSet = array_distinct(TextFunctions.shingles(bText, n))
-    size(array_intersect(aSet, bSet)).cast("double") /
-      size(array_union(aSet, bSet)).cast("double")
-  }
-
   // ---------- duplicate clustering (connected components) --------------------
 
   /** Label every node of a near-dup pair graph with its connected component's

@@ -44,11 +44,4 @@ object VectorFunctions {
     require(bits <= 63, "signature must fit a long")
     CatalystExprs.hyperplaneSig(vec, dim, bits, seed)
   }
-
-  /** Split a signature into `bands` band values (for LSH banding). */
-  def signatureBands(sig: Column, bits: Int, bands: Int): Seq[Column] = {
-    val perBand = bits / bands
-    val mask = (1L << perBand) - 1
-    (0 until bands).map(b => sig.bitwiseAND(lit(mask << (b * perBand))).as(s"band_$b"))
-  }
 }

@@ -117,9 +117,6 @@ object ChunkSplitter {
         .divide(java.math.BigDecimal.valueOf(rowCount), 4, java.math.RoundingMode.CEILING)
         .doubleValue()
 
-  def distributionFactor(min: Long, max: Long, rowCount: Long): Double =
-    distributionFactorOf(min, max, rowCount)
-
   /** `splitEvenlySizedChunks` (`MySqlChunkSplitter.java:298-333`): tumble from
     * min in dynamic-chunk-size steps; arithmetic overflow of the key type
     * ends the loop (the reference catches `ArithmeticException` from
@@ -148,15 +145,6 @@ object ChunkSplitter {
     if (unboundedFirst) ending +: splits.toSeq else splits.toSeq :+ ending
   }
 
-  def splitEvenlySizedChunks(
-      min: Long,
-      max: Long,
-      approximateRowCnt: Long,
-      chunkSize: Int,
-      dynamicChunkSize: Int): Seq[ChunkRange] =
-    splitEvenlySizedChunksOf(min, max, approximateRowCnt, chunkSize, dynamicChunkSize)
-      .map(r => ChunkRange(r.start, r.end))
-
   /** `splitUnevenlySizedChunks` (`JdbcSourceChunkSplitter.java:482-510`). */
   def splitUnevenlySizedChunksOf[K](
       probe: KeyProbe[K],
@@ -174,14 +162,6 @@ object ChunkSplitter {
     splits += KeyRange(chunkStart, None)
     splits.toSeq
   }
-
-  def splitUnevenlySizedChunks(
-      probe: KeyProbe[Long],
-      min: Long,
-      max: Long,
-      chunkSize: Int): Seq[ChunkRange] =
-    splitUnevenlySizedChunksOf(probe, min, max, chunkSize)
-      .map(r => ChunkRange(r.start, r.end))
 
   /** `nextChunkEnd` (`MySqlChunkSplitter.java:335-370`): the max of the next
     * `chunkSize` keys INCLUDING the previous boundary; a stalled boundary

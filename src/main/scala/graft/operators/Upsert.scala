@@ -73,17 +73,6 @@ object Upsert {
     splitLatest(latestByKey(env, keyCols.map(keyCol)), keyCols)._1
   }
 
-  /** Multi-table variant: group additionally by the routed sink table id, so a
-    * single pass materializes every routed table (used by `foreachBatch` sinks).
-    * Returns (sinkTableId, payload...) rows.
-    */
-  def materializeRouted(env: DataFrame, keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "upsert materialization requires primary keys")
-    latestByKey(env, col("sinkTableId") +: keyCols.map(keyCol))
-      .filter(!col("__last.__del"))
-      .select(col("sinkTableId"), col("__last.after.*"))
-  }
-
   /** Like [[materialize]] but also returns the keys whose final event was a
     * DELETE — what an external upsert sink needs to issue its deletes.
     * Pure plan builder (no caching): callers consuming BOTH frames should use

@@ -527,7 +527,7 @@ final class PipelineRunner(pdef: PipelineDef)(implicit spark: SparkSession) {
     CdcStream.start(
       readerFor(newSourceId).load(),
       composer,
-      queryName = s"${pdef.name}-${src.tableId.tableName}",
+      queryName = s"${pdef.name}-${checkpointSafe(newSourceId)}",
       checkpointDir = pdef.config.get("checkpoint.dir").map(d => s"$d/$newSourceId"),
       tables = Seq(src.tableId))
   }

@@ -41,7 +41,10 @@ private[sinks] object InterchangeMirror {
 
   /** Lakehouse version `version` against `prev`, the last version the
     * destination holds (None: an empty destination). A mirror diffs
-    * consecutive versions; an export diffs the head against nothing. */
+    * consecutive versions; an export diffs the head against nothing. Files
+    * list in commit order, then by path: every lakehouse commit writes
+    * under a random `data-<uuid>` directory, so a diff over several commits
+    * ordered by path alone would list them in a random order. */
   final class VersionDiff(table: LakehouseTable, val version: Long,
       val prev: Option[Snapshot], val cur: Snapshot, val meta: Meta) {
     def schema: TableSchema = meta.schema
@@ -51,21 +54,22 @@ private[sinks] object InterchangeMirror {
 
     val adds: Seq[AddFile] = {
       val before = prev.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
-      cur.files.filterNot(f => before.contains(f.path)).sortBy(_.path)
+      cur.files.filterNot(f => before.contains(f.path)).sortBy(f => (f.ver, f.path))
     }
     val removes: Seq[AddFile] = {
       val after = cur.files.map(_.path).toSet
-      prev.map(_.files.filterNot(f => after.contains(f.path))).getOrElse(Nil).sortBy(_.path)
+      prev.map(_.files.filterNot(f => after.contains(f.path))).getOrElse(Nil)
+        .sortBy(f => (f.ver, f.path))
     }
     /** MERGE-ON-READ delete files new at / dropped by this version. */
     val delAdds: Seq[EqualityDeleteFile] = {
       val before = prev.map(_.deleteFiles.map(_.path).toSet).getOrElse(Set.empty)
-      cur.deleteFiles.filterNot(f => before.contains(f.path)).sortBy(_.path)
+      cur.deleteFiles.filterNot(f => before.contains(f.path)).sortBy(f => (f.ver, f.path))
     }
     val delRemoves: Seq[EqualityDeleteFile] = {
       val after = cur.deleteFiles.map(_.path).toSet
       prev.map(_.deleteFiles.filterNot(f => after.contains(f.path))).getOrElse(Nil)
-        .sortBy(_.path)
+        .sortBy(f => (f.ver, f.path))
     }
     def filesChanged: Boolean =
       adds.nonEmpty || removes.nonEmpty || delAdds.nonEmpty || delRemoves.nonEmpty

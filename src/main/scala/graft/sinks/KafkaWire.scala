@@ -842,7 +842,6 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
 
   private var serverSocket: Option[ServerSocket] = None
   @volatile private var running = false
-  @volatile private var produceRequests = 0
 
   def start(): Unit = synchronized {
     val ss = new ServerSocket(0, 16, InetAddress.getLoopbackAddress)
@@ -865,7 +864,6 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
   def partitionsOf(topic: String): Int = synchronized(topics.getOrElse(topic, 0))
   def endOffset(topic: String, partition: Int): Long =
     synchronized(ends.getOrElse((topic, partition), 0L))
-  def produceCount: Int = produceRequests
 
   private def ensureTopic(topic: String): Int = synchronized {
     topics.getOrElseUpdate(topic, {
@@ -1154,7 +1152,6 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
 
   private def produceResponse(r: Reader, version: Int): Array[Byte] = {
     require(version == 3, s"produce v$version not supported by the double")
-    produceRequests += 1
     val txnId = r.nullableString() // transactional id
     r.int16() // acks
     r.int32() // timeout

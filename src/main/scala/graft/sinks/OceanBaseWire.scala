@@ -98,9 +98,7 @@ object OceanBaseWire {
 final case class ObQueryResult(
     affected: Long,
     columns: Seq[String],
-    rows: Seq[Seq[Option[String]]]) {
-  def isResultSet: Boolean = columns.nonEmpty
-}
+    rows: Seq[Seq[Option[String]]])
 
 /** MySQL text-protocol client: handshake + COM_QUERY, parsing OK / ERR /
   * text resultsets. One socket per instance; executors open their own. */
@@ -208,12 +206,10 @@ final class OceanBaseServerDouble(
   @volatile private var memstoreLimit = 100L
   @volatile private var server: ServerSocket = _
   @volatile private var running = false
-  private var queryCount0 = 0
 
   def setMemstore(active: Long, limit: Long): Unit = {
     memstoreActive = active; memstoreLimit = limit
   }
-  def queryCount: Int = synchronized(queryCount0)
 
   def start(): Unit = synchronized {
     if (running) return
@@ -401,7 +397,6 @@ final class OceanBaseServerDouble(
       throw new IllegalArgumentException(s"Table '$db.$tbl' doesn't exist"))
 
   private def dispatch(sql0: String): Seq[Array[Byte]] = synchronized {
-    queryCount0 += 1
     val sql = sql0.trim.stripSuffix(";").trim
     val up = sql.toUpperCase
 

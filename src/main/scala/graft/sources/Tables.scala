@@ -15,11 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Required session configs for reading the test data. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events")

@@ -82,8 +82,6 @@ object PgOutput {
     // (xid, changes, in-stream DDL — truncates)
     private var open: Option[(Long, mutable.Buffer[DataChangeEvent], mutable.Buffer[SchemaChangeEvent])] = None
 
-    def knownRelations: Map[Int, Relation] = relations.toMap
-
     def feed(msg: Array[Byte]): Option[Wal2Json.Tx] = {
       val b = ByteBuffer.wrap(msg).order(ByteOrder.BIG_ENDIAN)
       (b.get().toChar: @unchecked) match {

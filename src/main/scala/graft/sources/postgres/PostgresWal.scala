@@ -354,7 +354,4 @@ final class WalChangeSource(
   def confirmedFlushLsn: Lsn = synchronized(Lsn(confirmedFlush))
   /** live WAL record count — what the slot currently retains (test probe). */
   def retainedWalRecords: Int = synchronized(wal.size)
-  /** the retained WAL records themselves — what a replication connection
-    * streams ([[PgReplicationServerDouble]] serves exactly this). */
-  def retainedLog: Seq[LogRecord] = synchronized(wal.toSeq)
 }

@@ -80,19 +80,6 @@ object SqlServerGuidOrder extends Ordering[String] {
 
   def compare(a: String, b: String): Int =
     compareUuids(java.util.UUID.fromString(a), java.util.UUID.fromString(b))
-
-  /** Chunk-splitter key ops for GUID keys: never even-split (no arithmetic
-    * over GUID space), uneven probing under the server's order.
-    */
-  val keyOps: graft.operators.ChunkSplitter.KeyOps[String] =
-    new graft.operators.ChunkSplitter.KeyOps[String] {
-      def numeric = false
-      def minus(a: String, b: String): BigDecimal =
-        throw new UnsupportedOperationException("GUID keys have no arithmetic")
-      def plus(k: String, delta: Int): String =
-        throw new UnsupportedOperationException("GUID keys have no arithmetic")
-      def compare(a: String, b: String): Int = SqlServerGuidOrder.compare(a, b)
-    }
 }
 
 /** One row of a CDC change table, as SQL Server's capture job writes it:

@@ -18,9 +18,9 @@ import scala.jdk.CollectionConverters._
   * destination must equal the committed one under
   * `src/test/resources/interchange-golden/`. The pk and partitioned tables
   * also pin the export's shape: an export partway through the sequence,
-  * continued by a mirror of the commits after it. Each export point has
-  * every live file in one lakehouse commit directory: files of several
-  * commits sort by their random directory names.
+  * continued by a mirror of the commits after it. An export of files from
+  * several lakehouse commits lists them in commit order, so two tables
+  * built the same way export the same dump (the last test pins it).
   *
   * The dump is the destination's file listing plus each file's content:
   * log / metadata / snapshot text byte-for-byte, Avro files as their
@@ -158,13 +158,14 @@ class InterchangeGoldenSpec extends AnyFunSuite {
   /** A fresh root of FIXED path length: Iceberg manifests embed absolute
     * paths, so their byte lengths (which the manifest list records) move
     * with the root's length. */
-  private def withRoot(body: Path => Unit): Unit = {
+  private def withRoot[A](body: Path => A): A = {
     val root = Paths.get("/tmp", "graft-golden-" +
       f"${scala.util.Random.nextLong() & 0xffffffffL}%08x")
     Files.createDirectories(root)
-    body(root)
+    val out = body(root)
     Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(p => Files.delete(p))
+    out
   }
 
   test("pk table: insert, COW update, ADD COLUMN, txn-only commits, MOR delete") {
@@ -248,5 +249,34 @@ class InterchangeGoldenSpec extends AnyFunSuite {
       exported.foreach(_.sync(t))
       check(root, t, step ++ end ++ exported)
     }
+  }
+
+  test("an export lists the files of several commits in commit order") {
+    // one bucket, six appends of one key each: every live file comes from
+    // its own commit, and the Paimon export tracks all six in one list
+    def exportDumps(): Seq[String] = withRoot { root =>
+      val t = new LakehouseTable(spark, root.resolve("lh").toString)
+      t.create(TableSchema(StructType(Seq(
+        StructField("k", LongType, nullable = false),
+        StructField("v", StringType))), primaryKeys = Seq("k")), buckets = 1)
+      (1L to 6L).foreach(k => t.append(Seq((k, s"a$k")).toDF("k", "v")))
+      val exported = targets(root, "order", Seq("delta", "iceberg", "paimon"), "export")
+      exported.foreach(_.exportTo(t))
+      exported.map(dump(root, t, _))
+    }
+    def versions(s: String): Seq[Long] =
+      "data-L(\\d+)".r.findAllMatchIn(s).map(_.group(1).toLong).toSeq
+    val dumps = exportDumps()
+    val Seq(delta, iceberg, paimon) = dumps.map(_.linesIterator.toSeq)
+    val lists = Map(
+      "Delta add actions" -> Seq(delta.filter(_.startsWith("{\"add\"")).flatMap(versions)),
+      "Iceberg manifest entries" -> Seq(iceberg.filter(_.startsWith("{\"status\"")).flatMap(versions)),
+      "Paimon source lists" -> paimon.filter(_.startsWith("{\"data-"))
+        .flatMap(l => "\\[[^\\]]*\\]".r.findAllIn(l).map(versions)))
+    lists.foreach { case (what, ls) =>
+      assert(ls.exists(_.distinct.size == 6), s"$what name fewer than six commits: $ls")
+      ls.foreach(l => assert(l == l.sorted, s"$what out of commit order: $l"))
+    }
+    assert(exportDumps() == dumps, "two tables built the same way export different dumps")
   }
 }

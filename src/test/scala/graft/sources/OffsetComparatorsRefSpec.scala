@@ -145,27 +145,6 @@ class OffsetComparatorsRefSpec extends AnyFunSuite {
       BJsScope("console.log('apple');", BDoc("_id" -> "banana"))) > 0)
   }
 
-  // ---- OracleChunkSplitterTest (flink-connector-oracle-cdc) ----------------
-
-  // testIsChunkEndGeMax_Rowid_Case:50 + testIsChunkEndLeMax_Rowid_Case:60 —
-  // the reference asks the SERVER (CHARTOROWID ... ORDER BY); server order
-  // is the alphabet-index order implemented locally. The pinned pair
-  // diverges from ASCII order at position 8 ('K' vs '/'), so a plain string
-  // compare would invert it.
-  test("oracle ROWID order matches the server, not ASCII") {
-    val a = "AAAzIdACKAAABWCAAA"
-    val b = "AAAzIdAC/AACWIPAAB"
-    assert(!graft.sources.oracle.OracleRowId.isChunkEndGeMax(a, b))
-    assert(graft.sources.oracle.OracleRowId.isChunkEndLeMax(a, b))
-    assert(a.compareTo(b) > 0) // ASCII disagrees — the mapping is load-bearing
-    assert(graft.sources.oracle.OracleRowId.isChunkEndGeMax(a, a))
-    assert(graft.sources.oracle.OracleRowId.isChunkEndLeMax(a, a))
-    // components decode: same data object (AAAzId), differing file/block/row
-    val (objA, _, _, _) = graft.sources.oracle.OracleRowId.decode(a)
-    val (objB, _, _, _) = graft.sources.oracle.OracleRowId.decode(b)
-    assert(objA == objB)
-  }
-
   // ---- MysqlGtidRecoveryTest (flink-connector-mysql-cdc) -------------------
 
   // testGtidGapsPreservedDuringRecovery:31 — resuming from a GTID set WITH

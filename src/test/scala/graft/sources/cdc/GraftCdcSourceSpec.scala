@@ -379,6 +379,23 @@ class GraftCdcSourceSpec extends AnyFunSuite {
     ChangeSourceRegistry.remove(id)
   }
 
+  test("the change sources chunk on one primary-key column and refuse any other key") {
+    // the reference refuses a PK-less table without a configured chunk key
+    // column; the engine has no such option, so every source needs exactly
+    // one PK column to chunk on
+    Seq(Seq.empty[String], Seq("id", "v")).foreach { pks =>
+      val keyed = schema.copy(primaryKeys = pks)
+      val scripted = intercept[IllegalArgumentException] {
+        new ScriptedChangeSource(TableId.parse("k.t"), keyed, Seq(row(1L, "a")))
+      }
+      assert(scripted.getMessage.contains("scripted source uses a single numeric PK"))
+      val jdbc = intercept[IllegalArgumentException] {
+        new JdbcChangeSource("jdbc:derby:memory:unused", TableId.parse("k.t"), keyed)
+      }
+      assert(jdbc.getMessage.contains("jdbc change source uses a single numeric PK"))
+    }
+  }
+
   test("mid-snapshot resume replays the checkpointed chunk plan and log base") {
     // Run 1 stops after ONE chunk batch (Trigger.Once). The table then
     // mutates: an insert at key 100 changes keyStats so a RECOMPUTED plan

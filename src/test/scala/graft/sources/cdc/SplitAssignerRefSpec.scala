@@ -1,29 +1,32 @@
 package graft.sources.cdc
 
-import graft.core.TableId
 import graft.operators.ChunkSplitter
-import graft.operators.ChunkSplitter.{Config, KeyOps}
-import graft.sources.cdc.SplitAssigner._
+import graft.operators.ChunkSplitter.{Config, KeyOps, KeyRange}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** 1:1 transcription of the reference's container-free split-assigner unit
-  * expectations over the `customer` fixture database
-  * (`flink-connector-mysql-cdc/src/test/.../source/assigners/
-  * MySqlSnapshotSplitAssignerTest.java`, `MySqlHybridSplitAssignerTest.java`,
-  * `MySqlBinlogSplitAssignerTest.java`, `MySqlChunkSplitterTest.java`, and
-  * `source/split/MySqlSplitStateTest.java` +
-  * `FinishedSnapshotSplitInfoTest.java`; fixture data
+/** 1:1 transcription of the reference's split-boundary expectations over the
+  * `customer` fixture database (`flink-connector-mysql-cdc/src/test/.../
+  * source/assigners/MySqlSnapshotSplitAssignerTest.java` and
+  * `MySqlChunkSplitterTest.java`; fixture data
   * `src/test/resources/ddl/customer.sql`). The reference runs these against a
-  * MySQL Testcontainer, but every assertion is a pure function of the fixture
-  * rows — transcribed here against the in-memory catalog, method by method,
-  * with the reference's exact expected split boundaries.
+  * MySQL Testcontainer, but every expected split list is a pure function of
+  * one table's key values: here they run through the engine's own splitter,
+  * `ChunkSplitter.generateSplitsOf` with its in-memory `seqProbe`, whose
+  * `LongOps` instance plans the snapshot chunks of `GraftCdcSource`. The
+  * Int, Decimal and String key cases keep the reference's key-type coverage
+  * on that core. The reference's assigner-model cases (multi-table order,
+  * newly-added tables, the hybrid and log-only assigners, split state) have
+  * no counterpart here: the engine's split plan and its checkpoint are the
+  * micro-batch stream's, pinned by `GraftCdcSourceSpec`.
   */
 class SplitAssignerRefSpec extends AnyFunSuite {
 
-  private val Db = "customer"
-  private def tid(t: String) = TableId.of(Db, t)
-
   // ---- the customer.sql fixture (chunk-key columns only, per-row) ----------
+
+  private final case class TableFixture(
+      name: String,
+      primaryKeys: Seq[String],
+      rows: Seq[Map[String, Any]])
 
   private def intRows(col: String, vs: Seq[Int]): Seq[Map[String, Any]] =
     vs.map(v => Map(col -> (v: Any)))
@@ -32,45 +35,36 @@ class SplitAssignerRefSpec extends AnyFunSuite {
     Seq(101, 102, 103, 109, 110, 111, 118, 121, 123, 1009, 1010, 1011, 1012,
       1013, 1014, 1015, 1016, 1017, 1018, 1019, 2000)
   private val customers = TableFixture(
-    tid("customers"),
-    columns = Seq("id", "name", "address", "phone_number"),
-    primaryKeys = Seq("id"),
-    rows = customersIds.zipWithIndex.map { case (id, i) =>
+    "customers", Seq("id"),
+    customersIds.zipWithIndex.map { case (id, i) =>
       Map[String, Any]("id" -> id, "name" -> s"user_${i + 1}")
     })
 
-  private val customersEvenDist = TableFixture(
-    tid("customers_even_dist"), Seq("id", "name", "address", "phone_number"),
-    Seq("id"), intRows("id", 101 to 110))
+  private val customersEvenDist =
+    TableFixture("customers_even_dist", Seq("id"), intRows("id", 101 to 110))
 
   private val customersSparseDist = TableFixture(
-    tid("customers_sparse_dist"), Seq("id", "name", "address", "phone_number"),
-    Seq("id"), intRows("id", Seq(2, 4, 6, 8, 10, 16, 17, 18, 20, 22)))
+    "customers_sparse_dist", Seq("id"), intRows("id", Seq(2, 4, 6, 8, 10, 16, 17, 18, 20, 22)))
 
   private val customersDenseDist = TableFixture(
-    tid("customers_dense_dist"), Seq("id1", "id2", "address", "phone_number"),
-    Seq("id1", "id2"), intRows("id1", Seq(1, 1, 1, 1, 2, 2, 2, 3, 3, 3)))
+    "customers_dense_dist", Seq("id1", "id2"), intRows("id1", Seq(1, 1, 1, 1, 2, 2, 2, 3, 3, 3)))
 
-  private val customersNoPk = TableFixture(
-    tid("customers_no_pk"), Seq("id", "name", "address", "phone_number"),
-    Seq.empty, intRows("id", customersIds))
+  private val customersNoPk =
+    TableFixture("customers_no_pk", Seq.empty, intRows("id", customersIds))
 
   private val customerCardNos =
     Seq(20001L, 20002L, 20003L, 20004L, 20004L, 20004L, 20004L, 30006L,
       30007L, 30008L, 30009L, 30009L, 30009L, 40001L, 40002L, 40003L,
       50001L, 50002L, 50003L)
   private val customerCard = TableFixture(
-    tid("customer_card"), Seq("card_no", "level", "name", "note"),
-    Seq("card_no", "level"),
+    "customer_card", Seq("card_no", "level"),
     customerCardNos.map(v => Map[String, Any]("card_no" -> v)))
 
   private val customerCardSingleLine = TableFixture(
-    tid("customer_card_single_line"), Seq("card_no", "level", "name", "note"),
-    Seq("card_no", "level"), Seq(Map[String, Any]("card_no" -> 20001L)))
+    "customer_card_single_line", Seq("card_no", "level"), Seq(Map[String, Any]("card_no" -> 20001L)))
 
   private val shoppingCart = TableFixture(
-    tid("shopping_cart"), Seq("product_no", "product_kind", "user_id", "description"),
-    Seq("user_id", "product_no", "product_kind"),
+    "shopping_cart", Seq("user_id", "product_no", "product_kind"),
     Seq(
       (101, "KIND_001", "user_1"), (101, "KIND_002", "user_1"),
       (102, "KIND_007", "user_1"), (102, "KIND_008", "user_1"),
@@ -83,23 +77,20 @@ class SplitAssignerRefSpec extends AnyFunSuite {
     })
 
   private val evenlyShoppingCart = TableFixture(
-    tid("evenly_shopping_cart"), Seq("product_no", "product_kind", "user_id", "description"),
-    Seq("product_kind", "product_no", "user_id"),
+    "evenly_shopping_cart", Seq("product_kind", "product_no", "user_id"),
     intRows("product_no", Seq(101, 102, 103, 104, 105, 105, 107, 108, 109, 111, 111, 112)))
 
   private val shoppingCartBig = TableFixture(
-    tid("shopping_cart_big"), Seq("product_no", "product_kind", "user_id", "description"),
-    Seq("product_no"), Seq(1L, 2L, 3L).map(v => Map[String, Any]("product_no" -> v)))
+    "shopping_cart_big", Seq("product_no"),
+    Seq(1L, 2L, 3L).map(v => Map[String, Any]("product_no" -> v)))
 
   private val shoppingCartDec = TableFixture(
-    tid("shopping_cart_dec"), Seq("product_no", "product_kind", "user_id", "description"),
-    Seq("product_no"),
+    "shopping_cart_dec", Seq("product_no"),
     Seq("123456.1230", "123457.4560", "123458.6789", "123459.1234")
       .map(v => Map[String, Any]("product_no" -> BigDecimal(v))))
 
   private val address = TableFixture(
-    tid("address"), Seq("id", "country", "city", "detail_address"),
-    Seq("id"),
+    "address", Seq("id"),
     Seq(416874195632735147L, 416927583791428523L, 417022095255614379L,
       417111867899200427L, 417271541558096811L, 417272886855938987L,
       417420106184475563L, 418161258277847979L)
@@ -112,37 +103,34 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // ---- the reference test harness shape ------------------------------------
 
-  /** `getSplitsFromAssigner` + the test's split rendering:
-    * `table Arrays.toString(start) Arrays.toString(end)`.
+  private def split[K](keys: Seq[K], config: Config)(implicit ops: KeyOps[K]): Seq[KeyRange[K]] = {
+    val sorted = keys.sorted(ops)
+    ChunkSplitter.generateSplitsOf(
+      sorted.headOption, sorted.lastOption, keys.size.toLong, config, ChunkSplitter.seqProbe(sorted))
+  }
+
+  /** `getTestAssignSnapshotSplits` for one table, rendered the test's way:
+    * `table Arrays.toString(start) Arrays.toString(end)`. The chunk key is
+    * the configured column, else the first primary-key column.
     */
-  private def render(s: SnapshotSplit): String = {
-    def side(v: Option[Seq[Any]]): String =
-      v.fold("null")(_.mkString("[", ", ", "]"))
-    s"${s.tableId.tableName} ${side(s.start)} ${side(s.end)}"
-  }
-
-  private def drain(a: SnapshotSplitAssigner): Seq[String] = {
-    a.open()
-    Iterator.continually(a.getNext()).takeWhile(_.isDefined).flatten.map(render).toSeq
-  }
-
-  /** `getTestAssignSnapshotSplits`. */
-  private def assignSplits(
+  private def splits(
       splitSize: Int,
       factorUpper: Double,
       factorLower: Double,
-      captureTables: Seq[String],
+      table: String,
       chunkKeyColumn: Option[String] = None,
       assignUnboundedChunkFirst: Boolean = false): Seq[String] = {
-    val catalog = new FixtureCatalog(allFixtures.filter(
-      f => captureTables.contains(f.tableId.tableName)))
-    val assigner = new SnapshotSplitAssigner(
-      catalog,
-      Config(splitSize, factorUpper, factorLower, assignUnboundedChunkFirst),
-      chunkKeyColumns = chunkKeyColumn.fold(Map.empty[TableId, String])(c =>
-        captureTables.map(t => tid(t) -> c).toMap),
-      initialRemainingTables = captureTables.map(tid))
-    drain(assigner)
+    val fixture = allFixtures.find(_.name == table).get
+    val keys = fixture.rows.map(_(chunkKeyColumn.getOrElse(fixture.primaryKeys.head)))
+    val config = Config(splitSize, factorUpper, factorLower, assignUnboundedChunkFirst)
+    val ranges: Seq[KeyRange[_]] = keys.head match {
+      case _: Int => split(keys.map(_.asInstanceOf[Int]), config)
+      case _: Long => split(keys.map(_.asInstanceOf[Long]), config)
+      case _: BigDecimal => split(keys.map(_.asInstanceOf[BigDecimal]), config)
+      case _: String => split(keys.map(_.asInstanceOf[String]), config)
+    }
+    def side(v: Option[Any]): String = v.fold("null")(k => s"[$k]")
+    ranges.map(r => s"$table ${side(r.start)} ${side(r.end)}")
   }
 
   private val DefaultUpper = 1000.0d
@@ -152,7 +140,7 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // testAssignSingleTableSplits:67
   test("assign single table splits") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("customers_even_dist")) == Seq(
+    assert(splits(4, DefaultUpper, DefaultLower, "customers_even_dist") == Seq(
       "customers_even_dist null [105]",
       "customers_even_dist [105] [109]",
       "customers_even_dist [109] null"))
@@ -160,25 +148,13 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // testAssignTableWhoseRowCntLessSplitSize:83
   test("table whose row count is less than split size: one full chunk") {
-    assert(assignSplits(2000, DefaultUpper, DefaultLower, Seq("customers")) ==
+    assert(splits(2000, DefaultUpper, DefaultLower, "customers") ==
       Seq("customers null null"))
-  }
-
-  // testAssignMultipleTableSplits:95
-  test("assign multiple table splits in capture order") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower,
-      Seq("customers_even_dist", "customers_sparse_dist")) == Seq(
-      "customers_even_dist null [105]",
-      "customers_even_dist [105] [109]",
-      "customers_even_dist [109] null",
-      "customers_sparse_dist null [10]",
-      "customers_sparse_dist [10] [18]",
-      "customers_sparse_dist [18] null"))
   }
 
   // testAssignCompositePkTableSplitsUnevenlyWithChunkKeyColumn:114
   test("composite-PK table splits unevenly on a configured chunk key column") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("shopping_cart"),
+    assert(splits(4, DefaultUpper, DefaultLower, "shopping_cart",
       chunkKeyColumn = Some("product_kind")) == Seq(
       "shopping_cart null [KIND_007]",
       "shopping_cart [KIND_007] [KIND_008]",
@@ -189,34 +165,23 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // testAssignCompositePkTableSplitsEvenlyWithChunkKeyColumn:134
   test("composite-PK table splits evenly on a numeric chunk key column") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("evenly_shopping_cart"),
+    assert(splits(4, DefaultUpper, DefaultLower, "evenly_shopping_cart",
       chunkKeyColumn = Some("product_no")) == Seq(
       "evenly_shopping_cart null [105]",
       "evenly_shopping_cart [105] [109]",
       "evenly_shopping_cart [109] null"))
   }
 
-  // testAssignCompositePkTableWithWrongChunkKeyColumn:152
-  test("wrong chunk key column refuses with the reference wording") {
-    val e = intercept[IllegalArgumentException] {
-      assignSplits(4, DefaultUpper, DefaultLower, Seq("customer_card"),
-        chunkKeyColumn = Some("errorCol"))
-    }
-    assert(e.getMessage.contains(
-      "Chunk key column 'errorCol' doesn't exist in the columns " +
-        "[card_no,level,name,note] of the table"))
-  }
-
   // testEnableAutoIncrementedKeyOptimization:169
   test("auto-incremented key: dense keys split arithmetically") {
-    assert(assignSplits(2, DefaultUpper, DefaultLower, Seq("shopping_cart_big")) == Seq(
+    assert(splits(2, DefaultUpper, DefaultLower, "shopping_cart_big") == Seq(
       "shopping_cart_big null [3]",
       "shopping_cart_big [3] null"))
   }
 
   // testAssignSnapshotSplitsWithRandomPrimaryKey:182
   test("snowflake (random) primary keys go through the uneven path") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("address")) == Seq(
+    assert(splits(4, DefaultUpper, DefaultLower, "address") == Seq(
       "address null [417111867899200427]",
       "address [417111867899200427] [417420106184475563]",
       "address [417420106184475563] null"))
@@ -224,7 +189,7 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // testAssignSnapshotSplitsWithDecimalKey:198
   test("decimal primary keys split arithmetically at the declared scale") {
-    assert(assignSplits(2, DefaultUpper, DefaultLower, Seq("shopping_cart_dec")) == Seq(
+    assert(splits(2, DefaultUpper, DefaultLower, "shopping_cart_dec") == Seq(
       "shopping_cart_dec null [123458.1230]",
       "shopping_cart_dec [123458.1230] null"))
   }
@@ -232,7 +197,7 @@ class SplitAssignerRefSpec extends AnyFunSuite {
   // testAssignTableWithMultipleKey:213 — duplicate leading-PK values count
   // against the chunk budget (the reference's INCLUSIVE lower-bound probe)
   test("duplicate leading-PK keys: boundaries advance by the inclusive probe") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("customer_card")) == Seq(
+    assert(splits(4, DefaultUpper, DefaultLower, "customer_card") == Seq(
       "customer_card null [20004]",
       "customer_card [20004] [30006]",
       "customer_card [30006] [30009]",
@@ -244,37 +209,37 @@ class SplitAssignerRefSpec extends AnyFunSuite {
   // testAssignTableWithSparseDistributionSplitKey:232
   test("sparse distribution: factor bounds pick the path") {
     // bigger distribution factor upper: still even, dynamic chunk size scales
-    assert(assignSplits(4, 2000.0d, DefaultLower, Seq("customers_sparse_dist")) == Seq(
+    assert(splits(4, 2000.0d, DefaultLower, "customers_sparse_dist") == Seq(
       "customers_sparse_dist null [10]",
       "customers_sparse_dist [10] [18]",
       "customers_sparse_dist [18] null"))
     // smaller upper bound: factor 2.1 > 2.0 → uneven probing
-    assert(assignSplits(4, 2.0d, DefaultLower, Seq("customers_sparse_dist")) == Seq(
+    assert(splits(4, 2.0d, DefaultLower, "customers_sparse_dist") == Seq(
       "customers_sparse_dist null [8]",
       "customers_sparse_dist [8] [17]",
       "customers_sparse_dist [17] null"))
     // approximate row count bigger than chunk size
-    assert(assignSplits(8, 10d, DefaultLower, Seq("customers_sparse_dist")) == Seq(
+    assert(splits(8, 10d, DefaultLower, "customers_sparse_dist") == Seq(
       "customers_sparse_dist null [18]",
       "customers_sparse_dist [18] null"))
   }
 
   // testAssignTableWithDenseDistributionSplitKey:275
   test("dense distribution: factor lower bound picks the path") {
-    assert(assignSplits(2, DefaultUpper, DefaultLower, Seq("customers_dense_dist")) == Seq(
+    assert(splits(2, DefaultUpper, DefaultLower, "customers_dense_dist") == Seq(
       "customers_dense_dist null [2]",
       "customers_dense_dist [2] [3]",
       "customers_dense_dist [3] null"))
     // bigger lower bound: factor 0.3 < 0.9 → uneven, stalled boundaries fall
     // forward through queryMin
-    assert(assignSplits(2, DefaultUpper, 0.9d, Seq("customers_dense_dist")) == Seq(
+    assert(splits(2, DefaultUpper, 0.9d, "customers_dense_dist") == Seq(
       "customers_dense_dist null [2]",
       "customers_dense_dist [2] null"))
   }
 
   // testAssignTableWithSingleLine:303
   test("single-row table: one full chunk") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("customer_card_single_line")) ==
+    assert(splits(4, DefaultUpper, DefaultLower, "customer_card_single_line") ==
       Seq("customer_card_single_line null null"))
   }
 
@@ -286,14 +251,14 @@ class SplitAssignerRefSpec extends AnyFunSuite {
       "shopping_cart [user_2] [user_4]",
       "shopping_cart [user_4] [user_5]",
       "shopping_cart [user_5] null")
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("shopping_cart")) == expected)
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("shopping_cart"),
+    assert(splits(4, DefaultUpper, DefaultLower, "shopping_cart") == expected)
+    assert(splits(4, DefaultUpper, DefaultLower, "shopping_cart",
       chunkKeyColumn = Some("user_id")) == expected)
   }
 
   // testAssignMinSplitSize:349
   test("minimum split size: chunk per two keys") {
-    assert(assignSplits(2, DefaultUpper, DefaultLower, Seq("customers_even_dist")) == Seq(
+    assert(splits(2, DefaultUpper, DefaultLower, "customers_even_dist") == Seq(
       "customers_even_dist null [103]",
       "customers_even_dist [103] [105]",
       "customers_even_dist [105] [107]",
@@ -303,28 +268,18 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // testAssignMaxSplitSize:367
   test("maximum split size: one full chunk") {
-    assert(assignSplits(8096, DefaultUpper, DefaultLower, Seq("customers_even_dist")) ==
+    assert(splits(8096, DefaultUpper, DefaultLower, "customers_even_dist") ==
       Seq("customers_even_dist null null"))
   }
 
   // testUnMatchedPrimaryKey:379 — the reference's try/catch only asserts IF
   // the connector throws (the Flink-DDL-vs-MySQL PK validation lives in the
-  // table factory, not the assigner); the assigner itself splits
+  // table factory, not the assigner); the splitter splits
   // customer_card by its leading PK column — pinned above. Documented n/a.
-
-  // testTableWithoutPrimaryKey:394
-  test("PK-less table without a chunk key column refuses") {
-    val e = intercept[IllegalArgumentException] {
-      assignSplits(4, DefaultUpper, DefaultLower, Seq("customers_no_pk"))
-    }
-    assert(e.getMessage ==
-      "To use incremental snapshot, 'scan.incremental.snapshot.chunk.key-column' " +
-        "must be set when the table doesn't have primary keys.")
-  }
 
   // testAssignTableWithoutPrimaryKeyWithChunkKeyColumn:410
   test("PK-less table with a configured chunk key column splits evenly") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("customers_no_pk"),
+    assert(splits(4, DefaultUpper, DefaultLower, "customers_no_pk",
       chunkKeyColumn = Some("id")) == Seq(
       "customers_no_pk null [462]",
       "customers_no_pk [462] [823]",
@@ -336,7 +291,7 @@ class SplitAssignerRefSpec extends AnyFunSuite {
 
   // testAssignTableWithPrimaryKeyWithChunkKeyColumnNotInPrimaryKey:432
   test("chunk key column outside the primary key: uneven over names") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("customers"),
+    assert(splits(4, DefaultUpper, DefaultLower, "customers",
       chunkKeyColumn = Some("name")) == Seq(
       "customers null [user_12]",
       "customers [user_12] [user_15]",
@@ -347,169 +302,13 @@ class SplitAssignerRefSpec extends AnyFunSuite {
       "customers [user_7] null"))
   }
 
-  // testEnumerateTablesLazily:456
-  test("tables are enumerated lazily on open") {
-    val catalog = new FixtureCatalog(Seq(customersEvenDist))
-    val assigner = new SnapshotSplitAssigner(
-      catalog, Config(4, DefaultUpper, DefaultLower))
-    assert(assigner.needToDiscoveryTables())
-    assigner.open()
-    assert(assigner.getNext().isDefined)
-    assert(!assigner.needToDiscoveryTables())
-  }
-
-  // ---- checkpoint-resume + newly-added tables ------------------------------
-
-  /** `getTestAssignSnapshotSplitsFromCheckpoint:594`. */
-  private def assignFromCheckpoint(status: AssignerStatus.Value): Seq[String] = {
-    val newTable = tid("customer_card_single_line")
-    val processedTable = tid("customers_sparse_dist")
-    val splitTable = tid("customers_even_dist")
-    val catalog = new FixtureCatalog(Seq(
-      customerCardSingleLine, customersSparseDist, customersEvenDist))
-    def split(t: TableId, i: Int, start: Option[Int], end: Option[Int]) =
-      SnapshotSplit(t, s"$t:$i", start.map(Seq(_)), end.map(Seq(_)))
-    val remainingSplits = Seq(
-      split(processedTable, 2, Some(109), None),
-      split(splitTable, 0, None, Some(10)),
-      split(splitTable, 1, Some(10), Some(18)),
-      split(splitTable, 2, Some(18), None))
-    val assignedSplits = Map(
-      s"$processedTable:0" -> split(processedTable, 0, None, Some(105)),
-      s"$processedTable:1" -> split(processedTable, 1, Some(105), Some(109)))
-    val checkpoint = PendingState(
-      alreadyProcessedTables = Seq(processedTable),
-      remainingSplits = remainingSplits,
-      assignedSplits = assignedSplits,
-      splitFinishedOffsets = Map(s"$processedTable:0" -> LogPosition.earliest),
-      status = status,
-      remainingTables = Seq.empty)
-    val assigner = new SnapshotSplitAssigner(
-      catalog, Config(4, DefaultUpper, DefaultLower),
-      scanNewlyAddedTableEnabled = true, state = Some(checkpoint))
-    drain(assigner)
-  }
-
-  // testScanNewlyAddedTableStartFromInitialAssigningFinishedCheckpoint:482
-  test("newly added table from an INITIAL_ASSIGNING_FINISHED checkpoint") {
-    assert(assignFromCheckpoint(AssignerStatus.InitialAssigningFinished) == Seq(
-      "customers_sparse_dist [109] null",
-      "customers_even_dist null [10]",
-      "customers_even_dist [10] [18]",
-      "customers_even_dist [18] null",
-      "customer_card_single_line null null"))
-  }
-
-  // testScanNewlyAddedTableStartFromNewlyAddedAssigningSnapshotFinishedCheckpoint:497
-  test("no re-capture from a NEWLY_ADDED_ASSIGNING_SNAPSHOT_FINISHED checkpoint") {
-    assert(assignFromCheckpoint(AssignerStatus.NewlyAddedAssigningSnapshotFinished) == Seq(
-      "customers_sparse_dist [109] null",
-      "customers_even_dist null [10]",
-      "customers_even_dist [10] [18]",
-      "customers_even_dist [18] null"))
-  }
-
   // testSplitEvenlySizedChunksEndingFirst:511
   test("unbounded chunk assigned first when configured") {
-    assert(assignSplits(4, DefaultUpper, DefaultLower, Seq("evenly_shopping_cart"),
+    assert(splits(4, DefaultUpper, DefaultLower, "evenly_shopping_cart",
       chunkKeyColumn = Some("product_no"), assignUnboundedChunkFirst = true) == Seq(
       "evenly_shopping_cart [109] null",
       "evenly_shopping_cart null [105]",
       "evenly_shopping_cart [105] [109]"))
-  }
-
-  // ---- MySqlHybridSplitAssignerTest ----------------------------------------
-
-  // testAssignMySqlBinlogSplitAfterAllSnapshotSplitsFinished:70
-  test("hybrid: binlog split after all snapshot splits finished") {
-    val tableId = tid("customers")
-    val splits = (0 until 5).map { i =>
-      val hw = LogPosition.ofFilePosition("mysql-bin.00001", i + 1L)
-      SnapshotSplit(
-        tableId, s"$Db.customers:$i",
-        if (i == 0) None else Some(Seq(i * 2)), Some(Seq(i * 2 + 2)), Some(hw))
-    }
-    val checkpoint = PendingState(
-      alreadyProcessedTables = Seq(tableId),
-      remainingSplits = Seq.empty,
-      assignedSplits = splits.map(s => s.splitId -> s).toMap,
-      splitFinishedOffsets = splits.map(s => s.splitId -> s.highWatermark.get).toMap,
-      status = AssignerStatus.InitialAssigningFinished,
-      remainingTables = Seq.empty)
-    val snapshot = new SnapshotSplitAssigner(
-      new FixtureCatalog(Seq(customers)), Config(), state = Some(checkpoint))
-    val hybrid = new HybridSplitAssigner(snapshot)
-
-    val logSplit = hybrid.getNext() match {
-      case Some(Right(ls)) => ls
-      case other => fail(s"expected the binlog split, got $other")
-    }
-    val expectedInfos = splits.sortBy(_.splitId).map(s =>
-      FinishedSplitInfo(s.tableId, s.splitId, s.start, s.end, s.highWatermark.get))
-    assert(logSplit == LogSplit(
-      "binlog-split",
-      LogPosition.ofFilePosition("mysql-bin.00001", 1),
-      LogPosition.nonStopping,
-      expectedInfos,
-      expectedInfos.size))
-  }
-
-  // testAssigningInSnapshotOnlyMode:152
-  test("hybrid: snapshot-only mode stops the log split at the max watermark") {
-    val snapshot = new SnapshotSplitAssigner(
-      new FixtureCatalog(Seq(customers)), Config(), snapshotOnly = true,
-      initialRemainingTables = Seq(tid("customers")))
-    val hybrid = new HybridSplitAssigner(snapshot, snapshotOnly = true)
-    hybrid.open()
-    val snapshotSplits = Iterator.continually(hybrid.getNext())
-      .takeWhile(_.isDefined).flatten.collect { case Left(s) => s }.toSeq
-    assert(snapshotSplits.nonEmpty)
-    val finished = snapshotSplits.zipWithIndex.map { case (s, i) =>
-      s.splitId -> LogPosition.ofFilePosition("foo", i.toLong)
-    }.toMap
-    hybrid.onFinishedSplits(finished)
-    val logSplit = hybrid.getNext() match {
-      case Some(Right(ls)) => ls
-      case other => fail(s"expected the binlog split, got $other")
-    }
-    assert(logSplit.endingOffset ==
-      LogPosition.ofFilePosition("foo", snapshotSplits.size - 1L))
-  }
-
-  // testSetProcessingBacklog:214
-  test("hybrid: processing-backlog signal raised at open, cleared when finished") {
-    val snapshot = new SnapshotSplitAssigner(
-      new FixtureCatalog(Seq(customers)), Config(),
-      initialRemainingTables = Seq(tid("customers")))
-    val hybrid = new HybridSplitAssigner(snapshot)
-    assert(!hybrid.isProcessingBacklog)
-    hybrid.open()
-    assert(hybrid.isProcessingBacklog)
-    val snapshotSplits = Iterator.continually(hybrid.getNext())
-      .takeWhile(_.isDefined).flatten.collect { case Left(s) => s }.toSeq
-    hybrid.onFinishedSplits(snapshotSplits.zipWithIndex.map { case (s, i) =>
-      s.splitId -> LogPosition.ofFilePosition("foo", i.toLong)
-    }.toMap)
-    assert(!hybrid.isProcessingBacklog)
-  }
-
-  // ---- MySqlBinlogSplitAssignerTest ----------------------------------------
-
-  // testStartFromEarliest/LatestOffset/Timestamp/BinlogFile/GtidSet:40-67
-  test("log-only assigner: one split at the startup offset, never stopping") {
-    val cases = Seq(
-      LogPosition.earliest,
-      LogPosition.latest,
-      LogPosition.ofTimestampSec(15213L), // StartupOptions.timestamp(15213000L)
-      LogPosition.ofFilePosition("foo-file", 15213L),
-      LogPosition.ofGtidSet("foo-gtid"))
-    cases.foreach { off =>
-      val assigner = new LogOnlySplitAssigner(off)
-      val split = assigner.getNext().getOrElse(fail("expected a split"))
-      assert(split.startingOffset == off)
-      assert(split.endingOffset == LogPosition.nonStopping)
-      assert(assigner.getNext().isEmpty)
-    }
   }
 
   // ---- MySqlChunkSplitterTest ----------------------------------------------
@@ -531,60 +330,5 @@ class SplitAssignerRefSpec extends AnyFunSuite {
       ChunkSplitter.KeyRange(None, Some(2147483637)),
       ChunkSplitter.KeyRange(Some(2147483637), Some(2147483647)),
       ChunkSplitter.KeyRange(Some(2147483647), None)))
-  }
-
-  // ---- MySqlSplitStateTest -------------------------------------------------
-
-  // testFromToSplit:38 + testRecordSnapshotSplitState:55
-  test("snapshot split state round-trips and records the high watermark") {
-    val base = SnapshotSplit(
-      TableId.parse("test_db.test_table"), "test_db.test_table:1",
-      Some(Seq(100L)), Some(Seq(999L)),
-      Some(LogPosition.ofFilePosition("mysql-bin.000002", 78L)))
-    assert(new SnapshotSplitState(base).toSplit == base)
-
-    val unfinished = base.copy(highWatermark = None)
-    val st = new SnapshotSplitState(unfinished)
-    st.setHighWatermark(LogPosition.ofFilePosition("mysql-bin.000002", 78L))
-    assert(st.toSplit == base)
-  }
-
-  // testRecordBinlogSplitState:87
-  test("log split state advances the starting offset") {
-    val t = TableId.parse("test_db.test_table")
-    def withOffset(off: LogPosition): LogSplit = LogSplit(
-      "binlog-split", off, LogPosition.nonStopping,
-      Seq(
-        FinishedSplitInfo(t, s"$t-0", None, Some(Seq(100)),
-          LogPosition.ofFilePosition("mysql-bin.000001", 4)),
-        FinishedSplitInfo(t, s"$t-1", Some(Seq(100)), Some(Seq(200)),
-          LogPosition.ofFilePosition("mysql-bin.000001", 200)),
-        FinishedSplitInfo(t, s"$t-2", Some(Seq(200)), Some(Seq(300)),
-          LogPosition.ofFilePosition("mysql-bin.000001", 600)),
-        FinishedSplitInfo(t, s"$t-3", Some(Seq(300)), None,
-          LogPosition.ofFilePosition("mysql-bin.000001", 800))),
-      4)
-    val st = new LogSplitState(withOffset(
-      LogPosition.ofFilePosition("mysql-bin.000001", 4)))
-    st.setStartingOffset(LogPosition.ofFilePosition("mysql-bin.000001", 100))
-    assert(st.toSplit == withOffset(LogPosition.ofFilePosition("mysql-bin.000001", 100)))
-    st.setStartingOffset(LogPosition.ofFilePosition("mysql-bin.000001", 400))
-    assert(st.toSplit == withOffset(LogPosition.ofFilePosition("mysql-bin.000001", 400)))
-  }
-
-  // ---- FinishedSnapshotSplitInfoTest ---------------------------------------
-
-  // testInfosWithBinaryPrimaryKeyAreEqual/HaveEqualHashCodes/
-  // HaveEqualStringRepresentations:30-43
-  test("finished split info with binary keys round-trips value-equal") {
-    val original = FinishedSplitInfo(
-      TableId.parse("table"), "split-1",
-      Some(Seq(Array[Byte](0x01, 0x02))),
-      Some(Seq(Array[Byte](0x03, 0x04))),
-      LogPosition.ofFilePosition("mysql-bin.000001", 12345L))
-    val copy = FinishedSplitInfo.deserialize(original.serialize)
-    assert(copy == original)
-    assert(copy.hashCode == original.hashCode)
-    assert(copy.toString == original.toString)
   }
 }

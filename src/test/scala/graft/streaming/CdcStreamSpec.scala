@@ -117,6 +117,44 @@ class CdcStreamSpec extends AnyFunSuite {
     } finally { ChangeSourceRegistry.remove("nat-a"); ChangeSourceRegistry.remove("nat-b") }
   }
 
+  test("added tables that share a name in different databases stream side by side") {
+    import graft.sources.cdc._
+    import org.apache.spark.sql.types._
+    val schema = TableSchema(
+      StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("v", StringType))),
+      primaryKeys = Seq("id"))
+    val tables = Seq("db1", "db2").map(db => TableId.of(db, "users"))
+    tables.foreach { t =>
+      ChangeSourceRegistry.register(s"${t.schemaName}-users", new ScriptedChangeSource(t, schema,
+        (1L to 20L).map(i => Map[String, Any]("id" -> i, "v" -> s"${t.schemaName}-$i"))))
+    }
+    try {
+      val ckpt = java.nio.file.Files.createTempDirectory("same-name-ckpt").toString
+      val runner = new PipelineRunner(YamlPipelineParser.parse(
+        s"""source:
+           |  type: cdc
+           |  sourceId: db1-users
+           |  chunk.size: 2
+           |sink:
+           |  type: values
+           |pipeline:
+           |  checkpoint.dir: $ckpt
+           |""".stripMargin))
+      // the second stream starts while the first still runs: both are
+      // active at once under one pipeline name
+      val queries = Seq("db1-users", "db2-users").map(runner.addTable)
+      queries.foreach(_.processAllAvailable())
+      queries.foreach(_.stop())
+      val sink = runner.sink.asInstanceOf[MemoryDatabase]
+      tables.foreach { t =>
+        assert(sink.rowsOf(t).map(_.last.toString).sorted ==
+          (1 to 20).map(i => s"${t.schemaName}-$i").sorted)
+      }
+    } finally tables.foreach(t => ChangeSourceRegistry.remove(s"${t.schemaName}-users"))
+  }
+
   test("runHandlingDdl: in-band DDL applied at the batch boundary, stream resumes evolved") {
     import graft.sources.cdc._
     import org.apache.spark.sql.types._
