@@ -3140,7 +3140,6 @@ object QueriesCdc {
       def enc(schema: StructType) =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
           org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables.load(s, dir, "events").filter(col("user_id") < 100)
       val signups = ev.filter(col("event_type") === "signup")
         .select(col("user_id"), col("ts").cast(TimestampType).as("s_ts")).collect()

@@ -4917,7 +4917,7 @@ object QueriesConformance {
         ("ltz", TimestampType: DataType,
           (t: java.time.LocalDateTime) => java.sql.Timestamp.from(
             t.toInstant(java.time.ZoneOffset.UTC))))
-      val sources = families.flatMap { case (fam, ty, conv) =>
+      val sources = families.flatMap { case (fam, ty, _) =>
         Seq(0, 6).map { p =>
           val t = TableId.parse(s"default_schema.default_table_${fam}_$p")
           freshId(s"tsmerge-$fam-$p") ->
@@ -4970,37 +4970,6 @@ object QueriesConformance {
       (a ++ b).toDF("tbl", "id", "name", "age", "description", "string_literal")
         .orderBy("id")
     }))
-
-  /** testMergingWithRoute's event script (FlinkPipelineComposerITCase
-    * :653-780, reused verbatim by the LENIENT variant :684): two tables'
-    * traffic, then mytable1's name→last_name RENAME + mytable2's ADD gender,
-    * then post-DDL inserts.
-    */
-  private def scriptMergeRoute(
-      src1: ScriptedChangeSource, t1: TableId,
-      src2: ScriptedChangeSource, t2: TableId, drain: () => Unit): Unit = {
-    src1.append(DataChangeEvent.insert(t1, Map("id" -> 1, "name" -> "Alice", "age" -> 18)))
-    src1.append(DataChangeEvent.insert(t1, Map("id" -> 2, "name" -> "Bob", "age" -> 20)))
-    src1.append(DataChangeEvent.update(t1,
-      Map("id" -> 2, "name" -> "Bob", "age" -> 20),
-      Map("id" -> 2, "name" -> "Bob", "age" -> 30)))
-    src2.append(DataChangeEvent.insert(t2,
-      Map("id" -> 3L, "name" -> "Charlie", "age" -> 15.toByte, "description" -> "student")))
-    src2.append(DataChangeEvent.insert(t2,
-      Map("id" -> 4L, "name" -> "Donald", "age" -> 25.toByte, "description" -> "student")))
-    src2.append(DataChangeEvent.delete(t2,
-      Map("id" -> 4L, "name" -> "Donald", "age" -> 25.toByte, "description" -> "student")))
-    drain()
-    src1.appendDdl(RenameColumnEvent(t1, Map("name" -> "last_name")))
-    src2.appendDdl(AddColumnEvent(t2,
-      Seq(AddColumnEvent.ColumnWithPosition("gender", CdcTypes.StringT()))))
-    drain()
-    src1.append(DataChangeEvent.insert(t1,
-      Map("id" -> 5, "last_name" -> "Eliza", "age" -> 24)))
-    src2.append(DataChangeEvent.insert(t2,
-      Map("id" -> 6L, "name" -> "Frank", "age" -> 30.toByte,
-        "description" -> "student", "gender" -> "male")))
-  }
 
   /** generateSchemaEvolutionEvents (FlinkPipelineTransformITCase:3118-3245):
     * the five-stage add/alter/rename/drop script with per-stage traffic.

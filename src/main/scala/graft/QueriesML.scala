@@ -158,7 +158,6 @@ object QueriesML {
       // text never re-read): copies collide in every band with sigSim 1.0
       // and drop; disjoint-vocabulary docs share no shingle, hence no band
       // bucket, and survive; the pair keeps its lower id.
-      implicit val sp: SparkSession = s
       import graft.sinks.LakehouseTable
       import graft.streaming.LshMaintenance
       val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -356,7 +355,6 @@ object QueriesML {
       // pruned point reads; the oracle recomputes the posting lists by
       // full-scan tokenization in SQL. 'zzzabsent' proves a miss probes
       // clean (no rows, oracle agrees).
-      implicit val sp: SparkSession = s
       import graft.sinks.LakehouseTable
       import graft.textops.InvertedIndex
       val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -389,7 +387,6 @@ object QueriesML {
       // terms, Heaps'-law small) and unions the matched terms' pruned
       // posting probes. Oracle recomputes the same levenshtein band by
       // full scan.
-      implicit val sp: SparkSession = s
       import graft.sinks.LakehouseTable
       import graft.textops.InvertedIndex
       val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -412,7 +409,6 @@ object QueriesML {
       // "hash join" matches only docs where the tokens are CONSECUTIVE —
       // a posting-list intersection plus a position-set fold, never a
       // corpus scan. Oracle recomputes adjacency by full-scan ordinality.
-      implicit val sp: SparkSession = s
       import graft.sinks.LakehouseTable
       import graft.textops.InvertedIndex
       val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -437,7 +433,6 @@ object QueriesML {
       // restarted, then a 3-term query's top-10 is scored from the probed
       // posting lists only — the oracle recomputes the identical formula
       // (same association order, so IEEE doubles agree) by full scan.
-      implicit val sp: SparkSession = s
       import graft.sinks.LakehouseTable
       import graft.textops.Bm25Search
       val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -469,7 +464,6 @@ object QueriesML {
       // doc_id in the fixture; the rerank orders on the RAW cosine (the
       // a_ann_bruteforce precedent: both engines fold the dot product in
       // array order, so IEEE doubles agree bit-for-bit).
-      implicit val sp: SparkSession = s
       import graft.sinks.LakehouseTable
       import graft.textops.Bm25Search
       import graft.functions.VectorFunctions

@@ -250,7 +250,7 @@ object Dialect {
   }
 
   private def rewriteSegment(
-      s: String, epochCol: Option[String], timeZone: String = "UTC"): String = {
+      s: String, epochCol: Option[String], timeZone: String): String = {
     var r = s
     // LIKE-as-regex quirk: reference compiles the pattern as a Java regex
     r = r.replaceAll("(?i)\\bNOT\\s+LIKE\\b", "NOT RLIKE")

@@ -183,7 +183,7 @@ case class FromUnixTimeExpr(child: Expression, patternExpr: Expression, zoneId: 
       case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal.longValue
       case d: Double => d.toLong
       case f: Float => f.toLong
-      case other => return null
+      case _ => return null
     }
     try {
       val sdf = new java.text.SimpleDateFormat(p.toString, java.util.Locale.ROOT)

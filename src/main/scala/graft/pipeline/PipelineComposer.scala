@@ -57,9 +57,6 @@ final class PipelineComposer(
     if (unconditional < 0) matching else matching.take(unconditional + 1)
   }
 
-  private def ruleFor(tableId: TableId): Option[TransformRule] =
-    rulesFor(tableId).headOption
-
   /** Output schema of the transform for a source table — each rule's
     * projection runs over an empty snapshot through [[EnvelopeTransform]],
     * the one implementation the data path runs too (Catalyst analysis gives

@@ -155,7 +155,7 @@ object DeltaInterchange {
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}"""
     else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
 
-  private def metaActionJson(schema: TableSchema, cdf: Boolean = false): String = {
+  private def metaActionJson(schema: TableSchema, cdf: Boolean): String = {
     val metaNode = mapper.createObjectNode()
     val m = metaNode.putObject("metaData")
     m.put("id", java.util.UUID.nameUUIDFromBytes(

@@ -410,8 +410,7 @@ object IcebergInterchange {
     def live: Seq[Entry] = entries.filter(_.status != Deleted)
   }
 
-  private def entryRecord(e: Entry,
-      entrySchema: Schema = manifestEntrySchema): GenericRecord = {
+  private def entryRecord(e: Entry, entrySchema: Schema): GenericRecord = {
     val df = new GenericData.Record(
       entrySchema.getField("data_file").schema())
     df.put("content", e.content)
@@ -1205,7 +1204,7 @@ object IcebergInterchange {
     * written under a pre-promotion type. */
   private def readAlignedGroup(spark: SparkSession, snap: IcebergSnapshot,
       files: Seq[String], plan: Seq[(String, Option[String])],
-      staleNameCollision: Boolean = false): DataFrame = {
+      staleNameCollision: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     // the explicit-schema scan null-pads ABSENT columns by NAME — safe
     // only when no null-pad entry's name survives physically in the

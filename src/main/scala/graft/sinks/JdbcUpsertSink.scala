@@ -101,8 +101,6 @@ final class JdbcUpsertSink(
     DriverManager.getConnection(url, p)
   }
 
-  private def sqlType(dt: org.apache.spark.sql.types.DataType): String = JdbcDdl.sqlType(dt)
-
   // ---------------------------------------------------------- MetadataApplier
 
   override def applySchemaChange(event: SchemaChangeEvent): Unit = {

@@ -206,11 +206,7 @@ object KafkaJsonFormats {
       StructField("source", StructType(Seq(
         StructField("db", StringType), StructField("table", StringType))))))
     val m = from_json(valueCol, msgT)
-    val opDecoded = when(m("op") === "c", "INSERT")
-      .when(m("op") === "d", "DELETE")
-      .when(m("op") === "r", "REPLACE")
-      .when(m("op") === "u", "UPDATE")
-      .otherwise(InvalidOp)
+    val opDecoded = graft.sources.debezium.DebeziumFileSource.decodeOp(m("op"))
     raw.select(
       concat_ws(".",
         filter(array(m.getField("source").getField("db"), m.getField("source").getField("table")),

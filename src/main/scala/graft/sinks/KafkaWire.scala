@@ -1,7 +1,8 @@
 package graft.sinks
 
+import graft.sources.cdc.LoopbackListener
 import java.io.{DataInputStream, DataOutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicInteger
@@ -840,25 +841,21 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
   // (the __consumer_offsets compacted-topic content, as a map)
   private val groupOffsets = mutable.HashMap.empty[(String, String, Int), (Long, String)]
 
-  private var serverSocket: Option[ServerSocket] = None
+  private var listener: Option[LoopbackListener] = None
   @volatile private var running = false
 
   def start(): Unit = synchronized {
-    val ss = new ServerSocket(0, 16, InetAddress.getLoopbackAddress)
-    serverSocket = Some(ss)
     running = true
-    val t = new Thread(() => acceptLoop(ss), "kafka-broker-double")
-    t.setDaemon(true)
-    t.start()
+    listener = Some(LoopbackListener.start("kafka-broker-double", 0)(serve))
   }
 
   def stop(): Unit = synchronized {
     running = false
-    serverSocket.foreach(s => scala.util.Try(s.close()))
+    listener.foreach(_.stop())
   }
 
   def bootstrap: String =
-    s"127.0.0.1:${serverSocket.map(_.getLocalPort).getOrElse(sys.error("not started"))}"
+    s"127.0.0.1:${listener.map(_.port).getOrElse(sys.error("not started"))}"
 
   def topicNames: Seq[String] = synchronized(topics.keys.toSeq)
   def partitionsOf(topic: String): Int = synchronized(topics.getOrElse(topic, 0))
@@ -875,56 +872,43 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
     })
   }
 
-  private def acceptLoop(ss: ServerSocket): Unit =
+  /** One connection; a stopped broker answers no further request. */
+  private def serve(sock: Socket): Unit = {
+    sock.setTcpNoDelay(true)
+    val in = new DataInputStream(sock.getInputStream)
+    val out = new DataOutputStream(sock.getOutputStream)
     while (running) {
-      try {
-        val sock = ss.accept()
-        sock.setTcpNoDelay(true)
-        val t = new Thread(() => serve(sock), "kafka-broker-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch { case _: Throwable if !running => () case _: Throwable => () }
-    }
-
-  private def serve(sock: Socket): Unit =
-    try {
-      val in = new DataInputStream(sock.getInputStream)
-      val out = new DataOutputStream(sock.getOutputStream)
-      while (running) {
-        val len = in.readInt()
-        val payload = new Array[Byte](len)
-        in.readFully(payload)
-        val r = new Reader(payload)
-        val apiKey = r.int16()
-        val apiVersion = r.int16()
-        val correlationId = r.int32()
-        r.nullableString() // client id
-        val respBody: Array[Byte] = apiKey match {
-          case ApiApiVersions => apiVersionsResponse()
-          case ApiMetadata => metadataResponse(r, apiVersion)
-          case ApiProduce => produceResponse(r, apiVersion)
-          case ApiFetch => fetchResponse(r, apiVersion)
-          case ApiListOffsets => listOffsetsResponse(r, apiVersion)
-          case ApiOffsetCommit => offsetCommitResponse(r, apiVersion)
-          case ApiOffsetFetch => offsetFetchResponse(r, apiVersion)
-          case ApiFindCoordinator => findCoordinatorResponse(r, apiVersion)
-          case ApiInitProducerId => initProducerIdResponse(r, apiVersion)
-          case ApiAddPartitionsToTxn => addPartitionsResponse(r, apiVersion)
-          case ApiEndTxn => endTxnResponse(r, apiVersion)
-          case other => sys.error(s"api key $other not implemented in the double")
-        }
-        val w = new Writer
-        w.int32(correlationId)
-        w.raw(respBody)
-        val resp = w.result()
-        out.writeInt(resp.length)
-        out.write(resp)
-        out.flush()
+      val len = in.readInt()
+      val payload = new Array[Byte](len)
+      in.readFully(payload)
+      val r = new Reader(payload)
+      val apiKey = r.int16()
+      val apiVersion = r.int16()
+      val correlationId = r.int32()
+      r.nullableString() // client id
+      val respBody: Array[Byte] = apiKey match {
+        case ApiApiVersions => apiVersionsResponse()
+        case ApiMetadata => metadataResponse(r, apiVersion)
+        case ApiProduce => produceResponse(r, apiVersion)
+        case ApiFetch => fetchResponse(r, apiVersion)
+        case ApiListOffsets => listOffsetsResponse(r, apiVersion)
+        case ApiOffsetCommit => offsetCommitResponse(r, apiVersion)
+        case ApiOffsetFetch => offsetFetchResponse(r, apiVersion)
+        case ApiFindCoordinator => findCoordinatorResponse(r, apiVersion)
+        case ApiInitProducerId => initProducerIdResponse(r, apiVersion)
+        case ApiAddPartitionsToTxn => addPartitionsResponse(r, apiVersion)
+        case ApiEndTxn => endTxnResponse(r, apiVersion)
+        case other => sys.error(s"api key $other not implemented in the double")
       }
-    } catch {
-      case _: java.io.EOFException => ()
-      case _: java.net.SocketException => ()
-    } finally scala.util.Try(sock.close())
+      val w = new Writer
+      w.int32(correlationId)
+      w.raw(respBody)
+      val resp = w.result()
+      out.writeInt(resp.length)
+      out.write(resp)
+      out.flush()
+    }
+  }
 
   private def apiVersionsResponse(): Array[Byte] = {
     val w = new Writer
@@ -1006,7 +990,7 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
     w.int16(0) // error
     w.nullableString(null)
     w.int32(0) // node id: this broker
-    w.string("127.0.0.1"); w.int32(serverSocket.get.getLocalPort)
+    w.string("127.0.0.1"); w.int32(listener.get.port)
     w.result()
   }
 
@@ -1129,7 +1113,7 @@ final class KafkaBrokerDouble(autoCreatePartitions: Int = 3) {
       if (n < 0) synchronized(topics.keys.toSeq)
       else (0 until n).map(_ => r.string())
     requested.foreach(ensureTopic)
-    val port = serverSocket.get.getLocalPort
+    val port = listener.get.port
     val w = new Writer
     w.int32(1) // brokers
     w.int32(0); w.string("127.0.0.1"); w.int32(port); w.nullableString(null)

@@ -1,8 +1,9 @@
 package graft.sinks
 
+import graft.sources.cdc.LoopbackListener
 import graft.sources.mysql.BinlogWire
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.{InetAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 
@@ -204,7 +205,7 @@ final class OceanBaseServerDouble(
   private val tables = mutable.LinkedHashMap.empty[(String, String), Table]
   @volatile private var memstoreActive = 0L
   @volatile private var memstoreLimit = 100L
-  @volatile private var server: ServerSocket = _
+  @volatile private var listener: LoopbackListener = _
   @volatile private var running = false
 
   def setMemstore(active: Long, limit: Long): Unit = {
@@ -212,22 +213,20 @@ final class OceanBaseServerDouble(
   }
 
   def start(): Unit = synchronized {
-    if (running) return
-    server = new ServerSocket(port, 16, InetAddress.getLoopbackAddress)
-    running = true
-    val t = new Thread(() => acceptLoop(), "ob-double-accept")
-    t.setDaemon(true)
-    t.start()
+    if (!running) {
+      listener = LoopbackListener.start("ob-double", port)(serve)
+      running = true
+    }
   }
 
   def stop(): Unit = synchronized {
     running = false
-    if (server != null) server.close()
+    if (listener != null) listener.stop()
   }
 
-  def url: String = s"${InetAddress.getLoopbackAddress.getHostAddress}:${server.getLocalPort}"
+  def url: String = s"$host:$boundPort"
   def host: String = InetAddress.getLoopbackAddress.getHostAddress
-  def boundPort: Int = server.getLocalPort
+  def boundPort: Int = listener.port
 
   def databaseNames: Set[String] = synchronized(databases.toSet)
   def tableColumns(db: String, tbl: String): Seq[ObColumnState] =
@@ -240,52 +239,42 @@ final class OceanBaseServerDouble(
     synchronized(tables.get((db, tbl)).map(_.rows.values.map(_.toMap).toSeq)
       .getOrElse(Seq.empty))
 
-  private def acceptLoop(): Unit =
-    try while (running) {
-      val s = server.accept()
-      val t = new Thread(() => serve(s), "ob-double-conn")
-      t.setDaemon(true)
-      t.start()
-    } catch { case _: Throwable => () }
-
-  private def serve(sock: Socket): Unit =
-    try {
-      sock.setTcpNoDelay(true)
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      BinlogWire.writePacket(out, 0, BinlogWire.encodeHandshakeV10(1))
-      out.flush()
-      BinlogWire.readPacket(in) // handshake response: any user accepted
-      BinlogWire.writePacket(out, 2, BinlogWire.encodeOk())
-      out.flush()
-      var open = true
-      while (open) {
-        val (_, payload) =
-          try BinlogWire.readPacket(in)
-          catch { case _: Throwable => open = false; (0, Array.empty[Byte]) }
-        if (open && payload.nonEmpty) (payload(0) & 0xff) match {
-          case 0x01 => open = false // COM_QUIT
-          case 0x03 =>
-            val sql = new String(payload, 1, payload.length - 1, UTF_8)
-            val response: Seq[Array[Byte]] =
-              try dispatch(sql)
-              catch {
-                case e: Throwable =>
-                  Seq(BinlogWire.encodeErr(1064,
-                    Option(e.getMessage).getOrElse(e.getClass.getName)))
-              }
-            var seq = 1
-            response.foreach { p =>
-              BinlogWire.writePacket(out, seq, p); seq += 1
+  private def serve(sock: Socket): Unit = {
+    sock.setTcpNoDelay(true)
+    val in = new BufferedInputStream(sock.getInputStream)
+    val out = new BufferedOutputStream(sock.getOutputStream)
+    BinlogWire.writePacket(out, 0, BinlogWire.encodeHandshakeV10(1))
+    out.flush()
+    BinlogWire.readPacket(in) // handshake response: any user accepted
+    BinlogWire.writePacket(out, 2, BinlogWire.encodeOk())
+    out.flush()
+    var open = true
+    while (open) {
+      val (_, payload) =
+        try BinlogWire.readPacket(in)
+        catch { case _: Throwable => open = false; (0, Array.empty[Byte]) }
+      if (open && payload.nonEmpty) (payload(0) & 0xff) match {
+        case 0x01 => open = false // COM_QUIT
+        case 0x03 =>
+          val sql = new String(payload, 1, payload.length - 1, UTF_8)
+          val response: Seq[Array[Byte]] =
+            try dispatch(sql)
+            catch {
+              case e: Throwable =>
+                Seq(BinlogWire.encodeErr(1064,
+                  Option(e.getMessage).getOrElse(e.getClass.getName)))
             }
-            out.flush()
-          case _ =>
-            BinlogWire.writePacket(out, 1, BinlogWire.encodeErr(1047, "unsupported command"))
-            out.flush()
-        }
+          var seq = 1
+          response.foreach { p =>
+            BinlogWire.writePacket(out, seq, p); seq += 1
+          }
+          out.flush()
+        case _ =>
+          BinlogWire.writePacket(out, 1, BinlogWire.encodeErr(1047, "unsupported command"))
+          out.flush()
       }
-    } catch { case _: Throwable => () }
-    finally scala.util.Try(sock.close())
+    }
+  }
 
   // ------------------------------------------------------------ SQL subset
 

@@ -375,7 +375,7 @@ object PaimonInterchange {
 
   private def writeSchemaFile(dir: String, schemaId: Long, struct: StructType,
       primaryKeys: Seq[String], buckets: Int,
-      partitionKeys: Seq[String] = Nil): Unit = {
+      partitionKeys: Seq[String]): Unit = {
     val root = mapper.createObjectNode()
     root.put("version", 3)
     root.put("id", schemaId)
@@ -515,7 +515,7 @@ object PaimonInterchange {
 
   private def entryRecord(kind: Int, totalBuckets: Int, f: PaimonFile,
       minKey: Array[Byte], maxKey: Array[Byte],
-      partTypes: Seq[DataType] = Nil): GenericRecord = {
+      partTypes: Seq[DataType]): GenericRecord = {
     val fileSchema = manifestEntrySchema.getField("_FILE").schema()
     val fileRec = new GenericData.Record(fileSchema)
     fileRec.put("_FILE_NAME", f.fileName)
@@ -836,7 +836,7 @@ object PaimonInterchange {
     * manifest tuple anyway, so the file contents stay conventional). */
   private def toKeyValue(df: DataFrame, struct: StructType, pks: Seq[String],
       seq: Long, kind: Int, buckets: Int,
-      partitionKeys: Seq[String] = Nil): DataFrame = {
+      partitionKeys: Seq[String]): DataFrame = {
     val keyCols = pks.map(p => col(p).as(s"_KEY_$p"))
     val sys = Seq(lit(seq).as(SeqCol), lit(kind).as(KindCol))
     val values = struct.fieldNames.map(n =>
@@ -882,7 +882,7 @@ object PaimonInterchange {
   private def writeKeyValueFiles(spark: SparkSession, destDir: String,
       rows: DataFrame, pks: Seq[String], struct: StructType,
       seq: Long, schemaId: Long, level: Int, tag: String,
-      partitionKeys: Seq[String] = Nil,
+      partitionKeys: Seq[String],
       trackSrcBucket: Boolean = false): Seq[KvFile] = {
     val partTypes = partitionKeys.map(struct(_).dataType)
     val pathCols = partitionKeys.zipWithIndex.map { case (k, i) => s"__pm_p$i" -> k }

@@ -56,7 +56,7 @@ object StreamLoadFormats {
   private def docStruct(
       schema: StructType,
       flag: (String, Column),
-      partitionKey: Option[String] = None): Column =
+      partitionKey: Option[String]): Column =
     struct(schema.fields.toSeq.map { f =>
       val rendered = temporal(f, col(f.name))
       val filled =

@@ -7,9 +7,15 @@ import graft.core._
   * offsets — the abstraction behind `flink-cdc-base`'s dialect SPI
   * (`JdbcDataSourceDialect`: snapshot reads by key range + log tailing).
   *
-  * [[ScriptedChangeSource]] is the values-style in-memory implementation used
-  * by tests (the analog of `ValuesDataSource`); a JDBC/binlog implementation
-  * plugs in behind the same four methods.
+  * Every source family shares the snapshot side. [[JdbcChangeSource]] runs
+  * it as SQL against a real engine; the in-process doubles (the scripted
+  * source, the LogMiner, ASN, change-table, TiKV, WAL, VStream and document
+  * sources, and the binlog server) each hold one [[LiveTable]], which owns
+  * the single-numeric-PK check, the key parse, the PK-change rule, the
+  * half-open chunk read and the key stats. What differs between families is
+  * only the log: its offsets and their packing, when a write becomes
+  * visible to [[readLog]], the DDL it carries, and the family's refusals
+  * and write API.
   */
 trait ChangeSource {
   def tableId: TableId
@@ -90,15 +96,7 @@ trait ChangeSource {
 
   /** numeric PK of a data event — the key lives in `before` for DELETE
     * (`DataChangeEvent.java` before/after contract). */
-  def keyOfEvent(e: DataChangeEvent): Long = {
-    val pk = schema.primaryKeys.head
-    def k(m: Map[String, Any]): Long = m(pk) match {
-      case l: Long => l
-      case i: Int => i.toLong
-      case other => other.toString.toLong
-    }
-    if (e.op == OperationType.DELETE) k(e.before) else k(e.after)
-  }
+  def keyOfEvent(e: DataChangeEvent): Long = LiveTable.keyOfEvent(schema.primaryKeys.head, e)
 }
 
 /** A log entry: data changes AND schema changes ride the same ordered log,
@@ -118,11 +116,7 @@ class ScriptedChangeSource(
     initialRows: Seq[Map[String, Any]])
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "scripted source uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
-  private val table =
-    scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
+  private val table = new LiveTable("scripted source", initialSchema, initialRows)
   private val log = scala.collection.mutable.ArrayBuffer.empty[LogRecord]
   private var offset = 0L
   /** the table's CURRENT declared schema — DDL in the log evolves it, like a
@@ -130,23 +124,7 @@ class ScriptedChangeSource(
   private var liveSchema = initialSchema
   private val schemaMgr = { val m = new SchemaManager; m.register(tableId, initialSchema); m }
 
-  initialRows.foreach(r => table(keyOf(r)) = r)
-
   override def schema: TableSchema = synchronized(liveSchema)
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    // STRING pks with numeric text (the reference's values fixtures key on
-    // `col1` STRING = "1","2",...) — same contract as ChangeSource.keyOfEvent
-    case other =>
-      try other.toString.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"non-numeric pk: column '$pk' of $tableId has value '$other' — " +
-            "the scripted source keys its table map on a numeric pk")
-      }
-  }
 
   /** per-key metadata of the event that last wrote the row — lets a BOUNDED
     * read replay the fixture's stamped metadata (see
@@ -155,24 +133,8 @@ class ScriptedChangeSource(
 
   def append(event: DataChangeEvent, tsMillis: Long = 0L): Long = synchronized {
     offset += 1
-    event.op match {
-      case OperationType.DELETE =>
-        table.remove(keyOf(event.before))
-        rowMeta.remove(keyOf(event.before))
-      case OperationType.UPDATE | OperationType.REPLACE =>
-        // a PK-changing UPDATE is delete+insert (the reference models it the
-        // same way); leaving the stale row under the old key would make the
-        // snapshot disagree with the log-derived materialization
-        if (event.before.nonEmpty && keyOf(event.before) != keyOf(event.after)) {
-          table.remove(keyOf(event.before))
-          rowMeta.remove(keyOf(event.before))
-        }
-        table(keyOf(event.after)) = event.after
-        rowMeta(keyOf(event.after)) = event.meta
-      case _ =>
-        table(keyOf(event.after)) = event.after
-        rowMeta(keyOf(event.after)) = event.meta
-    }
+    table(event).foreach(rowMeta.remove)
+    if (event.op != OperationType.DELETE) rowMeta(table.keyOf(event.after)) = event.meta
     log += LogRecord(offset, tsMillis, event)
     offset
   }
@@ -193,21 +155,14 @@ class ScriptedChangeSource(
   override def currentOffset: Long = synchronized(offset)
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      table.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }.toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   override def readLog(fromExclusive: Long, toInclusive: Long): Seq[LogRecord] =
     synchronized {
       log.filter(r => r.offset > fromExclusive && r.offset <= toInclusive).toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
     log.find(_.tsMillis >= ts).map(_.offset - 1).getOrElse(offset)
@@ -219,8 +174,8 @@ class ScriptedChangeSource(
     }.toSeq
   }
 
-  override def keyOfEvent(e: DataChangeEvent): Long =
-    if (e.op == OperationType.DELETE) keyOf(e.before) else keyOf(e.after)
+  // the default reads `schema`, which takes the monitor on every event
+  override def keyOfEvent(e: DataChangeEvent): Long = table.keyOfEvent(e)
 }
 
 /** Driver/executor-shared registry (valid in local mode, where tests run; a

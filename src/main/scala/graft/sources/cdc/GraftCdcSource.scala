@@ -236,7 +236,7 @@ final class GraftCdcMicroBatchStream(
   private var lastEnd: CdcOffset = CdcOffset(0, logBase)
   private var availableNowTarget: Option[CdcOffset] = None
 
-  private def next(prev: CdcOffset, limit: ReadLimit = null): CdcOffset =
+  private def next(prev: CdcOffset, limit: ReadLimit): CdcOffset =
     if (prev.chunksDone < chunks.size)
       // carry prev.logOffset (the ORIGINAL log base from the checkpoint), not
       // a recomputed one: after a resume the log phase must start where the
@@ -505,7 +505,7 @@ final class CdcReaderFactory(envSchema: StructType, payload: StructType)
     def payloadRow(m: Map[String, Any]): Row =
       if (m == null || m.isEmpty) null else Row.fromSeq(fieldNames.map(n => m.getOrElse(n, null)))
     def envRow(tableId: String, op: String, before: Map[String, Any], after: Map[String, Any],
-        seq: Long, meta: Map[String, String] = Map.empty): InternalRow =
+        seq: Long, meta: Map[String, String]): InternalRow =
       serializer(Row(tableId, op, payloadRow(before), payloadRow(after), seq, meta)).copy()
 
     partition match {
@@ -513,10 +513,9 @@ final class CdcReaderFactory(envSchema: StructType, payload: StructType)
         val source = ChangeSourceRegistry.get(srcId)
         // ---- AbstractScanFetchTask.execute: LW → select → HW → backfill ----
         val lw = source.currentOffset
+        val pk = source.schema.primaryKeys.head
         val rows = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-        source.snapshotRead(lo, hi).foreach { r =>
-          rows(r(source.schema.primaryKeys.head).toString.toLong) = r
-        }
+        source.snapshotRead(lo, hi).foreach(r => rows(LiveTable.keyOf(pk, r)) = r)
         // skip-backfill sets HW = LW (reference AbstractScanFetchTask:76):
         // events that landed DURING the select were not merged into the
         // snapshot rows, so the log-phase suppression filter must not
@@ -529,11 +528,9 @@ final class CdcReaderFactory(envSchema: StructType, payload: StructType)
             rec.event match {
               case e: graft.core.DataChangeEvent =>
                 val k = source.keyOfEvent(e)
-                // half-open [lo, hi) — matches ChunkRange.predicate, snapshotRead's
-                // hiExclusive, the log-phase hwOf filter, and the reference's
-                // RecordUtils.splitKeyRangeContains (key < end); an event at
-                // key == hi belongs to the NEXT chunk's backfill window
-                if (lo.forall(k >= _) && hi.forall(k < _)) {
+                // the chunk's own half-open range, as snapshotRead and the
+                // log-phase hwOf filter read it
+                if (LiveTable.inChunk(k, lo, hi)) {
                   e.op match {
                     case OperationType.DELETE => rows.remove(k)
                     case _ => rows(k) = e.after
@@ -557,9 +554,7 @@ final class CdcReaderFactory(envSchema: StructType, payload: StructType)
       case LogRangePartition(srcId, from, to, chunkRanges) =>
         val source = ChangeSourceRegistry.get(srcId)
         def hwOf(key: Long): Long = {
-          val idx = chunkRanges.indexWhere { case (lo, hi) =>
-            lo.forall(key >= _) && hi.forall(key < _)
-          }
+          val idx = chunkRanges.indexWhere { case (lo, hi) => LiveTable.inChunk(key, lo, hi) }
           if (idx < 0) 0L else ChangeSourceRegistry.chunkHW(srcId, idx).getOrElse(0L)
         }
         // A record between this window's start and a LATER rename carries its

@@ -106,7 +106,7 @@ final class JdbcChangeSource(
           val st = c.prepareStatement(s"DELETE FROM $dataTable WHERE ${sqlName(pk)} = ?")
           st.setObject(1, e.before(pk)); st.executeUpdate()
         case _ =>
-          if (e.before.nonEmpty && keyOfEvent(e) != e.before(pk).toString.toLong) {
+          LiveTable.movedFrom(pk, e).foreach { _ =>
             val st = c.prepareStatement(s"DELETE FROM $dataTable WHERE ${sqlName(pk)} = ?")
             st.setObject(1, e.before(pk)); st.executeUpdate()
           }

@@ -1,5 +1,7 @@
 package graft.sources.cdc
 
+import java.io.{EOFException, IOException, InputStream}
+
 /** Transient-failure policy for the pull-model wire sessions the socket
   * change sources open per log read (the reference's
   * `connect.max-retries` / `connect.timeout` knobs on MySqlSourceBuilder).
@@ -13,8 +15,8 @@ package graft.sources.cdc
   * which is what lets at-least-once session attempts compose with the
   * checkpoint machinery into exactly-once delivery.
   *
-  * Retried: I/O failures (connection refused/reset) and the framing
-  * readers' "connection closed mid-message" (server died mid-frame).
+  * Retried: I/O failures — connection refused or reset, and the
+  * [[EOFException]] of [[readExactly]] when the server died mid-frame.
   * NOT retried: protocol refusals — a recycled-WAL ErrorResponse or an
   * invalidate-token rejection is a permanent answer; retrying it would
   * only delay the loud failure the contract requires.
@@ -24,15 +26,17 @@ object WireRetry {
   def withRetries[A](attempts: Int = 3, backoffMs: Long = 20)(f: => A): A =
     try f
     catch {
-      case e: Throwable if attempts > 1 && transient(e) =>
+      case _: IOException if attempts > 1 =>
         Thread.sleep(backoffMs)
         withRetries(attempts - 1, backoffMs * 2)(f)
     }
 
-  private def transient(e: Throwable): Boolean = e match {
-    case _: java.io.IOException => true
-    case e: IllegalStateException =>
-      Option(e.getMessage).exists(_.contains("connection closed mid-message"))
-    case _ => false
+  /** The next `n` bytes of a framed wire stream, for every framer of the
+    * socket doubles; a stream that ends first fails with [[EOFException]]. */
+  def readExactly(in: InputStream, n: Int): Array[Byte] = {
+    val buf = in.readNBytes(n)
+    if (buf.length < n)
+      throw new EOFException(s"connection closed mid-message (${buf.length}/$n bytes)")
+    buf
   }
 }

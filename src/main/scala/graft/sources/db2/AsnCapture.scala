@@ -1,7 +1,7 @@
 package graft.sources.db2
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 
 /** Db2 SQL-Replication (ASN) capture sequence: a 10-byte, strictly
   * monotone log sequence number. `IBMSNAP_COMMITSEQ` stamps every row of a
@@ -79,14 +79,10 @@ final class Db2AsnChangeSource(
     val cdTable: String = "ASNCDC.CDUSERS")
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "ASN CD source uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
   override def schema: TableSchema = initialSchema
 
   /** the base table — what snapshot chunks read (always current). */
-  private val table = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-  initialRows.foreach(r => table(keyOf(r)) = r)
+  private val table = new LiveTable("ASN CD source", initialSchema, initialRows)
 
   /** committed-but-uncaptured transactions: (commitSeq, ts, rows). */
   private val logPending =
@@ -96,12 +92,6 @@ final class Db2AsnChangeSource(
   /** IBMSNAP_REGISTER's SYNCHPOINT: advanced only by the Capture program. */
   private var synchpoint = AsnSeq.Invalid
   private var commitSeqGen = 0x1000L
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
 
   /** Commit one transaction against the base table. CD rows get their
     * COMMITSEQ now (the log assigned it at commit) but stay invisible to
@@ -127,19 +117,15 @@ final class Db2AsnChangeSource(
     val rows = changes.flatMap { e =>
       e.op match {
         case OperationType.INSERT | OperationType.REPLACE =>
-          table(keyOf(e.after)) = e.after
+          table(e)
           Seq(row('I', e.after))
         case OperationType.DELETE =>
-          val full = table.getOrElse(keyOf(e.before),
-            throw new IllegalStateException(s"delete of absent key ${e.before}"))
-          table.remove(keyOf(e.before))
+          val full = table.imageBefore(e)
+          table(e)
           Seq(row('D', full))
         case OperationType.UPDATE =>
-          val keySource = if (e.before.nonEmpty) e.before else e.after
-          val full = table.getOrElse(keyOf(keySource),
-            throw new IllegalStateException("update of absent key"))
-          if (keyOf(full) != keyOf(e.after)) table.remove(keyOf(full))
-          table(keyOf(e.after)) = e.after
+          val full = table.imageBefore(e)
+          table(e)
           // NO update code in ASN: full-before 'D' + full-after 'I',
           // adjacent intent sequences in the same commit
           Seq(row('D', full), row('I', e.after))
@@ -167,11 +153,7 @@ final class Db2AsnChangeSource(
   override def currentOffset: Long = synchronized(synchpoint.value)
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      table.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }.toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   /** One poll window over the CD table (reference query
     * `Db2Connection.java:62-73`): rows whose position ∈ (from, to] in
@@ -220,10 +202,7 @@ final class Db2AsnChangeSource(
       out.toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   /** `IBMSNAP_MONITOR` time mapping analog over the captured commits. */
   override def offsetAtTimestamp(ts: Long): Long = synchronized {

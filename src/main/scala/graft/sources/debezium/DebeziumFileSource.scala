@@ -43,11 +43,6 @@ object DebeziumFileSource {
     StructField("gtid", StringType), StructField("file", StringType),
     StructField("pos", LongType), StructField("row", IntegerType)))
 
-  private def messageType(rowSchema: StructType): StructType = StructType(Seq(
-    StructField("before", rowSchema), StructField("after", rowSchema),
-    StructField("op", StringType), StructField("ts_ms", LongType),
-    StructField("source", sourceStruct)))
-
   /** Changelog sequence from binlog coordinates: binlog file index (numeric
     * suffix of `mysql-bin.000042`) in the high bits, byte position + row
     * number within the event in the low 40. `pos` is bounded by
@@ -69,36 +64,75 @@ object DebeziumFileSource {
   def parse(
       raw: DataFrame,
       rowSchema: StructType,
-      valueCol: Column = col("value")): DataFrame = {
-    // Connect's schemas.enable wrapper is unwrapped by extracting $.payload
-    // (returns the payload's JSON text) and falling back to the whole record
-    // for bare payloads — one uniform from_json downstream of either variant
-    val payload = coalesce(get_json_object(valueCol, "$.payload"), valueCol)
-    val m = from_json(payload, messageType(rowSchema))
-    val opDecoded = when(m.getField("op") === "c", "INSERT")
-      .when(m.getField("op") === "u", "UPDATE")
-      .when(m.getField("op") === "d", "DELETE")
-      .when(m.getField("op") === "r", "REPLACE")
-      .otherwise(KafkaJsonFormats.InvalidOp)
+      valueCol: Column = col("value")): DataFrame =
+    parseRecords(raw, valueCol, rowSchema, sourceStruct, Seq("db", "table"),
+      Seq("snapshot", "file", "pos", "gtid", "server_id"))(binlogSeq)
+
+  /** Debezium's op codes: `c`/`u`/`d` and the snapshot read `r`. */
+  private val opCodes = Seq("INSERT" -> "c", "UPDATE" -> "u", "DELETE" -> "d", "REPLACE" -> "r")
+
+  private def caseOf(in: Column, pairs: Seq[(String, String)], otherwise: Column): Column =
+    pairs.tail.foldLeft(when(in === pairs.head._1, pairs.head._2)) {
+      case (c, (from, to)) => c.when(in === from, to)
+    }.otherwise(otherwise)
+
+  /** A Debezium op code as an envelope op; anything else (or a record whose
+    * JSON did not parse) is [[KafkaJsonFormats.InvalidOp]]. */
+  def decodeOp(code: Column): Column =
+    caseOf(code, opCodes.map(_.swap), lit(KafkaJsonFormats.InvalidOp))
+
+  /** An envelope op as a Debezium op code; an op without one passes through. */
+  def encodeOp(op: Column): Column = caseOf(op, opCodes, op)
+
+  /** Parse raw record values of any Debezium connector into the envelope.
+    * Connect's schemas.enable wrapper unwraps by extracting `$.payload` (the
+    * payload's JSON text), falling back to the whole record for bare
+    * payloads, so one `from_json` reads either; tombstones and blank lines
+    * drop. The connector's own `source` struct gives the rest: the table id
+    * joins the non-empty `tableFields`, `seq` orders the changes, and the
+    * metadata carries `ts_ms` plus `metaFields` as strings. */
+  def parseRecords(
+      raw: DataFrame, valueCol: Column, rowSchema: StructType, source: StructType,
+      tableFields: Seq[String], metaFields: Seq[String])(seq: Column => Column): DataFrame = {
+    val m = from_json(coalesce(get_json_object(valueCol, "$.payload"), valueCol),
+      StructType(Seq(
+        StructField("before", rowSchema), StructField("after", rowSchema),
+        StructField("op", StringType), StructField("ts_ms", LongType),
+        StructField("source", source))))
     val src = m.getField("source")
-    def metaStr(name: String): Column = coalesce(src.getField(name).cast("string"), lit(""))
+    def metaStr(c: Column): Column = coalesce(c.cast("string"), lit(""))
     raw
       .filter(valueCol.isNotNull && length(trim(valueCol)) > 0) // tombstones
       .select(
-        concat_ws(".",
-          filter(array(src.getField("db"), src.getField("table")),
-            c => c.isNotNull && c =!= "")).as(Envelope.TableIdCol),
-        opDecoded.as(Envelope.OpCol),
+        concat_ws(".", filter(array(tableFields.map(src.getField): _*),
+          c => c.isNotNull && c =!= "")).as(Envelope.TableIdCol),
+        decodeOp(m.getField("op")).as(Envelope.OpCol),
         m.getField("before").as(Envelope.BeforeCol),
         m.getField("after").as(Envelope.AfterCol),
-        binlogSeq(src).as(Envelope.SeqCol),
-        map(
-          lit("ts_ms"), coalesce(m.getField("ts_ms").cast("string"), lit("")),
-          lit("snapshot"), metaStr("snapshot"),
-          lit("file"), metaStr("file"),
-          lit("pos"), metaStr("pos"),
-          lit("gtid"), metaStr("gtid"),
-          lit("server_id"), metaStr("server_id")).as(Envelope.MetaCol))
+        seq(src).as(Envelope.SeqCol),
+        map(((lit("ts_ms") -> metaStr(m.getField("ts_ms"))) +:
+          metaFields.map(f => lit(f) -> metaStr(src.getField(f))))
+          .flatMap { case (k, v) => Seq(k, v) }: _*).as(Envelope.MetaCol))
+  }
+
+  /** One Debezium wire record per envelope row (the inverse of
+    * [[parseRecords]]): the images, the op code, `ts_ms` from the sequence,
+    * and a `source` block that opens with Debezium's common fields (version,
+    * connector, name, ts_ms, snapshot flag) and goes on with `fields`. */
+  def wireRecord(connector: String, sourceName: String, fields: Seq[Column]): Column = {
+    val tsMs = col(Envelope.SeqCol) + lit(1700000000000L)
+    to_json(
+      struct(
+        col(Envelope.BeforeCol).as("before"),
+        col(Envelope.AfterCol).as("after"),
+        encodeOp(col(Envelope.OpCol)).as("op"),
+        tsMs.as("ts_ms"),
+        struct(Seq(
+          lit("2.4.0").as("version"), lit(connector).as("connector"),
+          lit(sourceName).as("name"), tsMs.as("ts_ms"),
+          when(col(Envelope.OpCol) === "REPLACE", "true").otherwise("false")
+            .as("snapshot")) ++ fields: _*).as("source")),
+      java.util.Map.of("ignoreNullFields", "false"))
   }
 
   /** Read a directory/glob of captured JSON-lines files (one record value per
@@ -156,31 +190,13 @@ object DebeziumFileSource {
   def wireValue(
       sourceName: String = "graft",
       gtid: Column = lit(null).cast("string")): Column = {
-    val opCode = when(col(Envelope.OpCol) === "INSERT", "c")
-      .when(col(Envelope.OpCol) === "UPDATE", "u")
-      .when(col(Envelope.OpCol) === "DELETE", "d")
-      .when(col(Envelope.OpCol) === "REPLACE", "r")
-      .otherwise(col(Envelope.OpCol))
     val parts = split(col(Envelope.TableIdCol), "\\.")
-    val db = when(size(parts) >= 2, parts.getItem(0)).otherwise(lit(""))
-    val table = element_at(parts, -1)
-    to_json(
-      struct(
-        col(Envelope.BeforeCol).as("before"),
-        col(Envelope.AfterCol).as("after"),
-        opCode.as("op"),
-        (col(Envelope.SeqCol) + lit(1700000000000L)).as("ts_ms"),
-        struct(
-          lit("2.4.0").as("version"), lit("mysql").as("connector"),
-          lit(sourceName).as("name"),
-          (col(Envelope.SeqCol) + lit(1700000000000L)).as("ts_ms"),
-          when(col(Envelope.OpCol) === "REPLACE", "true").otherwise("false")
-            .as("snapshot"),
-          db.as("db"), table.as("table"),
-          lit(1L).as("server_id"), gtid.as("gtid"),
-          lit("mysql-bin.000001").as("file"),
-          col(Envelope.SeqCol).as("pos"), lit(0).as("row")).as("source")),
-      java.util.Map.of("ignoreNullFields", "false"))
+    wireRecord("mysql", sourceName, Seq(
+      when(size(parts) >= 2, parts.getItem(0)).otherwise(lit("")).as("db"),
+      element_at(parts, -1).as("table"),
+      lit(1L).as("server_id"), gtid.as("gtid"),
+      lit("mysql-bin.000001").as("file"),
+      col(Envelope.SeqCol).as("pos"), lit(0).as("row")))
   }
 
   // ------------------------------------------------------- schema history

@@ -1,7 +1,7 @@
 package graft.sources.mongo
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 import org.apache.spark.sql.types._
 
 /** An opaque change-stream resume token: `{"_data": "<hex>"}`, where the hex
@@ -96,7 +96,11 @@ final class DocumentChangeSource(
     primaryKeys = Seq("_id"))
 
   // the live collection: what snapshot chunks and update-lookup read
-  private val collection = scala.collection.mutable.LinkedHashMap(initialDocs: _*)
+  private val collection =
+    new LiveTable("document source", schema, initialDocs.map { case (id, doc) => row(id, doc) })
+  private def row(id: Long, doc: String): Map[String, Any] = Map("_id" -> id, "doc" -> doc)
+  private def lookup(id: Long): Option[String] =
+    collection.get(id).map(_("doc").asInstanceOf[String])
 
   /** One oplog entry holds exactly what a change stream delivers: the token,
     * the op, the document key, and a full document ONLY for insert/replace. */
@@ -121,19 +125,19 @@ final class DocumentChangeSource(
   // ---- the scripted "database" ---------------------------------------------
 
   def insertDoc(id: Long, doc: String, tsMillis: Long = 0L): Long = synchronized {
-    collection(id) = doc
+    collection.put(row(id, doc))
     record(OperationType.INSERT, id, Some(doc), tsMillis) // inserts carry fullDocument
   }
 
   /** A partial update: the oplog entry carries NO document — resolution is
     * deferred to read-time lookup. */
   def updateDoc(id: Long, doc: String, tsMillis: Long = 0L): Long = synchronized {
-    collection(id) = doc
+    collection.put(row(id, doc))
     record(OperationType.UPDATE, id, None, tsMillis)
   }
 
   def replaceDoc(id: Long, doc: String, tsMillis: Long = 0L): Long = synchronized {
-    collection(id) = doc
+    collection.put(row(id, doc))
     record(OperationType.REPLACE, id, Some(doc), tsMillis) // replaces carry fullDocument
   }
 
@@ -194,13 +198,13 @@ final class DocumentChangeSource(
       .map { e =>
         val full = e.op match {
           case OperationType.INSERT | OperationType.REPLACE => e.fullDocument
-          case OperationType.UPDATE => collection.get(e.id) // update lookup
+          case OperationType.UPDATE => lookup(e.id)
           case OperationType.DELETE => None
         }
         StreamEvent(e.token, e.tsMillis, e.op.toString.toLowerCase, Some(e.id), full)
       }.toSeq
     val control = (dropPos, invalidatePos, invalidateTok) match {
-      case (Some(d), Some(p), Some(tok)) if d > fromExclusive =>
+      case (Some(d), Some(_), Some(tok)) if d > fromExclusive =>
         Seq(
           StreamEvent(ResumeToken.encode(tok.decodeTimestampMillis, d),
             tok.decodeTimestampMillis, "drop", None, None),
@@ -247,12 +251,7 @@ final class DocumentChangeSource(
 
   override def snapshotRead(
       lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      collection.collect {
-        case (k, doc) if lo.forall(k >= _) && hiExclusive.forall(k < _) =>
-          Map[String, Any]("_id" -> k, "doc" -> doc)
-      }.toSeq
-    }
+    synchronized(collection.read(lo, hiExclusive))
 
   override def readLog(fromExclusive: Long, toInclusive: Long): Seq[LogRecord] =
     synchronized {
@@ -287,8 +286,7 @@ final class DocumentChangeSource(
               // collection — possibly newer than the event, possibly gone
               DataChangeEvent.update(tableId,
                 Map[String, Any]("_id" -> e.id),
-                Map[String, Any]("_id" -> e.id,
-                  "doc" -> collection.get(e.id).orNull))
+                Map[String, Any]("_id" -> e.id, "doc" -> lookup(e.id).orNull))
             case OperationType.DELETE =>
               // no before-image: the document key is all a delete carries
               DataChangeEvent.delete(tableId, Map[String, Any]("_id" -> e.id))
@@ -298,28 +296,15 @@ final class DocumentChangeSource(
         .toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (collection.isEmpty) (None, None, 0L)
-    else (Some(collection.keys.min), Some(collection.keys.max), collection.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(collection.stats)
 
   /** the drop surfaces on the driver-cheap control path (scanning the data
     * log would trip the invalidation guard). */
   override def firstDdlOffset(
       fromExclusive: Long, toInclusive: Long): Option[(Long, Seq[SchemaChangeEvent])] =
-    synchronized {
-      ddlLog.find { case (o, _) => o > fromExclusive && o <= toInclusive }
-        .map { case (o, e) => (o, Seq(e)) }
-    }
+    synchronized(LiveTable.firstDdlOffset(ddlLog, fromExclusive, toInclusive))
 
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
     oplog.find(_.tsMillis >= ts).map(_.token.decodePosition - 1).getOrElse(seq)
-  }
-
-  override def keyOfEvent(e: DataChangeEvent): Long = {
-    def k(m: Map[String, Any]): Long = m("_id") match {
-      case l: Long => l; case i: Int => i.toLong; case o => o.toString.toLong
-    }
-    if (e.op == OperationType.DELETE) k(e.before) else k(e.after)
   }
 }

@@ -1,9 +1,10 @@
 package graft.sources.mongo
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LogRecord, LoopbackListener}
+import graft.sources.cdc.WireRetry.readExactly
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.net.{ServerSocket, Socket}
+import java.net.Socket
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
@@ -119,7 +120,7 @@ object Bson {
       case (a: BJsScope, b: BJsScope) =>
         val r = a.code.compareTo(b.code)
         if (r != 0) r else compareDocs(a.scope, b.scope)
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"Unable to compare bson values between $o1 and $o2")
     }
   }
@@ -240,12 +241,12 @@ object OpMsg {
 
   /** @return (requestId, body) */
   def read(in: InputStream): (Int, Bson.BDoc) = {
-    val head = readN(in, 16)
+    val head = readExactly(in, 16)
     val hb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
     val len = hb.getInt(); val reqId = hb.getInt(); hb.getInt()
     val op = hb.getInt()
     require(op == OpCode, s"expected OP_MSG (2013), got opcode $op")
-    val rest = readN(in, len - 16)
+    val rest = readExactly(in, len - 16)
     val rb = ByteBuffer.wrap(rest).order(ByteOrder.LITTLE_ENDIAN)
     val flags = rb.getInt()
     require((flags & ~0x1) == 0, f"unsupported OP_MSG flags 0x$flags%08x")
@@ -253,17 +254,6 @@ object OpMsg {
     require(kind == 0, s"only kind-0 sections supported, got $kind")
     val doc = new Array[Byte](rb.remaining()); rb.get(doc)
     (reqId, Bson.decode(doc))
-  }
-
-  private def readN(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new IllegalStateException("connection closed mid-message")
-      off += r
-    }
-    buf
   }
 }
 
@@ -301,32 +291,17 @@ final class MongoServerDouble(val source: DocumentChangeSource, batchSize: Int =
   private val MaxOpenCursors = 64
   private var cursorCounter = 7000L
 
-  private var serverSocket: Option[ServerSocket] = None
-  def port: Int = serverSocket.map(_.getLocalPort).getOrElse(
+  private var listener: Option[LoopbackListener] = None
+  def port: Int = listener.map(_.port).getOrElse(
     throw new IllegalStateException("server not started"))
 
   def start(): Int = {
-    val ss = new ServerSocket(0, 16, java.net.InetAddress.getLoopbackAddress)
-    serverSocket = Some(ss)
-    val t = new Thread(() => acceptLoop(ss), s"mongo-double-${source.tableId.tableName}")
-    t.setDaemon(true); t.start()
-    ss.getLocalPort
+    val l = LoopbackListener.start(s"mongo-double-${source.tableId.tableName}", 0)(handle)
+    listener = Some(l)
+    l.port
   }
 
-  def stop(): Unit = serverSocket.foreach { s => try s.close() catch { case _: Throwable => () } }
-
-  private def acceptLoop(ss: ServerSocket): Unit =
-    try while (!ss.isClosed) {
-      // NB: the server side deliberately KEEPS Nagle: the dump stream is
-      // written event-by-event, and coalescing small writes into full
-      // packets is worth 3x throughput (measured on B11); the CLIENT sets
-      // TCP_NODELAY because its commands are request-response.
-      val sock = ss.accept()
-      val t = new Thread(
-        () => try handle(sock) catch { case _: Throwable => () } finally sock.close(),
-        "mongo-double-conn")
-      t.setDaemon(true); t.start()
-    } catch { case _: Throwable => () }
+  def stop(): Unit = listener.foreach(_.stop())
 
   private def handle(sock: Socket): Unit = {
     val in = new BufferedInputStream(sock.getInputStream)

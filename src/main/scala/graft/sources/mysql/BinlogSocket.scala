@@ -1,9 +1,10 @@
 package graft.sources.mysql
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{ServerSocket, Socket}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord, LoopbackListener}
+import graft.sources.cdc.WireRetry.readExactly
+import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
+import java.net.Socket
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
@@ -68,20 +69,9 @@ object BinlogWire {
   }
 
   def readPacket(in: InputStream): (Int, Array[Byte]) = {
-    val h = readN(in, 4)
+    val h = readExactly(in, 4)
     val len = (h(0) & 0xff) | ((h(1) & 0xff) << 8) | ((h(2) & 0xff) << 16)
-    (h(3) & 0xff, readN(in, len))
-  }
-
-  private def readN(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"socket closed mid-packet ($off/$n)")
-      off += r
-    }
-    buf
+    (h(3) & 0xff, readExactly(in, len))
   }
 
   private def le(n: Int): ByteBuffer = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
@@ -415,11 +405,7 @@ final class BinlogServerDouble(
     serverId: Long = 1L) {
   import BinlogWire._
 
-  require(initialSchema.primaryKeys.size == 1, "binlog double uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
-  private val table = mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-  initialRows.foreach(r => table(keyOf(r)) = r)
+  private val table = new LiveTable("binlog double", initialSchema, initialRows)
 
   /** One encoded event at (fileIdx, startPos, endPos). */
   private final case class Stored(fileIdx: Int, startPos: Long, endPos: Long, bytes: Array[Byte])
@@ -463,12 +449,6 @@ final class BinlogServerDouble(
   def failNextSessions(n: Int): Unit = injectedFailures.set(n)
   private def claimFailure(): Boolean =
     injectedFailures.getAndUpdate(v => math.max(0, v - 1)) > 0
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
 
   private def colTypes(s: TableSchema): (Seq[Int], Seq[Int]) = {
     import org.apache.spark.sql.types._
@@ -518,15 +498,7 @@ final class BinlogServerDouble(
         case OperationType.DELETE =>
           (DeleteRowsV2, false, Seq(image(e.before)))
       }
-      // the DB applies the FULL change; the wire carries the row images
-      e.op match {
-        case OperationType.DELETE => table.remove(keyOf(e.before))
-        case OperationType.UPDATE | OperationType.REPLACE =>
-          if (e.before.contains(pk) && keyOf(e.before) != keyOf(e.after))
-            table.remove(keyOf(e.before))
-          table(keyOf(e.after)) = e.after
-        case _ => table(keyOf(e.after)) = e.after
-      }
+      table(e) // the DB applies the FULL change; the wire carries the row images
       last = appendEvent(et,
         encodeRowsPayload(tableNumCounter, update, types, vmax, images), tsMillis)
       recordIndex += ((last, tsMillis, Seq.empty))
@@ -562,16 +534,10 @@ final class BinlogServerDouble(
 
   // ---- in-process probes (snapshot side + driver-cheap indexes) ----------
 
-  def snapshotRead(lo: Option[Long], hi: Option[Long]): Seq[Map[String, Any]] = synchronized {
-    table.collect {
-      case (k, row) if lo.forall(k >= _) && hi.forall(k < _) => row
-    }.toSeq
-  }
+  def snapshotRead(lo: Option[Long], hi: Option[Long]): Seq[Map[String, Any]] =
+    synchronized(table.read(lo, hi))
 
-  def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   def currentOffset: Long = synchronized(BinlogOffsets.encode(curFile, curPos))
 
@@ -605,34 +571,22 @@ final class BinlogServerDouble(
 
   // ---- the TCP server -----------------------------------------------------
 
-  private var serverSocket: Option[ServerSocket] = None
-  def port: Int = serverSocket.map(_.getLocalPort).getOrElse(
+  private var listener: Option[LoopbackListener] = None
+  def port: Int = listener.map(_.port).getOrElse(
     throw new IllegalStateException("server not started"))
 
   def start(): Int = {
-    val ss = new ServerSocket(0, 16, java.net.InetAddress.getLoopbackAddress)
-    serverSocket = Some(ss)
-    val t = new Thread(() => acceptLoop(ss), s"binlog-double-${tableId.tableName}")
-    t.setDaemon(true); t.start()
-    ss.getLocalPort
+    val l = LoopbackListener.start(s"binlog-double-${tableId.tableName}", 0)(handle)
+    listener = Some(l)
+    l.port
   }
 
-  def stop(): Unit = serverSocket.foreach { s => try s.close() catch { case _: Throwable => () } }
+  def stop(): Unit = listener.foreach(_.stop())
 
-  private def acceptLoop(ss: ServerSocket): Unit =
-    try while (!ss.isClosed) {
-      // NB: the server side deliberately KEEPS Nagle: the dump stream is
-      // written event-by-event, and coalescing small writes into full
-      // packets is worth 3x throughput (measured on B11); the CLIENT sets
-      // TCP_NODELAY because its commands are request-response.
-      val sock = ss.accept()
-      // a client hangup mid-session is normal (short-lived dump sessions)
-      val t = new Thread(
-        () => try handle(sock) catch { case _: Throwable => () } finally sock.close(),
-        "binlog-double-conn")
-      t.setDaemon(true); t.start()
-    } catch { case _: Throwable => () } // listener closed
-
+  /** One session. The server side KEEPS Nagle: the dump stream is written
+    * event by event, and coalescing small writes into full packets is worth
+    * 3x throughput (measured on B11); the client sets TCP_NODELAY because
+    * its commands are request-response. */
   private def handle(sock: Socket): Unit = {
     val in = new BufferedInputStream(sock.getInputStream)
     val out = new BufferedOutputStream(sock.getOutputStream)

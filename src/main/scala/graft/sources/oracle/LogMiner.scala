@@ -1,7 +1,7 @@
 package graft.sources.oracle
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 
 /** The Oracle redo-log family through the same [[ChangeSource]] SPI as the
   * binlog, WAL/slot, change-table, and document sources — the MINED-LOG
@@ -45,15 +45,11 @@ final class LogMinerChangeSource(
     initialRows: Seq[Map[String, Any]])
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "logminer source uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
   override def schema: TableSchema = initialSchema
 
   /** committed state — what snapshot chunks read (read consistency: open
     * transactions have not touched this). */
-  private val table = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-  initialRows.foreach(r => table(keyOf(r)) = r)
+  private val table = new LiveTable("logminer source", initialSchema, initialRows)
 
   /** one mined redo entry: entry SCN, owning transaction, the change. */
   private final case class RedoEntry(scn: Long, xid: String, event: DataChangeEvent)
@@ -68,12 +64,6 @@ final class LogMinerChangeSource(
   private var scnHead: Long = 1000000L
   private var headOffset: Long = 1000000L << 16
   private var xidCounter: Int = 0
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
 
   private def nextScn(): Long = { scnHead += 1 + (scnHead % 3); scnHead }
 
@@ -114,7 +104,7 @@ final class LogMinerChangeSource(
         s"tx $xid has ${events.size} entries; the 16-bit seq field caps at 65535")
       val commitScn = nextScn()
       commits(xid) = (commitScn, tsMillis)
-      events.foreach(applyToTable)
+      events.foreach(table.apply)
       openTxs.remove(xid)
       headOffset = (commitScn << 16) | events.size.toLong
       headOffset
@@ -144,15 +134,6 @@ final class LogMinerChangeSource(
     headOffset
   }
 
-  private def applyToTable(e: DataChangeEvent): Unit = e.op match {
-    case OperationType.DELETE => table.remove(keyOf(e.before))
-    case OperationType.UPDATE | OperationType.REPLACE =>
-      if (e.before.nonEmpty && keyOf(e.before) != keyOf(e.after))
-        table.remove(keyOf(e.before))
-      table(keyOf(e.after)) = e.after
-    case _ => table(keyOf(e.after)) = e.after
-  }
-
   /** head = the last COMMITTED (or DDL) position; open transactions never
     * advance it, so the runtime never plans a window into uncommitted state. */
   override def currentOffset: Long = synchronized(headOffset)
@@ -167,11 +148,7 @@ final class LogMinerChangeSource(
   }
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      table.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }.toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   /** Mine `(from, to]`: assemble transactions from the interleaved redo
     * entries, emit ONLY committed ones, ordered by (commitScn, entry seq),
@@ -203,10 +180,7 @@ final class LogMinerChangeSource(
       out.toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
     commits.collectFirst {
@@ -216,10 +190,7 @@ final class LogMinerChangeSource(
 
   override def firstDdlOffset(
       fromExclusive: Long, toInclusive: Long): Option[(Long, Seq[SchemaChangeEvent])] =
-    synchronized {
-      ddlLog.find { case (o, _) => o > fromExclusive && o <= toInclusive }
-        .map { case (o, e) => (o, Seq(e)) }
-    }
+    synchronized(LiveTable.firstDdlOffset(ddlLog, fromExclusive, toInclusive))
 
   /** test probes */
   def openTxCount: Int = synchronized(openTxs.size)

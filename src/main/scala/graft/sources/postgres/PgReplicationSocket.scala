@@ -1,9 +1,10 @@
 package graft.sources.postgres
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LogRecord, LoopbackListener}
+import graft.sources.cdc.WireRetry.readExactly
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.net.{ServerSocket, Socket}
+import java.net.Socket
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
@@ -39,21 +40,10 @@ object PgWireV3 {
   }
 
   def readMsg(in: InputStream): (Char, Array[Byte]) = {
-    val head = readN(in, 5)
+    val head = readExactly(in, 5)
     val len = ByteBuffer.wrap(head, 1, 4).order(ByteOrder.BIG_ENDIAN).getInt
     require(len >= 4, s"bad message length $len")
-    (head(0).toChar, readN(in, len - 4))
-  }
-
-  private def readN(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new IllegalStateException("connection closed mid-message")
-      off += r
-    }
-    buf
+    (head(0).toChar, readExactly(in, len - 4))
   }
 
   def writeStartup(out: OutputStream, params: Seq[(String, String)]): Unit = {
@@ -66,9 +56,9 @@ object PgWireV3 {
   }
 
   def readStartup(in: InputStream): Map[String, String] = {
-    val lenB = readN(in, 4)
+    val lenB = readExactly(in, 4)
     val len = ByteBuffer.wrap(lenB).order(ByteOrder.BIG_ENDIAN).getInt
-    val body = readN(in, len - 4)
+    val body = readExactly(in, len - 4)
     val ver = ByteBuffer.wrap(body, 0, 4).order(ByteOrder.BIG_ENDIAN).getInt
     require(ver == ProtocolVersion3, s"unsupported protocol version $ver")
     val parts = new String(body, 4, body.length - 4, UTF_8).split("\u0000").filter(_.nonEmpty)
@@ -178,32 +168,17 @@ final class PgReplicationServerDouble(val wal: WalChangeSource) {
   private def claimFailure(): Boolean =
     injectedFailures.getAndUpdate(v => math.max(0, v - 1)) > 0
 
-  private var serverSocket: Option[ServerSocket] = None
-  def port: Int = serverSocket.map(_.getLocalPort).getOrElse(
+  private var listener: Option[LoopbackListener] = None
+  def port: Int = listener.map(_.port).getOrElse(
     throw new IllegalStateException("server not started"))
 
   def start(): Int = {
-    val ss = new ServerSocket(0, 16, java.net.InetAddress.getLoopbackAddress)
-    serverSocket = Some(ss)
-    val t = new Thread(() => acceptLoop(ss), s"pg-double-${wal.tableId.tableName}")
-    t.setDaemon(true); t.start()
-    ss.getLocalPort
+    val l = LoopbackListener.start(s"pg-double-${wal.tableId.tableName}", 0)(handle)
+    listener = Some(l)
+    l.port
   }
 
-  def stop(): Unit = serverSocket.foreach { s => try s.close() catch { case _: Throwable => () } }
-
-  private def acceptLoop(ss: ServerSocket): Unit =
-    try while (!ss.isClosed) {
-      // NB: the server side deliberately KEEPS Nagle: the dump stream is
-      // written event-by-event, and coalescing small writes into full
-      // packets is worth 3x throughput (measured on B11); the CLIENT sets
-      // TCP_NODELAY because its commands are request-response.
-      val sock = ss.accept()
-      val t = new Thread(
-        () => try handle(sock) catch { case _: Throwable => () } finally sock.close(),
-        "pg-double-conn")
-      t.setDaemon(true); t.start()
-    } catch { case _: Throwable => () } // listener closed
+  def stop(): Unit = listener.foreach(_.stop())
 
   private def handle(sock: Socket): Unit = {
     val in = new BufferedInputStream(sock.getInputStream)

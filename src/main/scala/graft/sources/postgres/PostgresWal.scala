@@ -1,7 +1,7 @@
 package graft.sources.postgres
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 
 /** PostgreSQL log sequence number — the WAL position that is the Postgres
   * source family's entire offset model (the reference's
@@ -190,14 +190,11 @@ final class WalChangeSource(
     replicaIdentityFull: Boolean = false)
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "wal source uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
   override def schema: TableSchema = initialSchema
 
-  private val table =
-    scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-  initialRows.foreach(r => table(keyOf(r)) = r)
+  /** the live table, which the DB changes in full: a key-only before image
+    * (all a default-identity delete carries) is enough to remove a row. */
+  private val table = new LiveTable("wal source", initialSchema, initialRows)
 
   private val wal = scala.collection.mutable.ArrayBuffer.empty[LogRecord]
   // WAL begins past segment 0 (Lsn.java:24-28); first commit lands above this
@@ -205,29 +202,11 @@ final class WalChangeSource(
   private var confirmedFlush: Long = 0L
   private var xidCounter: Long = 500L
 
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
-
-  /** Apply one event to the live table (what snapshot chunks read). A
-    * key-only before is all a default-identity delete carries — enough to
-    * remove the row, exactly enough for downstream PK-materialization. */
-  private def applyToTable(e: DataChangeEvent): Unit = e.op match {
-    case OperationType.DELETE => table.remove(keyOf(e.before))
-    case OperationType.UPDATE | OperationType.REPLACE =>
-      if (e.before.contains(pk) && keyOf(e.before) != keyOf(e.after))
-        table.remove(keyOf(e.before))
-      table(keyOf(e.after)) = e.after
-    case _ => table(keyOf(e.after)) = e.after
-  }
-
   /** Trim a before image to what the configured REPLICA IDENTITY publishes:
     * key columns only by default, the full old row under FULL. */
   private def identityImage(before: Map[String, Any]): Map[String, Any] =
     if (replicaIdentityFull) before
-    else before.filter { case (k, _) => k == pk }
+    else before.filter { case (k, _) => k == table.pk }
 
   /** Commit one transaction: every change lands in the WAL in order, each at
     * its own strictly increasing LSN with a content-sized stride, the last
@@ -242,7 +221,7 @@ final class WalChangeSource(
         before = identityImage(e.before),
         meta = e.meta ++ Map(
           "lsn" -> Lsn(headLsn).asString, "txId" -> xidCounter.toString))
-      applyToTable(e) // the DB applied the FULL change; the wire sees the identity image
+      table(e) // the DB applied the FULL change; the wire sees the identity image
       wal += LogRecord(headLsn, tsMillis, wire)
     }
     Lsn(headLsn)
@@ -300,11 +279,7 @@ final class WalChangeSource(
   override def currentOffset: Long = synchronized(headLsn)
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      table.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }.toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   override def readLog(fromExclusive: Long, toInclusive: Long): Seq[LogRecord] =
     synchronized {
@@ -317,10 +292,7 @@ final class WalChangeSource(
       wal.filter(r => r.offset > fromExclusive && r.offset <= toInclusive).toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
     wal.find(_.tsMillis >= ts).map(_.offset - 1).getOrElse(headLsn)
@@ -335,10 +307,7 @@ final class WalChangeSource(
 
   override def firstDdlOffset(
       fromExclusive: Long, toInclusive: Long): Option[(Long, Seq[SchemaChangeEvent])] =
-    synchronized {
-      ddlLog.find { case (o, _) => o > fromExclusive && o <= toInclusive }
-        .map { case (o, e) => (o, Seq(e)) }
-    }
+    synchronized(LiveTable.firstDdlOffset(ddlLog, fromExclusive, toInclusive))
 
   /** The streaming runtime acknowledges the CHECKPOINTED position here after
     * each durable batch commit; the slot advances only forward

@@ -1,7 +1,7 @@
 package graft.sources.postgres
 
 import graft.operators.Envelope
-import graft.sinks.KafkaJsonFormats
+import graft.sources.debezium.DebeziumFileSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,48 +35,20 @@ object PostgresWireFormat {
     StructField("txId", LongType), StructField("lsn", LongType),
     StructField("xmin", LongType)))
 
-  private def messageType(rowSchema: StructType): StructType = StructType(Seq(
-    StructField("before", rowSchema), StructField("after", rowSchema),
-    StructField("op", StringType), StructField("ts_ms", LongType),
-    StructField("source", sourceStruct)))
-
-  /** Parse raw record values (string column) into the graft envelope. The
-    * Connect schemas.enable wrapper unwraps via `$.payload` with fallback to
-    * the bare record; tombstones and blank lines drop; unknown op codes and
-    * unparseable JSON route to [[KafkaJsonFormats.InvalidOp]]. */
+  /** Parse raw record values (string column) into the graft envelope, the
+    * way [[DebeziumFileSource.parseRecords]] reads every Debezium
+    * connector's records (unknown op codes and unparseable JSON route to
+    * [[graft.sinks.KafkaJsonFormats.InvalidOp]]). The LSN is the sequence:
+    * already a total-ordered int64; records with no LSN (some snapshot
+    * captures) sort first, where a snapshot belongs. */
   def parse(
       raw: DataFrame,
       rowSchema: StructType,
-      valueCol: Column = col("value")): DataFrame = {
-    val payload = coalesce(get_json_object(valueCol, "$.payload"), valueCol)
-    val m = from_json(payload, messageType(rowSchema))
-    val opDecoded = when(m.getField("op") === "c", "INSERT")
-      .when(m.getField("op") === "u", "UPDATE")
-      .when(m.getField("op") === "d", "DELETE")
-      .when(m.getField("op") === "r", "REPLACE")
-      .otherwise(KafkaJsonFormats.InvalidOp)
-    val src = m.getField("source")
-    def metaStr(name: String): Column = coalesce(src.getField(name).cast("string"), lit(""))
-    raw
-      .filter(valueCol.isNotNull && length(trim(valueCol)) > 0)
-      .select(
-        concat_ws(".",
-          filter(array(src.getField("db"), src.getField("schema"), src.getField("table")),
-            c => c.isNotNull && c =!= "")).as(Envelope.TableIdCol),
-        opDecoded.as(Envelope.OpCol),
-        m.getField("before").as(Envelope.BeforeCol),
-        m.getField("after").as(Envelope.AfterCol),
-        // the LSN is the sequence: already a total-ordered int64; records
-        // with no LSN (some snapshot captures) sort first, where a snapshot
-        // belongs
-        coalesce(src.getField("lsn"), lit(0L)).as(Envelope.SeqCol),
-        map(
-          lit("ts_ms"), coalesce(m.getField("ts_ms").cast("string"), lit("")),
-          lit("snapshot"), metaStr("snapshot"),
-          lit("lsn"), metaStr("lsn"),
-          lit("txId"), metaStr("txId"),
-          lit("xmin"), metaStr("xmin")).as(Envelope.MetaCol))
-  }
+      valueCol: Column = col("value")): DataFrame =
+    DebeziumFileSource.parseRecords(raw, valueCol, rowSchema, sourceStruct,
+      Seq("db", "schema", "table"), Seq("snapshot", "lsn", "txId", "xmin")) { src =>
+      coalesce(src.getField("lsn"), lit(0L))
+    }
 
   /** Read a directory/glob of captured JSON-lines files (one record value
     * per line). Distributed text scan. */
@@ -91,30 +63,12 @@ object PostgresWireFormat {
       sourceName: String = "graft",
       lsn: Column = col(Envelope.SeqCol),
       txId: Column = col(Envelope.SeqCol)): Column = {
-    val opCode = when(col(Envelope.OpCol) === "INSERT", "c")
-      .when(col(Envelope.OpCol) === "UPDATE", "u")
-      .when(col(Envelope.OpCol) === "DELETE", "d")
-      .when(col(Envelope.OpCol) === "REPLACE", "r")
-      .otherwise(col(Envelope.OpCol))
     val parts = split(col(Envelope.TableIdCol), "\\.")
-    val db = when(size(parts) >= 3, parts.getItem(0)).otherwise(lit(""))
-    val pgSchema = when(size(parts) >= 2, element_at(parts, -2)).otherwise(lit("public"))
-    val table = element_at(parts, -1)
-    to_json(
-      struct(
-        col(Envelope.BeforeCol).as("before"),
-        col(Envelope.AfterCol).as("after"),
-        opCode.as("op"),
-        (col(Envelope.SeqCol) + lit(1700000000000L)).as("ts_ms"),
-        struct(
-          lit("2.4.0").as("version"), lit("postgresql").as("connector"),
-          lit(sourceName).as("name"),
-          (col(Envelope.SeqCol) + lit(1700000000000L)).as("ts_ms"),
-          when(col(Envelope.OpCol) === "REPLACE", "true").otherwise("false")
-            .as("snapshot"),
-          db.as("db"), pgSchema.as("schema"), table.as("table"),
-          txId.as("txId"), lsn.as("lsn"),
-          lit(null).cast("long").as("xmin")).as("source")),
-      java.util.Map.of("ignoreNullFields", "false"))
+    DebeziumFileSource.wireRecord("postgresql", sourceName, Seq(
+      when(size(parts) >= 3, parts.getItem(0)).otherwise(lit("")).as("db"),
+      when(size(parts) >= 2, element_at(parts, -2)).otherwise(lit("public")).as("schema"),
+      element_at(parts, -1).as("table"),
+      txId.as("txId"), lsn.as("lsn"),
+      lit(null).cast("long").as("xmin")))
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources.sqlserver
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 
 /** SQL Server transaction-log LSN — a 10-byte triple (virtual-log-file
   * sequence : log block : record slot) rendered as three hex parts
@@ -126,9 +126,6 @@ final class SqlServerChangeSource(
     val captureInstance: String = "dbo_users")
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "change-table source uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
   /** the base table's CATALOG schema — ALTERs evolve it immediately. */
   private var liveSchema = initialSchema
   private val schemaMgr = { val m = new SchemaManager; m.register(tableId, initialSchema); m }
@@ -145,8 +142,7 @@ final class SqlServerChangeSource(
   override def schema: TableSchema = synchronized(liveSchema)
 
   /** the base table — what snapshot chunks read (always current). */
-  private val table = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-  initialRows.foreach(r => table(keyOf(r)) = r)
+  private val table = new LiveTable("change-table source", initialSchema, initialRows)
 
   /** committed-but-uncaptured transactions: (commit LSN, ts, rows). The
     * transaction log assigned their LSNs at commit; the capture job has not
@@ -159,12 +155,6 @@ final class SqlServerChangeSource(
   private var vlfSeq = 0x29L
   private var blockInVlf = 0L
   private var maxCapturedLsn = CtLsn.Invalid
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
 
   private def nextCommitLsn(): CtLsn = {
     // content-sized stride, never 1; a VLF rolls over like a binlog file does
@@ -202,21 +192,17 @@ final class SqlServerChangeSource(
       e.op match {
         case OperationType.INSERT | OperationType.REPLACE =>
           seq += 1
-          table(keyOf(e.after)) = e.after
+          table(e)
           Seq(CtRow(commitLsn, seq, 2, captured(e.after)))
         case OperationType.DELETE =>
           seq += 1
-          val full = table.getOrElse(keyOf(e.before),
-            throw new IllegalStateException(s"delete of absent key ${e.before}"))
-          table.remove(keyOf(e.before))
+          val full = table.imageBefore(e)
+          table(e)
           Seq(CtRow(commitLsn, seq, 1, captured(full)))
         case OperationType.UPDATE =>
           seq += 1
-          val keySource = if (e.before.nonEmpty) e.before else e.after
-          val full = table.getOrElse(keyOf(keySource),
-            throw new IllegalStateException(s"update of absent key"))
-          if (keyOf(full) != keyOf(e.after)) table.remove(keyOf(full))
-          table(keyOf(e.after)) = e.after
+          val full = table.imageBefore(e)
+          table(e)
           // one update = a 3/4 pair sharing the seqval
           Seq(CtRow(commitLsn, seq, 3, captured(full)), CtRow(commitLsn, seq, 4, captured(e.after)))
         case other => throw new IllegalArgumentException(s"change tables cannot carry $other")
@@ -287,11 +273,7 @@ final class SqlServerChangeSource(
   override def currentOffset: Long = synchronized(maxCapturedLsn.value)
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      table.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }.toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   /** One poll window (`fn_cdc_get_all_changes(from, to, 'all update old')`):
     * change-table rows whose row LSN ∈ (from, to], with each operation-3/4
@@ -338,10 +320,7 @@ final class SqlServerChangeSource(
       out.toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   /** `sys.fn_cdc_map_time_to_lsn` analog over the captured commits. */
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
@@ -356,10 +335,7 @@ final class SqlServerChangeSource(
     * is constant None. */
   override def firstDdlOffset(
       fromExclusive: Long, toInclusive: Long): Option[(Long, Seq[SchemaChangeEvent])] =
-    synchronized {
-      ddlHistory.find { case (o, _) => o > fromExclusive && o <= toInclusive }
-        .map { case (o, e) => (o, Seq(e)) }
-    }
+    synchronized(LiveTable.firstDdlOffset(ddlHistory, fromExclusive, toInclusive))
 
   /** test probe: rows the capture job has not yet copied. */
   def uncapturedTxCount: Int = synchronized(logPending.size)

@@ -1,7 +1,7 @@
 package graft.sources.tidb
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 
 /** The TiKV-CDC family through the same [[ChangeSource]] SPI as the other
   * source families — the WATERMARK-SORTED architecture (reference:
@@ -39,14 +39,10 @@ final class TiCdcChangeSource(
     val regionSpan: Long = 50L)
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "tikv source uses a single numeric PK")
-  private val pk = initialSchema.primaryKeys.head
-
   override def schema: TableSchema = initialSchema
 
   /** committed state — what snapshot chunks read. */
-  private val table = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-  initialRows.foreach(r => table(keyOf(r)) = r)
+  private val table = new LiveTable("tikv source", initialSchema, initialRows)
 
   /** per-region key ranges [lo, hi), last unbounded — TiKV regions split
     * dynamically, so the topology is mutable state here. */
@@ -67,12 +63,6 @@ final class TiCdcChangeSource(
     scala.collection.mutable.TreeMap.empty[Long, (Long, Int, DataChangeEvent)]
   /** rows per commit ts, for the seq component of the packed offset. */
   private val rowsAtTs = scala.collection.mutable.Map.empty[Long, Int]
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
 
   def regionOf(key: Long): Int = synchronized {
     val i = ranges.indexWhere { case (lo, hi) => key >= lo && key < hi }
@@ -100,8 +90,7 @@ final class TiCdcChangeSource(
     // in-flight prewrites re-home to their key's owning region in the NEW
     // topology (their recorded indices just shifted)
     val rekeyed = prewrites.toSeq.map { case ((_, st), e) =>
-      val key = keyOf(if (e.op == OperationType.DELETE) e.before else e.after)
-      ((regionOf(key), st), e)
+      ((regionOf(table.keyOfEvent(e)), st), e)
     }
     prewrites.clear()
     rekeyed.foreach { case (k, e) => prewrites(k) = e }
@@ -109,7 +98,7 @@ final class TiCdcChangeSource(
 
   /** Phase 1: the row lands in the region's CDC stream, uncommitted. */
   def prewrite(startTs: Long, e: DataChangeEvent): Unit = synchronized {
-    val region = regionOf(keyOf(if (e.op == OperationType.DELETE) e.before else e.after))
+    val region = regionOf(table.keyOfEvent(e))
     require(!prewrites.contains((region, startTs)),
       s"duplicate prewrite (region $region, startTs $startTs)")
     prewrites((region, startTs)) = e
@@ -131,7 +120,7 @@ final class TiCdcChangeSource(
     require(seq < 0xfff, s"too many rows at commitTs $commitTs")
     rowsAtTs(commitTs) = seq + 1
     commits((commitTs << 12) | (seq + 1).toLong) = (tsMillis, region, e)
-    applyToTable(e)
+    table(e)
   }
 
   /** Phase 2b: ROLLBACK — the prewrite vanishes. */
@@ -173,24 +162,11 @@ final class TiCdcChangeSource(
     * deployment degenerates to the max the flink function reads). */
   def globalResolvedTs: Long = synchronized(regionResolved.min)
 
-  private def applyToTable(e: DataChangeEvent): Unit = e.op match {
-    case OperationType.DELETE => table.remove(keyOf(e.before))
-    case OperationType.UPDATE | OperationType.REPLACE =>
-      if (e.before.nonEmpty && keyOf(e.before) != keyOf(e.after))
-        table.remove(keyOf(e.before))
-      table(keyOf(e.after)) = e.after
-    case _ => table(keyOf(e.after)) = e.after
-  }
-
   /** head = everything at or below the global watermark is emittable. */
   override def currentOffset: Long = synchronized((globalResolvedTs << 12) | 0xfffL)
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      table.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }.toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   /** flushRows: committed rows in `(from, to]`, already commit-ts sorted by
     * the TreeMap. The window never exceeds the watermark, because the
@@ -208,10 +184,7 @@ final class TiCdcChangeSource(
       }.toSeq
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    if (table.isEmpty) (None, None, 0L)
-    else (Some(table.keys.min), Some(table.keys.max), table.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
     commits.collectFirst { case (off, (t, _, _)) if t >= ts => off - 1 }

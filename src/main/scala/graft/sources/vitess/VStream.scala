@@ -1,7 +1,7 @@
 package graft.sources.vitess
 
 import graft.core._
-import graft.sources.cdc.{ChangeSource, LogRecord}
+import graft.sources.cdc.{ChangeSource, LiveTable, LogRecord}
 
 /** A Vitess-style VGtid: one GTID position PER SHARD of the keyspace, plus
   * the TOPOLOGY EPOCH the position vector is expressed in. The reference's
@@ -90,9 +90,7 @@ final class VStreamChangeSource(
     val shardSpan: Long = 40L)
     extends ChangeSource {
 
-  require(initialSchema.primaryKeys.size == 1, "vstream source uses a single numeric PK")
   require(initialShards >= 2 && initialShards <= 4, "packing supports 2-4 shards")
-  private val pk = initialSchema.primaryKeys.head
 
   override def schema: TableSchema = initialSchema
 
@@ -105,9 +103,10 @@ final class VStreamChangeSource(
   private var epoch = 0
   /** per-shard gtid positions (current epoch's topology). */
   private var gtids: Vector[Long] = Vector.fill(initialShards)(0L)
-  /** per-shard tables (a row lives on exactly one shard). */
-  private var shardTables =
-    Vector.fill(initialShards)(scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]])
+  /** the keyspace's rows: a row lives on the one shard [[shardOf]] routes
+    * its key to, so a reshard moves no row. */
+  private val table = new LiveTable("vstream source", initialSchema, initialRows)
+  initialRows.foreach(r => shardOf(table.keyOf(r))) // every row routes to a shard
 
   /** the merged journal: every event with the packed VGtid AFTER it, its
     * epoch, its shard index WITHIN that epoch, and its shard gtid. Packed
@@ -120,14 +119,6 @@ final class VStreamChangeSource(
   /** Vitess journal events: (new epoch, split shard name, new names, cut VGtid). */
   private val reshardJournalLog =
     scala.collection.mutable.ArrayBuffer.empty[(Int, String, Vector[String], VGtid)]
-
-  initialRows.foreach(r => shardTables(shardOf(keyOf(r)))(keyOf(r)) = r)
-
-  private def keyOf(r: Map[String, Any]): Long = r(pk) match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"non-numeric pk: $other")
-  }
 
   /** VTGate routing: the shard owning a key in the CURRENT topology. */
   def shardOf(key: Long): Int = synchronized {
@@ -152,18 +143,14 @@ final class VStreamChangeSource(
     val cut = VGtid(gtids, epoch)
     val (lo, hi) = ranges(i)
     val mid = at.getOrElse(
-      if (hi == Long.MaxValue) lo + math.max(shardSpan / 2, (shardTables(i).keys
-        .foldLeft(lo)(math.max) - lo) / 2 + 1)
+      if (hi == Long.MaxValue) lo + math.max(shardSpan / 2,
+        (table.read(Some(lo), None).map(table.keyOf).foldLeft(lo)(math.max) - lo) / 2 + 1)
       else lo + (hi - lo) / 2)
     require(mid > lo && mid < hi, s"split point $mid outside ($lo,$hi)")
     val oldName = names(i)
     val newNames = Vector(s"${oldName}_a", s"${oldName}_b")
     ranges = (ranges.take(i) :+ ((lo, mid)) :+ ((mid, hi))) ++ ranges.drop(i + 1)
     names = (names.take(i) :+ newNames(0) :+ newNames(1)) ++ names.drop(i + 1)
-    val (keep, move) = shardTables(i).partition { case (k, _) => k < mid }
-    val tblA = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]] ++ keep
-    val tblB = scala.collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]] ++ move
-    shardTables = (shardTables.take(i) :+ tblA :+ tblB) ++ shardTables.drop(i + 1)
     gtids = (gtids.take(i) :+ 0L :+ 0L) ++ gtids.drop(i + 1)
     epoch += 1
     require(epoch <= 0xff, "epoch overflowed the packing range")
@@ -174,26 +161,17 @@ final class VStreamChangeSource(
     * append to the merged journal. Cross-shard transactions do not exist in
     * this model (Vitess' default atomicity is single-shard). */
   def write(e: DataChangeEvent, tsMillis: Long = 0L): Long = synchronized {
-    val key = if (e.op == OperationType.DELETE) keyOf(e.before) else keyOf(e.after)
-    val shard = shardOf(key)
-    // validate BEFORE mutating the shard table: applying the change and
+    val shard = shardOf(table.keyOfEvent(e))
+    // validate BEFORE mutating the live table: applying the change and
     // THEN throwing would leave snapshot state permanently divergent from
     // the journal — rows visible to snapshotRead that no readLog window
     // ever emits
     require(gtids(shard) + 1 <= 0xfffL,
       s"shard $shard gtid would overflow the packing range — the epoch " +
         "must reshard/rotate first")
-    e.op match {
-      case OperationType.DELETE => shardTables(shard).remove(keyOf(e.before))
-      case OperationType.UPDATE | OperationType.REPLACE =>
-        if (e.before.nonEmpty && keyOf(e.before) != keyOf(e.after)) {
-          require(shardOf(keyOf(e.before)) == shard,
-            "a PK change crossing shards would be a resharding move, not a row update")
-          shardTables(shard).remove(keyOf(e.before))
-        }
-        shardTables(shard)(keyOf(e.after)) = e.after
-      case _ => shardTables(shard)(keyOf(e.after)) = e.after
-    }
+    LiveTable.movedFrom(table.pk, e).foreach(old => require(shardOf(old) == shard,
+      "a PK change crossing shards would be a resharding move, not a row update"))
+    table(e)
     gtids = gtids.updated(shard, gtids(shard) + 1)
     val vg = VGtid(gtids, epoch)
     val wire = e.copy(meta = e.meta ++ Map(
@@ -207,11 +185,7 @@ final class VStreamChangeSource(
   override def currentOffset: Long = synchronized(VGtid(gtids, epoch).packed)
 
   override def snapshotRead(lo: Option[Long], hiExclusive: Option[Long]): Seq[Map[String, Any]] =
-    synchronized {
-      shardTables.flatMap(_.collect {
-        case (k, row) if lo.forall(k >= _) && hiExclusive.forall(k < _) => row
-      }).toSeq
-    }
+    synchronized(table.read(lo, hiExclusive))
 
   /** Resume from a packed VGtid: events strictly after `from` and at or
     * before `to` in the epoch-stamped vector-clock order — an event is
@@ -239,11 +213,7 @@ final class VStreamChangeSource(
       out
     }
 
-  override def keyStats: (Option[Long], Option[Long], Long) = synchronized {
-    val keys = shardTables.flatMap(_.keys)
-    if (keys.isEmpty) (None, None, 0L)
-    else (Some(keys.min), Some(keys.max), keys.size.toLong)
-  }
+  override def keyStats: (Option[Long], Option[Long], Long) = synchronized(table.stats)
 
   override def offsetAtTimestamp(ts: Long): Long = synchronized {
     // the position BEFORE the first qualifying event must itself be a valid
