@@ -82,7 +82,7 @@ object DebeziumFileSource {
     caseOf(code, opCodes.map(_.swap), lit(KafkaJsonFormats.InvalidOp))
 
   /** An envelope op as a Debezium op code; an op without one passes through. */
-  def encodeOp(op: Column): Column = caseOf(op, opCodes, op)
+  private def encodeOp(op: Column): Column = caseOf(op, opCodes, op)
 
   /** Parse raw record values of any Debezium connector into the envelope.
     * Connect's schemas.enable wrapper unwraps by extracting `$.payload` (the
