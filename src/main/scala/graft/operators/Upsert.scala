@@ -22,7 +22,7 @@ object Upsert {
     coalesce(col(s"${Envelope.AfterCol}.$k"), col(s"${Envelope.BeforeCol}.$k")).as(k)
 
   /** The shared per-key last-event aggregate: ONE `max_by(payload, seq)`
-    * hash aggregate per (optional route, key) group. Every materialize
+    * hash aggregate per key, after [[splitMovedKeys]]. Every materialize
     * variant derives from this single definition so tie-breaking and the
     * packed struct cannot drift between them.
     *
@@ -46,12 +46,34 @@ object Upsert {
     * (both null out → the row appears in neither split), so the split is
     * value-identical.
     */
-  private def latestByKey(env: DataFrame, groupCols: Seq[Column]): DataFrame =
-    env
-      .groupBy(groupCols.toIndexedSeq: _*)
+  private def latestByKey(env: DataFrame, keyCols: Seq[String],
+      retractMovedKeys: Boolean = true): DataFrame =
+    (if (retractMovedKeys) splitMovedKeys(env, keyCols) else env)
+      .groupBy(keyCols.map(keyCol): _*)
       .agg(max_by(
         struct((col(Envelope.OpCol) === "DELETE").as("__del"), col(Envelope.AfterCol)),
         col(Envelope.SeqCol)).as("__last"))
+
+  /** A PK-changing UPDATE (a before key that differs from the after key)
+    * is two changes, as Debezium emits them: a DELETE of the before key and
+    * an upsert of the after key, both at the event's `seq`. Grouped by the
+    * after key alone, the before key would keep its old row. One explode
+    * splits such events; every other event passes through as one row. A
+    * sink that keeps the before key's row (the reference's values sink)
+    * asks [[withMaterialized]] not to split. */
+  private def splitMovedKeys(env: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val (op, before, after) = (Envelope.OpCol, Envelope.BeforeCol, Envelope.AfterCol)
+    val moved = col(before).isNotNull && col(after).isNotNull &&
+      keyCols.map(k => !(col(s"$before.$k") <=> col(s"$after.$k"))).reduce(_ || _)
+    val retract = "__retract"
+    env.select(env.columns.map(col) :+ explode(
+      when(moved, array(lit(true), lit(false))).otherwise(array(lit(false)))).as(retract): _*)
+      .select(env.columns.map {
+        case `op` => when(col(retract), lit("DELETE")).otherwise(col(op)).as(op)
+        case `after` => when(col(retract), lit(null)).otherwise(col(after)).as(after)
+        case c => col(c)
+      }.toIndexedSeq: _*)
+  }
 
   /** Split the aggregate into (surviving rows, deleted keys). */
   private def splitLatest(latest: DataFrame, keyCols: Seq[String]): (DataFrame, DataFrame) = {
@@ -70,7 +92,7 @@ object Upsert {
     */
   def materialize(env: DataFrame, keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "upsert materialization requires primary keys")
-    splitLatest(latestByKey(env, keyCols.map(keyCol)), keyCols)._1
+    splitLatest(latestByKey(env, keyCols), keyCols)._1
   }
 
   /** Like [[materialize]] but also returns the keys whose final event was a
@@ -81,7 +103,7 @@ object Upsert {
     */
   def materializeWithDeletes(env: DataFrame, keyCols: Seq[String]): (DataFrame, DataFrame) = {
     require(keyCols.nonEmpty, "upsert materialization requires primary keys")
-    splitLatest(latestByKey(env, keyCols.map(keyCol)), keyCols)
+    splitLatest(latestByKey(env, keyCols), keyCols)
   }
 
   /** Bracket form for per-batch sinks: persists the shared per-key aggregate,
@@ -89,10 +111,10 @@ object Upsert {
     * long-running stream never accumulates cached batch plans
     * (one `persist`/`unpersist` pair per micro-batch per routed table).
     */
-  def withMaterialized[T](env: DataFrame, keyCols: Seq[String])(
-      use: (DataFrame, DataFrame) => T): T = {
+  def withMaterialized[T](env: DataFrame, keyCols: Seq[String],
+      retractMovedKeys: Boolean = true)(use: (DataFrame, DataFrame) => T): T = {
     require(keyCols.nonEmpty, "upsert materialization requires primary keys")
-    val latest = latestByKey(env, keyCols.map(keyCol)).persist()
+    val latest = latestByKey(env, keyCols, retractMovedKeys).persist()
     try {
       val (upserts, deletes) = splitLatest(latest, keyCols)
       use(upserts, deletes)

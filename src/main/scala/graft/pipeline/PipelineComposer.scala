@@ -305,7 +305,7 @@ final class PipelineComposer(
           val keys =
             if (sinkSchema.primaryKeys.nonEmpty) sinkSchema.primaryKeys
             else sinkSchema.struct.fieldNames.toSeq
-          Upsert.withMaterialized(coerced, keys) { (upserts, deletes) =>
+          Upsert.withMaterialized(coerced, keys, sink.retractsMovedKeys) { (upserts, deletes) =>
             sink.writeBatch(sinkT, upserts, deletes, batchId, runId)
           }
       }

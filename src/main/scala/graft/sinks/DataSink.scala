@@ -54,6 +54,11 @@ trait DataSink extends MetadataApplier {
   def recordBatchCommit(sinkTableId: TableId, batchId: Long, runId: String): Unit = ()
 
   def schemaOf(sinkTableId: TableId): Option[TableSchema]
+
+  /** Whether a PK-changing UPDATE reaches this sink as a delete of its
+    * before key plus an upsert of its after key (Debezium's shape), so the
+    * old key's row goes. */
+  def retractsMovedKeys: Boolean = true
 }
 
 /** A sink that consumes the CHANGELOG (the envelope frame) rather than the
@@ -159,6 +164,11 @@ final class MemoryDatabase(
       * ALTER_COLUMN_TYPE + DROP_COLUMN). Rejection happens BEFORE any
       * logging or state change: a refused event leaves no trace. */
     rejectDdl: Set[String] = Set.empty) extends DataSink {
+
+  /** The reference's `ValuesDatabase` files an UPDATE under its after
+    * image's key only, so the before key keeps its row; the conformance
+    * gates pin that. */
+  override def retractsMovedKeys: Boolean = false
 
   private def kindOf(e: SchemaChangeEvent): String = e match {
     case _: graft.core.CreateTableEvent => "CREATE_TABLE"

@@ -160,9 +160,17 @@ private[sinks] object InterchangeMirror {
     w.finish(head)
   }
 
-  /** Lakehouse version `v` against `prev`, its partition columns checked. */
+  /** Lakehouse version `v` against `prev`, its partition columns checked.
+    * Every writer (mirror and export alike) gets its diffs here, so this is
+    * where a version with deletion vectors is refused: a file re-added with
+    * a vector is live before and after, a diff by path does not see its
+    * newly dead rows, and a mirror would keep them. */
   private def diff(table: LakehouseTable, v: Long, prev: Option[Snapshot]): VersionDiff = {
     val cur = table.snapshot(Some(v))
+    require(cur.files.forall(_.dv.isEmpty),
+      s"lakehouse version $v carries deletion vectors, which the interchange " +
+        "writers do not pass through: run compact() so they are materialized " +
+        "into rewritten data files, then mirror or export")
     val meta = cur.meta.getOrElse(
       throw new IllegalStateException("table has no meta action (not created)"))
     requirePartitionTypes(meta.schema.struct, meta.schema.partitionKeys)

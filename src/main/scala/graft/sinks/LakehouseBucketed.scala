@@ -31,8 +31,10 @@ import java.util
   *
   * Scope (all loud, none silent): PK tables only; outstanding MOR delete
   * files must be compacted first (a per-bucket scan cannot anti-join them
-  * without reintroducing a shuffle); files carrying pre-evolution schemas
-  * read under the declared schema (missing columns null, as everywhere).
+  * without reintroducing a shuffle); deletion vectors apply inside the
+  * per-file read (a position filter, no shuffle); files carrying
+  * pre-evolution schemas read under the declared schema (missing columns
+  * null, as everywhere).
   */
 object LakehouseBucketed {
 
@@ -188,7 +190,7 @@ private[sinks] final class LakehouseBucketedScan(
       val files = snap.files.filter(_.bucket == b)
         .map { f =>
           val p = java.nio.file.Paths.get(dir, f.path)
-          (p.toString, java.nio.file.Files.size(p))
+          LakehouseBucketFile(p.toString, java.nio.file.Files.size(p), f.dv.map(_.descriptor(dir)))
         }
       LakehouseBucketPartition(b, files.toArray)
     }.toArray
@@ -200,9 +202,15 @@ private[sinks] final class LakehouseBucketedScan(
   }
 }
 
+/** One data file of a bucket, with its deletion vector if it has one. */
+private[sinks] final case class LakehouseBucketFile(
+    path: String,
+    size: Long,
+    dv: Option[DeltaReaderFeatures.DvDescriptor])
+
 private[sinks] final case class LakehouseBucketPartition(
     bucket: Int,
-    files: Array[(String, Long)])
+    files: Array[LakehouseBucketFile])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(bucket)
 }
@@ -215,12 +223,17 @@ private[sinks] final class LakehouseBucketReaderFactory(
     // flatten: the vectorized path yields ColumnarBatch disguised as
     // InternalRow (the FileScanRDD contract)
     import scala.jdk.CollectionConverters._
-    val rows: Iterator[InternalRow] = part.files.iterator.flatMap { case (path, size) =>
+    val rows: Iterator[InternalRow] = part.files.iterator.flatMap { f =>
       // erase before matching: a lambda typed InternalRow would checkcast
       // the disguised ColumnarBatch at entry and defeat the match
-      reader(path, size).asInstanceOf[Iterator[Any]].flatMap {
+      val all = reader(f.path, f.size).asInstanceOf[Iterator[Any]].flatMap {
         case b: ColumnarBatch => b.rowIterator().asScala
         case r => Iterator.single(r.asInstanceOf[InternalRow])
+      }
+      // the reader pushes no filter, so rows arrive in file order: the
+      // running index is the row position a deletion vector marks
+      f.dv.map(_.load()).fold(all) { dead =>
+        all.zipWithIndex.collect { case (r, i) if !dead.contains(i.toLong) => r }
       }
     }
     new PartitionReader[InternalRow] {

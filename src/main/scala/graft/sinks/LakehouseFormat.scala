@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.core._
 import graft.pipeline.SchemaDerivator
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftParquetBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -21,8 +21,11 @@ import scala.jdk.CollectionConverters._
   *
   * What the log buys over a `_VERSION` pointer:
   *  - **File-granular MERGE**: data files are hash-bucketed by PK; a batch
-  *    rewrites only the buckets its keys hash into. At 100 TB with 4096
-  *    buckets, a 1%-of-keys batch rewrites ~1% of the table, not all of it.
+  *    touches only the buckets its keys hash into. At 100 TB with 4096
+  *    buckets, a 1%-of-keys batch touches ~1% of the table, not all of it.
+  *    A copy-on-write table rewrites each touched bucket; a table with
+  *    deletion vectors writes only the batch's rows plus a bitmap of the
+  *    replaced rows' positions (see [[LakehouseTable.merge]]).
   *  - **Snapshot isolation + time travel**: a reader replays the log up to a
   *    version and sees exactly that version's file set; concurrent writers
   *    never disturb it.
@@ -48,6 +51,18 @@ object LakehouseFormat {
     * declared column type drives the typed comparison at prune time). */
   final case class ColStats(min: String, max: String)
 
+  /** The dead row positions of one data file: a portable
+    * RoaringBitmapArray (the Delta deletion-vector encoding,
+    * [[DeltaReaderFeatures.serializeBitmap]]) stored at `offset` of the
+    * sidecar `path` (relative to the table root), `size` bytes framed by
+    * [[DeltaReaderFeatures.writeDvFile]], holding `cardinality` positions. */
+  final case class DeletionVector(path: String, offset: Int, size: Int, cardinality: Long) {
+    /** The descriptor an executor loads the bitmap from (CRC-checked). */
+    def descriptor(tableDir: String): DeltaReaderFeatures.DvDescriptor =
+      DeltaReaderFeatures.DvDescriptor(None,
+        Paths.get(tableDir, path).toAbsolutePath.toString, offset, size, cardinality)
+  }
+
   final case class AddFile(
       path: String,
       bucket: Int,
@@ -55,7 +70,8 @@ object LakehouseFormat {
       stats: Map[String, ColStats] = Map.empty,
       ver: Long = 0L, // commit version (sequence number)
       sorted: Boolean = false, // rows sorted by PK (compact writes)
-      bloom: Boolean = false) extends Action // per-file bloom sidecar exists
+      bloom: Boolean = false, // per-file bloom sidecar exists
+      dv: Option[DeletionVector] = None) extends Action // rows deleted in place
   final case class RemoveFile(path: String) extends Action
   /** A MERGE-ON-READ delete file (Iceberg v2 equality deletes): a parquet of
     * PK values whose rows are dead in every data file committed BEFORE `ver`
@@ -64,6 +80,10 @@ object LakehouseFormat {
     * [[LakehouseTable.deleteWhere]] writes them; reads anti-join them;
     * [[LakehouseTable.compact]] materializes and drops them. */
   final case class EqualityDeleteFile(path: String, ver: Long = 0L) extends Action
+  /** Table metadata. `deletionVectors` is the table's write mode (Iceberg's
+    * `write.update.mode`): false, a merge rewrites each touched bucket
+    * (copy-on-write); true, it writes only the batch's rows and marks the
+    * rows they replace dead in a deletion vector (merge-on-read). */
   final case class Meta(
       schema: TableSchema,
       buckets: Int,
@@ -71,7 +91,8 @@ object LakehouseFormat {
       mergeEngine: String = "last-wins",
       aggregations: Map[String, String] = Map.empty,
       sequenceField: Option[String] = None,
-      bloomColumns: Seq[String] = Seq.empty) extends Action
+      bloomColumns: Seq[String] = Seq.empty,
+      deletionVectors: Boolean = false) extends Action
   final case class Txn(runId: String, batchId: Long) extends Action
   /** A row-level change-data file of one MERGE commit (Delta CDF's
     * `_change_data` / Paimon's changelog files): rows carry the declared
@@ -111,16 +132,40 @@ object LakehouseFormat {
       dirs: Seq[String] = Nil,
       conflicts: Snapshot => Boolean = (_: Snapshot) => true)
 
+  /** The map-side row filter of a deletion-vector scan: false for a row
+    * position its file's vector marks. `dvs` maps paths relative to the
+    * table root to their descriptors. A scan reads a file's rows one after
+    * another, so a task loads each file's bitmap once, when its rows
+    * start. */
+  private[sinks] final class LiveRows(dvs: Map[String, DeltaReaderFeatures.DvDescriptor])
+      extends ((String, Long) => Boolean) with Serializable {
+    @transient private var file: String = _
+    @transient private var dead: Option[DeltaReaderFeatures.LongBitmap] = _
+    def apply(filePath: String, row: Long): Boolean = {
+      if (filePath != file) {
+        file = filePath
+        val p = new java.net.URI(filePath).getPath
+        dead = dvs.collectFirst { case (rel, d) if p.endsWith("/" + rel) => d.load() }
+      }
+      !dead.exists(_.contains(row))
+    }
+  }
+
   private val mapper = new ObjectMapper
 
   private[sinks] def encode(a: Action): String = {
     val root = mapper.createObjectNode()
     a match {
-      case AddFile(p, b, r, stats, ver, sorted, bloom) =>
+      case AddFile(p, b, r, stats, ver, sorted, bloom, dv) =>
         val n = root.putObject("add"); n.put("path", p); n.put("bucket", b); n.put("rows", r)
         if (ver > 0) n.put("ver", ver) // absent = 0: legacy logs sort earliest
         if (sorted) n.put("sorted", true) // absent = false: merge-written files
         if (bloom) n.put("bloom", true) // absent = false: no sidecar index
+        dv.foreach { d => // absent = every row is live
+          val e = n.putObject("dv")
+          e.put("path", d.path); e.put("offset", d.offset); e.put("size", d.size)
+          e.put("cardinality", d.cardinality)
+        }
         if (stats.nonEmpty) {
           val st = n.putObject("stats")
           stats.foreach { case (c, cs) =>
@@ -131,7 +176,7 @@ object LakehouseFormat {
         root.putObject("remove").put("path", p)
       case EqualityDeleteFile(p, ver) =>
         val n = root.putObject("eqdel"); n.put("path", p); n.put("ver", ver)
-      case Meta(s, b, cl, me, aggs, sf, bloomCols) =>
+      case Meta(s, b, cl, me, aggs, sf, bloomCols, dvs) =>
         val n = root.putObject("meta")
         n.put("schemaJson", s.struct.json)
         val pks = n.putArray("pks"); s.primaryKeys.foreach(pks.add)
@@ -149,6 +194,7 @@ object LakehouseFormat {
         if (bloomCols.nonEmpty) {
           val bc = n.putArray("bloomColumns"); bloomCols.foreach(bc.add)
         }
+        if (dvs) n.put("deletionVectors", true) // absent = copy-on-write merges
       case Txn(run, batch) =>
         val n = root.putObject("txn"); n.put("runId", run); n.put("batchId", batch)
       case ChangeFile(p) =>
@@ -169,7 +215,9 @@ object LakehouseFormat {
       AddFile(a.get("path").asText, a.get("bucket").asInt, a.get("rows").asLong, stats,
         if (a.has("ver")) a.get("ver").asLong else 0L,
         a.has("sorted") && a.get("sorted").asBoolean,
-        a.has("bloom") && a.get("bloom").asBoolean)
+        a.has("bloom") && a.get("bloom").asBoolean,
+        Option(a.get("dv")).map(d => DeletionVector(d.get("path").asText,
+          d.get("offset").asInt, d.get("size").asInt, d.get("cardinality").asLong)))
     } else if (n.has("remove")) RemoveFile(n.get("remove").get("path").asText)
     else if (n.has("eqdel")) {
       val d = n.get("eqdel")
@@ -192,7 +240,8 @@ object LakehouseFormat {
           .map(e => e.getKey -> e.getValue.asText).toMap,
         if (m.has("sequenceField")) Some(m.get("sequenceField").asText) else None,
         if (!m.has("bloomColumns")) Seq.empty
-        else m.get("bloomColumns").elements.asScala.map(_.asText).toSeq)
+        else m.get("bloomColumns").elements.asScala.map(_.asText).toSeq,
+        m.has("deletionVectors") && m.get("deletionVectors").asBoolean)
     } else if (n.has("txn")) {
       val t = n.get("txn")
       Txn(t.get("runId").asText, t.get("batchId").asLong)
@@ -445,7 +494,8 @@ final class LakehouseTable(
       mergeEngine: String = "last-wins",
       aggregations: Map[String, String] = Map.empty,
       sequenceField: Option[String] = None,
-      bloomColumns: Seq[String] = Seq.empty): Unit = {
+      bloomColumns: Seq[String] = Seq.empty,
+      deletionVectors: Boolean = false): Unit = {
     // PK-less tables are legal append-only tables (Paimon's append mode);
     // merge() enforces keys at call time. `changelog = true` makes every
     // MERGE commit also write row-level change data (readChangelogBetween).
@@ -502,8 +552,18 @@ final class LakehouseTable(
       require(schema.struct.fieldNames.contains(c),
         s"bloom column '$c' is not a table column")
     }
+    // `deletionVectors` (Iceberg's write.update.mode = merge-on-read): a
+    // merge writes only the batch's rows and marks the rows they replace
+    // dead by position. Only where the batch row alone is the new state:
+    // a last-wins PK table without changelog or sequence field.
+    if (deletionVectors) {
+      require(schema.primaryKeys.nonEmpty, "deletion vectors require primary keys")
+      require(mergeEngine == "last-wins" && !changelog && sequenceField.isEmpty,
+        "deletion vectors require the last-wins engine without changelog or " +
+          "sequenceField: those merges combine old and new rows")
+    }
     val meta = Meta(schema, buckets, changelog, mergeEngine, aggregations, sequenceField,
-      bloomColumns)
+      bloomColumns, deletionVectors)
     // a rival that created the table first wins: nothing is staged on its state
     commitOptimistically() { snap =>
       Option.when(snap.meta.isEmpty)(Staged((), _ => Seq(meta), conflicts = _.meta.isDefined))
@@ -523,7 +583,8 @@ final class LakehouseTable(
 
   /** Current (or time-traveled) contents. Missing columns in old files read
     * as null under the declared schema; remaining representation drift is
-    * coerced (widening lattice) — coerce-on-read, rewrite never. Outstanding
+    * coerced (widening lattice) — coerce-on-read, rewrite never. Deletion
+    * vectors filter their files' rows map-side and outstanding
     * equality-delete files apply as anti-joins ([[readData]]).
     */
   def read(version: Option[Long] = None): DataFrame = {
@@ -531,8 +592,9 @@ final class LakehouseTable(
     readData(snap, snap.files)
   }
 
-  /** Read `keep` under `snap`'s schema with MERGE-ON-READ deletes applied:
-    * a delete file masks keys only in data files committed BEFORE it
+  /** Read `keep` under `snap`'s schema with MERGE-ON-READ deletes applied.
+    * A file's deletion vector drops its dead positions inside the scan
+    * ([[scan]]). A delete file masks keys only in data files committed BEFORE it
     * (`file.ver < delete.ver` — the Iceberg sequence-number rule), so a
     * later re-upsert survives. Files are cohorted by their applicable
     * delete set (cohort count ≤ distinct delete versions, a handful between
@@ -552,7 +614,8 @@ final class LakehouseTable(
     // both, and pre-change files only ever need widening/null-fill, which
     // the merged-footer union performed identically).
     def raw(fs: Seq[AddFile]): DataFrame = scan(fs.map(_.path), schema.struct,
-      pinned = snap.metaVer >= 0 && fs.forall(_.ver >= snap.metaVer))
+      pinned = snap.metaVer >= 0 && fs.forall(_.ver >= snap.metaVer),
+      dvs = fs.flatMap(f => f.dv.map(f.path -> _)).toMap)
     val dels = snap.deleteFiles
     if (dels.isEmpty || keep.isEmpty) raw(keep)
     else {
@@ -573,28 +636,65 @@ final class LakehouseTable(
   /** The one scan of table parquet files (`rel`: paths under the table
     * root), coerced to `schema`. Pinned, every file is known to be written
     * under `schema`, so it is the read schema; otherwise the read schema
-    * merges the files' footers, which costs a schema-inference job. */
-  private def scan(rel: Seq[String], schema: StructType, pinned: Boolean): DataFrame =
+    * merges the files' footers, which costs a schema-inference job. The
+    * log names every file, so none is listed (a listing of more than 32
+    * paths is a Spark job of its own). The rows at the positions of `dvs`
+    * (deletion vectors by file) are dropped map-side, by
+    * `_metadata.row_index`, before any column is coerced. */
+  private def scan(rel: Seq[String], schema: StructType, pinned: Boolean,
+      dvs: Map[String, DeletionVector] = Map.empty): DataFrame =
     if (rel.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else {
-      val reader =
-        if (pinned) spark.read.schema(schema) else spark.read.option("mergeSchema", "true")
-      SchemaDerivator.coerce(reader.parquet(rel.map(p => Paths.get(dir, p).toString): _*), schema)
+      val df = GraftParquetBridge.parquetFiles(spark, rel.map(absolute),
+        Option.when(pinned)(schema))
+      SchemaDerivator.coerce(if (dvs.isEmpty) df else df.where(liveRows(dvs)), schema)
     }
+
+  private def absolute(rel: String): String = Paths.get(dir, rel).toAbsolutePath.toString
+
+  /** The map-side deletion-vector filter of a scan: the executor loads
+    * each file's bitmap once per task and keeps the rows it does not mark
+    * (the filter Delta import uses). Codegen sees one function object, so
+    * any set of vectors runs the same generated class. */
+  private def liveRows(dvs: Map[String, DeletionVector]): org.apache.spark.sql.Column = {
+    val live = new LiveRows(dvs.map { case (p, d) => p -> d.descriptor(dir) })
+    udf((file: String, row: Long) => live(file, row))
+      .apply(col("_metadata.file_path"), col("_metadata.row_index"))
+  }
 
   private def bucketOf(pks: Seq[String], buckets: Int) =
     pmod(hash(pks.map(col): _*), lit(buckets))
 
   private val bucketColName = "__graft_bucket"
 
+  /** The live files at which a deletion-vector merge rewrites a touched
+    * bucket instead of marking it (its vectors then materialize). Each
+    * merge adds a file to every bucket it touches, and each merge's
+    * position lookup opens every file of those buckets, so without a bound
+    * a long-running stream's commits would slow down without end. The
+    * bound is set well above the file counts that short runs reach, since
+    * each rewrite costs what a copy-on-write merge of the bucket costs. */
+  private val dvBucketFiles = 32
+
   /** Bucket columns: PKs for merge tables, all columns for PK-less append
     * tables (content-hash spread keeps buckets balanced and deterministic). */
   private def bucketKeyCols(schema: TableSchema): Seq[String] =
     if (schema.primaryKeys.nonEmpty) schema.primaryKeys else schema.columnNames
 
-  /** Copy-on-write MERGE, file-granular: only the PK-hash buckets touched by
-    * this batch are rewritten. `txn` (runId, batchId) commits atomically with
-    * the data; a batch whose id is already in the log is skipped entirely.
+  /** File-granular MERGE: only the PK-hash buckets touched by this batch
+    * are involved, and the table's write mode decides how.
+    *  - Copy-on-write (the default): each touched bucket is rewritten whole
+    *    — its old rows minus the changed keys, plus the batch — and its old
+    *    files removed.
+    *  - Deletion vectors ([[Meta.deletionVectors]]): only the batch's rows
+    *    are written. A key-only scan of the touched buckets' files finds
+    *    the positions of the changed keys' old rows; every file holding one
+    *    is re-added (`RemoveFile` + `AddFile`, its `ver` kept) with a
+    *    vector of its old dead positions plus the new ones, all in one
+    *    sidecar per commit. A touched bucket that already holds
+    *    `dvBucketFiles` files is rewritten as in copy-on-write instead.
+    * `txn` (runId, batchId) commits atomically with the data; a batch whose
+    * id is already in the log is skipped entirely.
     */
   def merge(
       upserts: DataFrame,
@@ -614,21 +714,31 @@ final class LakehouseTable(
       // Driver memory: the collect is batch-sized — one row per changed
       // key, exactly what the broadcast build side of that anti-join
       // always materialized on the driver.
+      // keys in their declared types: the position lookup matches them
+      // against the files' values
+      val pkTypes = pks.map(k => col(k).cast(schema.struct(k).dataType).as(k))
       val keys = coerced.select(pks.map(col): _*)
-        .unionByName(deletedKeys.select(pks.map(col): _*))
+        .unionByName(deletedKeys.select(pks.map(col): _*)).select(pkTypes: _*)
       val changed = keys.withColumn(bucketColName, bucketOf(pks, snap.buckets)).collect()
       // nothing upserted or deleted: no files to write, so no version.
       // The batch's txn is not recorded either — replaying an empty batch
       // changes nothing.
       if (changed.isEmpty) return None
       val touched = changed.map(_.getInt(pks.size)).toSet
-      val changedKeys = spark.createDataFrame(
-        changed.map(r => Row.fromSeq(r.toSeq.take(pks.size))).distinct.toSeq.asJava,
-        keys.schema)
+      val keyRows = changed.map(r => Row.fromSeq(r.toSeq.take(pks.size))).distinct.toSeq
+      val changedKeys = spark.createDataFrame(keyRows.asJava, keys.schema)
       val oldFiles = snap.files.filter(f => touched.contains(f.bucket))
+      // A deletion-vector merge reads no old row of a bucket it only marks:
+      // the batch is the new state of its keys. It rewrites a touched bucket
+      // once the bucket holds `dvBucketFiles` files, which bounds the files
+      // every later lookup and read of the bucket opens.
+      val dvMode = snap.meta.exists(_.deletionVectors)
+      val rewritten = if (!dvMode) oldFiles
+        else oldFiles.groupBy(_.bucket).values.filter(_.size >= dvBucketFiles).flatten.toSeq
+      val dead = if (dvMode) deadPositions(snap, oldFiles.diff(rewritten), keyRows) else Nil
       // readData applies outstanding MOR deletes: a key deleted by an
       // equality-delete file must not resurrect into the rewritten bucket
-      val cur = if (oldFiles.isEmpty) None else Some(readData(snap, oldFiles))
+      val cur = if (rewritten.isEmpty) None else Some(readData(snap, rewritten))
       val kept = cur.map(_.join(broadcast(changedKeys), pks, "left_anti"))
       // the merge ENGINE decides what an upsert of an existing key means:
       //  - last-wins: the batch row replaces the whole old row
@@ -761,6 +871,7 @@ final class LakehouseTable(
         .write.partitionBy(bucketColName)
         .parquet(Paths.get(dir, commitRel).toString)
       val adds = listCommitFiles(commitRel, snap.meta)
+      val reAdds = writeDeletionVectors(commitRel, dead)
       // Row-level change data (Delta CDF / Paimon changelog-producer
       // shape), classified by LOOKUP against the touched buckets we scan
       // for the rewrite anyway: pre-images of updated keys, the old rows
@@ -793,22 +904,76 @@ final class LakehouseTable(
           filesUnder(cdcRel).map(p => ChangeFile(p.toString))
         }
       // A lost claim is a conflict (Delta-style) only if an interim commit
-      // changed the table metadata, the files of OUR touched buckets, or the
-      // outstanding equality-delete set (a new delete logically precedes us:
-      // re-committing would resurrect its keys). Otherwise the files already
-      // written re-claim the next version; only a real conflict re-merges.
-      // New files take the commit version as their sequence number: they
-      // postdate every outstanding delete.
+      // changed the table metadata, the files of OUR touched buckets (a path
+      // or its deletion vector: a rival's re-added file carries positions
+      // ours would drop), or the outstanding equality-delete set (a new
+      // delete logically precedes us: re-committing would resurrect its
+      // keys). Otherwise the files already written re-claim the next
+      // version; only a real conflict re-merges. New files take the commit
+      // version as their sequence number: they postdate every outstanding
+      // delete. A re-added file keeps its own.
+      val removed = rewritten.map(f => RemoveFile(f.path)) ++
+        reAdds.flatMap(f => Seq(RemoveFile(f.path), f))
+      def touchedState(s: Snapshot) =
+        s.files.filter(f => touched.contains(f.bucket)).map(f => f.path -> f.dv).toSet
       Some(Staged((),
-        v => adds.map(_.copy(ver = v)) ++ oldFiles.map(f => RemoveFile(f.path)) ++ cdcActions,
+        v => removed ++ adds.map(_.copy(ver = v)) ++ cdcActions,
         Seq(commitRel, cdcRel),
-        again => again.meta != snap.meta ||
-          again.files.filter(f => touched.contains(f.bucket)).map(_.path).toSet !=
-            oldFiles.map(_.path).toSet ||
+        again => again.meta != snap.meta || touchedState(again) != touchedState(snap) ||
           again.deleteFiles.map(_.path).toSet != snap.deleteFiles.map(_.path).toSet))
     }
     commitOptimistically(txn, maxAttempts)(stage)
   }
+
+  /** The files of `files` that hold a row whose primary key is one of
+    * `keys`, each with its dead positions: those its vector already marks
+    * plus the positions of those rows. One key-only scan
+    * finds them: `_metadata.row_index` of the rows an `InSet` over the
+    * collected keys admits, with no join and so no broadcast job. The key
+    * struct always reaches the `InSet` through its hash-set path, whose
+    * generated code holds the set by reference, so any set of keys runs
+    * the same class. A file whose hits its vector already marks all is
+    * left out. */
+  private def deadPositions(snap: Snapshot, files: Seq[AddFile], keys: Seq[Row])
+      : Seq[(AddFile, Seq[Long])] =
+    if (files.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      import org.apache.spark.sql.catalyst.expressions.InSet
+      import org.apache.spark.sql.graftbridge.ColumnBridge
+      val pks = snap.schema.primaryKeys
+      val keyStruct = StructType(pks.map(snap.schema.struct(_)))
+      val internal = CatalystTypeConverters.createToCatalystConverter(keyStruct)
+      val inKeys = ColumnBridge.column(InSet(
+        ColumnBridge.expression(struct(pks.map(col): _*)), keys.map(internal).toSet))
+      val hits = GraftParquetBridge.parquetFiles(spark, files.map(f => absolute(f.path)),
+          Some(keyStruct))
+        .where(inKeys)
+        .select(col("_metadata.file_path"), col("_metadata.row_index"))
+        .collect()
+        .groupBy(r => new java.net.URI(r.getString(0)).getPath)
+      hits.toSeq.flatMap { case (file, rows) =>
+        val f = files.find(f => file.endsWith("/" + f.path)).getOrElse(
+          throw new IllegalStateException(s"$file is not a file of $dir"))
+        val old = f.dv.fold(Set.empty[Long])(_.descriptor(dir).load().positions.toSet)
+        val all = old ++ rows.map(_.getLong(1))
+        Option.when(all.size > old.size)(f -> all.toSeq.sorted)
+      }.sortBy(_._1.path)
+    }
+
+  /** Write the vectors of `dead` into one sidecar under commit directory
+    * `rel`, and return the files re-described with their new vectors. */
+  private def writeDeletionVectors(rel: String, dead: Seq[(AddFile, Seq[Long])]): Seq[AddFile] =
+    if (dead.isEmpty) Nil
+    else {
+      val sidecarDir = Files.createDirectories(Paths.get(dir, rel))
+      val uuid = java.util.UUID.randomUUID()
+      val entries = DeltaReaderFeatures.writeDvFile(sidecarDir.toString, dead.map(_._2), Some(uuid))
+      val sidecar = s"$rel/deletion_vector_$uuid.bin"
+      dead.zip(entries).map { case ((f, _), (_, offset, size, cardinality)) =>
+        f.copy(dv = Some(DeletionVector(sidecar, offset, size, cardinality)))
+      }
+    }
 
   /** APPEND write, no merge: rows land as new files in their buckets without
     * touching existing files (Paimon's append-table mode — event logs, raw
@@ -880,8 +1045,9 @@ final class LakehouseTable(
     }
 
   /** Small-file compaction (Delta OPTIMIZE / Paimon compact): every bucket
-    * fragmented into more than `maxFilesPerBucket` live files is rewritten to
-    * ONE file, in one metadata commit. Data-identical — the same rows under
+    * fragmented into more than `maxFilesPerBucket` live files, or holding a
+    * file with a deletion vector, is rewritten to ONE file, in one metadata
+    * commit; a compacted table has no deletion vectors. Data-identical — the same rows under
     * fewer, larger files — so time travel to pre-compaction versions still
     * replays the old file set until [[vacuum]] reclaims it. At 100 TB this is
     * the maintenance op that keeps per-bucket scan setup O(1) after long
@@ -905,7 +1071,9 @@ final class LakehouseTable(
           .parquet(snap.deleteFiles.map(d => Paths.get(dir, d.path).toString): _*)
           .select(bucketOf(snap.schema.primaryKeys, snap.buckets).as("b"))
           .distinct().collect().map(_.getInt(0)).toSet
-      val buckets = fragmented.keySet ++ delBuckets
+      // deletion vectors materialize the same way: their buckets rewrite
+      // without the dead rows
+      val buckets = fragmented.keySet ++ delBuckets ++ snap.files.filter(_.dv.nonEmpty).map(_.bucket)
       val dropDeletes = snap.deleteFiles.map(d => RemoveFile(d.path))
       if (buckets.isEmpty) {
         // key-less delete files (all their keys already absent) still drop,
@@ -920,7 +1088,7 @@ final class LakehouseTable(
         // the bucket (clustering): compacted files carry sorted=true, which
         // the bucketed DSv2 scan reports as output ordering — merge joins over
         // two compacted tables then skip BOTH the shuffle and the sort.
-        // readData applies the deletes during the rewrite.
+        // readData applies the deletes and deletion vectors during the rewrite.
         val sortCols = bucketColName +: snap.schema.primaryKeys
         readData(snap, oldFiles)
           .withColumn(bucketColName, bucketOf(bucketKeyCols(snap.schema), snap.buckets))
@@ -1432,8 +1600,9 @@ final class LakehouseTable(
       .filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
-  /** Drop data files no longer referenced by any snapshot >= `retainFrom`
-    * (defaults to the latest version only). The log itself is never vacuumed.
+  /** Drop data files and deletion-vector sidecars no longer referenced by
+    * any snapshot >= `retainFrom` (defaults to the latest version only). The
+    * log itself is never vacuumed.
     */
   def vacuum(retainFromVersion: Option[Long] = None,
       retentionMs: Long = 6L * 3600 * 1000): Seq[String] = {
@@ -1448,11 +1617,13 @@ final class LakehouseTable(
     // commits survive too: readChangelogBetween reaches them although no
     // snapshot references them (expired commits' change files are reclaimed).
     val base = snapshot(Some(from))
-    val referenced = (base.files.map(_.path) ++ base.deleteFiles.map(_.path) ++
-      listVersions().flatMap(v => actionsOf(v).collect {
-        case ChangeFile(p) => p
-        case a: AddFile if v > from => a.path
-        case d: EqualityDeleteFile if v > from => d.path
+    def paths(a: AddFile) = a.path +: a.dv.map(_.path).toSeq
+    val referenced = (base.files.flatMap(paths) ++ base.deleteFiles.map(_.path) ++
+      listVersions().flatMap(v => actionsOf(v).flatMap {
+        case ChangeFile(p) => Seq(p)
+        case a: AddFile if v > from => paths(a)
+        case d: EqualityDeleteFile if v > from => Seq(d.path)
+        case _ => Nil
       })).toSet
     val root = Paths.get(dir)
     // retention window (Delta VACUUM's retain-hours): a CONCURRENT writer
@@ -1463,8 +1634,9 @@ final class LakehouseTable(
     // an in-flight write older than hours is a crashed writer whose claim
     // can no longer win, which is exactly what vacuum exists to reclaim.
     val horizon = System.currentTimeMillis() - math.max(0L, retentionMs)
-    val removed = filesUnder("").map(_.toString).filter(rel => !referenced.contains(rel) &&
-      Files.getLastModifiedTime(root.resolve(rel)).toMillis < horizon)
+    val removed = (filesUnder("") ++ filesUnder("", ".bin")).map(_.toString)
+      .filter(rel => !referenced.contains(rel) &&
+        Files.getLastModifiedTime(root.resolve(rel)).toMillis < horizon)
     removed.foreach(rel => Files.deleteIfExists(root.resolve(rel)))
     // bloom sidecars live and die with their data file: reclaim any whose
     // data file is no longer referenced (the sidecar of a vacuumed file)
@@ -1485,9 +1657,11 @@ final class LakehouseTable(
     * append table feeds the next pipeline stage without re-scanning
     * history: each poll reads only the new commits' files.
     *
-    * Append-table semantics only: a MERGE commit rewrites whole buckets
-    * (adds + removes), so its adds are not net-new rows — merge tables need
-    * a row-level changelog, which COW file granularity cannot provide.
+    * Append-table semantics only: every MERGE commit removes files — a
+    * copy-on-write merge its rewritten buckets, a deletion-vector merge
+    * each file it re-adds with a new vector — so it is skipped, and merge
+    * tables need a row-level changelog, which file granularity cannot
+    * provide.
     */
   def readChangesSince(fromVersion: Long): (DataFrame, Long) = {
     val latest = latestVersion()
@@ -1583,7 +1757,9 @@ final class LakehouseTable(
 
 /** [[DataSink]] over [[LakehouseTable]]s — the pipeline-facing lakehouse sink.
   * Batch tracking overrides the SPI's write-then-record default with the
-  * atomic in-commit `txn` action.
+  * atomic in-commit `txn` action. The tables it creates merge with deletion
+  * vectors where the merge allows them (a last-wins PK table without
+  * changelog); `deletionVectors = false` keeps every table copy-on-write.
   */
 final class LakehouseSink(
     spark: SparkSession,
@@ -1591,7 +1767,8 @@ final class LakehouseSink(
     buckets: Int = 16,
     collectStats: Boolean = true,
     changelog: Boolean = false,
-    mergeEngine: String = "last-wins")
+    mergeEngine: String = "last-wins",
+    deletionVectors: Boolean = true)
     extends DataSink {
 
   def table(t: TableId): LakehouseTable =
@@ -1600,11 +1777,13 @@ final class LakehouseSink(
 
   override def applySchemaChange(event: SchemaChangeEvent): Unit = event match {
     case CreateTableEvent(t, schema) =>
-      table(t).create(schema, buckets, changelog, mergeEngine)
+      table(t).create(schema, buckets, changelog, mergeEngine,
+        deletionVectors = deletionVectors && mergeEngine == "last-wins" && !changelog &&
+          schema.primaryKeys.nonEmpty)
     case DropTableEvent(t) =>
       val tb = table(t)
-      tb.snapshot().files.foreach(f =>
-        Files.deleteIfExists(Paths.get(tb.dir, f.path)))
+      tb.snapshot().files.flatMap(f => f.path +: f.dv.map(_.path).toSeq).distinct
+        .foreach(p => Files.deleteIfExists(Paths.get(tb.dir, p)))
       val log = Paths.get(tb.dir, "_log")
       if (Files.isDirectory(log)) {
         val s = Files.list(log)

@@ -26,10 +26,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    Spark task retry safe.
   *  - '''Ordered commit''' — the loopback tunnel double REFUSES a commit
   *    while an earlier-id session of the same table is open, the
-  *    coordinator's invariant enforced server-side; the driver-side
-  *    [[SessionCommitCoordinator]] reproduces the reference's
-  *    min-across-executor-queues selection rule (with the
-  *    `END_OF_SESSION` terminator) and is law-tested directly.
+  *    reference coordinator's invariant enforced server-side; the sink
+  *    commits one session per micro-batch from the driver, in order.
   *  - '''Exactly-once''' — session create is label-idempotent and commit
   *    is idempotent; a replayed micro-batch finds its session already
   *    committed and skips, the same replay-skip story as the JDBC 2PC
@@ -142,45 +140,6 @@ final class MaxComputeSink(
       }
     }
     client.commitSession(project, t.tableName, sid)
-  }
-}
-
-/** Driver-side port of the reference's commit-order coordinator
-  * (`SessionCommitCoordinateHelper.java`): each writer subtask enqueues its
-  * session ids in ascending order and terminates with [[EndOfSession]];
-  * [[toCommit]] yields the next session id only once EVERY subtask has
-  * either submitted it or can no longer submit anything smaller. */
-final class SessionCommitCoordinator(parallelism: Int) {
-  require(parallelism > 0)
-  val EndOfSession = "￿_END_OF_SESSION"
-  private val queues = Array.fill(parallelism)(
-    scala.collection.mutable.Queue.empty[String])
-
-  private def cmp(a: String, b: String): Int =
-    if (a == EndOfSession || b == EndOfSession) {
-      if (a == b) 0 else if (a == EndOfSession) 1 else -1
-    } else a.compareTo(b)
-
-  def commit(subtask: Int, sessionId: String): Unit = synchronized {
-    require(queues(subtask).isEmpty ||
-      cmp(queues(subtask).last, sessionId) <= 0,
-      s"subtask $subtask submitted $sessionId out of ascending order")
-    queues(subtask).enqueue(sessionId)
-  }
-
-  /** The smallest session id every subtask has reached (or passed); None
-    * while some subtask might still submit something smaller; Some(None)
-    * never — EndOfSession drains to None when all subtasks terminated. */
-  def toCommit(): Option[String] = synchronized {
-    if (queues.exists(_.isEmpty)) return None
-    val heads = queues.map(_.head)
-    val min = heads.minBy(identity[String] _)(Ordering.comparatorToOrdering(
-      new java.util.Comparator[String] { def compare(a: String, b: String) = cmp(a, b) }))
-    if (min == EndOfSession) None
-    else {
-      queues.foreach(q => if (q.nonEmpty && q.head == min) q.dequeue())
-      Some(min)
-    }
   }
 }
 

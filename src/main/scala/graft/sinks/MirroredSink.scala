@@ -7,7 +7,9 @@ import java.nio.file.Paths
 /** Pipeline-facing Delta / Iceberg / Paimon sink (the reference ships
   * `flink-cdc-pipeline-connector-iceberg/` and `.../paimon/` as first-class
   * `sink.type`s): CDC batches merge into an internal [[LakehouseTable]]
-  * under `<path>/_staging/<table>` (buckets, COW merge, txn exactly-once),
+  * under `<path>/_staging/<table>` (buckets, copy-on-write merge — the
+  * mirrors diff files by path, so the inner tables write no deletion
+  * vectors — txn exactly-once),
   * and after every batch/DDL the table mirrors incrementally into the open
   * wire format at `<path>/<table>` — `_delta_log` commits, Iceberg v2
   * snapshots, or Paimon snapshot/manifest files — so an external reader of
@@ -63,7 +65,8 @@ final class MirroredLakehouseSink(
 
   private val inner = new LakehouseSink(
     spark, Paths.get(rootDir, "_staging").toString, buckets,
-    collectStats = true, changelog = false, mergeEngine = mergeEngine)
+    collectStats = true, changelog = false, mergeEngine = mergeEngine,
+    deletionVectors = false)
 
   def table(t: TableId): LakehouseTable = inner.table(t)
 

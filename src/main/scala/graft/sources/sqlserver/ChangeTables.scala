@@ -48,40 +48,6 @@ object CtLsn {
   }
 }
 
-/** SQL Server's GUID ordering
-  * (`sqlserver/source/utils/SqlServerUtils.SQLServerUUIDComparator:424-451`):
-  * `uniqueidentifier` columns do NOT sort like Java UUIDs — SQL Server
-  * compares the 16 GUID bytes in group order {10–15, 8–9, 6–7, 4–5, 0–3},
-  * unsigned. A `uniqueidentifier` chunk key MUST split under this order or
-  * the chunk ranges disagree with the server's `WHERE key >= ?` scans and
-  * rows are skipped or double-read.
-  */
-object SqlServerGuidOrder extends Ordering[String] {
-  private val GuidOrder = Array(10, 11, 12, 13, 14, 15, 8, 9, 6, 7, 4, 5, 0, 1, 2, 3)
-
-  private def bytesOf(uuid: java.util.UUID): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(16)
-    bb.putLong(uuid.getMostSignificantBits)
-    bb.putLong(uuid.getLeastSignificantBits)
-    bb.array()
-  }
-
-  def compareUuids(a: java.util.UUID, b: java.util.UUID): Int = {
-    val (b1, b2) = (bytesOf(a), bytesOf(b))
-    var i = 0
-    while (i < 16) {
-      val x = b1(GuidOrder(i)) & 0xff
-      val y = b2(GuidOrder(i)) & 0xff
-      if (x != y) return x - y
-      i += 1
-    }
-    0
-  }
-
-  def compare(a: String, b: String): Int =
-    compareUuids(java.util.UUID.fromString(a), java.util.UUID.fromString(b))
-}
-
 /** One row of a CDC change table, as SQL Server's capture job writes it:
   * `__$start_lsn` is the COMMIT LSN of the source transaction, `__$seqval`
   * orders rows within it, `__$operation` is 1=delete, 2=insert,

@@ -48,9 +48,10 @@ class LakehouseLostClaimSpec extends AnyFunSuite {
       StructField("v", StringType))),
     primaryKeys = Seq("k"))
 
-  private def table(schema: TableSchema, buckets: Int): LakehouseTable = {
+  private def table(schema: TableSchema, buckets: Int,
+      deletionVectors: Boolean = false): LakehouseTable = {
     val t = new LakehouseTable(spark, Files.createTempDirectory("graft_lost_claim").toString)
-    t.create(schema, buckets)
+    t.create(schema, buckets, deletionVectors = deletionVectors)
     t
   }
 
@@ -119,12 +120,36 @@ class LakehouseLostClaimSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(t.dir, dirs.head)), s"abandoned ${dirs.head} not deleted")
     assert(commitDirs(t) == before + dirs(1))
     assert(t.latestVersion() == v + 2)
+    // a file re-added with a deletion vector keeps its path; its vector is ours
     val ours = t.history().collect {
-      case (ver, a: LakehouseFormat.AddFile) if ver == v + 2 => a.path
+      case (ver, a: LakehouseFormat.AddFile) if ver == v + 2 =>
+        a.dv.fold(a.path)(_.path)
       case (ver, d: LakehouseFormat.EqualityDeleteFile) if ver == v + 2 => d.path
     }
     assert(ours.nonEmpty && ours.forall(_.startsWith(dirs(1) + "/")))
   }
+
+  /** Run `rival` now, then hold its commit's log line back: the returned
+    * rival puts it in place, so the commit lands between a later writer's
+    * snapshot and its claim. Its files stay where they were written. */
+  private def heldBack(t: LakehouseTable)(rival: => Unit): () => Unit = {
+    val line = Paths.get(t.dir, "_log", f"${t.latestVersion() + 1}%020d.json")
+    rival
+    val held = Files.createTempFile("graft_rival", ".json")
+    Files.move(line, held, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    () => Files.move(held, line)
+  }
+
+  /** A 40-key deletion-vector table, and a second key in key 1's file. */
+  private def dvTableWithMate(): (LakehouseTable, Long) = {
+    val t = table(pkSchema, buckets = 4, deletionVectors = true)
+    t.merge((0L until 40L).map(i => (i, s"v$i")).toDF("k", "v"), noKeys(t))
+    (t, (2L until 40L).find(bucketOf(_) == bucketOf(1L)).get)
+  }
+
+  private def mergeKeyOne(t: LakehouseTable): Unit =
+    t.merge(Seq((1L, "x")).toDF("k", "v").withColumn("v", LostClaim.passThrough($"v")),
+      noKeys(t))
 
   test("merge: a rival commit outside the touched buckets is re-claimed without rewriting") {
     val t = table(pkSchema, buckets = 4)
@@ -285,6 +310,57 @@ class LakehouseLostClaimSpec extends AnyFunSuite {
     assert(t.latestVersion() == v + 1, "batch (run, 5) was committed twice")
     assert(rows(t) == Seq(1L -> "a"))
     assert(dirs.size == 1 && commitDirs(t) == before, "the abandoned staging is deleted")
+  }
+
+  test("merge with deletion vectors: a rival DV merge of the same file makes it stage again") {
+    val (t, mate) = dvTableWithMate()
+    val rival = heldBack(t)(t.merge(Seq((mate, "rival")).toDF("k", "v"), noKeys(t)))
+    val v = t.latestVersion(); val before = commitDirs(t)
+    LostClaim.arm(rival)
+    val dirs = staged(t)(mergeKeyOne(t))
+    assertRestaged(t, v, before, dirs)
+    // the re-staged vector holds the rival's position too: neither old row
+    // comes back
+    assert(rows(t) == (0L until 40L).map(i =>
+      i -> (if (i == 1L) "x" else if (i == mate) "rival" else s"v$i")))
+  }
+
+  test("merge with deletion vectors: a rival copy-on-write merge of the bucket makes it stage again") {
+    val (t, mate) = dvTableWithMate()
+    val file = t.snapshot().files.find(_.bucket == bucketOf(1L)).get
+    // what a copy-on-write merge of `mate` commits: the bucket's file
+    // rewritten without mate's old row and with its new one
+    val rewritten = Paths.get(t.dir, "data-rival")
+    spark.read.parquet(Paths.get(t.dir, file.path).toString).filter($"k" =!= mate)
+      .unionByName(Seq((mate, "rival")).toDF("k", "v")).coalesce(1)
+      .write.parquet(rewritten.toString)
+    val rel = Paths.get(t.dir).relativize(Files.list(rewritten).iterator().asScala
+      .find(_.toString.endsWith(".parquet")).get).toString
+    val v = t.latestVersion(); val before = commitDirs(t)
+    LostClaim.arm(() => t.commit(Seq(LakehouseFormat.RemoveFile(file.path),
+      LakehouseFormat.AddFile(rel, file.bucket, -1L, ver = v + 1))))
+    val dirs = staged(t)(mergeKeyOne(t))
+    assertRestaged(t, v, before, dirs)
+    assert(rows(t) == (0L until 40L).map(i =>
+      i -> (if (i == 1L) "x" else if (i == mate) "rival" else s"v$i")))
+  }
+
+  test("merge with deletion vectors: a staged commit whose claim never lands changes no read") {
+    val (t, _) = dvTableWithMate()
+    val v = t.latestVersion()
+    val rowsBefore = rows(t)
+    // a crashed writer: its data and sidecar are written, no log line is
+    t.merge(Seq((1L, "lost")).toDF("k", "v"), Seq(2L).toDF("k"))
+    val adds = t.history().collect { case (ver, a: LakehouseFormat.AddFile) if ver == v + 1 => a }
+    val stagedDir = adds.flatMap(_.dv).head.path.takeWhile(_ != '/')
+    val stagedFiles = (adds.map(_.path) ++ adds.flatMap(_.dv).map(_.path))
+      .filter(_.startsWith(stagedDir + "/")).distinct
+    assert(stagedFiles.exists(_.endsWith(".bin")) && stagedFiles.exists(_.endsWith(".parquet")))
+    Files.delete(Paths.get(t.dir, "_log", f"${v + 1}%020d.json"))
+    assert(t.latestVersion() == v && rows(t) == rowsBefore)
+    assert(stagedFiles.toSet.subsetOf(t.vacuum(retentionMs = 0L).toSet))
+    assert(stagedFiles.forall(p => !Files.exists(Paths.get(t.dir, p))))
+    assert(rows(t) == rowsBefore)
   }
 
   private def bucketOf(k: Long): Int =

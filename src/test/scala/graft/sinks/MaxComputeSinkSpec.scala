@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** MaxCompute tunnel sink: the upsert-session lifecycle against the
   * loopback double — label-idempotent create, per-block idempotent
   * upload, ordered commit (the reference coordinator's invariant enforced
-  * server-side), replay skip, and the SessionCommitCoordinator's
-  * min-across-queues law from `SessionCommitCoordinateHelper.java`. */
+  * server-side) and replay skip. */
 class MaxComputeSinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -129,20 +128,5 @@ class MaxComputeSinkSpec extends AnyFunSuite {
         batchId = 0L, runId = "r1")
       assert(server.rowsOf("graft", "users").head._2.contains(""""score":7"""))
     } finally server.stop()
-  }
-
-  test("SessionCommitCoordinator: min-across-queues with END terminators") {
-    val c = new SessionCommitCoordinator(3)
-    assert(c.toCommit().isEmpty, "no subtask has reported")
-    c.commit(0, "s1"); c.commit(1, "s1")
-    assert(c.toCommit().isEmpty, "subtask 2 might still submit something smaller")
-    c.commit(2, "s2") // 2 skipped s1 entirely: anything it submits is >= s2
-    assert(c.toCommit().contains("s1"))
-    assert(c.toCommit().isEmpty, "s2 still waits on subtasks 0 and 1")
-    c.commit(0, c.EndOfSession); c.commit(1, "s2")
-    assert(c.toCommit().contains("s2"), "END counts as larger than any id")
-    c.commit(1, c.EndOfSession); c.commit(2, c.EndOfSession)
-    assert(c.toCommit().isEmpty, "all terminated — nothing left to commit")
-    intercept[IllegalArgumentException](c.commit(1, "s0"))
   }
 }

@@ -1,39 +1,13 @@
 package graft.sources
 
 import graft.sources.mongo.{Bson, ResumeToken}
-import graft.sources.sqlserver.SqlServerGuidOrder
 import org.scalatest.funsuite.AnyFunSuite
 
 /** 1:1 transcription of the reference's offset-ordering unit expectations:
-  * `flink-connector-sqlserver-cdc/.../utils/SQLServerUUIDComparatorTest.java`,
-  * `flink-connector-mongodb-cdc/.../utils/ResumeTokenUtilsTest.java`, and
+  * `flink-connector-mongodb-cdc/.../utils/ResumeTokenUtilsTest.java` and
   * `flink-connector-mongodb-cdc/.../utils/BsonUtilsTest.java`.
   */
 class OffsetComparatorsRefSpec extends AnyFunSuite {
-
-  // ---- SQLServerUUIDComparatorTest.testComparator:33 -----------------------
-
-  test("SQL Server GUID order differs from Java UUID order") {
-    val guids = Seq(
-      "3AAAAAAA-BBBB-CCCC-DDDD-2EEEEEEEEEEE",
-      "2AAAAAAA-BBBB-CCCC-DDDD-1EEEEEEEEEEE",
-      "1AAAAAAA-BBBB-CCCC-DDDD-3EEEEEEEEEEE")
-
-    // plain Java UUID order (the reference's ObjectUtils::compare)
-    val javaSorted = guids.map(java.util.UUID.fromString).sorted
-      .map(_.toString.toUpperCase)
-    assert(javaSorted == Seq(
-      "1AAAAAAA-BBBB-CCCC-DDDD-3EEEEEEEEEEE",
-      "2AAAAAAA-BBBB-CCCC-DDDD-1EEEEEEEEEEE",
-      "3AAAAAAA-BBBB-CCCC-DDDD-2EEEEEEEEEEE"))
-
-    // SQL Server order leads with the last byte group — a different ranking
-    val sqlSorted = guids.sorted(SqlServerGuidOrder)
-    assert(sqlSorted == Seq(
-      "2AAAAAAA-BBBB-CCCC-DDDD-1EEEEEEEEEEE",
-      "3AAAAAAA-BBBB-CCCC-DDDD-2EEEEEEEEEEE",
-      "1AAAAAAA-BBBB-CCCC-DDDD-3EEEEEEEEEEE"))
-  }
 
   // ---- ResumeTokenUtilsTest ------------------------------------------------
 

@@ -102,14 +102,16 @@ class MicroBatchCostSpec extends AnyFunSuite {
       val before = table.latestVersion()
       src.append(DataChangeEvent.update(t, row(3L, "v3"), row(3L, "w3")))
       val jobs = jobsOf(runner.runHandlingDdl())
-      // one micro-batch, three SQL executions: the merge's changed-keys
-      // collect (4 jobs: the upsert aggregate's shuffle-map job, the
-      // cached aggregate built for each of the two key branches, the
-      // collect), the bucket-clustered write (3: the broadcast of the
-      // collected keys, the shuffle-map job, the write) and the zone-map
-      // scan of the written files (2). No table-id discovery job, no second
-      // changed-keys aggregate, no parquet footer-inference job.
-      assert(jobs.map(_.execution).distinct.size == 3, jobs.mkString("jobs:\n", "\n", ""))
+      // one micro-batch into a table with deletion vectors, four SQL
+      // executions: the merge's changed-keys collect (4 jobs: the upsert
+      // aggregate's shuffle-map job, the cached aggregate built for each of
+      // the two key branches, the collect), the key-only position lookup in
+      // the touched bucket (1: a scan filtered by an InSet of the collected
+      // keys), the bucket-clustered write of the batch alone (2: the
+      // shuffle-map job, the write) and the zone-map scan of the written
+      // files (2). No table-id discovery job, no second changed-keys
+      // aggregate, no broadcast, no parquet footer-inference job.
+      assert(jobs.map(_.execution).distinct.size == 4, jobs.mkString("jobs:\n", "\n", ""))
       assert(jobs.size == 9, jobs.mkString("jobs:\n", "\n", ""))
       assert(table.latestVersion() == before + 1)
       assert(table.read().filter("id = 3").head().getString(1) == "w3")
