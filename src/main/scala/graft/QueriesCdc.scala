@@ -1051,7 +1051,7 @@ object QueriesCdc {
       fileOf("fa.parquet", a); fileOf("fb.parquet", b)
       def deadPositions(rows: Seq[Row]) = rows.zipWithIndex
         .collect { case (r, i) if r.getLong(1) % 7 == 3 => i.toLong }
-      val Seq((podA, offA, szA, cardA)) =
+      val (_, Seq((podA, offA, szA, cardA))) =
         DeltaReaderFeatures.writeDvFile(dest, Seq(deadPositions(a)))
       val (podB, szB, cardB) = DeltaReaderFeatures.inlineDv(deadPositions(b))
       val schemaEsc = schema.json.replace("\"", "\\\"")

@@ -59,12 +59,15 @@ object Upsert {
     * an upsert of the after key, both at the event's `seq`. Grouped by the
     * after key alone, the before key would keep its old row. One explode
     * splits such events; every other event passes through as one row. A
-    * sink that keeps the before key's row (the reference's values sink)
-    * asks [[withMaterialized]] not to split. */
+    * before image without its key (canal-json's `old` carries only the
+    * changed columns) names no key to retract. A sink that keeps the before
+    * key's row (the reference's values sink) asks [[withMaterialized]] not
+    * to split. */
   private def splitMovedKeys(env: DataFrame, keyCols: Seq[String]): DataFrame = {
     val (op, before, after) = (Envelope.OpCol, Envelope.BeforeCol, Envelope.AfterCol)
     val moved = col(before).isNotNull && col(after).isNotNull &&
-      keyCols.map(k => !(col(s"$before.$k") <=> col(s"$after.$k"))).reduce(_ || _)
+      keyCols.map(k => col(s"$before.$k").isNotNull).reduce(_ && _) &&
+      keyCols.map(k => col(s"$before.$k") =!= col(s"$after.$k")).reduce(_ || _)
     val retract = "__retract"
     env.select(env.columns.map(col) :+ explode(
       when(moved, array(lit(true), lit(false))).otherwise(array(lit(false)))).as(retract): _*)

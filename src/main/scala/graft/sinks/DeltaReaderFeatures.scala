@@ -244,16 +244,15 @@ object DeltaReaderFeatures {
   }
 
   /** Write one deletion-vector SIDECAR holding the given bitmaps and
-    * return per-entry (pathOrInlineDv, offset, sizeInBytes, cardinality)
-    * descriptor fields — the writer side of the lakehouse's own deletion
-    * vectors, and what [[DeltaInterchangeSpec]] and the foreign-table gates
-    * build fixtures with. The sidecar is `deletion_vector_<uuid>.bin`; the
-    * default uuid derives from the positions, so a writer whose sidecars
-    * must not collide passes a random one. */
-  def writeDvFile(tableDir: String, entries: Seq[Seq[Long]],
-      uuid: Option[java.util.UUID] = None): Seq[(String, Int, Int, Long)] = {
-    val name = uuid.getOrElse(java.util.UUID.nameUUIDFromBytes(
-      entries.flatten.mkString(",").getBytes("UTF-8")))
+    * return its file name (`deletion_vector_<uuid>.bin`, the uuid derived
+    * from the positions) with per-entry (pathOrInlineDv, offset,
+    * sizeInBytes, cardinality) descriptor fields — the writer side of the
+    * lakehouse's own deletion vectors, and what [[DeltaInterchangeSpec]]
+    * and the foreign-table gates build fixtures with. */
+  def writeDvFile(tableDir: String, entries: Seq[Seq[Long]])
+      : (String, Seq[(String, Int, Int, Long)]) = {
+    val uuid = java.util.UUID.nameUUIDFromBytes(
+      entries.flatten.mkString(",").getBytes("UTF-8"))
     val serialized = entries.map(serializeBitmap)
     val total = 1 + serialized.map(8 + _.length).sum
     val buf = ByteBuffer.allocate(total).order(ByteOrder.BIG_ENDIAN)
@@ -265,12 +264,13 @@ object DeltaReaderFeatures {
       val crc = new CRC32(); crc.update(data)
       buf.putInt(crc.getValue.toInt)
       val bb = ByteBuffer.allocate(16)
-      bb.putLong(name.getMostSignificantBits)
-      bb.putLong(name.getLeastSignificantBits)
+      bb.putLong(uuid.getMostSignificantBits)
+      bb.putLong(uuid.getLeastSignificantBits)
       (z85Encode(bb.array()), off, data.length, positions.distinct.size.toLong)
     }
-    Files.write(Paths.get(tableDir, s"deletion_vector_$name.bin"), buf.array())
-    metas
+    val name = s"deletion_vector_$uuid.bin"
+    Files.write(Paths.get(tableDir, name), buf.array())
+    (name, metas)
   }
 
   /** Inline descriptor fields for small bitmaps. */

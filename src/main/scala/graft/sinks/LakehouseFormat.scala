@@ -132,25 +132,6 @@ object LakehouseFormat {
       dirs: Seq[String] = Nil,
       conflicts: Snapshot => Boolean = (_: Snapshot) => true)
 
-  /** The map-side row filter of a deletion-vector scan: false for a row
-    * position its file's vector marks. `dvs` maps paths relative to the
-    * table root to their descriptors. A scan reads a file's rows one after
-    * another, so a task loads each file's bitmap once, when its rows
-    * start. */
-  private[sinks] final class LiveRows(dvs: Map[String, DeltaReaderFeatures.DvDescriptor])
-      extends ((String, Long) => Boolean) with Serializable {
-    @transient private var file: String = _
-    @transient private var dead: Option[DeltaReaderFeatures.LongBitmap] = _
-    def apply(filePath: String, row: Long): Boolean = {
-      if (filePath != file) {
-        file = filePath
-        val p = new java.net.URI(filePath).getPath
-        dead = dvs.collectFirst { case (rel, d) if p.endsWith("/" + rel) => d.load() }
-      }
-      !dead.exists(_.contains(row))
-    }
-  }
-
   private val mapper = new ObjectMapper
 
   private[sinks] def encode(a: Action): String = {
@@ -554,16 +535,12 @@ final class LakehouseTable(
     }
     // `deletionVectors` (Iceberg's write.update.mode = merge-on-read): a
     // merge writes only the batch's rows and marks the rows they replace
-    // dead by position. Only where the batch row alone is the new state:
-    // a last-wins PK table without changelog or sequence field.
-    if (deletionVectors) {
-      require(schema.primaryKeys.nonEmpty, "deletion vectors require primary keys")
-      require(mergeEngine == "last-wins" && !changelog && sequenceField.isEmpty,
-        "deletion vectors require the last-wins engine without changelog or " +
-          "sequenceField: those merges combine old and new rows")
-    }
+    // dead by position. Only where the batch row alone is the new state —
+    // a last-wins PK table without changelog or sequence field; any other
+    // table asked for them merges copy-on-write.
     val meta = Meta(schema, buckets, changelog, mergeEngine, aggregations, sequenceField,
-      bloomColumns, deletionVectors)
+      bloomColumns, deletionVectors = deletionVectors && schema.primaryKeys.nonEmpty &&
+        mergeEngine == "last-wins" && !changelog && sequenceField.isEmpty)
     // a rival that created the table first wins: nothing is staged on its state
     commitOptimistically() { snap =>
       Option.when(snap.meta.isEmpty)(Staged((), _ => Seq(meta), conflicts = _.meta.isDefined))
@@ -652,13 +629,13 @@ final class LakehouseTable(
 
   private def absolute(rel: String): String = Paths.get(dir, rel).toAbsolutePath.toString
 
-  /** The map-side deletion-vector filter of a scan: the executor loads
-    * each file's bitmap once per task and keeps the rows it does not mark
-    * (the filter Delta import uses). Codegen sees one function object, so
-    * any set of vectors runs the same generated class. */
+  /** The map-side deletion-vector filter of a scan: the one Delta import
+    * uses ([[DeltaReaderFeatures.isDeleted]], with its executor-wide bitmap
+    * cache). Codegen sees one function object, so any set of vectors runs
+    * the same generated class. */
   private def liveRows(dvs: Map[String, DeletionVector]): org.apache.spark.sql.Column = {
-    val live = new LiveRows(dvs.map { case (p, d) => p -> d.descriptor(dir) })
-    udf((file: String, row: Long) => live(file, row))
+    val byFile = dvs.map { case (p, d) => absolute(p) -> d.descriptor(dir) }
+    udf((file: String, row: Long) => !DeltaReaderFeatures.isDeleted(byFile, file, row))
       .apply(col("_metadata.file_path"), col("_metadata.row_index"))
   }
 
@@ -952,8 +929,9 @@ final class LakehouseTable(
         .select(col("_metadata.file_path"), col("_metadata.row_index"))
         .collect()
         .groupBy(r => new java.net.URI(r.getString(0)).getPath)
+      val byPath = files.map(f => absolute(f.path) -> f).toMap
       hits.toSeq.flatMap { case (file, rows) =>
-        val f = files.find(f => file.endsWith("/" + f.path)).getOrElse(
+        val f = byPath.getOrElse(file,
           throw new IllegalStateException(s"$file is not a file of $dir"))
         val old = f.dv.fold(Set.empty[Long])(_.descriptor(dir).load().positions.toSet)
         val all = old ++ rows.map(_.getLong(1))
@@ -967,11 +945,9 @@ final class LakehouseTable(
     if (dead.isEmpty) Nil
     else {
       val sidecarDir = Files.createDirectories(Paths.get(dir, rel))
-      val uuid = java.util.UUID.randomUUID()
-      val entries = DeltaReaderFeatures.writeDvFile(sidecarDir.toString, dead.map(_._2), Some(uuid))
-      val sidecar = s"$rel/deletion_vector_$uuid.bin"
+      val (name, entries) = DeltaReaderFeatures.writeDvFile(sidecarDir.toString, dead.map(_._2))
       dead.zip(entries).map { case ((f, _), (_, offset, size, cardinality)) =>
-        f.copy(dv = Some(DeletionVector(sidecar, offset, size, cardinality)))
+        f.copy(dv = Some(DeletionVector(s"$rel/$name", offset, size, cardinality)))
       }
     }
 
@@ -1778,8 +1754,7 @@ final class LakehouseSink(
   override def applySchemaChange(event: SchemaChangeEvent): Unit = event match {
     case CreateTableEvent(t, schema) =>
       table(t).create(schema, buckets, changelog, mergeEngine,
-        deletionVectors = deletionVectors && mergeEngine == "last-wins" && !changelog &&
-          schema.primaryKeys.nonEmpty)
+        deletionVectors = deletionVectors)
     case DropTableEvent(t) =>
       val tb = table(t)
       tb.snapshot().files.flatMap(f => f.path +: f.dv.map(_.path).toSeq).distinct

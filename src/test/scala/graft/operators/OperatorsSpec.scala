@@ -41,6 +41,23 @@ class EnvelopeSpec extends AnyFunSuite {
       .orderBy("id").as[(Long, String, Double)].collect().toSeq
     assert(state == Seq((1L, "a2", 11.0), (3L, "c", 30.0)))
   }
+
+  test("a PK-changing UPDATE retracts its before key; a before image without its key does not") {
+    val env = Envelope.fromChangelog(Seq(
+        (1L, 1L, "INSERT", "a"), (2L, 2L, "INSERT", "b"),
+        (3L, 1L, "UPDATE", "a2"), (4L, 20L, "UPDATE", "b2")
+      ).toDF("seq0", "id", "op0", "name"),
+      TableId.parse("db.t"), col("op0"), col("seq0"), Seq("id", "name"))
+      // seq 3's before image lacks the key (canal-json's `old`); seq 4 moves 2 -> 20
+      .withColumn("before",
+        when($"seq" === 3L, $"before".withField("id", lit(null).cast("long")))
+          .when($"seq" === 4L, $"before".withField("id", lit(2L)))
+          .otherwise($"before"))
+    val (upserts, deletes) = Upsert.materializeWithDeletes(env, Seq("id"))
+    assert(upserts.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a2"), (20L, "b2")))
+    assert(deletes.as[Option[Long]].collect().toSeq == Seq(Some(2L)))
+  }
 }
 
 class TransformOpSpec extends AnyFunSuite {

@@ -51,7 +51,7 @@ class DeltaReaderFeaturesSpec extends AnyFunSuite {
 
   test("deletion-vector sidecar: frame verified, corruption refuses") {
     val dir = Files.createTempDirectory("graft_dv_frame").toString
-    val metas = DeltaReaderFeatures.writeDvFile(dir,
+    val (_, metas) = DeltaReaderFeatures.writeDvFile(dir,
       Seq(Seq(1L, 3L), Seq(0L, 2L, 4L)))
     assert(metas.size == 2 && metas(0)._2 != metas(1)._2,
       "two entries at distinct offsets in one sidecar")
@@ -118,7 +118,7 @@ class DeltaReaderFeaturesSpec extends AnyFunSuite {
     writeFile(dest, "fa.parquet", a.toDF("k", "v").coalesce(1))
     writeFile(dest, "fb.parquet", b.toDF("k", "v").coalesce(1))
     // sidecar DV for fa (row indexes 1,3,5), inline for fb (row index 0)
-    val Seq((podA, offA, szA, cardA)) =
+    val (_, Seq((podA, offA, szA, cardA))) =
       DeltaReaderFeatures.writeDvFile(dest, Seq(Seq(1L, 3L, 5L)))
     val (podB, szB, cardB) = DeltaReaderFeatures.inlineDv(Seq(0L))
     val schemaJson = new StructType().add("k", LongType, nullable = false)
@@ -148,7 +148,7 @@ class DeltaReaderFeaturesSpec extends AnyFunSuite {
 
     // a later commit GROWS fa's DV (re-add, same path, new descriptor) —
     // the latest add wins; and removing fb drops its DV with it
-    val Seq((podA2, offA2, szA2, cardA2)) =
+    val (_, Seq((podA2, offA2, szA2, cardA2))) =
       DeltaReaderFeatures.writeDvFile(dest, Seq(Seq(1L, 3L, 5L, 7L, 9L)))
     writeLog(dest, Seq(
       s"""{"add":{"path":"fa.parquet","partitionValues":{},"size":1,""" +
