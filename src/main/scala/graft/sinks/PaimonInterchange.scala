@@ -1358,8 +1358,9 @@ object PaimonInterchange {
     * the delete's own sequence — Paimon's delete encoding, which makes the
     * LSM merge reproduce the lakehouse sequence rule); removed lakehouse
     * files become DELETE manifest entries against the mirrored files that
-    * carried their rows (bucket-granular, exact because lakehouse COW
-    * rewrites whole buckets). `commitIdentifier` records the lakehouse
+    * carried their rows (bucket-granular, exact because a mirrored table
+    * merges copy-on-write, which rewrites whole buckets; a version with
+    * deletion vectors is refused). `commitIdentifier` records the lakehouse
     * version — Paimon's own exactly-once marker — so restarts resume from
     * the destination alone. Cost per call is O(new commits + prior
     * manifest list), never O(data). Returns snapshots written. */
